@@ -767,10 +767,11 @@ def kg_metrics_rouge1(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kg_metrics_rougel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full ROUGE-1/2/L best-match with Porter stemming (A4 complete —
     metrics_generator.py:163's RougeScorer(use_stemmer=True) metric
-    set). Vectorized pandas-UDF pair scorer over a broadcast GT side;
+    set). One Python-UDF call per distinct generated triple scores it
+    against the whole collected GT set (metrics.rouge_best_match);
     per-pair LCS has no native/SQL form, so the driver records the
-    weaker rows-only check and tests/test_metrics.py carries the
-    hand-computed value assertions."""
+    weaker rows-only check and tests/test_metrics.py checks the values
+    bit-exactly against a brute-force all-pairs scorer."""
     tr = _triples_raw(_docs(spark, sf_dir))
     gen = tr.where(F.col("doc_id") % 50 == 0).select("subj", "pred", "obj")
     gt = tr.where(F.col("doc_id") % 75 == 0).select("subj", "pred", "obj")

@@ -14,7 +14,6 @@ Reproduces the reference's two evaluators as DataFrame joins:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -155,6 +154,7 @@ def relaxed_metrics(generated: DataFrame, ground_truth: DataFrame) -> DataFrame:
     # over the bound member array)
     # (shiftleft/shiftright take a literal bit count, so the masks use
     # exact small-integer powers: members are capped at 3, bitmask < 8)
+    assert len(_COLS) <= 3, "pow bitmasks exact, 2^n - 1 subsets cheap only for <= 3"
     subset_keys = bind_once(
         _nonempty_members(("gsubj", "gpred", "gobj")),
         lambda m: F.transform(
@@ -338,10 +338,33 @@ def rouge_best_match(
     and with use_stemmer a Porter stem applied only to tokens longer
     than 3 chars (functions/stemmer.py — classic 1980 algorithm; the
     reference's NLTK_EXTENSIONS-mode divergences are documented
-    there). ROUGE-L needs an LCS per pair, which has no native
-    expression — scored in one vectorized pandas UDF over the
-    broadcast GT side (GT is the small evaluation set by
-    construction; this is a test-only metric, same as the reference's).
+    there).
+
+    Structure: the GT texts are collected and deduplicated in Python
+    (GT is the small evaluation set by construction; this is a
+    test-only metric, same as the reference's), then shipped inside
+    one plain Python UDF. Each task
+    tokenizes, stems and counts them once; the UDF then scores one
+    distinct generated row against all of them and returns the three
+    maxima. No cross join, no per-pair rows, no groupBy.
+
+    Parallelism: the generated side is hash-partitioned by the triple
+    into defaultParallelism partitions, which already clusters it for
+    its distinct — one exchange, and one AQE does not coalesce. A
+    plain distinct's shuffle is small, so AQE would coalesce it to one
+    partition and put the whole scorer on one core; a round-robin
+    repartition before the distinct is undone the same way. The UDF
+    is a plain (pickled-row) one, not pandas/Arrow: a pandas worker
+    holds about twice the resident memory for no speed here.
+
+    ROUGE-L pruning, exact: an LCS is a common subsequence, so its
+    length never exceeds the clipped unigram overlap, and for fixed
+    token counts f grows with the overlap — ROUGE-L f ≤ ROUGE-1 f for
+    every pair. The LCS therefore runs over the GT texts in
+    descending ROUGE-1 order and stops as soon as ROUGE-1 f ≤ the best
+    ROUGE-L f found so far; no later text can beat it. The maxima are
+    the same floats an all-pairs scorer takes (tests/test_metrics.py
+    checks this with ==).
     """
     import re as _re
 
@@ -380,63 +403,60 @@ def rouge_best_match(
             prev = cur
         return prev[-1]
 
-    # The scorer runs over a CROSS join, so each distinct text recurs
-    # once per opposite-side row (~10^3 times at sf0.1): memoize the
-    # per-text work (tokenize + Porter stem + unigram/bigram counts)
-    # per worker. Bounded: cleared past 64k texts (pairs arrive
-    # grouped, so eviction never thrashes within a batch). This took
-    # the sf0.1 gate from 34.5 s to per-pair LCS cost only.
-    _prep_cache: dict = {}
-
     def _prep(text: str):
-        r = _prep_cache.get(text)
-        if r is None:
-            toks = _toks(text)
-            bi = list(zip(toks, toks[1:]))
-            r = (toks, _counts(toks), len(toks), _counts(bi), len(bi))
-            if len(_prep_cache) > 65536:
-                _prep_cache.clear()
-            _prep_cache[text] = r
-        return r
+        toks = _toks(text)
+        bi = list(zip(toks, toks[1:]))
+        return toks, _counts(toks), len(toks), _counts(bi), len(bi)
 
-    def _score_pair(gen_text: str, gt_text: str) -> tuple[float, float, float]:
-        gen_toks, g1, n_g, g2, n_g2 = _prep(gen_text)
-        gt_toks, t1, n_t, t2, n_t2 = _prep(gt_text)
-        ov1 = sum(min(c, t1.get(k, 0)) for k, c in g1.items())
-        ov2 = sum(min(c, t2.get(k, 0)) for k, c in g2.items())
-        return (
-            _f(ov1, n_g, n_t),
-            _f(ov2, n_g2, n_t2),
-            _f(_lcs(gen_toks, gt_toks), n_g, n_t),
-        )
-
-    out_type = StructType([
-        StructField("rouge1", DoubleType()),
-        StructField("rouge2", DoubleType()),
-        StructField("rougeL", DoubleType()),
-    ])
-
-    @F.pandas_udf(out_type)
-    def _score(gen_text: pd.Series, gt_text: pd.Series) -> pd.DataFrame:
-        rows = [
-            _score_pair(g, t) for g, t in zip(gen_text, gt_text)
-        ]
-        return pd.DataFrame(rows, columns=["rouge1", "rouge2", "rougeL"])
+    def _overlap(gen: dict, gt: dict) -> int:
+        return sum(min(c, gt.get(k, 0)) for k, c in gen.items())
 
     text_of = F.concat_ws(" ", *[F.col(c) for c in _COLS])
-    g = generated.select(*_COLS).distinct().withColumn("_gtext", text_of)
-    t = ground_truth.select(
-        text_of.alias("_ttext")
-    ).distinct()
-    # left join so generated rows survive an empty GT (best = 0.0,
-    # matching the reference's inner-loop-over-nothing behavior)
-    scored = g.join(F.broadcast(t), F.lit(True), "left").withColumn(
-        "_s", _score(F.col("_gtext"), F.col("_ttext"))
+    # deduplicated here, not with a Spark distinct: GT is small, and
+    # the distinct's shuffle cost more than the whole collect
+    gt_texts = sorted({r[0] for r in ground_truth.select(text_of).collect()})
+    gt_prepped: list = []  # per task: the GT texts prepared once
+
+    def _best(gen_text: str) -> tuple[float, float, float]:
+        if gt_texts and not gt_prepped:
+            gt_prepped[:] = [_prep(t) for t in gt_texts]
+        gen_toks, g1, n_g, g2, n_g2 = _prep(gen_text)
+        best1 = best2 = best_l = 0.0
+        lcs_candidates = []
+        for gt_toks, t1, n_t, t2, n_t2 in gt_prepped:
+            f1 = _f(_overlap(g1, t1), n_g, n_t)
+            best1 = max(best1, f1)
+            best2 = max(best2, _f(_overlap(g2, t2), n_g2, n_t2))
+            if f1 > 0.0:
+                lcs_candidates.append((f1, gt_toks, n_t))
+        lcs_candidates.sort(key=lambda c: c[0], reverse=True)
+        for f1, gt_toks, n_t in lcs_candidates:
+            if f1 <= best_l:
+                break
+            best_l = max(best_l, _f(_lcs(gen_toks, gt_toks), n_g, n_t))
+        return best1, best2, best_l
+
+    score = F.udf(
+        _best,
+        StructType([
+            StructField("rouge1", DoubleType()),
+            StructField("rouge2", DoubleType()),
+            StructField("rougeL", DoubleType()),
+        ]),
+        useArrow=False,
     )
-    return scored.groupBy(*_COLS).agg(
-        F.coalesce(F.max("_s.rouge1"), F.lit(0.0)).alias("best_rouge1_f"),
-        F.coalesce(F.max("_s.rouge2"), F.lit(0.0)).alias("best_rouge2_f"),
-        F.coalesce(F.max("_s.rougeL"), F.lit(0.0)).alias("best_rougeL_f"),
+    parallelism = generated.sparkSession.sparkContext.defaultParallelism
+    return (
+        generated.select(*_COLS)
+        .repartition(parallelism, *_COLS)
+        .distinct()
+        .select(*_COLS, score(text_of).alias("_s"))
+        .select(
+            *_COLS,
+            F.col("_s.rouge1").alias("best_rouge1_f"),
+            F.col("_s.rouge2").alias("best_rouge2_f"),
+            F.col("_s.rougeL").alias("best_rougeL_f"),
+        )
     )
 
 

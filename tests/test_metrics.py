@@ -1,5 +1,11 @@
 """P/R/F1 metric joins (metrics.py / metrics_generator.py parity)."""
 
+import random
+import re
+from collections import Counter
+
+import pytest
+
 from knowledge_graph_creation_from_text_with_llms_spark.operators import metrics
 
 
@@ -275,8 +281,8 @@ def test_bertscore_shared_ref_dedup_is_bit_identical(spark):
 
 
 def test_rouge_l_best_native_matches_udf_scorer(spark):
-    """The native LCS fold (rouge_l_best) must agree with the pandas-UDF
-    pair scorer (rouge_best_match, stemmer off) on every pair — and with
+    """The native LCS fold (rouge_l_best) must agree with the Python-UDF
+    scorer (rouge_best_match, stemmer off) on every row — and with
     a hand-computed reordered-subsequence case where L differs from R1."""
     gen = _df(
         spark,
@@ -302,3 +308,135 @@ def test_rouge_l_best_native_matches_udf_scorer(spark):
     # empty GT: rows survive with 0.0
     rows = metrics.rouge_l_best(gen, _df(spark, [])).collect()
     assert len(rows) == 3 and all(r.best_rougeL_f == 0.0 for r in rows)
+
+
+def _brute_rouge(gen_rows, gt_rows, use_stemmer):
+    """rouge_score's RougeScorer over every (generated, GT) pair, kept
+    plainly: no pruning, every pair scored, max taken per distinct
+    generated triple (metrics_generator.py:159-183)."""
+    from knowledge_graph_creation_from_text_with_llms_spark.functions.stemmer import (
+        porter_stem,
+    )
+
+    def toks(row):
+        # concat_ws(" ", subj, pred, obj) skips NULL components
+        text = " ".join(c for c in row if c is not None)
+        out = re.findall(r"[a-z0-9]+", text.lower())
+        if use_stemmer:
+            out = [porter_stem(t) if len(t) > 3 else t for t in out]
+        return out
+
+    def fmeasure(overlap, n_gen, n_gt):
+        if not overlap or not n_gen or not n_gt:
+            return 0.0
+        p, r = overlap / n_gen, overlap / n_gt
+        return 2 * p * r / (p + r)
+
+    def ngram(a, b, n):
+        ga = Counter(zip(*[a[i:] for i in range(n)]))
+        gb = Counter(zip(*[b[i:] for i in range(n)]))
+        return fmeasure(sum((ga & gb).values()), sum(ga.values()), sum(gb.values()))
+
+    def lcs(a, b):
+        table = [[0] * (len(b) + 1) for _ in range(len(a) + 1)]
+        for i, x in enumerate(a, 1):
+            for j, y in enumerate(b, 1):
+                table[i][j] = (
+                    table[i - 1][j - 1] + 1 if x == y
+                    else max(table[i - 1][j], table[i][j - 1])
+                )
+        return table[-1][-1]
+
+    out = {}
+    for g in set(gen_rows):
+        a = toks(g)
+        scores = [
+            (ngram(a, b, 1), ngram(a, b, 2), fmeasure(lcs(a, b), len(a), len(b)))
+            for b in map(toks, gt_rows)
+        ]
+        out[g] = tuple(max((s[k] for s in scores), default=0.0) for k in range(3))
+    return out
+
+
+def _spark_rouge(spark, gen_rows, gt_rows, use_stemmer):
+    rows = metrics.rouge_best_match(
+        _df(spark, gen_rows), _df(spark, gt_rows), use_stemmer=use_stemmer
+    ).collect()
+    out = {
+        (r.subj, r.pred, r.obj): (r.best_rouge1_f, r.best_rouge2_f, r.best_rougeL_f)
+        for r in rows
+    }
+    assert len(out) == len(rows)  # one row per distinct generated triple
+    return out
+
+
+_ROUGE_GT = [
+    ("d c", "b", "a"),              # reversed: ROUGE-1 1.0, LCS 1
+    ("a b", "c", "x"),              # ROUGE-1 0.75, LCS 3: the ROUGE-L winner
+    ("s r", "q", "p"),              # tied ROUGE-1 1.0 with the next row
+    ("q p", "s", "r"),              # LCS 2
+    ("the cats", "were running", "connections"),
+    (None, "sat on", "the mat"),    # NULL component
+    ("", "", ""),                   # all-empty text
+    ("", "", ""),                   # duplicate GT row
+]
+_ROUGE_GEN = [
+    ("a b", "c", "d"),
+    ("p q", "r", "s"),
+    ("a cat", "runs", "connection"),
+    ("the cat", None, "sat"),       # NULL component
+    (None, None, None),             # all NULL
+    ("!!", "", "--"),               # all-empty text
+    ("a b", "c", "d"),              # duplicate generated row
+    ("p q", "r", "s"),
+]
+
+
+@pytest.mark.parametrize("use_stemmer", [True, False])
+def test_rouge_best_match_equals_all_pairs_scorer(spark, use_stemmer):
+    """Spark result == a local all-pairs scorer over the same inputs,
+    bit for bit (==, no tolerance): the LCS pruning changes which
+    pairs are visited, never the maxima."""
+    want = _brute_rouge(_ROUGE_GEN, _ROUGE_GT, use_stemmer)
+    assert _spark_rouge(spark, _ROUGE_GEN, _ROUGE_GT, use_stemmer) == want
+    # pruning must go past the top ROUGE-1 candidate: "d c b a" has
+    # ROUGE-1 1.0 but LCS 1; the ROUGE-L best is "a b c x" at LCS 3
+    assert want[("a b", "c", "d")][0] == 1.0
+    assert want[("a b", "c", "d")][2] == 0.75
+    # tied ROUGE-1 1.0: the best ROUGE-L comes from the second of the tie
+    assert want[("p q", "r", "s")][2] == 0.5
+    assert want[("!!", "", "--")] == (0.0, 0.0, 0.0)
+    # empty GT: every distinct generated row scores 0.0
+    empty = _spark_rouge(spark, _ROUGE_GEN, [], use_stemmer)
+    assert empty == {g: (0.0, 0.0, 0.0) for g in set(_ROUGE_GEN)}
+
+
+@pytest.mark.parametrize("use_stemmer", [True, False])
+def test_rouge_best_match_equals_all_pairs_scorer_random(spark, use_stemmer):
+    """Randomized corpus with shuffled, repeated and stemmable tokens,
+    so ROUGE-1 ties and LCS < overlap occur many times over."""
+    rng = random.Random(20261017)
+    vocab = ["alpha", "beta", "gamma", "running", "runs", "connection",
+             "connections", "of", "the", "is", "X-1", ""]
+
+    def comp():
+        return " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 3)))
+
+    gt = [(comp(), comp(), comp()) for _ in range(40)]
+    gen = [(comp(), comp(), comp()) for _ in range(80)] + gt[:10]
+    gen += [tuple(rng.sample(t, 3)) for t in gt[10:30]]  # reordered copies
+    want = _brute_rouge(gen, gt, use_stemmer)
+    assert _spark_rouge(spark, gen, gt, use_stemmer) == want
+
+
+def test_rouge_best_match_scores_on_every_core(spark):
+    """The scoring stage runs on defaultParallelism partitions (AQE
+    coalesces a plain distinct's small shuffle to one), and no cross
+    join is planned."""
+    out = metrics.rouge_best_match(_df(spark, _ROUGE_GEN), _df(spark, _ROUGE_GT))
+    # the UDF runs in the last stage, after the only exchange
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan and "BatchEvalPython" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan

@@ -27,6 +27,10 @@ from knowledge_graph_creation_from_text_with_llms_spark.operators.linker import 
 
 ROOT = Path("/root/reference/Experiments_Results")
 
+pytestmark = pytest.mark.skipif(
+    not ROOT.is_dir(), reason="reference repo not available"
+)
+
 _HEADER = re.compile(r'Top matches for predicate: "(.*)"')
 _ENTRY = re.compile(
     r"(\d+)\. Match Details:\n"

@@ -32,13 +32,15 @@ from .text import bind_once, tokens_expr
 DEFAULT_DIM = 16
 
 
-def _byte_component(h: Column, d: int) -> Column:
-    """Component d from a precomputed md5 hex digest: byte d scaled to
-    [-1, 1]."""
-    return (
-        F.conv(F.substring(h, 2 * d + 1, 2), 16, 10).cast("double")
+def _byte_vector(h: Column, dim: int) -> Column:
+    """array<double> of the first `dim` components of a precomputed md5
+    hex digest: component d = byte d scaled to [-1, 1]. One lambda over
+    sequence(0, dim-1), whatever `dim` is."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda d: F.conv(F.substring(h, d * 2 + 1, 2), 16, 10).cast("double")
         / F.lit(127.5)
-        - F.lit(1.0)
+        - F.lit(1.0),
     )
 
 
@@ -51,25 +53,27 @@ def hash_embedding_expr(col: str | Column, dim: int = DEFAULT_DIM) -> Column:
         t -> ('0x' || substr(md5(t), 2d+1, 2))::INT / 127.5e0 - 1e0))
       / len(toks)
 
-    The per-token md5 digests are computed ONCE into a bound array and
-    every component reads its byte from them — the per-component form
-    re-ran tokenize × dim and md5 × (tokens · dim) per row (HOFs get
-    no cross-expression CSE). Same digests, same bytes, same addition
-    order — bit-identical.
+    The per-token md5 digests are computed ONCE into a bound array;
+    each digest becomes its byte vector in one transform, the vectors
+    are summed by one aggregate whose step is zip_with(acc, x, +) from
+    array_repeat(0.0, dim), and the sums are divided by the token
+    count in one more transform. The expression holds the same handful
+    of lambdas for any `dim` (the earlier per-component form built two
+    per component, and its driver-side construction cost grew with
+    them). Each component is still 0.0 + x_1 + x_2 + ... left to
+    right, then one division — bit-identical to the per-component
+    form.
     """
     c = F.col(col) if isinstance(col, str) else col
 
     def from_digests(hs: Column) -> Column:
-        comps = [
-            F.aggregate(
-                F.transform(hs, lambda h: _byte_component(h, d)),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            / F.size(hs)
-            for d in range(dim)
-        ]
-        return F.when(F.size(hs) > 0, F.array(*comps))
+        sums = F.aggregate(
+            F.transform(hs, lambda h: _byte_vector(h, dim)),
+            F.array_repeat(F.lit(0.0), dim),
+            lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
+        )
+        n = F.size(hs)
+        return F.when(n > 0, F.transform(sums, lambda s: s / n))
 
     return bind_once(
         F.transform(tokens_expr(c), lambda t: F.md5(t)), from_digests
@@ -83,10 +87,7 @@ def token_embedding_expr(token: Column, dim: int = DEFAULT_DIM) -> Column:
     (BERTScore greedy matching). Never the zero vector, so cosine is
     always defined. The digest is bound once, not hashed per
     component."""
-    return bind_once(
-        F.md5(token),
-        lambda h: F.array(*[_byte_component(h, d) for d in range(dim)]),
-    )
+    return bind_once(F.md5(token), lambda h: _byte_vector(h, dim))
 
 
 def embed_labels(

@@ -128,6 +128,13 @@ def detect_license(df: DataFrame, content_col: str = "content") -> DataFrame:
 # -- per-file line statistics ---------------------------------------------------
 
 
+def _fresh_name(base: str, taken: set[str]) -> str:
+    """`base`, with underscores appended until it is not in `taken`."""
+    while base in taken:
+        base += "_"
+    return base
+
+
 def code_line_stats(
     df: DataFrame,
     content_col: str = "content",
@@ -144,25 +151,23 @@ def code_line_stats(
     aliases survive CollapseProject) and every metric reads the
     attribute: the content is split once per row, not once per
     referencing metric."""
+    # staging names chosen to differ from every passed-through column
+    taken = {*id_cols, lang_col}
+    lines_c, trimmed_c, nonblank_c = (
+        _fresh_name(f"__cls_{n}", taken) for n in ("lines", "trimmed", "nonblank")
+    )
+    keep = [*id_cols, lang_col]
     staged = df.select(
-        *id_cols,
-        F.col(lang_col),
-        F.split(F.col(content_col), r"\n").alias("_lines"),
+        *keep, F.split(F.col(content_col), r"\n").alias(lines_c)
     ).select(
-        *id_cols,
-        F.col(lang_col),
-        F.col("_lines"),
-        F.transform(F.col("_lines"), lambda l: F.trim(l)).alias("_trimmed"),
+        *keep, lines_c, F.transform(F.col(lines_c), lambda l: F.trim(l)).alias(trimmed_c)
     ).select(
-        *id_cols,
-        F.col(lang_col),
-        F.col("_lines"),
-        F.col("_trimmed"),
-        F.filter(F.col("_trimmed"), lambda l: l != "").alias("_nonblank"),
+        *keep,
+        lines_c,
+        trimmed_c,
+        F.filter(F.col(trimmed_c), lambda l: l != "").alias(nonblank_c),
     )
-    lines, trimmed, nonblank = (
-        F.col("_lines"), F.col("_trimmed"), F.col("_nonblank")
-    )
+    lines, trimmed, nonblank = F.col(lines_c), F.col(trimmed_c), F.col(nonblank_c)
     n_lines = F.size(lines)
     blank = F.size(F.filter(trimmed, lambda l: l == ""))
     comment_start = F.when(

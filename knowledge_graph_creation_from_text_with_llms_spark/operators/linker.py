@@ -4,21 +4,25 @@ The reference resolves each surface form via per-row Wikidata API calls
 with an in-memory memo cache (/root/reference/src/core/Integrator/
 Matcher.py:44-172). The Spark-native design replaces that with:
 
-  distinct surface forms  →  broadcast join against an alias dictionary
+  alias dictionary  →  ranked once per normalized alias key
   (preference: exact label [rank 0] > alias [rank 1], ties broken by
   smallest id — mirroring Matcher.py:75-92's exact-label-first scan)
-  →  re-join results onto the fact rows.
+  →  broadcast left join onto the fact rows.
 
-`distinct()` before the join reproduces the reference's lookup-once-
-per-label cache semantics while keeping the expensive path off the
-fact table. The dictionary side is always broadcast (it is the small
-side by construction); the fact side never shuffles for the lookup.
+Every fact row with the same label gets the same id, which is the
+reference's lookup-once-per-label cache semantics. The dictionary side
+is always broadcast (it is the small side by construction); the fact
+side never shuffles for the lookup. link_triples ranks the entity
+dictionary once and uses it for both the subj and the obj column.
 
 Property linking supports the reference's three methods
 (Matcher.py:100-172): "exact" (the offline stand-in for its API path),
 "cos_similarity" (top-k cosine against label/alias embeddings,
 Matcher.py:174-256), and "mixed" (exact first, cosine fallback for the
-unmatched remainder — anti-join then union, Matcher.py:149-166).
+unmatched remainder, Matcher.py:149-166). The two cosine methods
+resolve each distinct predicate once, spread over every core, into a
+small (pred, pred_id) table that is broadcast onto the facts; "mixed"
+scores only the predicates the exact lookup left unlinked.
 """
 
 from __future__ import annotations
@@ -26,37 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_expr
-
-
-def best_match_per_label(
-    labels: DataFrame,
-    dictionary: DataFrame,
-    label_col: str,
-    id_col: str,
-) -> DataFrame:
-    """labels(label_col) × dictionary(alias, rank, id_col) →
-    (label_col, id_col) picking the best candidate per label by
-    (rank asc, id asc). Case-insensitive trimmed equality, like the
-    reference's .lower() comparisons (Matcher.py:75-87)."""
-    d = dictionary.select(
-        F.lower(F.trim(F.col("alias"))).alias("_k"),
-        F.col("rank").alias("_rank"),
-        F.col(id_col),
-    )
-    joined = labels.join(
-        F.broadcast(d),
-        F.lower(F.trim(F.col(label_col))) == F.col("_k"),
-        "left",
-    )
-    w = Window.partitionBy(label_col).orderBy(
-        F.col("_rank").asc_nulls_last(), F.col(id_col).asc_nulls_last()
-    )
-    return (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(label_col, id_col)
-    )
+from ..functions.vectors import cosine_prenorm_expr, norm_expr
 
 
 def resolve_labels(dictionary: DataFrame, id_col: str = "entity_id") -> DataFrame:
@@ -64,10 +38,13 @@ def resolve_labels(dictionary: DataFrame, id_col: str = "entity_id") -> DataFram
     key — min by (rank, id) among rows sharing lower(trim(alias)).
     Factored out of link_labels so callers that link SEVERAL label
     columns against the SAME dictionary (subj+obj in link_triples /
-    gate._linked_triples) can compute — and localCheckpoint — the
-    ranked table once instead of re-running the dictionary pipeline
-    per linked column (the dictionary is often derived from a corpus
-    scan, so each re-evaluation repeats that scan)."""
+    gate._linked_triples, the exact lookup of link_predicates' "mixed")
+    rank it once and pass the result as `resolved=` to each
+    link_labels call, so every lookup broadcasts the same ranked table
+    (for link_triples' subj and obj: one Window over the entity
+    dictionary in the executed plan). gate also localCheckpoints it:
+    its dictionary is derived from a corpus scan, which each
+    re-evaluation would repeat."""
     w = Window.partitionBy("_k").orderBy(
         F.col("_rank").asc_nulls_last(), F.col(id_col).asc_nulls_last()
     )
@@ -143,7 +120,11 @@ def topk_properties(
     similarity, rank_pos).
 
     Scale shape: |distinct preds| × |property alias rows| via broadcast
-    nested-loop on the tiny dictionary — never a shuffle of the facts.
+    nested-loop on the tiny dictionary — never a shuffle of the facts,
+    and the predicates keep their partitioning through the scoring.
+    Both norms are computed once per input row (per predicate, per
+    property row) before the cross join, so each pair costs one dot
+    product (cosine_prenorm_expr is bit-identical to cosine_expr).
     For dictionaries too big to cross (not the case here), swap in an
     LSH blocking join; the interface stays the same.
     """
@@ -154,33 +135,38 @@ def topk_properties(
             "alias",
             F.col("rank").alias("_prank"),
             F.col("embedding").alias("_pemb"),
+            norm_expr(F.col("embedding")).alias("_pnorm"),
         )
     )
-    scored = predicates.crossJoin(d).withColumn(
-        "_sim", cosine_expr(F.col(pred_emb_col), F.col("_pemb"))
+    scored = (
+        predicates.withColumn("_qnorm", norm_expr(F.col(pred_emb_col)))
+        .crossJoin(d)
+        .withColumn(
+            "_sim",
+            cosine_prenorm_expr(
+                F.col(pred_emb_col), F.col("_pemb"), F.col("_qnorm"), F.col("_pnorm")
+            ),
+        )
     )
     # per (pred, prop): best similarity over label+aliases; alias text
     # wins only when strictly greater than the label similarity
     # (Matcher.py:228-234)
-    per_prop = (
-        scored.groupBy(pred_col, "prop_id")
-        .agg(
-            F.max("_sim").alias("similarity"),
-            # _plabel is constant within a prop_id group
-            F.max("_plabel").alias("label"),
-            # tie-break fully deterministic: similarity, then
-            # label-beats-alias, then the alias string itself (two
-            # aliases tying at the same similarity always resolve the
-            # same way across runs)
-            F.max_by(
-                "alias",
-                F.struct(
-                    F.col("_sim"),
-                    F.when(F.col("_prank") == 0, 1).otherwise(0),
-                    F.col("alias"),
-                ),
-            ).alias("best_match_text"),
-        )
+    per_prop = scored.groupBy(pred_col, "prop_id").agg(
+        F.max("_sim").alias("similarity"),
+        # _plabel is constant within a prop_id group
+        F.max("_plabel").alias("label"),
+        # tie-break fully deterministic: similarity, then
+        # label-beats-alias, then the alias string itself (two aliases
+        # tying at the same similarity always resolve the same way
+        # across runs)
+        F.max_by(
+            "alias",
+            F.struct(
+                F.col("_sim"),
+                F.when(F.col("_prank") == 0, 1).otherwise(0),
+                F.col("alias"),
+            ),
+        ).alias("best_match_text"),
     )
     return rank_topk(per_prop, pred_col=pred_col, k=k)
 
@@ -193,38 +179,66 @@ def link_predicates(
     out_col: str = "pred_id",
     pred_embeddings: DataFrame | None = None,
 ) -> DataFrame:
-    """Predicate linking with the reference's three strategies."""
+    """Predicate linking with the reference's three strategies.
+
+    "exact" is link_labels against the property dictionary and keeps
+    the facts' column order, out_col last. "cos_similarity" and
+    "mixed" resolve each DISTINCT predicate once, into a small
+    (pred, out_col) table that one broadcast left join attaches to the
+    facts on pred equality (so pred comes first, then the other facts
+    columns, then out_col; a NULL pred never links):
+
+    - the predicates are hash-partitioned into defaultParallelism
+      partitions before they are deduplicated, like rouge_best_match
+      does, so AQE cannot coalesce the CPU-heavy scoring onto one task;
+    - "mixed" attaches the exact id by broadcast (the ranked
+      dictionary), and only the predicates whose exact id is NULL are
+      embedded and scored;
+    - the cosine winner is topk_properties' rank 1 (similarity desc
+      nulls last, then prop_id asc). A predicate without alphanumeric
+      tokens has a NULL hash embedding, so every similarity ties at
+      NULL and it links to the smallest prop_id.
+
+    Without `pred_embeddings` the distinct predicates are embedded
+    with the deterministic hash embedding (functions.embeddings);
+    pass (pred, pred_embedding) rows to use a real encoder's vectors.
+    Facts whose pred has no row there stay unlinked by cosine.
+    """
     if method == "exact":
         return link_labels(facts, property_dict, pred_col, out_col, id_col="prop_id")
     if method not in ("cos_similarity", "mixed"):
         raise ValueError(f"Invalid method: {method}. Use 'exact', 'cos_similarity', or 'mixed'.")
+    parallelism = facts.sparkSession.sparkContext.defaultParallelism
+    preds = facts.select(pred_col).repartition(parallelism, pred_col).distinct()
     if pred_embeddings is None:
-        # default encoder: the deterministic hash embedding (the
-        # model-free stand-in; see functions.embeddings) over the
-        # distinct predicates — pass pred_embeddings explicitly to use
-        # a real encoder's vectors
+        candidates = preds
+    else:
+        candidates = pred_embeddings.repartition(parallelism, pred_col)
+    exact = None
+    if method == "mixed":
+        resolved = resolve_labels(property_dict, id_col="prop_id")
+
+        def with_exact(df: DataFrame) -> DataFrame:
+            return link_labels(df, property_dict, pred_col, out_col, "prop_id", resolved)
+
+        # the exact id depends on the predicate alone: exactly-linked
+        # predicates keep it, the rest are the only ones scored
+        preds = with_exact(preds)
+        exact = preds.where(F.col(out_col).isNotNull())
+        candidates = preds if pred_embeddings is None else with_exact(candidates)
+        candidates = candidates.where(F.col(out_col).isNull()).drop(out_col)
+    if pred_embeddings is None:
         from ..functions.embeddings import hash_embedding_expr
 
-        pred_embeddings = (
-            facts.select(pred_col)
-            .distinct()
-            .withColumn("pred_embedding", hash_embedding_expr(F.col(pred_col)))
+        candidates = candidates.withColumn(
+            "pred_embedding", hash_embedding_expr(F.col(pred_col))
         )
-    top1 = (
-        topk_properties(pred_embeddings, property_dict, pred_col=pred_col, k=1)
-        .select(pred_col, F.col("prop_id").alias("_cos_id"))
+    table = topk_properties(candidates, property_dict, pred_col=pred_col, k=1).select(
+        pred_col, F.col("prop_id").alias(out_col)
     )
-    if method == "cos_similarity":
-        return facts.join(F.broadcast(top1), on=pred_col, how="left").withColumnRenamed(
-            "_cos_id", out_col
-        )
-    # mixed: exact first, cosine only for the unmatched remainder
-    exact = link_labels(facts, property_dict, pred_col, out_col, id_col="prop_id")
-    return (
-        exact.join(F.broadcast(top1), on=pred_col, how="left")
-        .withColumn(out_col, F.coalesce(F.col(out_col), F.col("_cos_id")))
-        .drop("_cos_id")
-    )
+    if exact is not None:
+        table = exact.unionByName(table)
+    return facts.join(F.broadcast(table), on=pred_col, how="left")
 
 
 def link_triples(
@@ -235,8 +249,17 @@ def link_triples(
     pred_embeddings: DataFrame | None = None,
 ) -> DataFrame:
     """triples_raw → triples_linked. Unlinked ids stay NULL;
-    is_literal = object not linked (Integrator.py:145-150)."""
-    out = link_labels(triples_raw, entity_dict, "subj", "subj_id")
-    out = link_labels(out, entity_dict, "obj", "obj_id")
-    out = link_predicates(out, property_dict, method, pred_embeddings=pred_embeddings)
-    return out.withColumn("is_literal", F.col("obj_id").isNull())
+    is_literal = object not linked (Integrator.py:145-150). The entity
+    dictionary is ranked once (resolve_labels) for both the subj and
+    the obj lookup."""
+    # predicates first, on the raw triples: their distinct-predicate
+    # subtree then carries no entity joins
+    out = link_predicates(triples_raw, property_dict, method, pred_embeddings=pred_embeddings)
+    resolved = resolve_labels(entity_dict)
+    out = link_labels(out, entity_dict, "subj", "subj_id", resolved=resolved)
+    out = link_labels(out, entity_dict, "obj", "obj_id", resolved=resolved)
+    return out.select(
+        *[c for c in out.columns if c != "pred_id"],
+        "pred_id",
+        F.col("obj_id").isNull().alias("is_literal"),
+    )

@@ -29,6 +29,7 @@ import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -49,6 +50,22 @@ def _parquet_rows(path: str) -> int:
         if name.endswith(".parquet"):
             total += pq.ParquetFile(os.path.join(path, name)).metadata.num_rows
     return total
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_schema(path: str) -> StructType | None:
+    """The Spark row schema recorded in the footer of one parquet file
+    under `path`, or None when there is no such file or key."""
+    import pyarrow.parquet as pq
+
+    names = sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
+    if not names:
+        return None
+    meta = pq.read_schema(os.path.join(path, names[0])).metadata or {}
+    raw = meta.get(_SPARK_SCHEMA_KEY)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
 
 
 class ParquetCatalog:
@@ -169,12 +186,21 @@ class ParquetCatalog:
         )
 
     def read(self, table: str, snapshot: int | None = None) -> DataFrame:
+        """The committed snapshot (default: the latest) as a DataFrame.
+
+        The schema comes from the snapshot's own parquet footer: Spark
+        stores its row schema there (_SPARK_SCHEMA_KEY), and every
+        snapshot is written by Spark, so the read skips the one-task
+        schema-inference job that spark.read.parquet launches. A
+        snapshot without that key (written by another writer) falls
+        back to inference."""
         snap = snapshot or self.latest_snapshot(table)
         if snap is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
-        return self.spark.read.parquet(
-            os.path.join(self._table_dir(table), f"snapshot={snap}")
-        )
+        path = os.path.join(self._table_dir(table), f"snapshot={snap}")
+        schema = _spark_schema(path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
 
     def compact(self, table: str) -> CommitInfo:
         """Fold every committed snapshot of `table` into one (Iceberg:

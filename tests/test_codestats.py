@@ -67,6 +67,23 @@ def test_code_line_stats(spark):
     assert r.max_line_len == len("longer line here")
 
 
+def test_code_line_stats_id_cols_may_use_staging_names(spark):
+    """id columns named like code_line_stats' staging columns pass
+    through unchanged and leave the metrics as they are."""
+    content = "# c1\n\nx = 1\nx = 1\nlonger line here\n"
+    base = _code(spark, [(1, "python", content)])
+    ids = ("doc_id", "_lines", "__cls_lines", "__cls_trimmed")
+    df = base.select(
+        "*",
+        F.lit("a").alias("_lines"),
+        F.lit("b").alias("__cls_lines"),
+        F.lit("c").alias("__cls_trimmed"),
+    )
+    got = codestats.code_line_stats(df, id_cols=ids).collect()[0]
+    want = codestats.code_line_stats(base).collect()[0]
+    assert got.asDict() == {**want.asDict(), "_lines": "a", "__cls_lines": "b", "__cls_trimmed": "c"}
+
+
 def test_line_stats_empty_content(spark):
     df = _code(spark, [(1, "python", "")])
     r = codestats.code_line_stats(df).collect()[0]

@@ -4,6 +4,7 @@ the last committed snapshot and produces identical final tables)."""
 from pyspark.sql import functions as F
 
 from knowledge_graph_creation_from_text_with_llms_spark.plans.pipeline import (
+    STAGES,
     KGPipeline,
     PipelineConfig,
 )
@@ -395,3 +396,55 @@ def test_recover_pretoken_partial_drops_completes(spark, tmp_path):
     assert cat.snapshots("t") == [snap]
     got = sorted(r.id for r in KGPipeline._read_all(cat, "t").collect())
     assert got == list(range(13))
+
+
+def _jobs_during(spark, fn):
+    """(fn's result, ids of the Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"catalog-read-{id(fn)}"
+    sc.setJobGroup(group, "catalog read")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_catalog_read_uses_footer_schema_without_a_job(spark, tmp_path):
+    """read() takes each snapshot's schema from the Spark row metadata
+    in its parquet footer: the same schema spark.read.parquet infers,
+    and no inference job."""
+    import os
+
+    cat = ParquetCatalog(str(tmp_path / "cat"), spark)
+    KGPipeline(spark, cat, PipelineConfig(chunk_size=60)).run(_source(spark))
+    tables = ["source", *STAGES]
+    assert all(cat.exists(t) for t in tables)
+    for t in tables:
+        df, jobs = _jobs_during(spark, lambda: cat.read(t))
+        assert jobs == [], t
+        path = os.path.join(cat.root, t, f"snapshot={cat.latest_snapshot(t)}")
+        inferred = spark.read.parquet(path)
+        assert df.schema == inferred.schema, t
+        assert df.columns == inferred.columns, t
+
+
+def test_catalog_read_falls_back_to_inference_without_spark_metadata(spark, tmp_path):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cat = ParquetCatalog(str(tmp_path / "cat"), spark)
+    snap = os.path.join(cat.root, "ext", "snapshot=1")
+    os.makedirs(snap)
+    pq.write_table(
+        pa.table({"k": ["a", "b"], "v": pa.array([1, 2], pa.int32())}),
+        os.path.join(snap, "part-0.parquet"),
+    )
+    footer = pq.read_schema(os.path.join(snap, "part-0.parquet")).metadata or {}
+    assert b"org.apache.spark.sql.parquet.row.metadata" not in footer
+    df = cat.read("ext")
+    assert df.schema == spark.read.parquet(snap).schema
+    assert sorted(map(tuple, df.collect())) == [("a", 1), ("b", 2)]

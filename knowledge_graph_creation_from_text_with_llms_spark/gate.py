@@ -331,10 +331,7 @@ FROM state GROUP BY doc_id, chunk_id
 def kg_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy fold chunker (reference Extractor.py:72-93 semantics) in
     word-unit mode over the synthetic docs. Routed through
-    chunk_documents with engine=None so the oracle hash-verifies the
-    SHIPPED default engine (pandas unless KG_CHUNK_ENGINE overrides) —
-    the expr twin stays covered by the byte-equivalence pytest suite
-    and is gate-checked whenever a campaign exports KG_CHUNK_ENGINE."""
+    chunk_documents, so the oracle hash-verifies the shipped chunker."""
     docs = _docs(spark, sf_dir)
     out = chunk_documents(
         docs, CHUNK_SIZE, unit="word", text_col="text", carry_cols=("doc_id",)

@@ -115,7 +115,7 @@ def learn_bpe(
     num_merges: int = 20,
     text_col: str = "text",
     max_vocab: int | None = None,
-    learn_engine: str | None = None,
+    learn_engine: str = "auto",
     max_driver_vocab: int = 1_000_000,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
     """Learn `num_merges` BPE merges; returns (merges, final_vocab).
@@ -125,9 +125,8 @@ def learn_bpe(
     is (w, syms, cnt) with every vocabulary word fully encoded — join
     corpus tokens against it to tokenize the training corpus itself.
 
-    learn_engine (or KG_BPE_ENGINE): where the merge LOOP runs — the
-    corpus-scale work is always the one distributed vocabulary
-    aggregation either way.
+    learn_engine: where the merge LOOP runs — the corpus-scale work
+    is always the one distributed vocabulary aggregation either way.
     - "distributed": each round is one aggregation over the VOCABULARY
       plus a 1-row argmax collect — the only driver traffic is the
       winning pair. Right when even the distinct-word table is too big
@@ -153,9 +152,7 @@ def learn_bpe(
     where even the distinct-word table is large. Stops early when no
     pair occurs twice.
     """
-    import os
-
-    engine = learn_engine or os.environ.get("KG_BPE_ENGINE", "auto")
+    engine = learn_engine
     if engine not in ("auto", "distributed", "driver"):
         raise ValueError(f"unknown BPE learn engine {engine!r}")
     vocab = _word_vocab(docs, text_col)

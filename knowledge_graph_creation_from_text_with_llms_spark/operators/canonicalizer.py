@@ -46,7 +46,6 @@ def salted_mention_counts(
     salt_col_source: str = "doc_id",
     num_salts: int = 16,
     hash_doc_keys: bool = False,
-    materialize: str | None = None,
 ) -> DataFrame:
     """mentions(label, doc_id, …) → (canonical_key, node_id,
     n_mentions, n_docs, aliases) via salted two-phase reduce.
@@ -66,120 +65,30 @@ def salted_mention_counts(
     )
     keyed = mentions.select(
         canonical_key_expr(label_col).alias("canonical_key"),
-        F.col(label_col).alias("_surface"),
         doc_key.alias("_doc"),
     ).where(F.col("canonical_key") != "")
-    # Round-4 restructure ("two_scan", default): the round-3 form
-    # funneled BOTH output paths through one materialized
-    # (key, surface, doc) aggregation — one full-width shuffle plus a
-    # localCheckpoint write+read of the same bytes. The round-4
-    # scaling campaigns showed that stage pinned at ~22 s at BOTH 2
-    # and 8 pinned cores: on a single box, shuffle and block-manager
-    # bandwidth are shared resources that do NOT scale with cores,
-    # while map-side scan/regex work DOES. So the two paths now scan
-    # the (cheap, codegen, core-scaling) mention map twice and each
-    # shuffles only what it needs:
+    # Counts and aliases are two scans of the (cheap, codegen) mention
+    # map, each shuffling only what it needs, and nothing is
+    # materialized:
     #   - counts path: (key, doc) with map-side combine — no surface
-    #     strings in the exchange (~40% fewer bytes than phase 0);
-    #   - aliases path: distinct raw surfaces FIRST (codegen string
-    #     hash-agg, map-side partial dedup to vocabulary size), then
-    #     the normalize regex once per distinct surface — the second
-    #     scan never pays mention-scale regex.
-    # No materialization at all: nothing is written to the block
-    # manager. materialize="checkpoint" / "persist" keep the
-    # single-scan forms for comparison, and "fold" keeps the fork-free
-    # set-union form — measured WORSE (same-window A/B at 800k docs:
-    # nodes 192.7 s vs two_scan 81.0 s at 2 cores, 49.5 vs 28.3 s at
-    # 8): mention-scale collect_set plans as ObjectHashAggregate,
-    # which loses to codegen-count-plus-rescan by ~2.4×. Kept as a
-    # selectable mode so the negative result stays reproducible.
-    if materialize is None:
-        import os
-
-        # env-tunable default so A/B harnesses (scaling_child) can
-        # flip the plan without code edits
-        materialize = os.environ.get("KG_NODES_MATERIALIZE", "two_scan")
-    if materialize not in ("fold", "two_scan", "checkpoint", "persist"):
-        raise ValueError(
-            "materialize must be 'fold', 'two_scan', 'persist' or "
-            f"'checkpoint', got {materialize!r}"
+    #     strings in the exchange;
+    #   - aliases path: distinct raw surfaces first, then the normalize
+    #     regex once per distinct surface (vocabulary scale, not
+    #     mention scale). Valid because canonical_key is a pure
+    #     function of the surface, so distinct-surface → (key, surface)
+    #     pairs are already distinct.
+    per_doc = keyed.groupBy("canonical_key", "_doc").agg(
+        F.count(F.lit(1)).alias("_cnt")
+    )
+    alias_src = (
+        mentions.select(F.col(label_col).alias("_surface"))
+        .distinct()
+        .select(
+            canonical_key_expr("_surface").alias("canonical_key"),
+            "_surface",
         )
-    if materialize == "fold":
-        # The fork-free form: aliases ride THROUGH the salted count
-        # phases as set-union aggregates (commutative+associative, so
-        # phase-2 merge stays exact), so counts and aliases share ONE
-        # lineage — one scan (no duplicated regex map), one
-        # mention-scale exchange (map-side partial collect_set), no
-        # materialization, and no final join. Buffer bound: per
-        # (key, doc) the surface set is per-doc tiny; per (key, salt)
-        # and per key it is the vocabulary the output's aliases array
-        # must hold anyway.
-        per_doc = keyed.groupBy("canonical_key", "_doc").agg(
-            F.count(F.lit(1)).alias("_cnt"),
-            F.collect_set("_surface").alias("_surfs"),
-        )
-        salted = per_doc.withColumn(
-            "_salt", F.pmod(F.xxhash64("_doc"), F.lit(num_salts))
-        )
-        partial = salted.groupBy("canonical_key", "_salt").agg(
-            F.sum("_cnt").alias("_cnt"),
-            F.count(F.lit(1)).alias("_docs"),
-            F.array_distinct(F.flatten(F.collect_list("_surfs"))).alias(
-                "_surfs"
-            ),
-        )
-        merged = partial.groupBy("canonical_key").agg(
-            F.sum("_cnt").alias("n_mentions"),
-            F.sum("_docs").alias("n_docs"),
-            F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("_surfs")))
-            ).alias("aliases"),
-        )
-        return merged.select(
-            "canonical_key",
-            surrogate_id_expr(F.col("canonical_key")).alias("node_id"),
-            "n_mentions",
-            "n_docs",
-            "aliases",
-        )
-    if materialize == "two_scan":
-        per_doc = keyed.groupBy("canonical_key", "_doc").agg(
-            F.count(F.lit(1)).alias("_cnt")
-        )
-        # distinct-then-key: the alias path's regex runs on DISTINCT
-        # surfaces (vocabulary scale), not per mention row — the
-        # second scan is a codegen string hash-agg, and the normalize
-        # regex (the N-side serial cost) runs once per surface form.
-        # Valid because canonical_key is a pure function of the
-        # surface, so distinct-surface → (key, surface) pairs are
-        # already distinct.
-        alias_src = (
-            mentions.select(F.col(label_col).alias("_surface"))
-            .distinct()
-            .select(
-                canonical_key_expr("_surface").alias("canonical_key"),
-                "_surface",
-            )
-            .where(F.col("canonical_key") != "")
-        )
-    else:
-        per_doc_surface = keyed.groupBy(
-            "canonical_key", "_surface", "_doc"
-        ).agg(F.count(F.lit(1)).alias("_cnt"))
-        if materialize == "persist":
-            from pyspark import StorageLevel
-
-            per_doc_surface = per_doc_surface.persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-        else:
-            per_doc_surface = per_doc_surface.localCheckpoint(eager=True)
-        per_doc = per_doc_surface.groupBy("canonical_key", "_doc").agg(
-            F.sum("_cnt").alias("_cnt")
-        )
-        alias_src = per_doc_surface.select(
-            "canonical_key", "_surface"
-        ).distinct()
+        .where(F.col("canonical_key") != "")
+    )
     # phase 1 merges per (key, salt); phase 2 merges the S partials.
     salted = per_doc.withColumn(
         "_salt", F.pmod(F.xxhash64("_doc"), F.lit(num_salts))

@@ -20,7 +20,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
@@ -109,155 +109,6 @@ def chunk_array_udf(chunk_size: int, unit: str = "sentence"):
     return _udf
 
 
-# -- JVM-side expression chunker ---------------------------------------------
-#
-# The pandas-UDF chunker runs one Python interpreter hop per Arrow
-# batch; on the measured substrate, python-worker stages scale at
-# ~0.5-0.7 N→4N while JVM stages reach ~0.93 (BENCH/substrate_probes
-# .json), and the chunks stage was the pipeline's second-worst scaler
-# (0.69). The same fold is expressible with Spark higher-order
-# functions — `aggregate` over the split units with a (chunks, cur)
-# struct accumulator — which keeps the stage JVM-side: no python
-# workers, no Arrow transfer, map-only. Semantics are byte-identical
-# to split_sentences+greedy_pack (equivalence-tested on the reference
-# corpus texts and property-tested); the single known residual is
-# exotic control-character "whitespace" (U+001C-1F), which Python's
-# \\s matches and Java's (?U)\\s does not — absent from every corpus
-# this engine targets.
-
-# Java needs UNICODE_CHARACTER_CLASS for \s/\S to cover unicode
-# whitespace (NBSP etc.) the way Python's re does by default.
-_J_SENT_BREAK = r"(?U)(?<=[.!?])\s+"
-_J_SENT_SEP = r"(?U)(?<=[.!?])(\s+)"
-_J_LAST_TOKEN = r"(?U)(\S+)$"
-
-
-def _no_break_expr(tok: Column) -> Column:
-    """Column twin of _is_no_break_token (same decision table)."""
-    stem = F.regexp_replace(
-        F.lower(tok.substr(F.lit(1), F.length(tok) - 1)), r"\.+$", ""
-    )
-    return tok.endswith(".") & (
-        tok.rlike(r"^[A-Za-z]\.$")
-        | tok.rlike(r"^(?:[A-Za-z]{1,2}\.){2,}$")
-        | F.array_contains(
-            F.array(*[F.lit(a) for a in sorted(_ABBREVIATIONS)]), stem
-        )
-    )
-
-
-def sentences_expr(col: Column | str) -> Column:
-    """split_sentences as a pure Column expression (array<string>).
-
-    Split parts and the matched separator runs are extracted side by
-    side, then a linear `aggregate` fold re-joins parts across
-    no-break boundaries using the ORIGINAL separator bytes — so merged
-    sentences are byte-identical to the Python splitter's slices.
-
-    The split parts / separator arrays are bound once (bind_once):
-    captured inside the fold lambda they would re-run both full-text
-    regex extractions once per sentence boundary per row."""
-    from ..functions.text import bind_once
-
-    text = F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(""))
-
-    def build(ps: Column) -> Column:
-        parts = ps.getField("parts")
-        seps = ps.getField("seps")
-        n = F.size(seps)
-        idx = F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
-            F.array().cast("array<int>")
-        )
-        acc0 = F.struct(
-            F.array().cast("array<string>").alias("sents"),
-            F.element_at(parts, 1).alias("cur"),
-        )
-
-        def step(acc: Column, i: Column) -> Column:
-            part = F.element_at(parts, i + 1)
-            prev = F.regexp_extract(acc["cur"], _J_LAST_TOKEN, 1)
-            merged = F.struct(
-                acc["sents"].alias("sents"),
-                F.concat(acc["cur"], F.element_at(seps, i), part).alias("cur"),
-            )
-            flushed = F.struct(
-                F.when(
-                    acc["cur"] != "", F.array_append(acc["sents"], acc["cur"])
-                )
-                .otherwise(acc["sents"])
-                .alias("sents"),
-                part.alias("cur"),
-            )
-            return F.when(_no_break_expr(prev), merged).otherwise(flushed)
-
-        return F.aggregate(
-            idx,
-            acc0,
-            step,
-            lambda acc: F.when(
-                acc["cur"] != "", F.array_append(acc["sents"], acc["cur"])
-            ).otherwise(acc["sents"]),
-        )
-
-    return bind_once(
-        F.struct(
-            F.split(text, _J_SENT_BREAK).alias("parts"),
-            F.regexp_extract_all(text, F.lit(_J_SENT_SEP), 1).alias("seps"),
-        ),
-        build,
-    )
-
-
-def pack_array_expr(units: Column, chunk_size: int) -> Column:
-    """greedy_pack as a linear `aggregate` fold (array<string> in/out).
-
-    Exact reference condition len(cur)+len(unit)+1 <= chunk_size,
-    including the oversized-first-unit quirk (the empty current chunk
-    is appended then filtered, like the Python twin)."""
-    acc0 = F.struct(
-        F.array().cast("array<string>").alias("chunks"),
-        F.lit("").alias("cur"),
-    )
-
-    def step(acc: Column, u: Column) -> Column:
-        fits = (F.length(acc["cur"]) + F.length(u) + 1) <= F.lit(chunk_size)
-        grown = F.when(acc["cur"] == "", u).otherwise(
-            F.concat(acc["cur"], F.lit(" "), u)
-        )
-        return F.when(
-            fits, F.struct(acc["chunks"].alias("chunks"), grown.alias("cur"))
-        ).otherwise(
-            F.struct(
-                F.array_append(acc["chunks"], acc["cur"]).alias("chunks"),
-                u.alias("cur"),
-            )
-        )
-
-    return F.aggregate(
-        units,
-        acc0,
-        step,
-        lambda acc: F.filter(
-            F.array_append(acc["chunks"], acc["cur"]),
-            lambda c: c != F.lit(""),
-        ),
-    )
-
-
-def chunk_array_expr(
-    text_col: Column | str, chunk_size: int, unit: str = "sentence"
-) -> Column:
-    """text -> array<string> of chunks, entirely JVM-side."""
-    text = F.col(text_col) if isinstance(text_col, str) else text_col
-    if unit == "word":
-        units = F.regexp_extract_all(
-            F.lower(F.coalesce(text, F.lit(""))), F.lit("[a-z0-9]+"), 0
-        )
-    else:
-        units = sentences_expr(text)
-    return pack_array_expr(units, chunk_size)
-
-
 def chunk_documents(
     source: DataFrame,
     chunk_size: int = 500,
@@ -271,32 +122,14 @@ def chunk_documents(
         "lang",
         "content_sha256",
     ),
-    engine: str | None = None,
 ) -> DataFrame:
     """source → chunks(doc_id, …, chunk_id, text). chunk_id is 1-based
     to match the reference's chunk_{i}.txt numbering
-    (Extractor.py:95-106).
-
-    engine: "pandas" (default; the Arrow-batched UDF) or "expr"
-    (byte-identical JVM-side higher-order-function fold — no python
-    workers; for deployments without python workers). The default is
-    the MEASURED choice, not a guess: a same-window interleaved A/B
-    at 200k docs (scripts/engine_ab.py, 2026-08-18) put the pandas
-    fold at parity on N-core walls, 1.2x faster at 4N, and a BETTER
-    stage scaling (0.87 vs 0.65) — the round-4 premise that
-    python-worker stages cap scaling did not survive measurement
-    (Arrow stages hit 0.87-0.94 N→4N). Selectable per call or via
-    KG_CHUNK_ENGINE."""
-    import os
-
-    engine = engine or os.environ.get("KG_CHUNK_ENGINE", "pandas")
-    if engine not in ("expr", "pandas"):
-        raise ValueError(f"unknown chunk engine {engine!r}")
+    (Extractor.py:95-106). unit is "sentence" or "word"."""
+    if unit not in ("sentence", "word"):
+        raise ValueError(f"unknown chunk unit {unit!r}")
     keep = [c for c in carry_cols if c in source.columns]
-    if engine == "expr":
-        arr = chunk_array_expr(F.col(text_col), chunk_size, unit)
-    else:
-        arr = chunk_array_udf(chunk_size, unit)(F.col(text_col))
+    arr = chunk_array_udf(chunk_size, unit)(F.col(text_col))
     exploded = source.select(*keep, F.posexplode(arr).alias("pos", "text"))
     return exploded.select(
         *keep, (F.col("pos") + F.lit(1)).cast("int").alias("chunk_id"), "text"

@@ -28,8 +28,7 @@ from collections.abc import Iterator
 from typing import Callable
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 DEFAULT_SYSTEM_MESSAGE = (
     "You are an information extraction engine. Extract knowledge triples "
@@ -139,83 +138,6 @@ class HFCausalBackend(Backend):  # pragma: no cover - no GPU/weights in CI
                 )
             )
         return pd.Series(outs, index=texts.index)
-
-
-# -- JVM-side expression twin of RuleBasedBackend -----------------------------
-#
-# RuleBasedBackend is a regex tokenize + adjacent-pair string format —
-# exactly the shape Spark higher-order functions express natively.
-# This twin keeps the deterministic backend entirely in whole-stage
-# codegen (zero python workers); it exists for deployments where
-# python workers are unavailable or priced out. It is NOT the
-# default: a same-window interleaved A/B (scripts/engine_ab.py,
-# 2026-08-18, 200k docs, pinned 2- vs 8-core JVMs) measured the
-# Arrow-batched mapInPandas path 3.85x faster at N and 3.68x at 4N
-# with equal stage scaling (0.94 vs 0.98) — C-regex over Arrow
-# batches beats java.util.regex + per-token UTF8String/concat
-# garbage on this string-heavy shape. Select via
-# PipelineConfig.extract_engine="expr" / KG_EXTRACT_ENGINE=expr.
-#
-# Byte-equivalence with RuleBasedBackend.generate is pinned by
-# tests/test_extractor.py (adversarial + reference-corpus + fuzz);
-# the known residual class is non-ASCII lowercase mappings, where
-# Python str.lower() and the JVM agree on every case the fuzz corpus
-# exercises (both are Unicode full-lowercase; the [a-z0-9] tokenizer
-# then drops anything outside ASCII either way).
-
-
-def response_expr(text: Column | str) -> Column:
-    """RuleBasedBackend._one as a pure Column expression.
-
-    tokens = [a-z0-9]+ runs of lower(text); line i (1-based) is
-    "i. (toks[i-1], precedes, toks[i])"; lines joined with \\n.
-    """
-    from ..functions.text import bind_once
-
-    t = F.col(text) if isinstance(text, str) else text
-
-    def build(toks: Column) -> Column:
-        n = F.size(toks)
-        # sequence(1, 0) would generate a DESCENDING [1, 0] — guard n < 2
-        idx = F.when(n >= 2, F.sequence(F.lit(1), n - 1)).otherwise(
-            F.array().cast("array<int>")
-        )
-        lines = F.transform(
-            idx,
-            lambda i: F.concat(
-                i.cast("string"),
-                F.lit(". ("),
-                F.element_at(toks, i),
-                F.lit(", precedes, "),
-                F.element_at(toks, i + 1),
-                F.lit(")"),
-            ),
-        )
-        return F.array_join(lines, "\n")
-
-    # token array bound once — captured inside the line lambda it
-    # would re-run the tokenize regex per emitted line
-    return bind_once(
-        F.regexp_extract_all(
-            F.lower(F.coalesce(t, F.lit(""))), F.lit("[a-z0-9]+"), 0
-        ),
-        build,
-    )
-
-
-def extract_responses_expr(
-    chunks: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """chunks → raw_responses via the JVM-side RuleBasedBackend twin.
-
-    Same output schema and column order as
-    extract_responses(chunks, RuleBasedBackend): every non-text column
-    carried through, plus `response string`. Map-only, no python
-    workers, no Arrow transfer — stays in whole-stage codegen."""
-    other_cols = [c for c in chunks.columns if c != text_col]
-    return chunks.select(
-        *other_cols, response_expr(text_col).alias("response")
-    )
 
 
 def extract_responses(

@@ -39,15 +39,6 @@ class PipelineConfig:
     clean_html: bool = False
     # P10: cap chunks per document (reference main.py max_chunks)
     max_chunks: int | None = None
-    # extract engine: None → KG_EXTRACT_ENGINE env, default "auto"
-    # (= "pandas", the Arrow-batched mapInPandas path, for every
-    # backend — the measured default: same-window interleaved A/B
-    # put it 3.7-3.9x faster than the JVM expr twin at BOTH
-    # parallelism levels with equal scaling, scripts/engine_ab.py.
-    # "expr" opts into the byte-identical JVM twin — valid only for
-    # the deterministic RuleBasedBackend — for deployments without
-    # python workers)
-    extract_engine: str | None = None
 
 
 STAGES = ("chunks", "raw_responses", "triples_raw", "triples_linked",
@@ -83,26 +74,6 @@ class KGPipeline:
         return chunks
 
     def stage_responses(self, chunks: DataFrame) -> DataFrame:
-        import os
-
-        engine = self.config.extract_engine or os.environ.get(
-            "KG_EXTRACT_ENGINE", "auto"
-        )
-        if engine not in ("auto", "expr", "pandas"):
-            raise ValueError(f"unknown extract engine {engine!r}")
-        is_rule_based = (
-            self.config.backend_factory is extractor.RuleBasedBackend
-        )
-        if engine == "auto":
-            engine = "pandas"
-        if engine == "expr":
-            if not is_rule_based:
-                raise ValueError(
-                    "extract_engine='expr' is the JVM twin of "
-                    "RuleBasedBackend only; model backends need the "
-                    "mapInPandas path (extract_engine='pandas')"
-                )
-            return extractor.extract_responses_expr(chunks)
         return extractor.extract_responses(chunks, self.config.backend_factory)
 
     def stage_triples_raw(self, responses: DataFrame) -> DataFrame:

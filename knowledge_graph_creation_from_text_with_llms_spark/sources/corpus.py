@@ -72,26 +72,6 @@ def documents_as_source(documents: DataFrame) -> DataFrame:
     return with_ingest_columns(df)
 
 
-def synthetic_scaled_source(
-    spark: SparkSession, base: DataFrame, copies: int
-) -> DataFrame:
-    """Replicate a base source table `copies`× with distinct
-    repo/path/commit but the same content pool — realistic per-row
-    extractor work at benchmark scale (FIXTURES.md §1 'bench')."""
-    reps = spark.range(copies).select(F.col("id").alias("_rep"))
-    return with_ingest_columns(
-        base.select("repo", "path", "commit", "lang", "content")
-        .crossJoin(F.broadcast(reps))
-        .select(
-            F.concat_ws("-", "repo", "_rep").alias("repo"),
-            "path",
-            F.sha2(F.concat_ws("-", "commit", "_rep"), 256).substr(1, 40).alias("commit"),
-            "lang",
-            "content",
-        )
-    )
-
-
 SOURCE_DDL = "repo string, path string, commit string, lang string, content string"
 
 

@@ -77,13 +77,9 @@ def main() -> None:
         plan = df._jdf.queryExecution().executedPlan().toString()
         parts += [f"## {name}", "", f"{why}.", "", "```", skeleton(plan), "```", ""]
 
-    # The pipeline's default text path (chunk → extract → parse) is not
-    # a gate query, but its engine choice is a round-4 deliverable: the
-    # Arrow-batched pandas engines are the MEASURED default (interleaved
-    # A/B: 3.7-3.9x cheaper extract at equal ~0.9 stage scaling,
-    # scripts/engine_ab.py) and the chain must never plan a
-    # row-at-a-time BatchEvalPython node; the byte-identical JVM expr
-    # twins remain the python-free opt-in (pinned by
+    # The pipeline's text path (chunk → extract → parse) is not a gate
+    # query: its Arrow-batched pandas chunker and extractor must never
+    # plan a row-at-a-time BatchEvalPython node (pinned by
     # tests/test_plans.py::test_pipeline_text_path_engine_plans).
     import tempfile
 
@@ -110,15 +106,11 @@ def main() -> None:
         chain.write.format("noop").mode("overwrite").save()
         plan = chain._jdf.queryExecution().executedPlan().toString()
         parts += [
-            "## pipeline text path (chunk → extract → parse, default engines)",
+            "## pipeline text path (chunk → extract → parse)",
             "",
-            "Arrow-batched pandas chunker + extractor (the measured default:"
-            " interleaved A/B scripts/engine_ab.py — pandas extract 3.7-3.9x"
-            " faster than the JVM expr twin at both parallelism levels, equal"
-            " ~0.9 stage scaling); no row-at-a-time python anywhere. The"
-            " byte-identical JVM expr twins (KG_CHUNK_ENGINE=expr +"
-            " extract_engine='expr') plan fully python-free for deployments"
-            " without python workers.",
+            "Arrow-batched pandas chunker + extractor (the extractor measured"
+            " 3.7-3.9x faster than a JVM expression twin, since deleted;"
+            " BENCH/engine_ab.jsonl); no row-at-a-time python anywhere.",
             "",
             "```",
             skeleton(plan),

@@ -13,27 +13,38 @@ def _mentions(spark):
         rows.append((f"doc{d}", "lebron james!"))
     rows.append(("doc0", "  LeBron   James  "))
     rows.append(("doc1", "Akron"))
+    rows.append(("doc2", "!!!"))  # normalizes to "", never a node
     return spark.createDataFrame(rows, "doc_id string, label string")
 
 
 def test_salted_counts_match_plain_groupby(spark):
+    """The salted two-scan reduce equals a plain single-phase groupBy on
+    every output column: counts, surrogate id and sorted aliases."""
     m = _mentions(spark)
     salted = {
-        r.canonical_key: (r.n_mentions, r.n_docs)
+        r.canonical_key: (r.node_id, r.n_mentions, r.n_docs, tuple(r.aliases))
         for r in canonicalizer.salted_mention_counts(m, num_salts=8).collect()
     }
     plain = {
-        r.k: (r.nm, r.nd)
+        r.k: (r.node_id, r.nm, r.nd, tuple(r.aliases))
         for r in m.select(
-            canonicalizer.canonical_key_expr("label").alias("k"), "doc_id"
+            canonicalizer.canonical_key_expr("label").alias("k"),
+            "label",
+            "doc_id",
         )
+        .where(F.col("k") != "")
         .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("nm"), F.countDistinct("doc_id").alias("nd"))
+        .agg(
+            F.count(F.lit(1)).alias("nm"),
+            F.countDistinct("doc_id").alias("nd"),
+            F.array_sort(F.collect_set("label")).alias("aliases"),
+        )
+        .withColumn("node_id", canonicalizer.surrogate_id_expr(F.col("k")))
         .collect()
     }
     assert salted == plain
-    assert salted["lebron james"] == (81, 40)
-    assert salted["akron"] == (1, 1)
+    assert salted["lebron james"][1:3] == (81, 40)
+    assert salted["akron"][1:3] == (1, 1)
 
 
 def test_coreferent_forms_merge(spark):
@@ -44,36 +55,6 @@ def test_coreferent_forms_merge(spark):
         "LeBron James",
         "lebron james!",
     ]
-
-
-def test_materialize_modes_equivalent(spark):
-    """two_scan / checkpoint / persist are plan shapes, not semantics:
-    all three must produce identical rows (incl. sorted alias arrays)."""
-    m = _mentions(spark)
-    outs = {
-        mode: {
-            r.canonical_key: (r.node_id, r.n_mentions, r.n_docs, tuple(r.aliases))
-            for r in canonicalizer.salted_mention_counts(
-                m, num_salts=8, materialize=mode
-            ).collect()
-        }
-        for mode in ("fold", "two_scan", "checkpoint", "persist")
-    }
-    assert (
-        outs["fold"]
-        == outs["two_scan"]
-        == outs["checkpoint"]
-        == outs["persist"]
-    )
-
-
-def test_materialize_mode_validated(spark):
-    import pytest
-
-    with pytest.raises(ValueError, match="materialize"):
-        canonicalizer.salted_mention_counts(
-            _mentions(spark), materialize="bogus"
-        ).collect()
 
 
 def test_surrogate_ids_stable(spark):

@@ -1,7 +1,6 @@
 """Chunker fold semantics (reference Extractor.py:72-93)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from knowledge_graph_creation_from_text_with_llms_spark.operators.chunker import (
     chunk_documents,
@@ -114,43 +113,44 @@ def test_chunk_matches_pure_python_fold(spark):
     assert out == greedy_pack(split_sentences(text), 60)
 
 
-# -- JVM-side expression chunker (round 4) -----------------------------------
+_SRC_SCHEMA = (
+    "doc_id string, repo string, path string, commit string, lang string,"
+    " content string, content_sha256 string"
+)
 
 
-def _expr_vs_python(spark, texts, configs):
-    """Batched equivalence: chunk_array_expr output == the Python
-    split_sentences+greedy_pack fold, byte-for-byte."""
+def _shipped_vs_python(spark, texts, configs):
+    """Batched equivalence: chunk_documents (Spark, pandas UDF) output
+    == the Python split_sentences / word fold + greedy_pack,
+    byte-for-byte, in chunk_id order."""
     import re
 
-    from knowledge_graph_creation_from_text_with_llms_spark.operators.chunker import (
-        chunk_array_expr,
-    )
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "i long, text string"
+    src = spark.createDataFrame(
+        [(f"d{i}", "r", "p", "c", "t", t, "h") for i, t in enumerate(texts)],
+        _SRC_SCHEMA,
     )
     for unit, size in configs:
-        got = {
-            r.i: r.arr
-            for r in df.select(
-                "i", chunk_array_expr(F.col("text"), size, unit).alias("arr")
-            ).collect()
-        }
+        got: dict[str, list[tuple[int, str]]] = {}
+        for r in chunk_documents(src, chunk_size=size, unit=unit).collect():
+            got.setdefault(r.doc_id, []).append((r.chunk_id, r.text))
         for i, t in enumerate(texts):
             units = (
                 re.findall(r"[a-z0-9]+", (t or "").lower())
                 if unit == "word"
                 else split_sentences(t or "")
             )
-            assert got[i] == greedy_pack(units, size), (unit, size, t[:80])
+            want = greedy_pack(units, size)
+            assert sorted(got.get(f"d{i}", [])) == list(
+                enumerate(want, start=1)
+            ), (unit, size, (t or "")[:80])
 
 
-def test_expr_chunker_matches_python_adversarial(spark):
+def test_chunk_documents_matches_python_adversarial(spark):
     texts = [
         "",
         " ",
         "   \t \n ",
+        None,
         "Dr. Smith arrived. He left.",
         "The U.S. economy grew. It slowed.",
         "J. K. Rowling wrote it. Yes.",
@@ -167,18 +167,23 @@ def test_expr_chunker_matches_python_adversarial(spark):
         "one. two.\t three.\n four.",
         "A.B. co. said. Next one.",
         "word " * 200,
-        "Sep. NBSP break. Next.",  # unicode whitespace after period
+        "Sep.\u00a0NBSP break. Next.",  # unicode whitespace after period
         "ends with abbrev etc.",
         ". leading dot. x",
         "!? !!! ?. .",
         "multi  spaces.  kept?  yes. ok",
+        "Artificial intelligence is a field. It has many subfields! "
+        "Is it useful? Yes. Dr. Smith thinks so, e.g. in the U.S. today.",
+        "Short.",
     ]
-    _expr_vs_python(
-        spark, texts, [("sentence", 500), ("sentence", 40), ("word", 30)]
+    _shipped_vs_python(
+        spark,
+        texts,
+        [("sentence", 500), ("sentence", 60), ("sentence", 40), ("word", 30)],
     )
 
 
-def test_expr_chunker_matches_python_reference_corpus(spark):
+def test_chunk_documents_matches_python_reference_corpus(spark):
     import glob
     import os
 
@@ -190,10 +195,10 @@ def test_expr_chunker_matches_python_reference_corpus(spark):
         if t.strip():
             texts.append(t)
     assert len(texts) >= 50
-    _expr_vs_python(spark, texts, [("sentence", 500), ("sentence", 80)])
+    _shipped_vs_python(spark, texts, [("sentence", 500), ("sentence", 80)])
 
 
-def test_expr_chunker_matches_python_random(spark):
+def test_chunk_documents_matches_python_random(spark):
     """Deterministic fuzz: strings over a punctuation-heavy alphabet
     (the break/guard decision space), batched through one collect."""
     import random
@@ -206,39 +211,15 @@ def test_expr_chunker_matches_python_random(spark):
         "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 200)))
         for _ in range(300)
     ]
-    _expr_vs_python(
+    _shipped_vs_python(
         spark, texts, [("sentence", 50), ("sentence", 15), ("word", 12)]
     )
 
 
-def test_chunk_documents_engines_equivalent(spark):
-    texts = [
-        "Artificial intelligence is a field. It has many subfields! "
-        "Is it useful? Yes. Dr. Smith thinks so, e.g. in the U.S. today.",
-        "Short.",
-        "",
-    ]
+def test_chunk_documents_rejects_unknown_unit(spark):
     src = spark.createDataFrame(
-        [(f"d{i}", "r", "p", "c", "t", t, "h") for i, t in enumerate(texts)],
-        "doc_id string, repo string, path string, commit string, lang string,"
-        " content string, content_sha256 string",
+        [("d", "r", "p", "c", "t", "x.", "h")], _SRC_SCHEMA
     )
-    a = sorted(
-        (r.doc_id, r.chunk_id, r.text)
-        for r in chunk_documents(src, chunk_size=60, engine="expr").collect()
-    )
-    b = sorted(
-        (r.doc_id, r.chunk_id, r.text)
-        for r in chunk_documents(src, chunk_size=60, engine="pandas").collect()
-    )
-    assert a == b
-
-
-def test_chunk_documents_rejects_unknown_engine(spark):
-    src = spark.createDataFrame(
-        [("d", "r", "p", "c", "t", "x.", "h")],
-        "doc_id string, repo string, path string, commit string, lang string,"
-        " content string, content_sha256 string",
-    )
-    with pytest.raises(ValueError):
-        chunk_documents(src, engine="nope")
+    for unit in ("char", "words", "Sentence"):
+        with pytest.raises(ValueError, match="unit"):
+            chunk_documents(src, unit=unit)

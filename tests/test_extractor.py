@@ -1,35 +1,32 @@
-"""Extractor engines: the JVM-side expression twin of RuleBasedBackend
-must be byte-identical to the pandas backend (reference prompt/response
-contract: TripleGenerator.py:117-164)."""
+"""Extractor: the shipped mapInPandas path must return exactly what the
+backend returns per row, with every non-text column carried through
+(reference prompt/response contract: TripleGenerator.py:117-164)."""
 
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from knowledge_graph_creation_from_text_with_llms_spark.operators.extractor import (
     RuleBasedBackend,
     extract_responses,
-    extract_responses_expr,
-    response_expr,
 )
 
 
-def _expr_vs_python(spark, texts):
-    """Batched equivalence: response_expr == RuleBasedBackend.generate,
-    byte-for-byte."""
+def _shipped_vs_backend(spark, texts):
+    """Batched equivalence: extract_responses(…, RuleBasedBackend) ==
+    RuleBasedBackend._one per row, byte-for-byte."""
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "i long, text string"
     )
     got = {
-        r.i: r.resp
-        for r in df.select("i", response_expr("text").alias("resp")).collect()
+        r.i: r.response
+        for r in extract_responses(df, RuleBasedBackend).collect()
     }
-    want = RuleBasedBackend().generate(pd.Series(list(texts)))
+    assert len(got) == len(texts)
+    backend = RuleBasedBackend()
     for i, t in enumerate(texts):
-        assert got[i] == want[i], (i, repr((t or "")[:80]))
+        assert got[i] == backend._one(t), (i, repr((t or "")[:80]))
 
 
-def test_expr_extractor_matches_backend_adversarial(spark):
+def test_extract_responses_matches_backend_adversarial(spark):
     texts = [
         "",
         " ",
@@ -56,10 +53,10 @@ def test_expr_extractor_matches_backend_adversarial(spark):
         "0",
         "-",
     ]
-    _expr_vs_python(spark, texts)
+    _shipped_vs_backend(spark, texts)
 
 
-def test_expr_extractor_matches_backend_fuzz(spark):
+def test_extract_responses_matches_backend_fuzz(spark):
     """Deterministic fuzz over a mixed ascii/unicode alphabet (token
     boundary + case-mapping decision space)."""
     import random
@@ -72,10 +69,10 @@ def test_expr_extractor_matches_backend_fuzz(spark):
         "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 300)))
         for _ in range(400)
     ]
-    _expr_vs_python(spark, texts)
+    _shipped_vs_backend(spark, texts)
 
 
-def test_expr_extractor_matches_backend_reference_corpus(spark):
+def test_extract_responses_matches_backend_reference_corpus(spark):
     import glob
     import os
 
@@ -87,60 +84,39 @@ def test_expr_extractor_matches_backend_reference_corpus(spark):
         if t.strip():
             texts.append(t)
     assert len(texts) >= 50
-    _expr_vs_python(spark, texts)
+    _shipped_vs_backend(spark, texts)
 
 
-def test_extract_responses_engines_equivalent(spark):
-    """Full-operator equivalence: same schema, same column order, same
-    rows as the mapInPandas path with RuleBasedBackend."""
+def test_extract_responses_passes_columns_through(spark):
+    """Every non-text column passes through in order, `response
+    string` comes last, and each row's response is the backend's."""
     src = spark.createDataFrame(
         [
             ("d1", 1, "h1", "alpha beta gamma"),
             ("d1", 2, "h1", ""),
             ("d2", 1, "h2", "Solo"),
             ("d3", 1, "h3", "x y z w v"),
+            ("d4", 1, "h4", None),
         ],
         "doc_id string, chunk_id int, content_sha256 string, text string",
     )
-    a = extract_responses_expr(src)
-    b = extract_responses(src, RuleBasedBackend)
-    assert a.columns == b.columns
-    # same names+types; nullability may be TIGHTER on the expr side
-    # (its response is provably non-null; parquet materialization
-    # normalizes both to nullable)
-    assert [(f.name, f.dataType) for f in a.schema] == [
-        (f.name, f.dataType) for f in b.schema
+    out = extract_responses(src, RuleBasedBackend)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("doc_id", "string"),
+        ("chunk_id", "int"),
+        ("content_sha256", "string"),
+        ("response", "string"),
     ]
-    rows_a = sorted(map(tuple, a.collect()))
-    rows_b = sorted(map(tuple, b.collect()))
-    assert rows_a == rows_b
-
-
-def test_expr_extractor_plan_is_python_free(spark):
-    """The expr engine must never schedule python workers."""
-    src = spark.createDataFrame(
-        [("d", 1, "h", "a b c")],
-        "doc_id string, chunk_id int, content_sha256 string, text string",
+    backend = RuleBasedBackend()
+    want = sorted(
+        (d, c, h, backend._one(t)) for d, c, h, t in map(tuple, src.collect())
     )
-    plan = extract_responses_expr(src)._jdf.queryExecution().executedPlan().toString()
-    for marker in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "FlatMapsInPandas"):
-        assert marker not in plan, marker
-    # while the pandas path does
-    plan_b = (
-        extract_responses(src, RuleBasedBackend)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "MapInPandas" in plan_b
+    assert sorted(map(tuple, out.collect())) == want
 
 
-def test_pipeline_extract_engine_selection(spark, tmp_path):
-    """auto → pandas for every backend (the measured default,
-    scripts/engine_ab.py); expr is the opt-in JVM twin for
-    RuleBasedBackend only and a hard error for model backends; both
-    engines produce byte-identical raw_responses through the
-    pipeline stage."""
+def test_pipeline_stage_responses_runs_configured_backend(spark, tmp_path):
+    """stage_responses feeds chunks to PipelineConfig.backend_factory
+    (RuleBasedBackend by default) through the mapInPandas path."""
     from knowledge_graph_creation_from_text_with_llms_spark.operators.extractor import (
         ReplayBackend,
     )
@@ -157,29 +133,15 @@ def test_pipeline_extract_engine_selection(spark, tmp_path):
         "doc_id string, chunk_id int, content_sha256 string, text string",
     )
 
-    def pipe(cfg):
-        return KGPipeline(spark, ParquetCatalog(str(tmp_path), spark), cfg)
+    def responses(cfg):
+        pipe = KGPipeline(spark, ParquetCatalog(str(tmp_path), spark), cfg)
+        return {r.doc_id: r.response for r in pipe.stage_responses(chunks).collect()}
 
-    # auto + RuleBasedBackend → Arrow-batched pandas path (the default)
-    auto = pipe(PipelineConfig()).stage_responses(chunks)
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    # forced expr → python-free JVM twin, byte-identical rows
-    ex = pipe(PipelineConfig(extract_engine="expr")).stage_responses(chunks)
-    assert "MapInPandas" not in ex._jdf.queryExecution().executedPlan().toString()
-    assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, ex.collect()))
-    # auto + replay backend → pandas path (no error)
-    replay = pipe(
-        PipelineConfig(backend_factory=lambda: ReplayBackend({}))
-    ).stage_responses(chunks)
-    assert "MapInPandas" in replay._jdf.queryExecution().executedPlan().toString()
-    # expr + model backend → explicit error
-    with pytest.raises(ValueError, match="expr"):
-        pipe(
-            PipelineConfig(
-                backend_factory=lambda: ReplayBackend({}),
-                extract_engine="expr",
-            )
-        ).stage_responses(chunks)
-    with pytest.raises(ValueError, match="unknown extract engine"):
-        pipe(PipelineConfig(extract_engine="bogus")).stage_responses(chunks)
+    assert responses(PipelineConfig()) == {
+        "d1": "1. (alpha, precedes, beta)\n2. (beta, precedes, gamma)",
+        "d2": "1. (x, precedes, y)",
+    }
+    replay = {"x y": "1. (x, is, y)"}
+    assert responses(
+        PipelineConfig(backend_factory=lambda: ReplayBackend(replay))
+    ) == {"d1": "", "d2": "1. (x, is, y)"}

@@ -243,14 +243,13 @@ def test_incremental_dedup_paths_have_no_cartesian_product(spark):
 
 
 def test_canonicalizer_two_scan_has_no_materialization(spark):
-    """two_scan (default) trades one re-scan of the cheap codegen
-    mention map for zero materialization: on a single box, shuffle and
-    block-manager writes are shared-bandwidth-bound (they do NOT scale
-    with pinned cores) while map-side scan work does — measured as the
-    nodes stage going from 0.26 to 0.89 N→4N scaling efficiency at the
-    800k-doc campaign scale. The plan must contain neither a
-    checkpoint scan (Scan ExistingRDD) nor a persist scan
-    (InMemoryTableScan); the checkpoint mode, kept for A/B, must."""
+    """The counts and aliases paths each re-scan the cheap codegen
+    mention map and shuffle only what they need; nothing is
+    materialized. A single-scan form that checkpointed the shared
+    (key, surface, doc) aggregation measured slower at the 800k-doc
+    campaign scale (BENCH/BASELINE.md). The plan must contain neither
+    a checkpoint scan (Scan ExistingRDD) nor a persist scan
+    (InMemoryTableScan)."""
     from knowledge_graph_creation_from_text_with_llms_spark.operators import (
         canonicalizer,
     )
@@ -264,58 +263,18 @@ def test_canonicalizer_two_scan_has_no_materialization(spark):
         F.col("id").alias("doc_id"),
     )
     two_scan = _plan(
-        canonicalizer.salted_mention_counts(mentions, materialize="two_scan"),
-        execute=True,
+        canonicalizer.salted_mention_counts(mentions), execute=True
     )
     assert "Scan ExistingRDD" not in two_scan
     assert "InMemoryTableScan" not in two_scan
 
-    ckpt = _plan(
-        canonicalizer.salted_mention_counts(mentions, materialize="checkpoint"),
-        execute=True,
-    )
-    assert "Scan ExistingRDD" in ckpt
-
-    # fold is fork-free: aliases ride through the salted count phases,
-    # so there is no materialization AND no counts⋈aliases join at all
-    fold = _plan(
-        canonicalizer.salted_mention_counts(mentions, materialize="fold"),
-        execute=True,
-    )
-    assert "Scan ExistingRDD" not in fold
-    assert "InMemoryTableScan" not in fold
-    assert "SortMergeJoin" not in fold and "BroadcastHashJoin" not in fold
-
-
-def test_expr_chunker_stays_jvm_side(spark):
-    """The opt-in expr chunker must plan with NO python-worker nodes
-    (that is its whole point: a byte-identical fold for deployments
-    without python workers; the Arrow-batched pandas engine is the
-    measured default — scripts/engine_ab.py)."""
-    from knowledge_graph_creation_from_text_with_llms_spark.operators import chunker
-
-    src = spark.createDataFrame(
-        [("d", "Some text. More here! End?", "h")],
-        "doc_id string, content string, content_sha256 string",
-    )
-    expr_plan = _plan(chunker.chunk_documents(src, 60, engine="expr"))
-    assert "BatchEvalPython" not in expr_plan
-    assert "ArrowEvalPython" not in expr_plan
-    # the pin is meaningful: the pandas engine DOES plan a python node
-    pandas_plan = _plan(chunker.chunk_documents(src, 60, engine="pandas"))
-    assert "ArrowEvalPython" in pandas_plan
-
 
 def test_pipeline_text_path_engine_plans(spark, tmp_path):
-    """Engine contract on the chunk → extract → parse chain. The
-    DEFAULT path uses Arrow-vectorized python stages only (the
-    measured choice: same-window interleaved A/B put the pandas
-    extractor 3.7-3.9x faster than the JVM expr twin at both
-    parallelism levels with equal ~0.9 stage scaling — see
-    scripts/engine_ab.py and BENCH/BASELINE.md) and must NEVER plan a
-    row-at-a-time BatchEvalPython node. The all-expr OPT-IN config
-    (python-less deployments) must plan ZERO python nodes of any
-    kind."""
+    """Plan contract on the chunk → extract → parse chain: Arrow-
+    vectorized python stages only (a pandas-UDF chunker and a
+    mapInPandas extractor) and NEVER a row-at-a-time BatchEvalPython
+    node. JVM expression twins of both stages measured 3.7-3.9x
+    slower on extraction (BENCH/engine_ab.jsonl) and were deleted."""
     from knowledge_graph_creation_from_text_with_llms_spark.plans.pipeline import (
         KGPipeline,
         PipelineConfig,
@@ -323,7 +282,6 @@ def test_pipeline_text_path_engine_plans(spark, tmp_path):
     from knowledge_graph_creation_from_text_with_llms_spark.sources.catalog import (
         ParquetCatalog,
     )
-    from knowledge_graph_creation_from_text_with_llms_spark.operators import chunker
 
     src = spark.createDataFrame(
         [("d", "r", "p", "c", "t", "Alpha beta gamma. Delta five!", "h")],
@@ -334,18 +292,8 @@ def test_pipeline_text_path_engine_plans(spark, tmp_path):
     triples = pipe.stage_triples_raw(pipe.stage_responses(pipe.stage_chunks(src)))
     default_plan = _plan(triples)
     assert "BatchEvalPython" not in default_plan  # never row-at-a-time
+    assert "ArrowEvalPython" in default_plan  # Arrow-batched chunk fold
     assert "MapInPandas" in default_plan  # Arrow-batched extractor
-
-    # all-expr opt-in: fully python-free
-    expr_pipe = KGPipeline(
-        spark, ParquetCatalog(str(tmp_path), spark),
-        PipelineConfig(extract_engine="expr"),
-    )
-    chunks = chunker.chunk_documents(src, 500, "char", engine="expr")
-    expr_triples = expr_pipe.stage_triples_raw(expr_pipe.stage_responses(chunks))
-    expr_plan = _plan(expr_triples)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in expr_plan, marker
 
 
 def test_viz_edges_degree_attach_is_join_free(spark):

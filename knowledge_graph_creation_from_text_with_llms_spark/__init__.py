@@ -5,7 +5,7 @@ abraxas-dev/Knowledge-Graph-Creation-from-Text-with-LLMs (reference at
 /root/reference, studied for behavior only): chunk source text, extract
 (subject, predicate, object) triples via micro-batched vectorized UDF
 backends, entity-link against broadcast alias dictionaries, canonicalize
-coreferent mentions with salted two-phase reduces, and materialize
+coreferent mentions with doc-salted two-phase reduces, and materialize
 nodes/edges/adjacency tables — plus the large-scale training-data
 operators (dedup, similarity search, text quality) such a pipeline needs.
 

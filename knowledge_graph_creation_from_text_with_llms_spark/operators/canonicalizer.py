@@ -6,13 +6,14 @@ reduce with *skew salting* for hub entities (a handful of entities —
 "LeBron James", "AI" — dominate mention counts, which at 100 TB means
 one straggler reducer unless the key is salted).
 
-Pattern: two-phase aggregation. Phase 1 groups by (key, salt) where
-salt = pmod(xxhash64(doc_id), S) — S-way fan-out of every hot key —
-computing partial aggregates; phase 2 merges the S partials per key.
-Commutative+associative aggregates only (counts, sums, min, set-unions
-capped), so the result is identical to a single-phase groupBy. AQE's
-skew handling complements this but cannot split a single hot *key*;
-salting can.
+Pattern: two-phase aggregation salted by the document. Phase 1 groups
+by (key, doc), which fans every hot key out over as many reducers as it
+has documents; phase 2 merges the per-doc partials per key, and its
+map-side combine leaves at most one row per key per map task for the
+final reduce. Commutative+associative aggregates only (counts, sums,
+set-unions), so the result is identical to a single-phase groupBy.
+AQE's skew handling complements this but cannot split a single hot
+*key*; the doc-keyed phase does.
 """
 
 from __future__ import annotations
@@ -44,20 +45,18 @@ def salted_mention_counts(
     mentions: DataFrame,
     label_col: str = "label",
     salt_col_source: str = "doc_id",
-    num_salts: int = 16,
     hash_doc_keys: bool = False,
 ) -> DataFrame:
     """mentions(label, doc_id, …) → (canonical_key, node_id,
-    n_mentions, n_docs, aliases) via salted two-phase reduce.
+    n_mentions, n_docs, aliases) via a doc-salted two-phase reduce.
 
-    n_docs uses per-salt distinct doc sets merged at phase 2 — exact
-    because the salt is derived from doc_id, so a doc never spans two
-    salt buckets of the same key.
+    n_docs counts the phase-1 (key, doc) rows per key — exact because
+    phase 1 leaves one row per distinct doc of a key.
     """
     # hash_doc_keys narrows the shuffled doc key to 64 bits (documents
     # carry long sha256-hex ids); n_docs then counts distinct hashes —
     # collision odds are (per-key docs)^2 / 2^65, immaterial even at
-    # 10^12 rows, and it roughly halves shuffle bytes in phases 0-1.
+    # 10^12 rows, and it roughly halves the (key, doc) shuffle bytes.
     doc_key = (
         F.xxhash64(F.col(salt_col_source))
         if hash_doc_keys
@@ -89,17 +88,9 @@ def salted_mention_counts(
         )
         .where(F.col("canonical_key") != "")
     )
-    # phase 1 merges per (key, salt); phase 2 merges the S partials.
-    salted = per_doc.withColumn(
-        "_salt", F.pmod(F.xxhash64("_doc"), F.lit(num_salts))
-    )
-    partial = salted.groupBy("canonical_key", "_salt").agg(
-        F.sum("_cnt").alias("_cnt"),
-        F.count(F.lit(1)).alias("_docs"),
-    )
-    counts = partial.groupBy("canonical_key").agg(
+    counts = per_doc.groupBy("canonical_key").agg(
         F.sum("_cnt").alias("n_mentions"),
-        F.sum("_docs").alias("n_docs"),
+        F.count(F.lit(1)).alias("n_docs"),
     )
     # aliases — vocabulary-sized by the time it shuffles; collects
     # once per key

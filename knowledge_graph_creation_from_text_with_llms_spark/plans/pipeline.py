@@ -31,7 +31,6 @@ class PipelineConfig:
     chunk_size: int = 500
     chunk_unit: str = "sentence"
     property_method: str = "exact"  # exact | cos_similarity | mixed
-    num_salts: int = 16
     backend_factory: Callable = extractor.RuleBasedBackend
     edges_partitions: int | None = None
     # S2: run the HTML cleaner (tables/citation-sup removal, <p> join)
@@ -103,9 +102,7 @@ class KGPipeline:
                 F.col("obj").alias("label"), "doc_id"
             )
         )
-        return canonicalizer.salted_mention_counts(
-            mentions, num_salts=self.config.num_salts, hash_doc_keys=True
-        )
+        return canonicalizer.salted_mention_counts(mentions, hash_doc_keys=True)
 
     def stage_edges(self, triples_linked: DataFrame) -> DataFrame:
         return graph.build_edges(triples_linked)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 _DEFAULTS = {
@@ -40,6 +41,17 @@ _DEFAULTS = {
     "spark.sql.optimizer.excludedRules": (
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     ),
+    # Keep every generated class compiled for the life of the JVM.
+    # Spark's default cache holds 100 entries (a Guava cache that
+    # evicts per segment, so it can evict below 100). Measured working
+    # sets, in classes: a perfbench build op (KGPipeline.run, mixed
+    # linking) 107, an evaluate op 85, bench.py's kg_pipeline_e2e leaf
+    # 58, tests/test_pipeline_resume.py 97. At 100, every warm build op
+    # recompiled 75-77 classes (0.85-0.98 s of Janino time on 4 cores)
+    # and every evaluate op 23-24, restarting their JIT warm-up; at
+    # 1000 both recompile none. Static conf: it applies when the
+    # session's JVM is created.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
 }
@@ -67,3 +79,26 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def with_defaults(conf: SparkConf) -> SparkConf:
+    """Fill every package default that `conf` leaves unset, in place.
+
+    Set-if-missing: a value already in `conf` (spark-submit's --master
+    and --conf, spark-defaults.conf) wins, and no master is added."""
+    for k, v in _DEFAULTS.items():
+        conf.setIfMissing(k, v)
+    return conf
+
+
+def submit_session(app_name: str) -> SparkSession:
+    """SparkSession for a spark-submit entry point: the launcher's
+    settings as given, plus the package defaults they leave unset.
+
+    The launcher's settings live in the JVM that spark-submit started
+    (bare `python` starts one with spark-submit's own master default,
+    local[*]), so the conf is read from there before the defaults are
+    merged; builder options alone would override --conf."""
+    SparkContext._ensure_initialized()
+    conf = with_defaults(SparkConf())
+    return SparkSession.builder.config(conf=conf).appName(app_name).getOrCreate()

@@ -68,6 +68,19 @@ def _spark_schema(path: str) -> StructType | None:
     return None if raw is None else StructType.fromJson(json.loads(raw))
 
 
+def _codegen_counters(spark: SparkSession) -> tuple[int, int]:
+    """(classes compiled, compile nanoseconds) so far in the driver JVM,
+    from Spark's own codegen counters. In local mode the tasks run in
+    that JVM too, so this covers every compile; on a cluster it covers
+    the driver's alone."""
+    jvm = spark._jvm
+    classes = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator.compileTime()
+    return classes, nanos
+
+
 class ParquetCatalog:
     def __init__(self, root: str, spark: SparkSession):
         self.root = root
@@ -111,6 +124,11 @@ class ParquetCatalog:
     ) -> CommitInfo:
         """Stage → atomic rename → manifest append.
 
+        The manifest row records the classes Spark compiled, and the
+        compile time, during the commit (`codegen_classes`,
+        `codegen_ms`). A warm run whose commits compile dozens of
+        classes is recompiling code its codegen cache evicted.
+
         Recovers any interrupted compaction of `table` FIRST: compact()
         allocates its output id as latest+1, so after a crash before
         its rename the snapshot list is unchanged and this write would
@@ -121,6 +139,7 @@ class ParquetCatalog:
         commit token in recover() guards the same window a second way).
         """
         t0 = time.time()
+        classes0, nanos0 = _codegen_counters(self.spark)
         self.recover(table)
         snap = (self.latest_snapshot(table) or 0) + 1
         d = self._table_dir(table)
@@ -139,6 +158,7 @@ class ParquetCatalog:
         df.write.mode("overwrite").parquet(staging)
         os.rename(staging, final)  # atomic commit
         rows = _parquet_rows(final)
+        classes1, nanos1 = _codegen_counters(self.spark)
         self._append_manifest(
             {
                 "run_id": os.environ.get("KG_RUN_ID", "local"),
@@ -147,6 +167,8 @@ class ParquetCatalog:
                 "rows_in": rows_in if rows_in is not None else -1,
                 "rows_out": rows,
                 "snapshot_id": snap,
+                "codegen_classes": classes1 - classes0,
+                "codegen_ms": round((nanos1 - nanos0) / 1e6, 1),
                 "wall_sec": round(time.time() - t0, 3),
                 "updated_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }

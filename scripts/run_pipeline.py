@@ -42,7 +42,6 @@ def main() -> int:
                     default="exact", help="property linking strategy")
     ap.add_argument("--entity-dict", help="parquet path of entity alias dictionary")
     ap.add_argument("--property-dict", help="parquet path of property dictionary")
-    ap.add_argument("--num-salts", type=int, default=16)
     ap.add_argument("--resume", action="store_true",
                     help="skip stages already committed in the catalog manifest")
     ap.add_argument("--incremental", action="store_true",
@@ -55,11 +54,12 @@ def main() -> int:
                     help="source table format (sources/corpus.read_source)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from knowledge_graph_creation_from_text_with_llms_spark.plans.pipeline import (
         KGPipeline,
         PipelineConfig,
+    )
+    from knowledge_graph_creation_from_text_with_llms_spark.session import (
+        submit_session,
     )
     from knowledge_graph_creation_from_text_with_llms_spark.sources.catalog import (
         ParquetCatalog,
@@ -69,9 +69,9 @@ def main() -> int:
         with_ingest_columns,
     )
 
-    # under spark-submit the cluster manager provides the master; the
-    # session factory's local default only kicks in for bare python
-    spark = SparkSession.builder.appName("kg-construct").getOrCreate()
+    # the launcher provides the master and any --conf; the package
+    # defaults fill only what it leaves unset
+    spark = submit_session("kg-construct")
 
     if args.input_format == "parquet":
         source = spark.read.parquet(args.input)  # tolerate extra columns
@@ -93,7 +93,6 @@ def main() -> int:
             chunk_size=args.chunk_size,
             chunk_unit=args.chunk_unit,
             property_method=args.method,
-            num_salts=args.num_salts,
         ),
         entity_dict=entity_dict,
         property_dict=property_dict,

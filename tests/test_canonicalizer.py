@@ -1,4 +1,6 @@
-"""Salted two-phase canonicalization reduce."""
+"""Doc-salted two-phase canonicalization reduce."""
+
+import hashlib
 
 from pyspark.sql import functions as F
 
@@ -18,12 +20,12 @@ def _mentions(spark):
 
 
 def test_salted_counts_match_plain_groupby(spark):
-    """The salted two-scan reduce equals a plain single-phase groupBy on
-    every output column: counts, surrogate id and sorted aliases."""
+    """The doc-salted two-scan reduce equals a plain single-phase groupBy
+    on every output column: counts, surrogate id and sorted aliases."""
     m = _mentions(spark)
     salted = {
         r.canonical_key: (r.node_id, r.n_mentions, r.n_docs, tuple(r.aliases))
-        for r in canonicalizer.salted_mention_counts(m, num_salts=8).collect()
+        for r in canonicalizer.salted_mention_counts(m).collect()
     }
     plain = {
         r.k: (r.node_id, r.nm, r.nd, tuple(r.aliases))
@@ -58,8 +60,13 @@ def test_coreferent_forms_merge(spark):
 
 
 def test_surrogate_ids_stable(spark):
-    a = canonicalizer.salted_mention_counts(_mentions(spark), num_salts=4).collect()
-    b = canonicalizer.salted_mention_counts(_mentions(spark), num_salts=32).collect()
-    assert {r.canonical_key: r.node_id for r in a} == {
-        r.canonical_key: r.node_id for r in b
+    """node_id is md5 of the canonical key alone: the same for any input
+    layout, and reproducible outside Spark."""
+    m = _mentions(spark)
+    a = canonicalizer.salted_mention_counts(m.repartition(1)).collect()
+    b = canonicalizer.salted_mention_counts(m.repartition(7)).collect()
+    ids = {r.canonical_key: r.node_id for r in a}
+    assert ids == {r.canonical_key: r.node_id for r in b}
+    assert ids == {
+        k: "E" + hashlib.md5(k.encode()).hexdigest()[:16] for k in ids
     }

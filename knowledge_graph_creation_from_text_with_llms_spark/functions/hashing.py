@@ -4,8 +4,7 @@ Everything here is built on md5 hex strings because md5 produces
 identical output in Spark, DuckDB, and Python — which makes surrogate
 IDs, minhash signatures, and simhash bits verifiable engine-vs-engine.
 (xxhash64 would be faster JVM-side but is Spark-specific; at 100 TB the
-md5 cost is dwarfed by the shuffle it keys, and it can be swapped via
-the `algo` arg without changing downstream semantics.)
+md5 cost is dwarfed by the shuffle it keys.)
 """
 
 from __future__ import annotations
@@ -18,11 +17,6 @@ def _c(col: str | Column) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def md5_key(col: str | Column) -> Column:
-    """Stable 32-hex surrogate key of a string column."""
-    return F.md5(_c(col))
-
-
 def md5_qid(col: str | Column, prefix: str = "Q") -> Column:
     """Wikidata-shaped surrogate id: 'Q' + first 8 md5 hex chars.
 
@@ -30,24 +24,6 @@ def md5_qid(col: str | Column, prefix: str = "Q") -> Column:
     deterministic so oracles can rebuild the same dictionary in SQL.
     """
     return F.concat(F.lit(prefix), F.upper(F.substring(F.md5(_c(col)), 1, 8)))
-
-
-def minhash_expr(shingles: Column, seed: int) -> Column:
-    """One minhash signature: lexicographic min of md5(seed || '|' || s).
-
-    A keyed md5 acts as an independent random permutation per seed; the
-    lexicographic minimum over hex strings is a valid min-wise hash.
-    Identical SQL: list_min(list_transform(shingles,
-    s -> md5(concat(seed, '|', s)))) / Spark array_min(transform(...)).
-    Returns NULL for empty shingle sets.
-    """
-    return F.array_min(
-        F.transform(shingles, lambda s: F.md5(F.concat(F.lit(str(seed)), F.lit("|"), s)))
-    )
-
-
-def minhash_signatures(shingles: Column, num_hashes: int = 8) -> list[Column]:
-    return [minhash_expr(shingles, i) for i in range(num_hashes)]
 
 
 SLICES_PER_MD5 = 4  # 32 hex chars → 4 independent 8-hex (32-bit) slices

@@ -88,49 +88,6 @@ def char_shingles_expr(col: str | Column, k: int = 8) -> Column:
     return bind_once(F.lower(_c(col)), build)
 
 
-def lcs_len_expr(a: Column, b: Column) -> Column:
-    """Longest-common-subsequence length of two token arrays — fully
-    native (no UDF), as a single `aggregate` fold over `a` carrying the
-    DP row for `b`.
-
-    The row update is an inner fold over `b` applying the textbook
-    recurrence directly — new[j] = max(old[j], new[j-1],
-    (a_i == b_j) ? old[j-1] + 1 : 0 — with new[j-1] read off the tail
-    of the accumulator being built, so every DP cell is computed
-    exactly once (a transform-based rewrite re-evaluated its candidate
-    array per output element; measured 2× slower). O(m·n) cells per
-    row — intended for sentence/triple-length token arrays (ROUGE-L),
-    not documents. The DuckDB oracle twin computes the same values via
-    a recursive CTE with the running-max reformulation
-    (gate.kg_metrics_rougel_nostem) — same result, engine-appropriate
-    shape on each side.
-    """
-    def step(row: Column, x: Column) -> Column:
-        def cell(acc: Column, y: Column) -> Column:
-            j = F.size(acc)  # 0-based position of the cell being built
-            old_j = F.element_at(row, j + F.lit(1))
-            new_prev = F.coalesce(F.try_element_at(acc, F.lit(-1)), F.lit(0))
-            diag = F.when(j == F.lit(0), F.lit(0)).otherwise(
-                F.element_at(row, j)
-            )
-            val = F.greatest(
-                old_j,
-                new_prev,
-                F.when(y == x, diag + F.lit(1)).otherwise(F.lit(0)),
-            )
-            return F.concat(acc, F.array(val))
-
-        return F.aggregate(b, F.array().cast("array<int>"), cell)
-
-    zero = F.transform(b, lambda _: F.lit(0))
-    return F.aggregate(
-        a,
-        zero,
-        step,
-        lambda row: F.coalesce(F.try_element_at(row, F.lit(-1)), F.lit(0)),
-    )
-
-
 def bigrams_expr(col: str | Column) -> Column:
     """Adjacent token pairs as array<struct<subj,obj>> — the mention
     co-occurrence triple source. No shuffle: pure array transform.

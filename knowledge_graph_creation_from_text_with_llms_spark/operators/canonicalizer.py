@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 
 def canonical_key_expr(col: str | Column) -> Column:
@@ -41,29 +42,23 @@ def surrogate_id_expr(key: Column, prefix: str = "E") -> Column:
     return F.concat(F.lit(prefix), F.substring(F.md5(key), 1, 16))
 
 
-def salted_mention_counts(
-    mentions: DataFrame,
-    label_col: str = "label",
-    salt_col_source: str = "doc_id",
-    hash_doc_keys: bool = False,
-) -> DataFrame:
+def salted_mention_counts(mentions: DataFrame) -> DataFrame:
     """mentions(label, doc_id, …) → (canonical_key, node_id,
     n_mentions, n_docs, aliases) via a doc-salted two-phase reduce.
 
     n_docs counts the phase-1 (key, doc) rows per key — exact because
     phase 1 leaves one row per distinct doc of a key.
     """
-    # hash_doc_keys narrows the shuffled doc key to 64 bits (documents
-    # carry long sha256-hex ids); n_docs then counts distinct hashes —
-    # collision odds are (per-key docs)^2 / 2^65, immaterial even at
-    # 10^12 rows, and it roughly halves the (key, doc) shuffle bytes.
-    doc_key = (
-        F.xxhash64(F.col(salt_col_source))
-        if hash_doc_keys
-        else F.col(salt_col_source)
-    )
+    # a string doc_id is hashed to 64 bits (documents carry long
+    # sha256-hex ids); n_docs then counts distinct hashes — collision
+    # odds are (per-key docs)^2 / 2^65, immaterial even at 10^12 rows,
+    # and it roughly halves the (key, doc) shuffle bytes. Integer ids
+    # are already that narrow and shuffle as they are.
+    doc_key = F.col("doc_id")
+    if isinstance(mentions.schema["doc_id"].dataType, StringType):
+        doc_key = F.xxhash64(doc_key)
     keyed = mentions.select(
-        canonical_key_expr(label_col).alias("canonical_key"),
+        canonical_key_expr("label").alias("canonical_key"),
         doc_key.alias("_doc"),
     ).where(F.col("canonical_key") != "")
     # Counts and aliases are two scans of the (cheap, codegen) mention
@@ -80,7 +75,7 @@ def salted_mention_counts(
         F.count(F.lit(1)).alias("_cnt")
     )
     alias_src = (
-        mentions.select(F.col(label_col).alias("_surface"))
+        mentions.select(F.col("label").alias("_surface"))
         .distinct()
         .select(
             canonical_key_expr("_surface").alias("canonical_key"),

@@ -67,19 +67,3 @@ def contamination_flags(
             ),
         )
     )
-
-
-def decontaminate(
-    docs: DataFrame,
-    probes: DataFrame,
-    n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    probe_text_col: str = "text",
-) -> DataFrame:
-    """docs minus contaminated rows (schema-preserving filter)."""
-    flags = contamination_flags(
-        docs, probes, n, id_col, text_col, probe_text_col
-    )
-    clean = flags.where(~F.col("contaminated")).select(id_col)
-    return docs.join(clean, id_col)

@@ -950,26 +950,6 @@ def connected_components(
     )
 
 
-def dedup_groups(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-) -> DataFrame:
-    """Pairs → per-duplicate-cluster summary: (component, n_members,
-    members) with component = canonical (min) id — the 'keep one per
-    cluster' decision table. members is array-sorted for deterministic
-    output; at true 100 TB scale join `connected_components` output
-    directly instead of collecting member arrays."""
-    comp = connected_components(pairs, a_col, b_col)
-    return (
-        comp.groupBy("component")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_members"),
-            F.array_sort(F.collect_list("id")).alias("members"),
-        )
-    )
-
-
 def minhash_lsh_pairs_incremental(
     new_docs: DataFrame,
     prior_bands: DataFrame,

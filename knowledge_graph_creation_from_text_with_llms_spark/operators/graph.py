@@ -159,18 +159,15 @@ def build_adjacency(edges: DataFrame, max_degree: int | None = None) -> DataFram
     )
 
 
-def graph_statistics(edges: DataFrame, approx: bool = False) -> DataFrame:
+def graph_statistics(edges: DataFrame) -> DataFrame:
     """GraphManager.get_statistics (GraphManager.py:57-69): total
-    triples + distinct subjects/predicates/objects. approx=True swaps
-    exact countDistinct for HLL approx_count_distinct (the 100 TB
-    variant — one pass, no giant distinct shuffles)."""
-    cd = F.approx_count_distinct if approx else F.countDistinct
+    triples + distinct subjects/predicates/objects, exact."""
     return edges.agg(
         F.sum("weight").alias("total_raw_triples"),
         F.count(F.lit(1)).alias("total_triples"),
-        cd("src_id").alias("unique_subjects"),
-        cd("pred_id").alias("unique_predicates"),
-        cd("dst_id").alias("unique_objects"),
+        F.countDistinct("src_id").alias("unique_subjects"),
+        F.countDistinct("pred_id").alias("unique_predicates"),
+        F.countDistinct("dst_id").alias("unique_objects"),
     )
 
 

@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride as `binary` columns with a metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-`mapInPandas` stages. The actual codec work is STUBBED (no image/audio
+decode / feature-extract runs as an Arrow-batched `mapInPandas`
+stage. The actual codec work is STUBBED (no image/audio
 libraries in this container): `DeterministicFakeDecoder` produces
 seeded, shape-correct outputs so the Spark-side plumbing — schema,
 partitioning, UDF signature, batch shape — is real and tested;
@@ -18,26 +18,12 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
-    IntegerType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("mime", StringType()),
-        StructField("payload", StringType()),  # binary in real tables
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", IntegerType()),
-    ]
 )
 
 FEATURE_DIM = 16
@@ -116,93 +102,3 @@ def extract_media_features(
             )
 
     return media.mapInPandas(_run, schema=schema)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling *plan*: explode deterministic sample
-    timestamps from metadata (decode itself is the stubbed stage).
-    Native expressions — the frame list never touches Python."""
-    return media.where(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms))
-        ).alias("frame_ts_ms"),
-    )
-
-
-class DeterministicFakeResizer:
-    """Stand-in resizer: emits a payload deterministically derived
-    from (payload, target dims) — shape-correct metadata, stable
-    across runs, no image library."""
-
-    def resize(self, payload: bytes | str, w: int, h: int) -> str:
-        if isinstance(payload, str):
-            payload = payload.encode()
-        return hashlib.sha256(payload + f"|{w}x{h}".encode()).hexdigest()
-
-
-class LibraryResizer:  # pragma: no cover
-    """Real resize path, import-gated on PIL: decode → resize →
-    re-encoded PNG bytes. Raises the documented error where PIL is
-    absent (this sandbox)."""
-
-    def __init__(self) -> None:
-        try:
-            from PIL import Image  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "image libraries are not available in this environment; "
-                "use DeterministicFakeResizer for plumbing tests"
-            ) from e
-        self._image_mod = Image
-
-    def resize(self, payload: bytes, w: int, h: int) -> bytes:
-        import io
-
-        img = self._image_mod.open(io.BytesIO(payload)).resize((w, h))
-        buf = io.BytesIO()
-        img.save(buf, format="PNG")
-        return buf.getvalue()
-
-
-def resize_media(
-    media: DataFrame,
-    target_w: int,
-    target_h: int,
-    resizer_factory=DeterministicFakeResizer,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-) -> DataFrame:
-    """image rows → resized payload + updated dimensions; one
-    mapInPandas stage with a per-worker resizer singleton (same batch
-    discipline as extract_media_features). Non-image rows pass through
-    untouched on the Spark side (cheap `filter` + `unionByName`, no
-    Python for them)."""
-    schema = StructType(
-        [
-            StructField(id_col, StringType()),
-            StructField("kind", StringType()),
-            StructField("mime", StringType()),
-            StructField("payload", StringType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("duration_ms", IntegerType()),
-        ]
-    )
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rs = resizer_factory()
-        for pdf in batches:
-            out = pdf[[id_col, "kind", "mime", "payload", "width", "height", "duration_ms"]].copy()
-            out["payload"] = pdf[payload_col].map(
-                lambda p: rs.resize(p, target_w, target_h)
-            )
-            out["width"] = np.int32(target_w)
-            out["height"] = np.int32(target_h)
-            yield out
-
-    images = media.where(F.col("kind") == "image")
-    rest = media.where(F.col("kind") != "image").select(
-        id_col, "kind", "mime", "payload", "width", "height", "duration_ms"
-    )
-    return images.mapInPandas(_run, schema=schema).unionByName(rest)

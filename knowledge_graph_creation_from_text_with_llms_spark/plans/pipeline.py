@@ -102,7 +102,7 @@ class KGPipeline:
                 F.col("obj").alias("label"), "doc_id"
             )
         )
-        return canonicalizer.salted_mention_counts(mentions, hash_doc_keys=True)
+        return canonicalizer.salted_mention_counts(mentions)
 
     def stage_edges(self, triples_linked: DataFrame) -> DataFrame:
         return graph.build_edges(triples_linked)

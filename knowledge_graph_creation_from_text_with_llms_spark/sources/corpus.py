@@ -111,42 +111,3 @@ def read_source(
     else:
         raise ValueError(f"unsupported source format: {fmt}")
     return with_ingest_columns(df)
-
-
-def write_sink(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
-) -> None:
-    """Write any operator output in the format a downstream consumer
-    expects — the sink twin of `read_source`.
-
-    - parquet: the 100 TB path (columnar, splittable, zstd via session
-      conf); `partition_by` maps to directory partitioning so readers
-      get partition pruning for free.
-    - jsonl: line-delimited JSON (interchange with non-Spark tooling);
-      still splittable per file.
-    - csv: header on; arrays/structs are rejected by Spark — flatten
-      first (that is the right contract: silently stringifying nested
-      columns corrupts round-trips).
-    - text: single `value` string column, one line per row.
-
-    No coalesce(1): file count follows the partitioning of the final
-    stage — a single-file sink is a driver bottleneck at scale; small
-    outputs can be compacted by repartition(n) at the call site.
-    """
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if fmt == "parquet":
-        writer.parquet(path)
-    elif fmt in ("json", "jsonl"):
-        writer.json(path)
-    elif fmt == "csv":
-        writer.option("header", "true").csv(path)
-    elif fmt == "text":
-        writer.text(path)
-    else:
-        raise ValueError(f"unsupported sink format: {fmt}")

@@ -4,27 +4,23 @@ The reference is strictly batch (SURVEY.md §2.9). For continuously
 arriving source files, the same chunk→extract→parse transformations run
 unchanged over a file-source stream: every operator in this package is
 expressed on DataFrames, so the streaming plan is the batch plan with a
-readStream scan on top and foreachBatch sinks (checkpointed, so the
-stream resumes exactly-once after a kill — the streaming analogue of
-the manifest/resume contract).
+readStream scan on top and a checkpointed parquet sink (so the stream
+resumes exactly-once after a kill — the streaming analogue of the
+manifest/resume contract).
 
 Usage pattern (tested with Trigger.AvailableNow in
 tests/test_streaming.py):
 
-    q = stream_triples(spark, src_dir, ckpt, out_dir, schema)
+    q = stream_triples(spark, src_dir, ckpt, out_dir)
     q.awaitTermination()
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql import SparkSession
 
 from ..operators import chunker, extractor, parser
-from ..sources.corpus import with_ingest_columns
-
-SOURCE_DDL = "repo string, path string, commit string, lang string, content string"
+from ..sources.corpus import SOURCE_DDL, with_ingest_columns
 
 
 def stream_triples(
@@ -50,293 +46,6 @@ def stream_triples(
     triples = parser.parse_responses(responses)
     writer = (
         triples.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-EVENTS_DDL = "event_id long, user_id long, event_type string, ts timestamp"
-
-
-def stream_windowed_type_counts(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    output_dir: str,
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-):
-    """Event-time windowed counts per event_type with late-data
-    handling: withWatermark bounds state, append mode emits a window
-    only once it can no longer receive late rows — the streaming
-    analogue of events.type_stats. Checkpointed parquet sink; restart
-    with the same checkpoint resumes exactly-once (late files arriving
-    in a later run advance the watermark and flush earlier windows —
-    tested that way in tests/test_streaming.py)."""
-    raw = (
-        spark.readStream.schema(EVENTS_DDL)
-        .option("maxFilesPerTrigger", 8)
-        .json(source_dir)
-    )
-    counts = (
-        raw.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", window_duration).alias("win"), "event_type"
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "event_type",
-            "n_events",
-        )
-    )
-    return (
-        counts.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_sessionize(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    output_dir: str,
-    gap_seconds: int = 1800,
-):
-    """Custom stateful operator: per-user gap sessionization via
-    applyInPandasWithState (the streaming analogue of
-    events.sessionize, same gap rule). State per user = the open
-    session (start_us, last_us, n). A session row is emitted the
-    moment a later event proves a gap > gap_seconds closed it; the
-    open tail session stays in state and persists across restarts
-    through the checkpoint. Events are processed in event-time order
-    within each micro-batch; cross-batch reordering is not attempted
-    (pair with a watermarked pre-aggregation when late data matters).
-    """
-    import pandas as pd  # noqa: F401 (worker-side import)
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("session_start_us", LongType()),
-            StructField("session_end_us", LongType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("start_us", LongType()),
-            StructField("last_us", LongType()),
-            StructField("n", LongType()),
-        ]
-    )
-    gap_us = gap_seconds * 1_000_000
-
-    def close_sessions(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        (user_id,) = key
-        if state.exists:
-            start_us, last_us, n = state.get
-        else:
-            start_us = last_us = None
-            n = 0
-        closed: list[tuple] = []
-        for pdf in pdf_iter:
-            for ts_us in sorted(int(v) for v in pdf["ts_us"]):
-                if start_us is None:
-                    start_us, last_us, n = ts_us, ts_us, 1
-                elif ts_us - last_us > gap_us:
-                    closed.append((user_id, start_us, last_us, n))
-                    start_us, last_us, n = ts_us, ts_us, 1
-                else:
-                    last_us = max(last_us, ts_us)
-                    n += 1
-        state.update((start_us, last_us, n))
-        if closed:
-            yield pd.DataFrame(
-                closed,
-                columns=["user_id", "session_start_us", "session_end_us", "n_events"],
-            )
-
-    raw = (
-        spark.readStream.schema(EVENTS_DDL)
-        .option("maxFilesPerTrigger", 8)
-        .json(source_dir)
-    )
-    events = raw.select(
-        "user_id",
-        (F.unix_micros(F.col("ts"))).alias("ts_us"),
-    )
-    sessions = events.groupBy("user_id").applyInPandasWithState(
-        close_sessions,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    return (
-        sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-DOCS_STREAM_DDL = "doc_id long, text string, ts timestamp"
-
-
-def stream_dedup_exact(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    output_dir: str,
-    watermark_delay: str = "10 minutes",
-    available_now: bool = True,
-):
-    """Streaming exact deduplication: emit each distinct document text
-    ONCE across the whole stream (within the watermark horizon), keyed
-    by md5(text).
-
-    `dropDuplicatesWithinWatermark` keeps one state row per content
-    hash and expires it once the event-time watermark passes — state
-    stays bounded by the dedup horizon instead of growing with the
-    stream (the unbounded-state failure mode of plain dropDuplicates
-    on an infinite stream). The state store is checkpointed: after a
-    kill/restart, re-delivered source files do NOT re-emit documents
-    already seen — the streaming analogue of the batch
-    `dedup.exact_duplicates` survivor contract.
-    """
-    raw = (
-        spark.readStream.schema(DOCS_STREAM_DDL)
-        .option("maxFilesPerTrigger", 8)
-        .json(source_dir)
-    )
-    docs = raw.select(
-        F.md5("text").alias("content_md5"),
-        F.col("doc_id"),
-        F.col("text"),
-        F.col("ts").alias("event_ts"),
-    )
-    deduped = docs.withWatermark(
-        "event_ts", watermark_delay
-    ).dropDuplicatesWithinWatermark(["content_md5"])
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_neardup_probe(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    output_dir: str,
-    prior_bands: DataFrame,
-    prior_shingles: DataFrame,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.5,
-    available_now: bool = True,
-):
-    """Streaming near-duplicate detection: arriving documents probe the
-    STATIC snapshotted LSH index (`dedup.minhash_band_keys` output +
-    shingle sets — the same snapshot the batch incremental operator
-    folds forward) and emit exact-verified (prior_id, stream_id,
-    jaccard) pairs.
-
-    Plan shape: the band-key map is the same map-only expression
-    pipeline as batch (streaming-safe — no aggregation), candidates
-    come from a stream-static equijoin on (band_id, band_key), and the
-    exact Jaccard verify carries the stream row's own shingle set on
-    the row (no second stream scan) while the prior side joins the
-    static shingle snapshot. Append mode, no watermark needed —
-    stream-static joins are stateless. Stream×stream (within-delta)
-    pairs are the batch incremental fold's job when the delta is
-    appended to the index; this operator is the low-latency
-    stream×prior alert path.
-    """
-    from ..functions.text import word_shingles_expr
-    from ..operators.dedup import minhash_band_keys
-
-    raw = (
-        spark.readStream.schema(DOCS_STREAM_DDL)
-        .option("maxFilesPerTrigger", 8)
-        .json(source_dir)
-    )
-    docs = raw.select(
-        "doc_id",
-        "text",
-        F.col("ts").alias("event_ts"),
-        F.array_distinct(word_shingles_expr("text", shingle_n)).alias("_ssh"),
-    )
-    bands = minhash_band_keys(
-        docs, "doc_id", "text", num_hashes, rows_per_band, shingle_n
-    )
-    # re-attach the stream row's shingles (band builder projects them
-    # away); join keys are the stream's own columns — still stateless
-    stream_side = bands.join(
-        docs.select(F.col("doc_id"), "event_ts", "_ssh"), "doc_id"
-    ).select(
-        F.col("doc_id").alias("stream_id"),
-        "band_id",
-        "band_key",
-        "event_ts",
-        "_ssh",
-    )
-    prior = prior_bands.select(
-        F.col("doc_id").alias("prior_id"), "band_id", "band_key"
-    )
-    # a pair colliding in k bands appears k times: dedup with BOUNDED
-    # state (watermark horizon), not plain dropDuplicates whose state
-    # grows with the stream
-    cand = (
-        stream_side.join(prior, ["band_id", "band_key"])
-        .where(F.col("prior_id") != F.col("stream_id"))
-        .select("prior_id", "stream_id", "event_ts", "_ssh")
-        .withWatermark("event_ts", "10 minutes")
-        .dropDuplicatesWithinWatermark(["prior_id", "stream_id"])
-    )
-    verified = (
-        cand.join(
-            prior_shingles.select(
-                F.col("doc_id").alias("prior_id"), F.col("_sh").alias("_psh")
-            ),
-            "prior_id",
-        )
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("_ssh", "_psh"))
-            / F.size(F.array_union("_ssh", "_psh")),
-        )
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select(
-            F.col("prior_id").alias("id_a"),
-            F.col("stream_id").alias("id_b"),
-            "jaccard",
-        )
-    )
-    writer = (
-        verified.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")

@@ -70,3 +70,23 @@ def test_surrogate_ids_stable(spark):
     assert ids == {
         k: "E" + hashlib.md5(k.encode()).hexdigest()[:16] for k in ids
     }
+
+
+def test_doc_key_hashed_only_for_string_ids(spark):
+    """String doc ids shuffle as their xxhash64, integer ids as they
+    are; both key types give the same nodes."""
+    strings = _mentions(spark)
+    longs = strings.select(
+        F.regexp_extract("doc_id", r"\d+", 0).cast("long").alias("doc_id"),
+        "label",
+    )
+    out = {}
+    for name, m in (("string", strings), ("long", longs)):
+        df = canonicalizer.salted_mention_counts(m)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert ("xxhash64" in plan) == (name == "string"), name
+        out[name] = sorted(
+            (r.canonical_key, r.node_id, r.n_mentions, r.n_docs, tuple(r.aliases))
+            for r in df.collect()
+        )
+    assert out["string"] == out["long"]

@@ -203,17 +203,6 @@ def test_connected_components_convergence_guard(spark):
     assert comp == comp3
 
 
-def test_dedup_groups_members(spark):
-    from knowledge_graph_creation_from_text_with_llms_spark.operators import dedup
-
-    pairs = spark.createDataFrame(
-        [(5, 6), (6, 7), (30, 31)], "id_a long, id_b long"
-    )
-    groups = {r.component: r for r in dedup.dedup_groups(pairs).collect()}
-    assert list(groups[5].members) == [5, 6, 7] and groups[5].n_members == 3
-    assert list(groups[30].members) == [30, 31]
-
-
 def test_minhash_incremental_equals_full_run(spark):
     """Delta probed against the prior index must emit exactly the
     full-run pairs that touch the delta; folding the delta's index

@@ -166,9 +166,19 @@ def test_porter_stem_canonical():
 
 
 def test_rouge_best_match_hand_values(spark):
-    gen = _df(spark, [("the cat", "sat", "mat")])
-    gt = _df(spark, [("the cat", "sat on", "the mat")])
-    row = metrics.rouge_best_match(gen, gt, use_stemmer=False).collect()[0]
+    gen = _df(
+        spark,
+        [("the cat", "sat", "mat"),
+         ("b a", "c", "d"),          # tokens b a c d vs GT a b c d: LCS=3
+         ("zz", "qq", "ww")],         # no overlap → 0.0
+    )
+    gt = _df(spark, [("the cat", "sat on", "the mat"), ("a b", "c", "d")])
+    rows = {
+        (r.subj, r.pred, r.obj): r
+        for r in metrics.rouge_best_match(gen, gt, use_stemmer=False).collect()
+    }
+    assert len(rows) == 3
+    row = rows[("the cat", "sat", "mat")]
     # gen tokens: [the, cat, sat, mat]; gt: [the, cat, sat, on, the, mat]
     # rouge1 overlap=4 (the,cat,sat,mat clipped) → p=1, r=4/6
     assert abs(row.best_rouge1_f - 2 * 1 * (4 / 6) / (1 + 4 / 6)) < 1e-12
@@ -178,6 +188,15 @@ def test_rouge_best_match_hand_values(spark):
     assert abs(row.best_rouge2_f - 2 * p2 * r2 / (p2 + r2)) < 1e-12
     # LCS(the cat sat mat, the cat sat on the mat) = 4 → same as rouge1
     assert abs(row.best_rougeL_f - row.best_rouge1_f) < 1e-12
+    # b a c d vs a b c d: every unigram matches, but LCS = 3 (a c d or
+    # b c d) → ROUGE-L p = r = 3/4
+    reordered = rows[("b a", "c", "d")]
+    assert reordered.best_rouge1_f == 1.0
+    assert abs(reordered.best_rougeL_f - 2 * 0.75 * 0.75 / 1.5) < 1e-12
+    assert rows[("zz", "qq", "ww")].best_rougeL_f == 0.0
+    # empty GT: every generated row survives with 0.0
+    got = metrics.rouge_best_match(gen, _df(spark, []), use_stemmer=False).collect()
+    assert len(got) == 3 and all(r.best_rougeL_f == 0.0 for r in got)
 
 
 def test_rouge_best_match_stemming_and_empty_gt(spark):
@@ -278,36 +297,6 @@ def test_bertscore_shared_ref_dedup_is_bit_identical(spark):
     assert set(base) == set(fast)
     for k in base:
         assert base[k] == fast[k], k  # bit-identical, no tolerance
-
-
-def test_rouge_l_best_native_matches_udf_scorer(spark):
-    """The native LCS fold (rouge_l_best) must agree with the Python-UDF
-    scorer (rouge_best_match, stemmer off) on every row — and with
-    a hand-computed reordered-subsequence case where L differs from R1."""
-    gen = _df(
-        spark,
-        [("the cat", "sat", "mat"),
-         ("b a", "c", "d"),          # tokens b a c d vs GT a b c d: LCS=3
-         ("zz", "qq", "ww")],         # no overlap → 0.0
-    )
-    gt = _df(spark, [("the cat", "sat on", "the mat"), ("a b", "c", "d")])
-    native = {
-        (r.subj, r.pred, r.obj): r.best_rougeL_f
-        for r in metrics.rouge_l_best(gen, gt).collect()
-    }
-    udf = {
-        (r.subj, r.pred, r.obj): r.best_rougeL_f
-        for r in metrics.rouge_best_match(gen, gt, use_stemmer=False).collect()
-    }
-    assert set(native) == set(udf)
-    for k in native:
-        assert abs(native[k] - udf[k]) < 1e-12, k
-    # b a c d vs a b c d: LCS = 3 (a c d or b c d) → p = r = 3/4
-    assert abs(native[("b a", "c", "d")] - 2 * 0.75 * 0.75 / 1.5) < 1e-12
-    assert native[("zz", "qq", "ww")] == 0.0
-    # empty GT: rows survive with 0.0
-    rows = metrics.rouge_l_best(gen, _df(spark, [])).collect()
-    assert len(rows) == 3 and all(r.best_rougeL_f == 0.0 for r in rows)
 
 
 def _brute_rouge(gen_rows, gt_rows, use_stemmer):

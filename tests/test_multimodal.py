@@ -29,34 +29,6 @@ def test_feature_extraction_shape_and_determinism(spark):
     assert out["m1"].features != out["m2"].features  # payload-sensitive
 
 
-def test_frame_sample_plan(spark):
-    frames = multimodal.frame_sample_plan(_media(spark), every_ms=1000).collect()
-    assert {r.frame_ts_ms for r in frames} == {0, 1000, 2000, 3000}
-    assert all(r.media_id == "m3" for r in frames)
-
-
 def test_library_decoder_is_explicitly_stubbed():
     with pytest.raises(NotImplementedError):
         multimodal.LibraryDecoder().features(b"x")
-
-
-def test_resize_media_images_only(spark):
-    from knowledge_graph_creation_from_text_with_llms_spark.operators import multimodal
-
-    media = spark.createDataFrame(
-        [
-            ("m1", "image", "image/png", "payload-1", 640, 480, 0),
-            ("m2", "video", "video/mp4", "payload-2", 1920, 1080, 5000),
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    out = {r.media_id: r for r in multimodal.resize_media(media, 224, 224).collect()}
-    img = out["m1"]
-    assert (img.width, img.height) == (224, 224)
-    assert img.payload != "payload-1" and len(img.payload) == 64
-    # deterministic across runs
-    again = {r.media_id: r for r in multimodal.resize_media(media, 224, 224).collect()}
-    assert again["m1"].payload == img.payload
-    # non-images pass through untouched
-    vid = out["m2"]
-    assert (vid.width, vid.height, vid.payload) == (1920, 1080, "payload-2")

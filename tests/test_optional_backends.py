@@ -67,26 +67,23 @@ def test_sentence_encoder_gate_without_libs():
 _HAS_PIL = importlib.util.find_spec("PIL") is not None
 
 
-def test_library_decoder_and_resizer_gate_without_libs():
-    """Where PIL is absent the library paths must raise the documented
-    error AT CONSTRUCTION, and the deterministic stand-ins must
+def test_library_decoder_gate_without_libs():
+    """Where PIL is absent the library decoder must raise the documented
+    error AT CONSTRUCTION, and the deterministic stand-in must
     satisfy the same interface."""
     if _HAS_PIL:
         pytest.skip("PIL present: gate not reachable")
     with pytest.raises(NotImplementedError, match="DeterministicFakeDecoder"):
         multimodal.LibraryDecoder()
-    with pytest.raises(NotImplementedError, match="DeterministicFakeResizer"):
-        multimodal.LibraryResizer()
     feats = multimodal.DeterministicFakeDecoder().features("payload")
     assert len(feats) == multimodal.FEATURE_DIM
-    assert multimodal.DeterministicFakeResizer().resize("p", 4, 4)
 
 
 @pytest.mark.skipif(not _HAS_PIL, reason="PIL not installed")
-def test_library_decoder_and_resizer_smoke():
-    """Where PIL IS installed the real paths run: a 2×2 PNG decodes to
-    FEATURE_DIM normalized pixel features and resizes to valid PNG
-    bytes — same contract as the deterministic stand-ins."""
+def test_library_decoder_smoke():
+    """Where PIL IS installed the real path runs: a 2×2 PNG decodes to
+    FEATURE_DIM normalized pixel features — same contract as the
+    deterministic stand-in."""
     import io
 
     from PIL import Image
@@ -97,8 +94,6 @@ def test_library_decoder_and_resizer_smoke():
     feats = multimodal.LibraryDecoder().features(payload)
     assert len(feats) == multimodal.FEATURE_DIM
     assert all(0.0 <= v <= 1.0 for v in feats)
-    out = multimodal.LibraryResizer().resize(payload, 4, 4)
-    assert Image.open(io.BytesIO(out)).size == (4, 4)
 
 
 # -- Spark-path integration smokes (auto-run wherever the libs exist) --------

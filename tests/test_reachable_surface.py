@@ -1,0 +1,182 @@
+"""Every package def is run by an entry point, or kept for a reason.
+
+A def that no entry point runs is code to read, test and keep working
+for no result. This test walks the package from its entry points — the
+gate queries, `KGPipeline`, `bench.py`, `perfbench/`, `scripts/` and
+`__spark_entry__.py` — to a fixpoint, and pins the top-level functions
+and classes it never reaches to `KEEP`, each with the reason it stays.
+A new unreached def fails the test, and so does a `KEEP` entry that
+is reached again or no longer exists.
+
+The scan is by name, so it over-approximates: a def is reached when
+reached code mentions its name (a call, an attribute or an import).
+Module-level assignments are nodes too, reached only when named, so a
+constant that only dead code reads reaches nothing.
+"""
+
+import ast
+import pathlib
+
+import knowledge_graph_creation_from_text_with_llms_spark as pkg
+from knowledge_graph_creation_from_text_with_llms_spark import gate
+
+PKG_ROOT = pathlib.Path(pkg.__file__).parent
+REPO = PKG_ROOT.parent
+
+# "<module path under the package>:<def>" -> why it stays unreached
+# (COVERAGE.md row first where one applies)
+KEEP = {
+    "streaming/stream.py:stream_triples":
+        "§2.9 (a): the only stream that runs the KG chain",
+    "operators/parser.py:format_triple_line":
+        "P6: the reference writer's triple-line format (TripleGenerator.py:160)",
+    "operators/parser.py:parse_triple_lines":
+        "P6: the reference's quote-aware line parse, run by the parity tests",
+    "operators/extractor.py:format_prompt":
+        "P3: the reference's prompt, run by the e2e replay parity test",
+    "operators/extractor.py:ReplayBackend":
+        "P4: replays the reference's recorded LLM responses",
+    "operators/extractor.py:HFCausalBackend":
+        "P4: the real-model extraction backend (import-gated)",
+    "functions/embeddings.py:SentenceEncoderBackend":
+        "J3: the real-model label encoder (import-gated)",
+    "functions/embeddings.py:embed_labels_with_model":
+        "J3: the real-model embedding path",
+    "functions/vectors.py:cosine_expr":
+        "W1: reference form that cosine_prenorm_expr must equal bit for bit",
+    "operators/graph.py:to_turtle_lines":
+        "S9: the reference's TTL output",
+    "operators/graph.py:from_turtle_lines":
+        "S9: TTL load, the round trip of to_turtle_lines",
+    "operators/graph.py:extract_id_expr":
+        "P9: the reference's id extraction from a TTL URI",
+    "operators/viz.py:to_dot":
+        "S12: the reference's graph drawing",
+    "operators/viz.py:write_visualization":
+        "S12: the reference's visualization sink",
+    "operators/viz.py:_dot_from_rows":
+        "S12: DOT rendering behind to_dot and write_visualization",
+    "sources/corpus.py:reference_source_table":
+        "S1: the reference corpora, input of the parity tests",
+    "sources/corpus.py:_read_dir_rows":
+        "S1: file reader behind reference_source_table",
+    "operators/multimodal.py:LibraryDecoder":
+        "Multimodal columns: the real decoder behind media_features",
+    "operators/bpe.py:encode_expr":
+        "BPE tokenizer: applies the learned merges, checked against the vocab join",
+    "operators/dedup.py:lsh_hot_buckets":
+        "MinHash+LSH: the audit tool named in minhash_lsh_pairs' docstring",
+}
+
+
+def _names(node: ast.AST) -> set[str]:
+    """Every identifier a node mentions: names, attributes, imports."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.asname or n.name.split(".")[-1])
+    return out
+
+
+def _package_nodes() -> tuple[dict[str, tuple[str, ast.AST]], set[str]]:
+    """Top-level defs and assignments keyed "<module>:<name>", plus the
+    names mentioned by module-level statements that run on import
+    (neither a def, an assignment nor an import)."""
+    nodes: dict[str, tuple[str, ast.AST]] = {}
+    on_import: set[str] = set()
+    for path in sorted(PKG_ROOT.rglob("*.py")):
+        module = path.relative_to(PKG_ROOT).as_posix()
+        for st in ast.parse(path.read_text(encoding="utf-8")).body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                nodes[f"{module}:{st.name}"] = (st.name, st)
+            elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+                targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+                for t in targets:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name):
+                            nodes[f"{module}:{n.id}"] = (n.id, st)
+            elif not isinstance(st, (ast.Import, ast.ImportFrom)):
+                on_import |= _names(st)
+    return nodes, on_import
+
+
+def _root_names() -> set[str]:
+    files = [REPO / "bench.py", REPO / "__spark_entry__.py"]
+    files += sorted((REPO / "perfbench").glob("*.py"))
+    files += sorted((REPO / "scripts").glob("*.py"))
+    names = {fn.__name__ for fn in gate.QUERIES.values()} | {"KGPipeline"}
+    for path in files:
+        names |= _names(ast.parse(path.read_text(encoding="utf-8")))
+    return names
+
+
+def _reach(nodes: dict[str, tuple[str, ast.AST]], seen: set[str]) -> set[str]:
+    """Keys of the nodes reached from the names in `seen`, to a
+    fixpoint: a node is reached when its name is seen, and then every
+    name it mentions is seen."""
+    seen = set(seen)
+    reached: set[str] = set()
+    grew = True
+    while grew:
+        grew = False
+        for key, (name, node) in nodes.items():
+            if key not in reached and name in seen:
+                reached.add(key)
+                seen |= _names(node)
+                grew = True
+    return reached
+
+
+def _unreached_defs() -> set[str]:
+    nodes, on_import = _package_nodes()
+    reached = _reach(nodes, _root_names() | on_import)
+    return {
+        key
+        for key, (_, node) in nodes.items()
+        if key not in reached and not isinstance(node, (ast.Assign, ast.AnnAssign))
+    }
+
+
+def test_unreached_defs_are_exactly_the_kept_ones():
+    assert len(gate.QUERIES) == 71
+    unreached = _unreached_defs()
+    assert not unreached - KEEP.keys(), (
+        "defs no entry point runs (delete them, or add them to KEEP "
+        f"with a reason): {sorted(unreached - KEEP.keys())}"
+    )
+    assert not KEEP.keys() - unreached, (
+        "stale KEEP entries (reached again, or gone): "
+        f"{sorted(KEEP.keys() - unreached)}"
+    )
+
+
+def test_reach_follows_reached_code_only():
+    src = """
+def root():
+    return helper()
+
+def helper():
+    return TABLE
+
+TABLE = {"k": used_by_table}
+
+def used_by_table():
+    pass
+
+DEAD = {"k": only_dead_uses}
+
+def only_dead_uses():
+    pass
+
+def dead():
+    return only_dead_uses()
+"""
+    nodes = {}
+    for st in ast.parse(src).body:
+        name = st.name if isinstance(st, ast.FunctionDef) else st.targets[0].id
+        nodes[name] = (name, st)
+    assert _reach(nodes, {"root"}) == {"root", "helper", "TABLE", "used_by_table"}

@@ -59,54 +59,3 @@ def test_read_source_rejects_unknown_format(spark):
 
     with pytest.raises(ValueError):
         read_source(spark, "/nowhere", "avro2")
-
-
-def test_write_sink_round_trips_all_formats(spark, tmp_path):
-    from knowledge_graph_creation_from_text_with_llms_spark.sources.corpus import (
-        read_source,
-        write_sink,
-    )
-
-    df = spark.createDataFrame(
-        [("r", "a.txt", "c1", "text", "hello world"),
-         ("r", "b.txt", "c1", "text", "second doc")],
-        "repo string, path string, commit string, lang string, content string",
-    )
-    for fmt in ("parquet", "jsonl", "csv"):
-        out = str(tmp_path / fmt)
-        write_sink(df, out, fmt)
-        back = read_source(spark, out, fmt)
-        got = sorted((r.path, r.content) for r in back.collect())
-        assert got == [("a.txt", "hello world"), ("b.txt", "second doc")], fmt
-        assert "content_sha256" in back.columns  # ingest invariant attached
-
-
-def test_write_sink_partitioning_prunes(spark, tmp_path):
-    from knowledge_graph_creation_from_text_with_llms_spark.sources.corpus import (
-        write_sink,
-    )
-    import os
-
-    df = spark.createDataFrame(
-        [(i, "en" if i % 2 else "de", f"t{i}") for i in range(10)],
-        "doc_id long, lang string, text string",
-    )
-    out = str(tmp_path / "part")
-    write_sink(df, out, "parquet", partition_by=("lang",))
-    assert sorted(
-        d for d in os.listdir(out) if d.startswith("lang=")
-    ) == ["lang=de", "lang=en"]
-    back = spark.read.parquet(out).where("lang = 'en'")
-    assert back.count() == 5
-
-
-def test_write_sink_rejects_unknown_format(spark, tmp_path):
-    import pytest
-
-    from knowledge_graph_creation_from_text_with_llms_spark.sources.corpus import (
-        write_sink,
-    )
-
-    df = spark.range(1)
-    with pytest.raises(ValueError):
-        write_sink(df, str(tmp_path / "x"), "avroish")

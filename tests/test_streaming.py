@@ -47,200 +47,3 @@ def test_stream_chunks_and_extracts(spark, tmp_path):
     q2.awaitTermination(120)
     n2 = spark.read.parquet(out).count()
     assert n2 == n1 + 3  # 4 tokens → 3 bigram triples, batch 0 not redone
-
-
-def _write_events(src_dir, name, rows):
-    os.makedirs(src_dir, exist_ok=True)
-    with open(os.path.join(src_dir, name), "w", encoding="utf-8") as f:
-        for eid, uid, etype, ts in rows:
-            f.write(
-                json.dumps(
-                    {"event_id": eid, "user_id": uid, "event_type": etype, "ts": ts}
-                )
-                + "\n"
-            )
-
-
-def test_stream_windowed_counts_emit_after_watermark(spark, tmp_path):
-    """Append-mode windowed agg: a window is emitted only once the
-    watermark (advanced by a later batch/run) passes its end."""
-    from knowledge_graph_creation_from_text_with_llms_spark.streaming.stream import (
-        stream_windowed_type_counts,
-    )
-
-    src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
-    _write_events(
-        src,
-        "a.json",
-        [
-            (1, 1, "click", "2024-01-01T00:10:00Z"),
-            (2, 1, "click", "2024-01-01T00:20:00Z"),
-            (3, 2, "view", "2024-01-01T00:40:00Z"),
-        ],
-    )
-    q = stream_windowed_type_counts(
-        spark, src, ckpt, out, window_duration="1 hour", watermark="30 minutes"
-    )
-    q.awaitTermination(120)
-
-    # second run: events a day later push the watermark past hour 0
-    _write_events(src, "b.json", [(4, 3, "click", "2024-01-02T12:00:00Z")])
-    q2 = stream_windowed_type_counts(
-        spark, src, ckpt, out, window_duration="1 hour", watermark="30 minutes"
-    )
-    q2.awaitTermination(120)
-
-    got = {
-        (r.event_type, r.n_events)
-        for r in spark.read.parquet(out).collect()
-    }
-    assert ("click", 2) in got and ("view", 1) in got
-
-
-def test_stream_sessionize_stateful(spark, tmp_path):
-    """applyInPandasWithState sessionizer: in-batch gap closes a
-    session; the open tail survives in checkpointed state and is
-    closed by a later run."""
-    from knowledge_graph_creation_from_text_with_llms_spark.streaming.stream import (
-        stream_sessionize,
-    )
-
-    src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
-    _write_events(
-        src,
-        "a.json",
-        [
-            (1, 7, "click", "2024-01-01T00:00:00Z"),
-            (2, 7, "click", "2024-01-01T00:10:00Z"),
-            # > 30 min gap closes session 1 within the same batch
-            (3, 7, "click", "2024-01-01T02:00:00Z"),
-        ],
-    )
-    q = stream_sessionize(spark, src, ckpt, out, gap_seconds=1800)
-    q.awaitTermination(120)
-    first = spark.read.parquet(out).collect()
-    assert len(first) == 1
-    s1 = first[0]
-    assert s1.user_id == 7 and s1.n_events == 2
-    assert s1.session_end_us - s1.session_start_us == 10 * 60 * 1_000_000
-
-    # restart with the same checkpoint: a much later event closes the
-    # tail session that lived only in state
-    _write_events(src, "b.json", [(4, 7, "click", "2024-01-01T06:00:00Z")])
-    q2 = stream_sessionize(spark, src, ckpt, out, gap_seconds=1800)
-    q2.awaitTermination(120)
-    rows = sorted(
-        spark.read.parquet(out).collect(), key=lambda r: r.session_start_us
-    )
-    assert len(rows) == 2
-    assert rows[1].n_events == 1  # the tail session [02:00, 02:00]
-
-
-def test_stream_dedup_exact_across_restarts(spark, tmp_path):
-    """Watermarked streaming dedup: identical texts emit once within a
-    run AND across a checkpointed restart (state survives); texts
-    arriving after the watermark horizon may re-emit by contract."""
-    import json as _json
-    import os as _os
-
-    from knowledge_graph_creation_from_text_with_llms_spark.streaming.stream import (
-        stream_dedup_exact,
-    )
-
-    src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
-    _os.makedirs(src, exist_ok=True)
-
-    def _write(name, rows):
-        with open(_os.path.join(src, name), "w") as f:
-            for doc_id, text, ts in rows:
-                f.write(_json.dumps({"doc_id": doc_id, "text": text, "ts": ts}) + "\n")
-
-    _write(
-        "a.json",
-        [
-            (1, "alpha text", "2024-01-01T00:00:00Z"),
-            (2, "beta text", "2024-01-01T00:01:00Z"),
-            (3, "alpha text", "2024-01-01T00:02:00Z"),  # dup of 1
-        ],
-    )
-    q = stream_dedup_exact(spark, src, ckpt, out, watermark_delay="1 hour")
-    q.awaitTermination(120)
-    first = spark.read.parquet(out).collect()
-    assert sorted(r.text for r in first) == ["alpha text", "beta text"]
-
-    # restart with new files: another "alpha text" within the horizon
-    # must NOT re-emit (state restored from checkpoint); "gamma" must
-    _write(
-        "b.json",
-        [
-            (4, "alpha text", "2024-01-01T00:03:00Z"),
-            (5, "gamma text", "2024-01-01T00:04:00Z"),
-        ],
-    )
-    q2 = stream_dedup_exact(spark, src, ckpt, out, watermark_delay="1 hour")
-    q2.awaitTermination(120)
-    texts = sorted(r.text for r in spark.read.parquet(out).collect())
-    assert texts == ["alpha text", "beta text", "gamma text"]
-
-
-def test_stream_neardup_probe_against_static_index(spark, tmp_path):
-    """Arriving docs probe the static LSH snapshot: a streamed near-dup
-    of a prior doc emits exactly one verified pair (multi-band
-    collisions deduped with bounded state); unrelated docs emit
-    nothing; the pair set matches the batch incremental operator's
-    delta×prior portion."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from knowledge_graph_creation_from_text_with_llms_spark.functions.text import (
-        word_shingles_expr,
-    )
-    from knowledge_graph_creation_from_text_with_llms_spark.operators import dedup
-    from knowledge_graph_creation_from_text_with_llms_spark.streaming.stream import (
-        stream_neardup_probe,
-    )
-
-    base = "alpha beta gamma delta epsilon zeta eta theta"
-    prior = spark.createDataFrame(
-        [(1, base), (2, "totally different words about other things here")],
-        "doc_id long, text string",
-    )
-    prior_bands = dedup.minhash_band_keys(prior).localCheckpoint(eager=True)
-    prior_sh = prior.select(
-        "doc_id", F.array_distinct(word_shingles_expr("text", 3)).alias("_sh")
-    ).localCheckpoint(eager=True)
-
-    src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
-    _os.makedirs(src, exist_ok=True)
-    with open(_os.path.join(src, "a.json"), "w") as f:
-        for doc_id, text, ts in [
-            (10, base + " iota", "2024-01-01T00:00:00Z"),   # near-dup of 1
-            (11, "novel fresh unrelated content entirely", "2024-01-01T00:01:00Z"),
-        ]:
-            f.write(_json.dumps({"doc_id": doc_id, "text": text, "ts": ts}) + "\n")
-
-    q = stream_neardup_probe(
-        spark, src, ckpt, out, prior_bands, prior_sh, jaccard_threshold=0.5
-    )
-    q.awaitTermination(120)
-    got = {(r.id_a, r.id_b): r.jaccard for r in spark.read.parquet(out).collect()}
-    assert set(got) == {(1, 10)}
-    assert 0.5 <= got[(1, 10)] < 1.0
-
-    # batch cross-check: the stream×prior pairs equal the incremental
-    # operator's delta×prior portion on the same inputs
-    delta = spark.createDataFrame(
-        [(10, base + " iota"), (11, "novel fresh unrelated content entirely")],
-        "doc_id long, text string",
-    )
-    inc, _, _ = dedup.minhash_lsh_pairs_incremental(
-        delta, prior_bands, prior_sh, jaccard_threshold=0.5
-    )
-    batch_dp = {
-        (r.id_a, r.id_b)
-        for r in inc.collect()
-        if (r.id_a in (1, 2)) != (r.id_b in (1, 2))
-    }
-    assert set(got) == batch_dp

@@ -1,15 +1,21 @@
 """Evaluation metrics: P/R/F1 of generated triples vs ground truth.
 
-Reproduces the reference's two evaluators as DataFrame joins:
+Reproduces the reference's two evaluators. Each set metric is one lazy
+plan: both sides are tagged with a side marker, unioned, grouped once on
+the match key, and reduced by one global aggregate, so collecting the
+result is the only Spark action (one shuffle-group plus one global
+aggregate; no driver-side count, first or collect inside the call).
 - strict set match (tests/test_modules/metrics_generator.py:104-126 and
-  metrics.py:33-76): TP = inner join on the normalized 3-tuple key,
-  FP = left_anti(generated, gt), FN = left_anti(gt, generated).
-- relaxed containment (metrics_generator.py:128-157): a GT triple
-  counts as found if all three of its normalized components are
-  substrings of some generated triple's components — a theta
-  (non-equi) join; broadcast the small GT side.
-- per-component metrics (metrics.py:78-115): same joins on each of
-  subj/pred/obj independently.
+  metrics.py:33-76): a normalized 3-tuple held by both sides is a TP,
+  one held only by the generated side an FP, one held only by the GT
+  side an FN.
+- relaxed membership (metrics_generator.py:128-157): a GT triple counts
+  as found if every non-empty normalized component is a member of some
+  generated triple's component tuple — grouped on composite subset keys.
+- per-component metrics (metrics.py:78-115): the strict grouping on
+  (component, value) pairs for each of subj/pred/obj.
+P/R/F1 are Column expressions in the reference's operation order, so
+the floats equal a plain Python evaluation of the same counts.
 """
 
 from __future__ import annotations
@@ -22,42 +28,75 @@ from ..functions.text import bind_once, normalize_text_expr
 _COLS = ("subj", "pred", "obj")
 
 
-def _normalized(df: DataFrame) -> DataFrame:
-    return df.select(
-        *[normalize_text_expr(c).alias(c) for c in _COLS]
-    ).where(
-        (F.col("subj") != "") | (F.col("pred") != "") | (F.col("obj") != "")
-    ).distinct()
+def _with_prf(counts: DataFrame, *keep: str) -> DataFrame:
+    """`keep` columns, tp, fp, fn, then precision, recall and f1 with
+    the reference's guards and operation order (p = tp/(tp+fp) when
+    tp+fp, r likewise, f1 = 2*p*r/(p+r) when p+r)."""
+    tp, fp, fn = F.col("tp"), F.col("fp"), F.col("fn")
+    p = F.when(tp + fp != 0, tp / (tp + fp)).otherwise(F.lit(0.0))
+    r = F.when(tp + fn != 0, tp / (tp + fn)).otherwise(F.lit(0.0))
+    f1 = F.when(p + r != 0, 2 * p * r / (p + r)).otherwise(F.lit(0.0))
+    return counts.select(
+        *keep, "tp", "fp", "fn",
+        p.alias("precision"), r.alias("recall"), f1.alias("f1"),
+    )
+
+
+def _sides(gen: DataFrame, gt: DataFrame, *keys: Column | str) -> DataFrame:
+    """One row per distinct key over both sides, with `_g` / `_t` = 1
+    when the generated / GT side holds it."""
+    both = gen.select("*", F.lit(1).alias("_g"), F.lit(0).alias("_t")).unionByName(
+        gt.select("*", F.lit(0).alias("_g"), F.lit(1).alias("_t"))
+    )
+    return both.groupBy(*keys).agg(F.max("_g").alias("_g"), F.max("_t").alias("_t"))
+
+
+def _tp_fp_fn(where: Column | None = None) -> list[Column]:
+    """tp, fp, fn over `_sides` rows (those matching `where`): keys held
+    by both sides, by generated only, by GT only."""
+    g, t = F.col("_g") == 1, F.col("_t") == 1
+    if where is not None:
+        g, t = where & g, where & t
+    return [
+        F.count(F.when(g & t, 1)).alias("tp"),
+        F.count(F.when(g & ~t, 1)).alias("fp"),
+        F.count(F.when(t & ~g, 1)).alias("fn"),
+    ]
 
 
 def strict_metrics(generated: DataFrame, ground_truth: DataFrame) -> DataFrame:
-    """One row: tp, fp, fn, precision, recall, f1 (triple level).
+    """One row: tp, fp, fn, precision, recall, f1 (triple level) over
+    the distinct normalized triples with at least one non-empty
+    component.
 
-    Single job: both distinct sets full-outer-joined once; tp/fp/fn
-    fall out of one aggregation instead of three separate join+count
-    actions (the inner/anti/anti trio re-derived each normalized frame
-    per action)."""
-    g = _normalized(generated).withColumn("_g", F.lit(1))
-    t = _normalized(ground_truth).withColumn("_t", F.lit(1))
-    row = (
-        g.join(t, list(_COLS), "full")
-        .agg(
-            F.count(F.when(F.col("_g").isNotNull() & F.col("_t").isNotNull(), 1)).alias("tp"),
-            F.count(F.when(F.col("_t").isNull(), 1)).alias("fp"),
-            F.count(F.when(F.col("_g").isNull(), 1)).alias("fn"),
+    Lazy: one union of both sides, one groupBy on the triple, one
+    global aggregate. A triple with a NULL component never matches
+    across sides (as in an equi-join) but still dedupes within its side:
+    such rows group on their side marker too, every other row on NULL."""
+    def side(df: DataFrame) -> DataFrame:
+        return df.select(*[normalize_text_expr(c).alias(c) for c in _COLS]).where(
+            (F.col("subj") != "") | (F.col("pred") != "") | (F.col("obj") != "")
         )
-        .first()
-    )
-    return _prf(generated.sparkSession, row["tp"], row["fp"], row["fn"])
+
+    has_null = F.col("subj").isNull() | F.col("pred").isNull() | F.col("obj").isNull()
+    counts = _sides(
+        side(generated), side(ground_truth),
+        *_COLS, F.when(has_null, F.col("_g")).alias("_null_side"),
+    ).agg(*_tp_fp_fn())
+    return _with_prf(counts)
 
 
 def component_metrics(generated: DataFrame, ground_truth: DataFrame) -> DataFrame:
-    """Per-component (subject/predicate/object) P/R/F1 rows, mirroring
-    metrics.py:78-115 which compares component *sets*. One job: both
-    sides explode to (component, value) pairs, one full outer join,
-    one grouped aggregation — not 3 components × 3 actions."""
-    def pairs(df: DataFrame, marker: str) -> DataFrame:
-        stacked = df.select(
+    """Per-component (subject/predicate/object) P/R/F1 rows in subj,
+    pred, obj order, mirroring metrics.py:78-115 which compares the
+    sets of non-empty normalized component values.
+
+    Lazy: both sides explode to (component, value) pairs, one union,
+    one groupBy on the pair, one global aggregate of 9 conditional
+    counts, then an explode of one struct per component (a component
+    absent from both sides gets a zero row)."""
+    def pairs(df: DataFrame) -> DataFrame:
+        return df.select(
             F.explode(
                 F.array(*[
                     F.struct(
@@ -67,38 +106,25 @@ def component_metrics(generated: DataFrame, ground_truth: DataFrame) -> DataFram
                     for comp in _COLS
                 ])
             ).alias("p")
-        ).select("p.component", "p.v")
-        return (
-            stacked.where(F.col("v") != "")
-            .distinct()
-            .withColumn(marker, F.lit(1))
-        )
+        ).select("p.component", "p.v").where(F.col("v") != "")
 
-    g = pairs(generated, "_g")
-    t = pairs(ground_truth, "_t")
-    counted = (
-        g.join(t, ["component", "v"], "full")
-        .groupBy("component")
-        .agg(
-            F.count(F.when(F.col("_g").isNotNull() & F.col("_t").isNotNull(), 1)).alias("tp"),
-            F.count(F.when(F.col("_t").isNull(), 1)).alias("fp"),
-            F.count(F.when(F.col("_g").isNull(), 1)).alias("fn"),
-        )
-    )
-    rows = [
-        (
-            r["component"], r["tp"], r["fp"], r["fn"],
-            *_scalar_prf(r["tp"], r["fp"], r["fn"]),
-        )
-        for r in counted.collect()
-    ]
-    # a component absent from both sides still gets a zero row
-    seen = {r[0] for r in rows}
-    rows += [(c, 0, 0, 0, 0.0, 0.0, 0.0) for c in _COLS if c not in seen]
-    rows.sort(key=lambda r: _COLS.index(r[0]))
-    return generated.sparkSession.createDataFrame(
-        rows, "component string, tp long, fp long, fn long, precision double, recall double, f1 double"
-    )
+    counts = _sides(pairs(generated), pairs(ground_truth), "component", "v").agg(*[
+        c.alias(f"{comp}_{n}")
+        for comp in _COLS
+        for c, n in zip(_tp_fp_fn(F.col("component") == comp), ("tp", "fp", "fn"))
+    ])
+    rows = counts.select(
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(comp).alias("component"),
+                    *[F.col(f"{comp}_{n}").alias(n) for n in ("tp", "fp", "fn")],
+                )
+                for comp in _COLS
+            ])
+        ).alias("r")
+    ).select("r.*")
+    return _with_prf(rows, "component")
 
 
 def relaxed_metrics(generated: DataFrame, ground_truth: DataFrame) -> DataFrame:
@@ -110,119 +136,75 @@ def relaxed_metrics(generated: DataFrame, ground_truth: DataFrame) -> DataFrame:
     Counts are over the raw (duplicate-preserving) lists, and
     fp = len(generated) - tp without clamping, exactly as shipped.
 
-    Executed as a SUBSET-KEY semi-join, not a theta join and not a
-    per-value join: "every non-empty GT component is a member of the
-    generated tuple" ⟺ sorted-distinct(non-empty GT values) equals
-    some non-empty member SUBSET of the tuple (≤ 7 per tuple), so
-    emitting each subset's sorted values as one composite key and
-    semi-joining GT's key against them is a skew-free equi-join on
-    the whole key. The earlier per-value join form matched each GT
-    slot value against exploded member values — a constant component
-    (a shared predicate string) appears in every tuple on BOTH sides,
-    so that one join key fanned out |GT| × |generated| rows: the
-    hot-key quadratic of guide §2.4, measured 6.2 s → 2.9 s for this
-    rewrite at 50k docs (the gate's shared-predicate workload)."""
-    g = generated.select(
-        *[normalize_text_expr(c).alias(f"g{c}") for c in _COLS]
-    )
-    total_gen = g.count()
-
-    # GT grouped by normalized content; multiplicity preserved for the
-    # duplicate-preserving reference counts
-    t = (
-        ground_truth.select(
-            *[normalize_text_expr(c).alias(c) for c in _COLS]
-        )
-        .groupBy(*_COLS)
-        .agg(F.count(F.lit(1)).alias("_mult"))
-        .withColumn("_n_nonempty", sum(
-            F.when(F.col(c) != "", 1).otherwise(0) for c in _COLS
-        ))
-    )
-
+    Executed as a SUBSET-KEY grouping, not a theta join: "every
+    non-empty GT component is a member of the generated tuple" ⟺ the
+    sorted distinct non-empty GT values equal some member subset of the
+    tuple (≤ 2^3 per tuple). Grouping on the whole composite key is
+    skew-free; a per-value join fanned a component shared by every
+    tuple (the predicate) out to |GT| × |generated| rows.
+    - each raw generated row emits the keys of all its member subsets,
+      the empty one ("") included; only the "" emission carries the
+      row count, which gives len(generated);
+    - each raw GT row emits one key, so its multiplicity comes free:
+      "" when no component is non-empty (it matches iff some generated
+      row exists), NULL when a component is NULL and another is
+      non-empty (never matched), otherwise its sorted key.
+    NULL generated components are not members."""
     # normalize removes [^\w\s], so \x1f never appears in a value —
     # safe composite-key separator
-    _SEP = "\x1f"
-
-    def _nonempty_members(cols):
-        return F.array_distinct(
-            F.filter(F.array(*cols), lambda v: v != F.lit(""))
-        )
-
-    # every non-empty member subset of each distinct generated tuple,
-    # as a sorted composite key (≤ 7 per tuple; bitmask enumeration
-    # over the bound member array)
-    # (shiftleft/shiftright take a literal bit count, so the masks use
-    # exact small-integer powers: members are capped at 3, bitmask < 8)
-    assert len(_COLS) <= 3, "pow bitmasks exact, 2^n - 1 subsets cheap only for <= 3"
-    subset_keys = bind_once(
-        _nonempty_members(("gsubj", "gpred", "gobj")),
-        lambda m: F.transform(
-            F.sequence(
-                F.lit(1),
-                F.greatest(
-                    F.pow(F.lit(2.0), F.size(m).cast("double")).cast("int")
-                    - F.lit(1),
-                    F.lit(1),
-                ),
-            ),
-            lambda b: F.concat_ws(
-                _SEP,
-                F.array_sort(
-                    F.filter(
-                        m,
-                        lambda _, i: (
-                            F.floor(
-                                b.cast("double")
-                                / F.pow(F.lit(2.0), i.cast("double"))
-                            ).cast("int")
-                            % 2
-                        )
-                        == F.lit(1),
-                    )
-                ),
-            ),
-        ),
+    sep = "\x1f"
+    # distinct non-empty normalized values, sorted; NULL != "" is NULL,
+    # so the filter drops NULL components too
+    members = F.array_sort(F.array_distinct(F.filter(
+        F.array(*[normalize_text_expr(c) for c in _COLS]),
+        lambda v: v != F.lit(""),
+    )))
+    # all subsets of the sorted members, each sorted, the empty one first:
+    # every member doubles the list with itself appended to each subset
+    subsets = F.aggregate(
+        members,
+        F.array(F.array().cast("array<string>")),
+        lambda acc, x: F.concat(acc, F.transform(acc, lambda s: F.concat(s, F.array(x)))),
     )
-    gen_keys = (
-        g.distinct()
-        .select(F.explode(subset_keys).alias("_key"))
-        .distinct()
+    gen_keys = generated.select(F.posexplode(subsets).alias("_i", "_s")).select(
+        F.concat_ws(sep, "_s").alias("_key"),
+        F.when(F.col("_i") == 0, 1).otherwise(0).alias("_g"),
+        F.lit(None).cast("int").alias("_t"),
+    )
+    has_null = F.col("subj").isNull() | F.col("pred").isNull() | F.col("obj").isNull()
+    gt_keys = ground_truth.select(
+        bind_once(
+            members,
+            lambda m: F.when(F.size(m) == 0, F.lit(""))
+            .when(has_null, F.lit(None).cast("string"))
+            .otherwise(F.concat_ws(sep, m)),
+        ).alias("_key"),
+        F.lit(None).cast("int").alias("_g"),
+        F.lit(1).alias("_t"),
     )
 
-    # GT rows with >= 1 non-empty component match iff their own
-    # sorted-distinct-non-empty key appears among the subset keys
-    # (all-empty rows are handled by the _n_nonempty == 0 case below)
-    full_hits = (
-        t.withColumn(
-            "_key", F.concat_ws(_SEP, F.array_sort(_nonempty_members(_COLS)))
-        )
-        .where(F.col("_n_nonempty") > 0)
-        .join(gen_keys, "_key", "leftsemi")
-        .select(*_COLS)
-        .distinct()
-        .withColumn("_matched", F.lit(1))
-    )
-    agg = (
-        t.join(full_hits, list(_COLS), "left")
+    # per key: _hits generated emissions, _n_gen generated rows (from
+    # the "" key only), _n_gt GT rows
+    counts = (
+        gen_keys.unionByName(gt_keys)
+        .groupBy("_key")
         .agg(
-            F.sum("_mult").alias("total_gt"),
-            F.sum(
-                F.when(
-                    # all-empty GT rows match iff any generated row exists
-                    (F.col("_matched").isNotNull())
-                    | ((F.col("_n_nonempty") == 0) & F.lit(total_gen > 0)),
-                    F.col("_mult"),
-                ).otherwise(0)
-            ).alias("tp"),
+            F.count("_g").alias("_hits"),
+            F.sum("_g").alias("_n_gen"),
+            F.count("_t").alias("_n_gt"),
         )
-        .first()
+        .agg(
+            F.coalesce(F.sum(F.when(F.col("_hits") > 0, F.col("_n_gt"))), F.lit(0)).alias("tp"),
+            F.coalesce(F.sum("_n_gt"), F.lit(0)).alias("_total_gt"),
+            F.coalesce(F.sum("_n_gen"), F.lit(0)).alias("_total_gen"),
+        )
+        .select(
+            "tp",
+            (F.col("_total_gen") - F.col("tp")).alias("fp"),
+            (F.col("_total_gt") - F.col("tp")).alias("fn"),
+        )
     )
-    tp = int(agg["tp"] or 0)
-    total_gt = int(agg["total_gt"] or 0)
-    fn = total_gt - tp
-    fp = total_gen - tp
-    return _prf(generated.sparkSession, tp, fp, fn)
+    return _with_prf(counts)
 
 
 def rouge_n_best(
@@ -451,6 +433,15 @@ def bertscore_pairs(
     SentenceEncoderBackend) for linguistically meaningful scores.
     Entirely native nested higher-order functions: no UDF, no shuffle,
     and an exact DuckDB oracle (gate `kg_metrics_bertscore`).
+
+    The two forms below give identical rows; which is faster depends on
+    how many pairs share a reference (local[4], alternated calls):
+    - ~6 pairs per reference (perfbench `evaluate`, 1000 pairs over
+      160 refs, 10 calls each): default 0.66 s, dedup_shared_refs 1.33 s;
+    - ~50 pairs per reference (gate `kg_metrics_bertscore` at sf0.1,
+      4928 pairs over 99 refs, 6 calls each): default 1.31 s,
+      dedup_shared_refs 1.37 s, a tie; at sf1.0 (~45 per reference,
+      45k pairs) dedup_shared_refs measured 12.0 s vs 17.7 s.
     """
     from ..functions.embeddings import token_embedding_expr
     from ..functions.text import tokens_expr
@@ -614,18 +605,3 @@ def bertscore_pairs(
         / (F.col("bs_precision") + F.col("bs_recall")),
     ).otherwise(F.lit(0.0))
     return out.withColumn("bs_f1", f1).drop("_map", "_nref")
-
-
-def _scalar_prf(tp: int, fp: int, fn: int) -> tuple[float, float, float]:
-    p = tp / (tp + fp) if tp + fp else 0.0
-    r = tp / (tp + fn) if tp + fn else 0.0
-    f1 = 2 * p * r / (p + r) if p + r else 0.0
-    return p, r, f1
-
-
-def _prf(spark, tp: int, fp: int, fn: int) -> DataFrame:
-    p, r, f1 = _scalar_prf(tp, fp, fn)
-    return spark.createDataFrame(
-        [(tp, fp, fn, p, r, f1)],
-        "tp long, fp long, fn long, precision double, recall double, f1 double",
-    )

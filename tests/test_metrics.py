@@ -73,48 +73,6 @@ def test_rouge1_best_match(spark):
     assert rows[("zz", "qq", "ww")] == 0.0
 
 
-def test_empty_sides(spark):
-    empty = _df(spark, []).limit(0)
-    gt = _df(spark, [("A", "b", "C")])
-    m = metrics.strict_metrics(empty, gt).collect()[0]
-    assert (m.tp, m.precision, m.recall) == (0, 0.0, 0.0)
-
-
-def test_relaxed_equijoin_matches_bruteforce(spark):
-    """The equi-join decomposition reproduces the reference's
-    double-loop membership semantics on a randomized corpus with
-    duplicates and empty components."""
-    import random
-
-    from knowledge_graph_creation_from_text_with_llms_spark.functions.text import (
-        normalize_text_expr,  # noqa: F401 (normalization parity lives in the op)
-    )
-
-    rng = random.Random(7)
-    vocab = ["Alpha", "beta!", "Gamma", "delta", "", "Epsilon", "zeta"]
-    gen = [tuple(rng.choice(vocab) for _ in range(3)) for _ in range(40)]
-    gt = [tuple(rng.choice(vocab) for _ in range(3)) for _ in range(25)]
-    gt += gt[:5]  # duplicates preserved in counts
-
-    def norm(s):
-        import re
-
-        return re.sub(r"[^a-z0-9 ]", "", s.lower()).strip()
-
-    gen_n = [tuple(norm(c) for c in t) for t in gen]
-    gt_n = [tuple(norm(c) for c in t) for t in gt]
-    tp = sum(
-        1
-        for t in gt_n
-        if any(all(c == "" or c in g for c in t) for g in gen_n)
-    )
-    fn = len(gt_n) - tp
-    fp = len(gen_n) - tp
-
-    m = metrics.relaxed_metrics(_df(spark, gen), _df(spark, gt)).collect()[0]
-    assert (m.tp, m.fp, m.fn) == (tp, fp, fn)
-
-
 def test_relaxed_all_empty_gt_row(spark):
     # a GT row whose every component normalizes to "" matches iff any
     # generated row exists (vacuous membership, reference semantics)
@@ -145,6 +103,155 @@ def test_relaxed_subset_key_shared_constant(spark):
     ])
     m = metrics.relaxed_metrics(gen, gt).collect()[0]
     assert (m.tp, m.fn, m.fp) == (3, 1, 0)
+
+
+def _norm(s):
+    """normalize_text_expr in plain Python: lowercase, drop [^\\w\\s]
+    (ASCII classes, as Java's regex), trim spaces only (Spark trim)."""
+    return None if s is None else re.sub(r"[^\w\s]", "", s.lower(), flags=re.ASCII).strip(" ")
+
+
+def _brute_prf(tp, fp, fn):
+    p = tp / (tp + fp) if tp + fp else 0.0
+    r = tp / (tp + fn) if tp + fn else 0.0
+    f1 = 2 * p * r / (p + r) if p + r else 0.0
+    return (tp, fp, fn, p, r, f1)
+
+
+def _brute_strict(gen, gt):
+    """Reference metrics.py:33-76: sets of normalized triples with a
+    non-empty component; a NULL-bearing triple dedupes within its side
+    but never matches across sides."""
+    def s(rows):
+        return {t for t in (tuple(map(_norm, r)) for r in rows) if any(t)}
+
+    g, t = s(gen), s(gt)
+    tp = len({x for x in g & t if None not in x})
+    return _brute_prf(tp, len(g) - tp, len(t) - tp)
+
+
+def _brute_component(gen, gt):
+    """Reference metrics.py:78-115: per position, sets of non-empty
+    values."""
+    out = []
+    for i, comp in enumerate(("subj", "pred", "obj")):
+        g = {v for v in (_norm(r[i]) for r in gen) if v}
+        t = {v for v in (_norm(r[i]) for r in gt) if v}
+        out.append((comp, *_brute_prf(len(g & t), len(g - t), len(t - g))))
+    return out
+
+
+def _brute_relaxed(gen, gt):
+    """Reference metrics_generator.py:128-157: a GT row is found iff
+    every non-empty component is a member of one generated tuple;
+    counts over the raw lists. A GT row with a NULL component and a
+    non-empty one is never found (the engine's NULL rule)."""
+    gen_n = [tuple(map(_norm, r)) for r in gen]
+
+    def found(t):
+        if None in t and any(t):
+            return False
+        return any(all(c in g for c in t if c) for g in gen_n)
+
+    tp = sum(found(tuple(map(_norm, r))) for r in gt)
+    return _brute_prf(tp, len(gen) - tp, len(gt) - tp)
+
+
+def _set_metric_rows(spark, gen, gt):
+    """Every output row of the three set metrics, as plain tuples."""
+    g, t = _df(spark, gen), _df(spark, gt)
+    return (
+        tuple(metrics.strict_metrics(g, t).collect()[0]),
+        [tuple(r) for r in metrics.component_metrics(g, t).collect()],
+        tuple(metrics.relaxed_metrics(g, t).collect()[0]),
+    )
+
+
+def _brute_rows(gen, gt):
+    return _brute_strict(gen, gt), _brute_component(gen, gt), _brute_relaxed(gen, gt)
+
+
+_SET_VOCAB = ["Alpha", "alpha!", "beta", "Beta.", "gamma ray", "", "!!", "--", None, "x"]
+
+
+def _set_fixture(rng, n_gen, n_gt):
+    gen = [tuple(rng.choice(_SET_VOCAB) for _ in range(3)) for _ in range(n_gen)]
+    gen += gen[: n_gen // 4]  # duplicates
+    gt = [tuple(rng.choice(_SET_VOCAB) for _ in range(3)) for _ in range(n_gt)]
+    gt += gt[: n_gt // 4] + [tuple(rng.sample(r, 3)) for r in gen[:3]]
+    return gen, gt
+
+
+def test_set_metrics_equal_brute_force_random(spark):
+    """All output columns of strict, component and relaxed metrics equal
+    plain-Python scorers of the reference semantics (==, floats too),
+    on seeded fixtures with duplicates, "", punctuation-only values and
+    NULL components."""
+    rng = random.Random(20261019)
+    for n_gen, n_gt in [(30, 20), (12, 40), (5, 5), (40, 3)]:
+        gen, gt = _set_fixture(rng, n_gen, n_gt)
+        assert _set_metric_rows(spark, gen, gt) == _brute_rows(gen, gt), (gen, gt)
+
+
+def test_empty_sides(spark):
+    """Empty generated, empty GT and both empty: one strict and one
+    relaxed row, three component rows, all counts 0 where no side has
+    data."""
+    gen, gt = _set_fixture(random.Random(5), 6, 6)
+    for g, t in [([], gt), (gen, []), ([], [])]:
+        assert _set_metric_rows(spark, g, t) == _brute_rows(g, t)
+    strict, components, relaxed = _set_metric_rows(spark, [], [])
+    assert strict == relaxed == (0, 0, 0, 0.0, 0.0, 0.0)
+    assert components == [(c, 0, 0, 0, 0.0, 0.0, 0.0) for c in ("subj", "pred", "obj")]
+
+
+def test_set_metrics_null_rules(spark):
+    """Hand pins of the NULL behaviour a rewrite would change silently."""
+    # strict: a NULL-bearing triple dedupes within a side, never matches
+    gen = [("a", None, "b"), ("a", None, "b"), ("c", "d", "e")]
+    gt = [("A", None, "B!"), ("c", "d", "e")]
+    m = metrics.strict_metrics(_df(spark, gen), _df(spark, gt)).collect()[0]
+    assert (m.tp, m.fp, m.fn) == (1, 1, 1)
+    # relaxed: a GT row with a NULL component and a non-empty one never
+    # matches, even when its non-empty members are in a generated tuple
+    gen = [("a", "b", "c")]
+    m = metrics.relaxed_metrics(_df(spark, gen), _df(spark, [(None, "b", "")])).collect()[0]
+    assert (m.tp, m.fp, m.fn) == (0, 1, 1)
+    # relaxed: a GT row with no non-empty component (empty or NULL)
+    # matches iff some generated row exists, whatever that row holds
+    gt = [(None, "", "!!"), (None, None, None)]
+    m = metrics.relaxed_metrics(_df(spark, [(None, None, None)]), _df(spark, gt)).collect()[0]
+    assert (m.tp, m.fp, m.fn) == (2, -1, 0)
+    m = metrics.relaxed_metrics(_df(spark, []), _df(spark, gt)).collect()[0]
+    assert (m.tp, m.fp, m.fn) == (0, 0, 2)
+    # relaxed: NULL generated members are skipped, the others still count
+    gen = [(None, "b", "c")]
+    gt = [("c", "", "b"), ("b", "", "")]
+    m = metrics.relaxed_metrics(_df(spark, gen), _df(spark, gt)).collect()[0]
+    assert (m.tp, m.fp, m.fn) == (2, -1, 0)
+
+
+@pytest.mark.parametrize(
+    "fn", ["strict_metrics", "component_metrics", "relaxed_metrics"]
+)
+def test_set_metric_is_one_lazy_plan(spark, fn):
+    """Calling a set metric launches no Spark job (no driver-side
+    count/first/collect inside it), and collecting its result launches
+    at most 3: one shuffle-group plus one global aggregate."""
+    gen, gt = _set_fixture(random.Random(9), 30, 20)
+    g, t = _df(spark, gen), _df(spark, gt)
+    sc = spark.sparkContext
+    group = f"test_set_metric_is_one_lazy_plan.{fn}"
+    try:
+        sc.setJobGroup(f"{group}.call", fn)
+        out = getattr(metrics, fn)(g, t)
+        sc.setJobGroup(f"{group}.collect", fn)
+        out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    assert len(tracker.getJobIdsForGroup(f"{group}.call")) == 0
+    assert len(tracker.getJobIdsForGroup(f"{group}.collect")) <= 3
 
 
 def test_porter_stem_canonical():
@@ -429,3 +536,32 @@ def test_rouge_best_match_scores_on_every_core(spark):
     assert "isFinalPlan=true" in plan and "BatchEvalPython" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_kg_metrics_rougel_equals_all_pairs_scorer(spark, sf_tiny):
+    """Value check of gate `kg_metrics_rougel` (its DuckDB oracle is
+    rows-only): the query's rows equal the all-pairs scorer over its own
+    collected sf0.001 slices, bit for bit."""
+    from pyspark.sql import functions as F
+
+    from knowledge_graph_creation_from_text_with_llms_spark import gate
+
+    tr = gate._triples_raw(gate._docs(spark, sf_tiny))
+
+    def rows(mod):
+        return [
+            tuple(r)
+            for r in tr.where(F.col("doc_id") % mod == 0)
+            .select("subj", "pred", "obj")
+            .collect()
+        ]
+
+    gen, gt = rows(50), rows(75)
+    assert gen and gt
+    got = gate.kg_metrics_rougel(spark, sf_tiny).collect()
+    scores = {
+        (r.subj, r.pred, r.obj): (r.best_rouge1_f, r.best_rouge2_f, r.best_rougeL_f)
+        for r in got
+    }
+    assert len(scores) == len(got)
+    assert scores == _brute_rouge(gen, gt, use_stemmer=True)

@@ -115,26 +115,20 @@ def _triples_raw(docs: DataFrame) -> DataFrame:
 
 def _edges(docs: DataFrame) -> DataFrame:
     """Linked, weight-aggregated edge table (the shared graph-family
-    prefix). Two structural properties keep it at one corpus-scale
-    exchange:
+    prefix): the corpus bigrams, linked against the corpus dictionary,
+    through graph.build_edges — the operator KGPipeline commits edges
+    with.
 
-    - The ranked dictionary is resolved ONCE and localCheckpoint'ed
-      (vocabulary-scale: tokens with df >= DICT_MIN_DF): without it
-      the subj and obj links each inline the full dictionary pipeline
-      — scan + tokenize + mentions groupBy + rank window — so every
-      graph-family gate paid that corpus scan twice (kg_edges before:
-      3 document scans; after: 2).
-    - Edge weight = Σ_docs count(doc, subj, obj) = the plain global
-      occurrence count, so the per-doc triples groupBy is algebraically
-      redundant here: bigram occurrences are linked map-side (broadcast)
-      and aggregated directly by (src, pred, dst, is_literal) — ONE
-      exchange instead of two, and the shuffle rows carry no doc_id
-      (kg_edges before: Exchange(doc,subj,obj) + Exchange(src,...);
-      after: Exchange(src,...) only, with map-side partial counts
-      collapsing cross-doc duplicates). The dictionary itself is
-      derived from (doc, token)-distinct mentions, NOT from this
-      stream, so DICT_MIN_DF semantics are untouched; per-doc triples
-      remain available to gates that declare them (kg_triples_raw)."""
+    - The ranked dictionary is resolved once and localCheckpoint'ed
+      (vocabulary-scale), so the subj and obj links do not each repeat
+      the dictionary's corpus scan.
+    - Edge weight = Σ_docs count(doc, subj, obj) is the plain global
+      occurrence count, so bigrams are linked map-side (broadcast) and
+      grouped once, by build_edges on (src, pred, dst, is_literal): one
+      corpus-scale exchange, with no doc_id in its rows. The dictionary
+      comes from (doc, token)-distinct mentions, not from this stream,
+      so DICT_MIN_DF semantics are untouched; per-doc triples stay with
+      the gates that declare them (kg_triples_raw)."""
     ed = _entity_dict(docs)
     resolved = linker.resolve_labels(ed).localCheckpoint(eager=True)
     pairs = docs.select(F.explode(bigrams_expr("text")).alias("bg")).select(
@@ -142,26 +136,13 @@ def _edges(docs: DataFrame) -> DataFrame:
     )
     out = linker.link_labels(pairs, ed, "subj", "subj_id", resolved=resolved)
     out = linker.link_labels(out, ed, "obj", "obj_id", resolved=resolved)
-    linked = out.select(
-        F.coalesce("subj_id", "subj").alias("src_id"),
-        F.lit("precedes").alias("pred_id"),
-        F.coalesce("obj_id", "obj").alias("dst_id"),
-        F.col("obj_id").isNull().alias("is_literal"),
-    )
-    deduped = linked.groupBy("src_id", "pred_id", "dst_id", "is_literal").agg(
-        F.count(F.lit(1)).cast("long").alias("weight")
-    )
-    return deduped.select(
-        "src_id",
-        "pred_id",
-        "dst_id",
-        "is_literal",
-        graph.entity_uri_expr(F.col("src_id")).alias("src_uri"),
-        graph.property_uri_expr(F.col("pred_id")).alias("pred_uri"),
-        F.when(F.col("is_literal"), F.col("dst_id"))
-        .otherwise(graph.entity_uri_expr(F.col("dst_id")))
-        .alias("dst_uri"),
-        "weight",
+    return graph.build_edges(
+        out.select(
+            "subj", "obj", "subj_id", "obj_id",
+            F.lit("precedes").alias("pred"),
+            F.lit(None).cast("string").alias("pred_id"),
+            F.col("obj_id").isNull().alias("is_literal"),
+        )
     )
 
 
@@ -569,16 +550,17 @@ FROM edges GROUP BY src_id
 """,
 )
 def kg_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _edges(_docs(spark, sf_dir))
-    return (
-        edges.groupBy(F.col("src_id").alias("node_id"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("out_degree"),
-            F.concat_ws(
-                ";",
-                F.array_sort(F.collect_list(F.concat("pred_id", F.lit(":"), "dst_id"))),
-            ).alias("neighbors"),
-        )
+    # build_adjacency sorts (pred_id, dst_id) structs, the oracle sorts
+    # pred_id || ':' || dst_id strings: the two orders agree only
+    # because every gate edge has the same pred_id ('precedes')
+    adj = graph.build_adjacency(_edges(_docs(spark, sf_dir)))
+    return adj.select(
+        "node_id",
+        F.col("out_degree").cast("long").alias("out_degree"),
+        F.concat_ws(
+            ";",
+            F.transform("out", lambda o: F.concat(o.pred_id, F.lit(":"), o.dst_id)),
+        ).alias("neighbors"),
     )
 
 

@@ -1,7 +1,7 @@
-"""Graph materialization: linked triples → nodes / edges / adjacency.
+"""Graph materialization: linked triples → edges / adjacency, plus the
+graph analytics the gates run over edges.
 
-URI minting reproduces GraphManager.add_triple exactly
-(/root/reference/src/core/Integrator/GraphManager.py:48-55):
+URI minting reproduces GraphManager.add_triple (GraphManager.py:48-55):
   - id startswith 'Q'  → http://www.wikidata.org/entity/{id}
   - else               → http://example.org/entity/{percent-encoded id}
   - pred startswith 'P'→ http://www.wikidata.org/prop/direct/{id}
@@ -10,12 +10,14 @@ URI minting reproduces GraphManager.add_triple exactly
   - is_literal objects keep their surface form (no URI).
 
 Edge set semantics: rdflib.Graph is a set, so identical triples
-collapse — dropDuplicates on (src, pred, dst, is_literal) with an
-explicit weight column preserving the pre-dedup multiplicity.
+collapse — build_edges groups on (src_id, pred_id, dst_id, is_literal)
+and keeps the pre-dedup multiplicity as `weight`.
 
-Scale notes: edges are repartitioned by src hash before the write so
-downstream adjacency grouping and point lookups are co-located;
-adjacency arrays are sorted for determinism.
+build_edges and build_adjacency are the one formulation of both
+tables: KGPipeline commits them, and the graph-family gates (kg_edges,
+kg_adjacency and the analytics over gate._edges) run them against
+their DuckDB oracles. build_adjacency repartitions by src_id and
+sorts each neighbor array, so its output is deterministic.
 """
 
 from __future__ import annotations
@@ -115,47 +117,18 @@ def merge_edges(prior: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def build_adjacency(edges: DataFrame, max_degree: int | None = None) -> DataFrame:
-    """edges → adjacency list per source node, deterministic order.
-
-    max_degree bounds the collected neighbor array for hub nodes — at
-    100× a single celebrity entity otherwise becomes one giant row
-    that can't fit an executor. Capped rows keep the heaviest
-    max_degree neighbors (weight desc, then (pred_id, dst_id) for
-    determinism); out_degree still reports the TRUE degree and
-    `truncated` marks capped nodes, so nothing is silently lost.
-    Default None preserves the exact uncapped output."""
-    if max_degree is None:
-        return (
-            edges.repartition(F.col("src_id"))
-            .groupBy(F.col("src_id").alias("node_id"))
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pred_id", "dst_id"))
-                ).alias("out"),
-                F.count(F.lit(1)).cast("int").alias("out_degree"),
-            )
-        )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("src_id").orderBy(
-        F.col("weight").desc(), "pred_id", "dst_id"
-    )
-    ranked = edges.withColumn("_rank", F.row_number().over(w))
+def build_adjacency(edges: DataFrame) -> DataFrame:
+    """edges → adjacency list per source node: (node_id, out, out_degree)
+    with `out` the (pred_id, dst_id) structs sorted ascending."""
     return (
-        ranked.groupBy(F.col("src_id").alias("node_id"))
+        edges.repartition(F.col("src_id"))
+        .groupBy(F.col("src_id").alias("node_id"))
         .agg(
             F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("_rank") <= max_degree,
-                        F.struct("pred_id", "dst_id"),
-                    )
-                )
+                F.collect_list(F.struct("pred_id", "dst_id"))
             ).alias("out"),
             F.count(F.lit(1)).cast("int").alias("out_degree"),
         )
-        .withColumn("truncated", F.col("out_degree") > F.lit(max_degree))
     )
 
 

@@ -38,7 +38,7 @@ def resolve_labels(dictionary: DataFrame, id_col: str = "entity_id") -> DataFram
     key — min by (rank, id) among rows sharing lower(trim(alias)).
     Factored out of link_labels so callers that link SEVERAL label
     columns against the SAME dictionary (subj+obj in link_triples /
-    gate._linked_triples, the exact lookup of link_predicates' "mixed")
+    gate._edges, the exact lookup of link_predicates' "mixed")
     rank it once and pass the result as `resolved=` to each
     link_labels call, so every lookup broadcasts the same ranked table
     (for link_triples' subj and obj: one Window over the entity

@@ -32,7 +32,6 @@ class PipelineConfig:
     chunk_unit: str = "sentence"
     property_method: str = "exact"  # exact | cos_similarity | mixed
     backend_factory: Callable = extractor.RuleBasedBackend
-    edges_partitions: int | None = None
     # S2: run the HTML cleaner (tables/citation-sup removal, <p> join)
     # ahead of chunking — Extractor.py:120-127 order
     clean_html: bool = False
@@ -139,9 +138,7 @@ class KGPipeline:
             df = thunk()
             repart = "src_id" if name == "edges" else None
             counts[name] = cat.write(
-                df, name, stage=name,
-                repartition_by=repart,
-                num_partitions=self.config.edges_partitions,
+                df, name, stage=name, repartition_by=repart
             ).rows
         return counts
 
@@ -241,13 +238,11 @@ class KGPipeline:
                 rows_in=cat.snapshot_rows("edges", prior_edges_snap)
                 + counts["triples_linked"],
                 repartition_by="src_id",
-                num_partitions=self.config.edges_partitions,
             ).rows
         else:
             counts["edges"] = cat.write(
                 self.stage_edges(all_linked), "edges", stage="edges",
                 repartition_by="src_id",
-                num_partitions=self.config.edges_partitions,
             ).rows
         counts["adjacency"] = cat.write(
             self.stage_adjacency(cat.read("edges")), "adjacency", stage="adjacency"
@@ -261,16 +256,7 @@ class KGPipeline:
         """Union of every committed snapshot of a table (incremental
         appends); Iceberg equivalent: plain table read. `upto`
         restricts to an explicit snapshot list (e.g. all snapshots that
-        existed before the current delta). Replays any interrupted
-        compaction first so the union never double-counts a folded
-        snapshot that crashed mid-drop. The 5-minute grace window keeps
-        a reader from aborting a compaction that is legitimately IN
-        FLIGHT in the single driver (intent row written, rename
-        pending): fresh intents are left alone, and the read stays
-        correct either way — pre-rename the union sees only the inputs,
-        post-rename completion has no grace and the drops are
-        idempotent."""
-        cat.recover(table, grace_sec=300.0)
+        existed before the current delta)."""
         snaps = upto if upto is not None else cat.snapshots(table)
         dfs = [cat.read(table, snapshot=s) for s in snaps]
         out = dfs[0]

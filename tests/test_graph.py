@@ -87,29 +87,6 @@ def test_turtle_lines(spark):
     assert any('"the best team"' in l for l in lines)
 
 
-def test_adjacency_degree_cap(spark):
-    from pyspark.sql import functions as F
-
-    from knowledge_graph_creation_from_text_with_llms_spark.operators import graph
-
-    edges = spark.createDataFrame(
-        [("hub", "p", f"n{i:02d}", False, "u", "u", "u", 10 - i) for i in range(5)]
-        + [("leaf", "p", "x", False, "u", "u", "u", 1)],
-        "src_id string, pred_id string, dst_id string, is_literal boolean,"
-        "src_uri string, pred_uri string, dst_uri string, weight long",
-    )
-    rows = {r.node_id: r for r in graph.build_adjacency(edges, max_degree=3).collect()}
-    hub = rows["hub"]
-    # heaviest 3 kept (weights 10,9,8 → n00,n01,n02), true degree reported
-    assert [o.dst_id for o in hub.out] == ["n00", "n01", "n02"]
-    assert hub.out_degree == 5 and hub.truncated
-    leaf = rows["leaf"]
-    assert leaf.out_degree == 1 and not leaf.truncated and len(leaf.out) == 1
-    # uncapped output unchanged by the new parameter's default
-    uncapped = {r.node_id: r for r in graph.build_adjacency(edges).collect()}
-    assert len(uncapped["hub"].out) == 5 and "truncated" not in uncapped["hub"].asDict()
-
-
 def test_k_hop_neighbors_min_hops(spark):
     from pyspark.sql import functions as F
 
@@ -237,3 +214,52 @@ def test_pagerank_rejects_bool_and_bad_scale(spark):
     for bad in (True, False, "big", 1.5, None):
         with pytest.raises(ValueError, match="scale must be"):
             graph.pagerank(edges, iterations=1, scale=bad)
+
+
+def _random_labels(n=300, seed=7):
+    """Seeded labels over an alphabet that exercises every branch of
+    percent_quote_expr: quote's safe set (`_.-~/`), '*' and '+' (which
+    Spark's form encoder treats differently), '%', whitespace, other
+    ASCII punctuation, accented letters, CJK and emoji (4-byte UTF-8)."""
+    import random
+
+    alphabet = (
+        list("abcXYZ019_.-~*/+%") + [" ", "\t", "\n"] + list("&=?#:@!$'(),;[]\"<>")
+        + list("éüñÅç") + list("東京中文") + ["😀", "🚀"]
+    )
+    rng = random.Random(seed)
+    out = ["", "Q42", "P19", "Plays For", "Quebec city", "some person"]
+    while len(out) < n:
+        s = "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 12)))
+        out.append(rng.choice(["", "Q", "P"]) + s)
+    return out
+
+
+def test_uri_minting_matches_urllib_quote(spark):
+    """percent_quote_expr, entity_uri_expr and property_uri_expr equal
+    their GraphManager.add_triple definitions over urllib.parse.quote
+    on random labels. Any id starting with 'Q' (entities) or 'P'
+    (properties) is minted as a Wikidata URI verbatim, as the reference
+    does: "Plays For" becomes wdt:Plays For."""
+    from urllib.parse import quote
+
+    labels = _random_labels()
+    got = spark.createDataFrame([(s,) for s in labels], "s string").select(
+        "s",
+        graph.percent_quote_expr(F.col("s")).alias("q"),
+        graph.entity_uri_expr(F.col("s")).alias("ent"),
+        graph.property_uri_expr(F.col("s")).alias("prop"),
+    ).collect()
+    assert len(got) == len(labels)
+    for r in got:
+        s = r.s
+        assert r.q == quote(s), s
+        assert r.ent == (graph.WD + s if s.startswith("Q") else graph.EX_ENT + quote(s)), s
+        assert r.prop == (
+            graph.WDT + s if s.startswith("P")
+            else graph.EX_PROP + quote(s.lower().replace(" ", "_"))
+        ), s
+    by_label = {r.s: r for r in got}
+    assert by_label["Plays For"].prop == graph.WDT + "Plays For"
+    assert by_label["Quebec city"].ent == graph.WD + "Quebec city"
+    assert by_label["some person"].ent == graph.EX_ENT + "some%20person"

@@ -313,3 +313,36 @@ def test_viz_edges_degree_attach_is_join_free(spark):
                 "CartesianProduct", "BroadcastNestedLoopJoin"):
         assert bad not in plan, bad
     assert "TakeOrderedAndProject" in plan  # distributed partial top-k
+
+
+def _hash_exchange_keys(plan: str) -> list[tuple[str, ...]]:
+    """Key columns (expression ids stripped) of every hash-partitioning
+    exchange in the final plan of an executed AQE plan string."""
+    import re
+
+    final = plan.split("== Initial Plan ==")[0]
+    out = []
+    for keys in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", final):
+        cols = [re.sub(r"#\d+L?$", "", k.strip()) for k in keys.split(",")]
+        out.append(tuple(cols[:-1]))  # the last entry is the partition count
+    return out
+
+
+def test_graph_gates_shuffle_once_per_table(spark, sf_tiny):
+    """Gate kg_edges (graph.build_edges over the linked bigrams) has
+    one corpus-scale exchange, keyed on the edge group (src_id, pred,
+    dst_id, is_literal); the subj/obj links are broadcast. Gate
+    kg_adjacency (graph.build_adjacency over it) adds exactly one, on
+    src_id alone. The other hash exchange is the loader's doc_id
+    spread (gate._spread)."""
+    from knowledge_graph_creation_from_text_with_llms_spark import gate
+
+    def keys(query):
+        found = _hash_exchange_keys(_plan(query(spark, sf_tiny), execute=True))
+        assert found.count(("doc_id",)) == 1, found
+        return sorted(k for k in found if k != ("doc_id",))
+
+    [edge_key] = keys(gate.kg_edges)
+    assert len(edge_key) == 4, edge_key
+    assert edge_key[0] == "src_id" and edge_key[2:] == ("dst_id", "is_literal")
+    assert keys(gate.kg_adjacency) == sorted([edge_key, ("src_id",)])

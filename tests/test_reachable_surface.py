@@ -4,14 +4,18 @@ A def that no entry point runs is code to read, test and keep working
 for no result. This test walks the package from its entry points — the
 gate queries, `KGPipeline`, `bench.py`, `perfbench/`, `scripts/` and
 `__spark_entry__.py` — to a fixpoint, and pins the top-level functions
-and classes it never reaches to `KEEP`, each with the reason it stays.
-A new unreached def fails the test, and so does a `KEEP` entry that
-is reached again or no longer exists.
+and classes, and the methods of reached classes, that it never reaches
+to `KEEP`, each with the reason it stays. A new unreached def fails the
+test, and so does a `KEEP` entry that is reached again or no longer
+exists.
 
 The scan is by name, so it over-approximates: a def is reached when
 reached code mentions its name (a call, an attribute or an import).
 Module-level assignments are nodes too, reached only when named, so a
-constant that only dead code reads reaches nothing.
+constant that only dead code reads reaches nothing. A method is its
+own node: reached when its class is reached and reached code outside
+its own body names it. Dunder methods are reached with their class,
+since Python calls them by protocol, not by name.
 """
 
 import ast
@@ -23,8 +27,8 @@ from knowledge_graph_creation_from_text_with_llms_spark import gate
 PKG_ROOT = pathlib.Path(pkg.__file__).parent
 REPO = PKG_ROOT.parent
 
-# "<module path under the package>:<def>" -> why it stays unreached
-# (COVERAGE.md row first where one applies)
+# "<module path under the package>:<def>" (methods: "<class>.<method>")
+# -> why it stays unreached (COVERAGE.md row first where one applies)
 KEEP = {
     "streaming/stream.py:stream_triples":
         "§2.9 (a): the only stream that runs the KG chain",
@@ -66,6 +70,18 @@ KEEP = {
         "BPE tokenizer: applies the learned merges, checked against the vocab join",
     "operators/dedup.py:lsh_hot_buckets":
         "MinHash+LSH: the audit tool named in minhash_lsh_pairs' docstring",
+    "operators/htmlclean.py:_CleanExtractor.handle_starttag":
+        "called by `html.parser.HTMLParser`",
+    "operators/htmlclean.py:_CleanExtractor.handle_endtag":
+        "called by `html.parser.HTMLParser`",
+    "operators/htmlclean.py:_CleanExtractor.handle_startendtag":
+        "called by `html.parser.HTMLParser`",
+    "operators/htmlclean.py:_CleanExtractor.handle_data":
+        "called by `html.parser.HTMLParser`",
+    "operators/htmlclean.py:_CleanExtractor._is_reference_sup":
+        "helper of the `html.parser.HTMLParser` callbacks",
+    "operators/htmlclean.py:_CleanExtractor._suppressed":
+        "helper of the `html.parser.HTMLParser` callbacks",
 }
 
 
@@ -82,17 +98,26 @@ def _names(node: ast.AST) -> set[str]:
     return out
 
 
-def _package_nodes() -> tuple[dict[str, tuple[str, ast.AST]], set[str]]:
-    """Top-level defs and assignments keyed "<module>:<name>", plus the
-    names mentioned by module-level statements that run on import
-    (neither a def, an assignment nor an import)."""
+def _package_nodes() -> tuple[
+    dict[str, tuple[str, ast.AST]], dict[str, str], set[str]
+]:
+    """Top-level defs and assignments keyed "<module>:<name>", methods
+    keyed "<module>:<class>.<name>" with the key of their class in
+    `owners`, plus the names mentioned by module-level statements that
+    run on import (neither a def, an assignment nor an import). A class
+    node keeps its bases, decorators and non-method statements; each
+    method body is its own node."""
     nodes: dict[str, tuple[str, ast.AST]] = {}
+    owners: dict[str, str] = {}
     on_import: set[str] = set()
     for path in sorted(PKG_ROOT.rglob("*.py")):
         module = path.relative_to(PKG_ROOT).as_posix()
         for st in ast.parse(path.read_text(encoding="utf-8")).body:
-            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 nodes[f"{module}:{st.name}"] = (st.name, st)
+            elif isinstance(st, ast.ClassDef):
+                cls = f"{module}:{st.name}"
+                nodes[cls] = (st.name, _without_methods(st, nodes, owners, cls))
             elif isinstance(st, (ast.Assign, ast.AnnAssign)):
                 targets = st.targets if isinstance(st, ast.Assign) else [st.target]
                 for t in targets:
@@ -101,7 +126,27 @@ def _package_nodes() -> tuple[dict[str, tuple[str, ast.AST]], set[str]]:
                             nodes[f"{module}:{n.id}"] = (n.id, st)
             elif not isinstance(st, (ast.Import, ast.ImportFrom)):
                 on_import |= _names(st)
-    return nodes, on_import
+    return nodes, owners, on_import
+
+
+def _without_methods(
+    cls: ast.ClassDef,
+    nodes: dict[str, tuple[str, ast.AST]],
+    owners: dict[str, str],
+    key: str,
+) -> ast.ClassDef:
+    """`cls` minus its methods, which go into `nodes` owned by `key`."""
+    body = []
+    for st in cls.body:
+        if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            nodes[f"{key}.{st.name}"] = (st.name, st)
+            owners[f"{key}.{st.name}"] = key
+        else:
+            body.append(st)
+    return ast.ClassDef(
+        name=cls.name, bases=cls.bases, keywords=cls.keywords,
+        body=body, decorator_list=cls.decorator_list,
+    )
 
 
 def _root_names() -> set[str]:
@@ -114,17 +159,34 @@ def _root_names() -> set[str]:
     return names
 
 
-def _reach(nodes: dict[str, tuple[str, ast.AST]], seen: set[str]) -> set[str]:
+def _is_dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
+
+
+def _reach(
+    nodes: dict[str, tuple[str, ast.AST]],
+    seen: set[str],
+    owners: dict[str, str] | None = None,
+) -> set[str]:
     """Keys of the nodes reached from the names in `seen`, to a
     fixpoint: a node is reached when its name is seen, and then every
-    name it mentions is seen."""
+    name it mentions is seen. A method (a key in `owners`) also needs
+    its class reached; a dunder method needs only that."""
+    owners = owners or {}
     seen = set(seen)
     reached: set[str] = set()
     grew = True
     while grew:
         grew = False
         for key, (name, node) in nodes.items():
-            if key not in reached and name in seen:
+            if key in reached:
+                continue
+            owner = owners.get(key)
+            if owner is None:
+                hit = name in seen
+            else:
+                hit = owner in reached and (name in seen or _is_dunder(name))
+            if hit:
                 reached.add(key)
                 seen |= _names(node)
                 grew = True
@@ -132,12 +194,16 @@ def _reach(nodes: dict[str, tuple[str, ast.AST]], seen: set[str]) -> set[str]:
 
 
 def _unreached_defs() -> set[str]:
-    nodes, on_import = _package_nodes()
-    reached = _reach(nodes, _root_names() | on_import)
+    """Unreached top-level defs, and unreached methods of reached
+    classes (an unreached class already stands for its methods)."""
+    nodes, owners, on_import = _package_nodes()
+    reached = _reach(nodes, _root_names() | on_import, owners)
     return {
         key
         for key, (_, node) in nodes.items()
-        if key not in reached and not isinstance(node, (ast.Assign, ast.AnnAssign))
+        if key not in reached
+        and not isinstance(node, (ast.Assign, ast.AnnAssign))
+        and (key not in owners or owners[key] in reached)
     }
 
 
@@ -180,3 +246,42 @@ def dead():
         name = st.name if isinstance(st, ast.FunctionDef) else st.targets[0].id
         nodes[name] = (name, st)
     assert _reach(nodes, {"root"}) == {"root", "helper", "TABLE", "used_by_table"}
+
+
+def test_reach_follows_methods_of_reached_classes():
+    src = """
+def root():
+    return Used().run()
+
+class Used:
+    def __init__(self):
+        self.x = helper()
+
+    def run(self):
+        return self.step()
+
+    def step(self):
+        return self.step()
+
+    def dead(self):
+        return self.dead() or dead_only()
+
+class Unused:
+    def run(self):
+        pass
+
+def helper():
+    pass
+
+def dead_only():
+    pass
+"""
+    nodes, owners = {}, {}
+    for st in ast.parse(src).body:
+        if isinstance(st, ast.ClassDef):
+            nodes[st.name] = (st.name, _without_methods(st, nodes, owners, st.name))
+        else:
+            nodes[st.name] = (st.name, st)
+    assert _reach(nodes, {"root"}, owners) == {
+        "root", "Used", "Used.__init__", "Used.run", "Used.step", "helper",
+    }

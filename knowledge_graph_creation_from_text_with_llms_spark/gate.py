@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.hashing import md5_qid
-from .functions.text import bigrams_expr, tokens_expr, word_shingles_expr
+from .functions.text import bigrams_expr, tokens_expr
 from .operators import canonicalizer, contamination, dedup, events, graph
 from .operators import linker, metrics, parser, sampling, similarity, textstats
 from .operators import viz
@@ -1018,20 +1018,7 @@ def dedup_minhash_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     delta = docs.where(F.col("doc_id") % 7 == 0)
 
     def _build():
-        # one tokenize+shingle pass: materialize the shingle table,
-        # then derive the band signatures FROM it (identical mins over
-        # distinct arrays) instead of re-tokenizing for each table
-        prior = docs.where(F.col("doc_id") % 7 != 0)
-        sh = prior.select(
-            F.col("doc_id"),
-            F.array_distinct(word_shingles_expr("text", 3)).alias("_sh"),
-        ).localCheckpoint(eager=True)
-        return (
-            dedup.minhash_band_keys(sh, shingles_col="_sh").localCheckpoint(
-                eager=True
-            ),
-            sh,
-        )
+        return dedup.minhash_index(docs.where(F.col("doc_id") % 7 != 0))
 
     prior_bands, prior_sh = _incr_index(spark, sf_dir, "minhash", _build)
     pairs, _, _ = dedup.minhash_lsh_pairs_incremental(
@@ -1240,13 +1227,9 @@ def dedup_ngram_jaccard_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     delta = docs.where(F.col("doc_id") % 7 == 0)
 
     def _build():
-        # checkpoint the index once — the realistic shape (a snapshot
-        # read from disk); materialize=True stages the checkpoints so
-        # the prior corpus is tokenized and shingled exactly once
-        # (checkpointing the three lazy outputs separately paid three
-        # full shingle passes)
-        prior = docs.where(F.col("doc_id") % 7 != 0)
-        return dedup.ngram_index(prior, "source", materialize=True)
+        # ngram_index checkpoints its tables once — the realistic shape
+        # (a snapshot read from disk, not recomputed per probe)
+        return dedup.ngram_index(docs.where(F.col("doc_id") % 7 != 0), "source")
 
     posting, shingles, dfreq = _incr_index(spark, sf_dir, "ngram", _build)
     pairs, _, _, _ = dedup.ngram_jaccard_pairs_incremental(

@@ -1,17 +1,29 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Four families, all shuffle-conscious:
+Families, all shuffle-conscious:
 - exact: hash-groupBy on md5(text) — one shuffle on a short key.
 - minhash + LSH: shingle → K keyed-md5 minhashes → band keys →
-  bucket join for candidates → exact Jaccard verify. The band join is
-  the only shuffle; candidate verification never cross-joins the corpus.
+  capped bucket collect for candidates → exact Jaccard verify. The
+  band-key exchange is the only data-scale shuffle; candidate
+  verification never cross-joins the corpus.
 - simhash: 16-bit sign-aggregated fingerprint; near-dups share
   fingerprints (or differ by few bits).
 - n-gram Jaccard: blocked pairwise Jaccard via prefix-filtered
   candidate generation (PPJoin-style, exact) + full-set verify.
+- embedding near-dup: blocked pairwise cosine (caller's block column or
+  a hyperplane sign code).
+- duplicated spans: token spans whose k-grams recur in another
+  document (Lee et al. 2022), and their removal.
+- connected components: duplicate pairs → clusters with a canonical
+  min-id representative.
+- incremental twins of minhash, n-gram, embedding and span dedup: a
+  delta probes a snapshotted index (`minhash_index`, `ngram_index`,
+  `embedding_index`, `span_gram_index`) and emits exactly the full
+  run's results that touch the delta.
 
-All hashing is md5-based (functions.hashing) so every operator has an
-exact DuckDB oracle.
+Both Jaccard families verify candidates with the one exact
+shingle-set verify (`_verify_jaccard`). All hashing is md5-based
+(functions.hashing) so every operator has an exact DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -142,22 +154,19 @@ def minhash_lsh_pairs(
     rows_per_band: int = 2,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
-    max_bucket_size: int | None = 500,
+    max_bucket_size: int = 500,
 ) -> DataFrame:
     """Candidate pairs from shared LSH bands, verified with exact
     shingle-set Jaccard. Returns (id_a, id_b, jaccard), id_a < id_b.
 
     Scale: a hot bucket (one band_key shared by d docs — boilerplate
     text) implies d² candidate pairs; AQE splits skewed partitions but
-    not the pair blow-up itself. With `max_bucket_size` set (default),
-    bucket counts come from a window over the single (band_id,
-    band_key) shuffle and over-cap rows are dropped before any member
-    array is built, so both the collect_list aggregation buffer and the
-    pair expansion are bounded by the cap — one signature computation,
-    one shuffle. With max_bucket_size=None the pairs
-    come from a band self-join instead, which spreads a hot bucket's d²
-    rows across tasks rather than one unbounded array row. Docs in a
-    dropped bucket can still pair through their other
+    not the pair blow-up itself. Bucket counts come from a window over
+    the single (band_id, band_key) shuffle and over-cap rows are
+    dropped before any member array is built, so both the collect_list
+    aggregation buffer and the pair expansion are bounded by
+    `max_bucket_size` — one signature computation, one shuffle. Docs
+    in a dropped bucket can still pair through their other
     `num_hashes/rows_per_band` bands. Groups of >cap near-identical
     docs are the exact-dedup operator's job (`exact_duplicates` first,
     then LSH on survivors); use `lsh_hot_buckets` to audit what a cap
@@ -165,7 +174,7 @@ def minhash_lsh_pairs(
     """
     bands = minhash_band_keys(docs, id_col, text_col, num_hashes, rows_per_band, shingle_n)
     # materialize the (small) candidate set once: it feeds both the
-    # verify join and the candidate-id prune below, and without the
+    # verify join and the candidate-id prune, and without the
     # checkpoint each use would re-run the signature pipeline
     cand = _minhash_candidates(bands, id_col, max_bucket_size).localCheckpoint(
         eager=True
@@ -174,6 +183,18 @@ def minhash_lsh_pairs(
         F.col(id_col),
         F.array_distinct(word_shingles_expr(text_col, shingle_n)).alias("_sh"),
     )
+    return _verify_jaccard(cand, sh, id_col, jaccard_threshold)
+
+
+_MAX_VERIFY_BROADCAST_IDS = 4_000_000  # ids; ~32 MB of longs broadcast
+
+
+def _verify_jaccard(
+    cand: DataFrame, shingles: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Exact shingle-set Jaccard verify of checkpointed (id_a, id_b)
+    candidates against (id, _sh) distinct shingle arrays: (id_a, id_b,
+    jaccard) for the pairs with jaccard >= threshold."""
     # shingle only the docs that appear in some candidate pair: the
     # verify join is inner on the candidate ids, so pre-filtering is
     # result-identical and skips re-tokenizing the whole corpus twice.
@@ -186,94 +207,81 @@ def minhash_lsh_pairs(
             .unionAll(cand.select(F.col("id_b").alias(id_col)))
             .distinct()
         )
-        sh = sh.join(F.broadcast(ids), id_col, "leftsemi")
-    j = (
-        cand.join(sh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa")), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb")), "id_b")
-        # |A∪B| = |A| + |B| - |A∩B| exactly (distinct arrays): the
-        # union array is never built — same integers, same double
-        .withColumn("_c", F.size(F.array_intersect("_sa", "_sb")))
-        .withColumn(
-            "jaccard",
-            F.col("_c") / (F.size("_sa") + F.size("_sb") - F.col("_c")),
+        shingles = shingles.join(F.broadcast(ids), id_col, "leftsemi")
+    na, nb = F.size("_sa"), F.size("_sb")
+    return (
+        cand.join(
+            shingles.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa")),
+            "id_a",
         )
-        .where(F.col("jaccard") >= jaccard_threshold)
+        .join(
+            shingles.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb")),
+            "id_b",
+        )
+        # size-ratio prune before the exact verify: J(A,B) >= t implies
+        # min(|A|,|B|) >= t*max(|A|,|B|); epsilon keeps the float
+        # product from rounding above an exactly-borderline min
+        .where(
+            F.least(na, nb).cast("double")
+            >= F.lit(threshold) * F.greatest(na, nb) - F.lit(1e-9)
+        )
+        # |A∪B| = na + nb - |A∩B| exactly (the arrays are distinct), so
+        # the union array is never built — same integers, same double
+        .withColumn("_c", F.size(F.array_intersect("_sa", "_sb")))
+        .withColumn("jaccard", F.col("_c") / (na + nb - F.col("_c")))
+        .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.col("jaccard"))
     )
-    return j
-
-
-_MAX_VERIFY_BROADCAST_IDS = 4_000_000  # ids; ~32 MB of longs broadcast
 
 
 def _minhash_candidates(
-    bands: DataFrame, id_col: str, max_bucket_size: int | None
+    bands: DataFrame, id_col: str, max_bucket_size: int
 ) -> DataFrame:
     """(id_a, id_b) candidate pairs from shared LSH bands — the lazy
     plan `minhash_lsh_pairs` checkpoints (plan shape pinned in
-    tests/test_plans.py)."""
-    if max_bucket_size is None:
-        # Uncapped mode: generate pairs with the band self-join, which
-        # spreads a d-doc hot bucket's d² candidates across tasks. The
-        # collect_list form below would instead build ONE row holding a
-        # d-element member array plus an O(d²) flattened pair array —
-        # unbounded aggregation-buffer width without a cap.
-        a = bands.select(
-            "band_id", "band_key", F.col(id_col).alias("id_a")
-        )
-        b = bands.select(
-            "band_id", "band_key", F.col(id_col).alias("id_b")
-        )
-        cand = (
-            a.join(b, ["band_id", "band_key"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-    else:
-        # Capped mode: count FIRST via a WINDOW over the one
-        # (band_id, band_key) shuffle, filter over-cap / singleton rows,
-        # then collect — the cap must bound the aggregation buffer
-        # itself, not just downstream pair expansion. The window's
-        # count needs no second pass: the expensive minhash-signature
-        # map (md5 per shingle per hash family — the dominant cost of
-        # this operator) runs ONCE, the bands table is shuffled ONCE,
-        # and the groupBy after the filter reuses the window's
-        # hash-partitioning on the same keys (EnsureRequirements adds
-        # no new Exchange; asserted in tests/test_plans.py). A 10⁶-doc
-        # boilerplate band_key never materializes a 10⁶-element
-        # collect_list row: WindowExec buffers its group with a
-        # spillable sorter, counts it, and the filter drops every row
-        # of the hot bucket before any array is built. (Round 3's
-        # count-then-semi-join form computed the signatures twice and
-        # shuffled the full bands table twice — measured 2.35× slower.)
-        w = Window.partitionBy("band_id", "band_key")
-        buckets = (
-            bands.withColumn("_n", F.count(F.lit(1)).over(w))
-            .where((F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size))
-            .groupBy("band_id", "band_key")
-            .agg(F.collect_list(id_col).alias("_ids"))
-        )
-        # bind the sorted array once: captured inside the pair lambdas
-        # it would re-sort the bucket per emitted pair element
-        pair_arr = bind_once(
-            F.array_sort("_ids"),
-            lambda ids: F.flatten(
-                F.transform(
-                    ids,
-                    lambda x, i: F.transform(
-                        F.slice(ids, i + F.lit(2), F.size(ids)),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            ),
-        )
-        cand = (
-            buckets.select(F.explode(pair_arr).alias("_p"))
-            .select(F.col("_p.id_a"), F.col("_p.id_b"))
-            .distinct()
-        )
-    return cand
+    tests/test_plans.py).
+
+    Count FIRST via a WINDOW over the one (band_id, band_key) shuffle,
+    filter over-cap / singleton rows, then collect — the cap must bound
+    the aggregation buffer itself, not just downstream pair expansion.
+    The window's count needs no second pass: the expensive
+    minhash-signature map (md5 per shingle per hash family — the
+    dominant cost of this operator) runs ONCE, the bands table is
+    shuffled ONCE, and the groupBy after the filter reuses the window's
+    hash-partitioning on the same keys (EnsureRequirements adds no new
+    Exchange; asserted in tests/test_plans.py). A 10⁶-doc boilerplate
+    band_key never materializes a 10⁶-element collect_list row:
+    WindowExec buffers its group with a spillable sorter, counts it,
+    and the filter drops every row of the hot bucket before any array
+    is built. (A count-then-semi-join form computed the signatures
+    twice and shuffled the full bands table twice — measured 2.35×
+    slower.)"""
+    w = Window.partitionBy("band_id", "band_key")
+    buckets = (
+        bands.withColumn("_n", F.count(F.lit(1)).over(w))
+        .where((F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size))
+        .groupBy("band_id", "band_key")
+        .agg(F.collect_list(id_col).alias("_ids"))
+    )
+    # bind the sorted array once: captured inside the pair lambdas
+    # it would re-sort the bucket per emitted pair element
+    pair_arr = bind_once(
+        F.array_sort("_ids"),
+        lambda ids: F.flatten(
+            F.transform(
+                ids,
+                lambda x, i: F.transform(
+                    F.slice(ids, i + F.lit(2), F.size(ids)),
+                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+                ),
+            )
+        ),
+    )
+    return (
+        buckets.select(F.explode(pair_arr).alias("_p"))
+        .select(F.col("_p.id_a"), F.col("_p.id_b"))
+        .distinct()
+    )
 
 
 def simhash16(
@@ -324,9 +332,7 @@ def ngram_jaccard_pairs(
     the same block are compared (use a cheap pre-cluster — source,
     language, simhash byte — as block), and candidates come from a
     rarity-ordered prefix filter so high-df shingles never explode the
-    join (see inline comment for the exactness argument)."""
-    from pyspark.sql import Window
-
+    join (exactness argument in `_prefix_pairs`)."""
     # filter on the cheap token-count predicate, not on size(_sh): a
     # filter referencing the computed shingle column is pushed below
     # the projection and re-evaluates the whole shingle pipeline inside
@@ -336,15 +342,6 @@ def ngram_jaccard_pairs(
         F.col(id_col),
         F.array_distinct(word_shingles_expr(text_col, shingle_n)).alias("_sh"),
     )
-    # Prefix filtering (PPJoin-style, exact): order each doc's shingles
-    # by a global rarity order (df asc, shingle asc) and index only the
-    # first  n - ceil(t*n) + 1  of them. Theorem: if J(A,B) >= t then
-    # |A∩B| >= t*max(|A|,|B|), and the globally-smallest shared shingle
-    # sits within both prefixes — so the prefix join loses no qualifying
-    # pair. This replaces the full inverted index, where one shingle
-    # with document frequency df inside a block emitted O(df²) join
-    # rows; high-df shingles sort LAST and essentially never enter a
-    # prefix. Candidates are then verified exactly on the full sets.
     # per-doc shingle count is size(_sh) — carried through the explode
     # rather than recomputed with a second window over the full index
     inv = sh.select(
@@ -352,8 +349,8 @@ def ngram_jaccard_pairs(
         F.explode("_sh").alias("_g"),
     )
     # document frequency via a window over the (block, shingle)
-    # exchange instead of the earlier groupBy+join: the inverted index
-    # is scanned and shuffled ONCE (the groupBy+join form evaluated the
+    # exchange instead of a groupBy+join: the inverted index is scanned
+    # and shuffled ONCE (the groupBy+join form evaluated the
     # tokenize→shingle→explode pipeline twice — once for the counts,
     # once for the probe side — and shuffled both)
     w_df = Window.partitionBy("_blk", "_g")
@@ -361,20 +358,50 @@ def ngram_jaccard_pairs(
     ranked = inv.withColumn("_df", F.count(F.lit(1)).over(w_df)).withColumn(
         "_r", F.row_number().over(w_rank)
     )
+    prefix = _prefix(ranked, id_col, threshold)
+    cand = _prefix_pairs(prefix, id_col, threshold).localCheckpoint(eager=True)
+    return _verify_jaccard(cand, sh.select(F.col(id_col), "_sh"), id_col, threshold)
+
+
+def _prefix(ranked: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """Checkpointed PPJoin prefix (_blk, id, _g, _r, _n): the first
+    n - ceil(t·n) + 1 shingles of each doc under its rank `_r` in the
+    global (df asc, shingle asc) order; `_n` is the doc's set size. It
+    feeds both sides of the candidate self-join (and the incremental
+    probe), so it is materialized once instead of re-running the rank
+    windows per side."""
     # epsilon guards the float ceil from rounding t*n up past the exact
     # integer and shortening the prefix below the safe bound
     prefix_len = F.col("_n") - F.ceil(
         F.lit(threshold) * F.col("_n") - F.lit(1e-9)
     ) + F.lit(1)
-    # the prefix index feeds BOTH sides of the candidate self-join;
-    # materialize it once (it is a small fraction of the inverted
-    # index) instead of re-running the two windows per side. Ranks and
-    # per-doc sizes ride along for the positional filter below.
-    prefix = (
+    return (
         ranked.where(F.col("_r") <= prefix_len)
         .select("_blk", F.col(id_col), "_g", "_r", "_n")
         .localCheckpoint(eager=True)
     )
+
+
+def _prefix_pairs(prefix: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """Lazy (id_a, id_b) candidates, id_a < id_b, from the prefix
+    self-join on (_blk, _g) and the PPJoin positional filter (Xiao et
+    al., WWW 2008). Both steps are exact — no pair with J >= t is lost:
+
+    - Prefix filter: if J(A,B) >= t then |A∩B| >= t·max(|A|,|B|), so
+      the globally-smallest shared shingle sits within both prefixes.
+      Unlike a full inverted index, where one shingle of block document
+      frequency df emits O(df²) join rows, high-df shingles sort LAST
+      and essentially never enter a prefix.
+    - Positional filter: the smallest matched shingle IS the globally
+      smallest shared one (both prefixes follow the same order, so a
+      smaller shared shingle would itself sit in both prefixes and
+      match). Every other shared shingle ranks after it on both sides,
+      so |A∩B| <= 1 + min(na - ra0, nb - rb0), while J >= t needs
+      |A∩B| >= t(na+nb)/(1+t). Pairs whose bound falls short are
+      dropped before the verify pays for their array intersections
+      (the epsilon keeps a borderline bound from being floored out:
+      false keeps are fine, false drops are not).
+    """
     a = prefix.select(
         "_blk",
         F.col(id_col).alias("id_a"),
@@ -389,7 +416,7 @@ def ngram_jaccard_pairs(
         F.col("_r").alias("_rb"),
         F.col("_n").alias("_nb"),
     )
-    cand = (
+    return (
         a.join(b, ["_blk", "_g"])
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
@@ -399,17 +426,6 @@ def ngram_jaccard_pairs(
             F.min("_na").alias("_na"),
             F.min("_nb").alias("_nb"),
         )
-        # PPJoin positional filter (exact): the smallest matched gram
-        # IS the globally smallest shared gram (both prefixes are
-        # sorted by the same (df, gram) order, so a smaller shared
-        # gram would itself sit in both prefixes and match). Every
-        # other shared gram ranks after it on both sides, so
-        # |A∩B| <= 1 + min(na - ra0, nb - rb0); J >= t needs
-        # |A∩B| >= t(na+nb)/(1+t). Pairs whose bound falls short can
-        # never qualify — dropped BEFORE the exact verify pays for
-        # their array intersections (epsilon keeps a borderline bound
-        # from being floored out: false keeps are fine, false drops
-        # are not).
         .where(
             (
                 F.lit(1)
@@ -422,42 +438,6 @@ def ngram_jaccard_pairs(
             - F.lit(1e-9)
         )
         .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
-    )
-    full = sh.select(F.col(id_col), "_sh")
-    # shingle only docs that appear in a candidate pair (the verify
-    # join is inner on candidate ids, so this is result-identical);
-    # broadcast guard as in minhash_lsh_pairs
-    if cand.count() * 2 <= _MAX_VERIFY_BROADCAST_IDS:
-        ids = (
-            cand.select(F.col("id_a").alias(id_col))
-            .unionAll(cand.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        full = full.join(F.broadcast(ids), id_col, "leftsemi")
-    na, nb = F.size("_sa"), F.size("_sb")
-    return (
-        cand.join(
-            full.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa")),
-            "id_a",
-        )
-        .join(
-            full.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb")),
-            "id_b",
-        )
-        # size-ratio prune before the exact verify: J(A,B) >= t implies
-        # min(|A|,|B|) >= t*max(|A|,|B|); epsilon keeps the float
-        # product from rounding above an exactly-borderline min
-        .where(
-            F.least(na, nb).cast("double")
-            >= F.lit(threshold) * F.greatest(na, nb) - F.lit(1e-9)
-        )
-        # |A∪B| = na + nb - |A∩B| exactly (the arrays are distinct), so
-        # the union array is never built — same integers, same double
-        .withColumn("_c", F.size(F.array_intersect("_sa", "_sb")))
-        .withColumn("jaccard", F.col("_c") / (na + nb - F.col("_c")))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.col("jaccard"))
     )
 
 
@@ -467,7 +447,6 @@ def ngram_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
-    materialize: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Build the reusable n-gram inverted index for a corpus — the
     snapshot `ngram_jaccard_pairs_incremental` probes so delta runs
@@ -481,27 +460,28 @@ def ngram_index(
       delta's df rows keeps MULTIPLE rows per key; consumers re-sum —
       folding a delta in is an append, never a rewrite.
 
-    With `materialize=True` each table is localCheckpoint'ed, staged so
-    the corpus is tokenized and shingled exactly ONCE (posting and df
-    derive from the materialized shingle table) — the shape for an
-    index BUILD, where a caller checkpointing the three lazy outputs
-    separately would otherwise pay three full shingle passes.
+    Each table is localCheckpoint'ed, staged so the corpus is
+    tokenized and shingled exactly ONCE (posting and df derive from the
+    materialized shingle table); checkpointing the three lazy outputs
+    separately would pay three full shingle passes.
     """
-    sh = docs.where(F.size(tokens_expr(text_col)) >= shingle_n).select(
-        F.col(block_col).alias("_blk"),
-        F.col(id_col),
-        F.array_distinct(word_shingles_expr(text_col, shingle_n)).alias("_sh"),
+    sh = (
+        docs.where(F.size(tokens_expr(text_col)) >= shingle_n)
+        .select(
+            F.col(block_col).alias("_blk"),
+            F.col(id_col),
+            F.array_distinct(word_shingles_expr(text_col, shingle_n)).alias("_sh"),
+        )
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
-    posting = sh.select("_blk", F.col(id_col), F.explode("_sh").alias("_g"))
-    if materialize:
-        posting = posting.localCheckpoint(eager=True)
-    dfreq = posting.groupBy("_blk", "_g").agg(
-        F.count(F.lit(1)).cast("long").alias("_df")
+    posting = sh.select(
+        "_blk", F.col(id_col), F.explode("_sh").alias("_g")
+    ).localCheckpoint(eager=True)
+    dfreq = (
+        posting.groupBy("_blk", "_g")
+        .agg(F.count(F.lit(1)).cast("long").alias("_df"))
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        dfreq = dfreq.localCheckpoint(eager=True)
     return posting, sh.select(F.col(id_col), "_sh"), dfreq
 
 
@@ -537,27 +517,20 @@ def ngram_jaccard_pairs_incremental(
     exact verify makes the emitted pairs identical to a full re-run's
     pairs that touch the delta (tested).
     """
-    from pyspark.sql import Window
-
+    # the delta's checkpointed posting rows feed the combined document
+    # frequencies, the per-doc counts, the ranked join, and the
+    # broadcast-pricing count below without re-shingling the delta
     new_posting, new_shingles, new_df = ngram_index(
         new_docs, block_col, id_col, text_col, shingle_n
-    )
-    # materialize the delta's posting rows ONCE: they feed the combined
-    # document frequencies, the per-doc counts, the ranked join, and
-    # the broadcast-pricing count below — each use would otherwise
-    # re-tokenize and re-shingle the delta
-    new_posting = new_posting.localCheckpoint(eager=True)
-    new_df = new_posting.groupBy("_blk", "_g").agg(
-        F.count(F.lit(1)).cast("long").alias("_df")
     )
     # the combined frequencies are only consumed through an inner join
     # with the DELTA's posting rows, so only grams the delta holds
     # matter: semi-join the prior df table down to those grams before
-    # aggregating it (result-identical; the full prior-vocabulary
-    # aggregation the earlier form ran scales with the CORPUS, not the
-    # delta). Broadcast the delta gram set when provably small —
-    # posting rows upper-bound distinct grams; counted on the
-    # checkpoint, so pricing costs no recomputation.
+    # aggregating it (result-identical; a full prior-vocabulary
+    # aggregation scales with the CORPUS, not the delta). Broadcast the
+    # delta gram set when provably small — posting rows upper-bound
+    # distinct grams; counted on the checkpoint, so pricing costs no
+    # recomputation.
     delta_small = new_posting.count() <= max_broadcast_keys
     delta_grams = new_posting.select("_blk", "_g").distinct()
     if delta_small:
@@ -583,67 +556,20 @@ def ngram_jaccard_pairs_incremental(
             "_n",
         )
     )
-    prefix_len = F.col("_n") - F.ceil(
-        F.lit(threshold) * F.col("_n") - F.lit(1e-9)
-    ) + F.lit(1)
     # the prefix feeds both sides of the delta×delta join AND the
-    # delta×prior probe; materialize it once (delta-bounded). Ranks and
-    # sizes ride along for the delta×delta positional filter.
-    prefix = (
-        ranked.where(F.col("_r") <= prefix_len)
-        .select("_blk", F.col(id_col), "_g", "_r", "_n")
-        .localCheckpoint(eager=True)
-    )
-    a = prefix.select(
-        "_blk",
-        F.col(id_col).alias("id_a"),
-        "_g",
-        F.col("_r").alias("_ra"),
-        F.col("_n").alias("_na"),
-    )
-    # delta×delta: same PPJoin positional filter as the batch operator
-    # (exact — see ngram_jaccard_pairs); delta×prior below has no
-    # prior-side ranks, so it keeps the plain pair join
-    dd = (
-        a.join(
-            prefix.select(
-                "_blk",
-                F.col(id_col).alias("id_b"),
-                "_g",
-                F.col("_r").alias("_rb"),
-                F.col("_n").alias("_nb"),
-            ),
-            ["_blk", "_g"],
-        )
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.min("_ra").alias("_ra0"),
-            F.min("_rb").alias("_rb0"),
-            F.min("_na").alias("_na"),
-            F.min("_nb").alias("_nb"),
-        )
-        .where(
-            (
-                F.lit(1)
-                + F.least(
-                    F.col("_na") - F.col("_ra0"), F.col("_nb") - F.col("_rb0")
-                )
-            ).cast("double")
-            >= F.lit(threshold / (1.0 + threshold))
-            * (F.col("_na") + F.col("_nb"))
-            - F.lit(1e-9)
-        )
-        .select("id_a", "id_b")
-    )
-    # prune the prior posting lists map-side to the delta-prefix grams
-    # before the join shuffles them — the probe then moves
+    # delta×prior probe (delta-bounded)
+    prefix = _prefix(ranked, id_col, threshold)
+    dd = _prefix_pairs(prefix, id_col, threshold)
+    # delta×prior has no prior-side ranks, so it keeps the plain pair
+    # join. Prune the prior posting lists map-side to the delta-prefix
+    # grams before the join shuffles them — the probe then moves
     # delta-touched posting rows only, never the full prior index
     prefix_grams = prefix.select("_blk", "_g").distinct()
     if delta_small:
         prefix_grams = F.broadcast(prefix_grams)
     dp = (
-        a.join(
+        prefix.select("_blk", F.col(id_col).alias("id_a"), "_g")
+        .join(
             prior_posting.join(prefix_grams, ["_blk", "_g"], "leftsemi")
             .select("_blk", F.col(id_col).alias("id_b"), "_g"),
             ["_blk", "_g"],
@@ -655,39 +581,8 @@ def ngram_jaccard_pairs_incremental(
         )
     )
     cand = dd.unionByName(dp).distinct().localCheckpoint(eager=True)
-    full = prior_shingles.unionByName(new_shingles)
-    # verify only docs referenced by a candidate pair (result-identical
-    # inner-join prune, broadcast-guarded as in the batch operator)
-    if cand.count() * 2 <= _MAX_VERIFY_BROADCAST_IDS:
-        ids = (
-            cand.select(F.col("id_a").alias(id_col))
-            .unionAll(cand.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        full = full.join(F.broadcast(ids), id_col, "leftsemi")
-    na, nb = F.size("_sa"), F.size("_sb")
-    pairs = (
-        cand.join(
-            full.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa")),
-            "id_a",
-        )
-        .join(
-            full.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb")),
-            "id_b",
-        )
-        .where(
-            F.least(na, nb).cast("double")
-            >= F.lit(threshold) * F.greatest(na, nb) - F.lit(1e-9)
-        )
-        # |A∪B| = |A| + |B| - |A∩B| exactly (distinct arrays): the
-        # union array is never built — same integers, same double
-        .withColumn("_c", F.size(F.array_intersect("_sa", "_sb")))
-        .withColumn(
-            "jaccard",
-            F.col("_c") / (F.size("_sa") + F.size("_sb") - F.col("_c")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.col("jaccard"))
+    pairs = _verify_jaccard(
+        cand, prior_shingles.unionByName(new_shingles), id_col, threshold
     )
     return pairs, new_posting, new_shingles, new_df
 
@@ -775,15 +670,8 @@ def embedding_neardup_pairs_incremental(
     Returns (pairs, new_index_rows).
     """
     from ..functions.vectors import cosine_prenorm_expr, norm_expr
-    from .similarity import hyperplane_bucket_expr
 
-    new_index = new_vectors.select(
-        F.col(id_col),
-        F.col(emb_col),
-        hyperplane_bucket_expr(F.col(emb_col), bits=auto_block_bits).alias(
-            "_blk"
-        ),
-    )
+    new_index = embedding_index(new_vectors, id_col, emb_col, auto_block_bits)
     # norms hoisted out of the pair stage (see embedding_neardup_pairs)
     d = new_index.select(
         "_blk",
@@ -950,6 +838,35 @@ def connected_components(
     )
 
 
+def minhash_index(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 8,
+    rows_per_band: int = 2,
+    shingle_n: int = 3,
+) -> tuple[DataFrame, DataFrame]:
+    """Build the snapshot `minhash_lsh_pairs_incremental` probes:
+    (bands, shingles) — the `minhash_band_keys` rows and the (id, _sh)
+    distinct shingle arrays. The corpus is tokenized and shingled
+    exactly ONCE: the shingle table is localCheckpoint'ed and the band
+    signatures derive from it (`shingles_col`; signature mins are
+    identical over distinct arrays), then the bands are checkpointed
+    too. Append a delta's returned rows to fold it in."""
+    shingles = docs.select(
+        F.col(id_col),
+        F.array_distinct(word_shingles_expr(text_col, shingle_n)).alias("_sh"),
+    ).localCheckpoint(eager=True)
+    bands = minhash_band_keys(
+        shingles,
+        id_col,
+        num_hashes=num_hashes,
+        rows_per_band=rows_per_band,
+        shingles_col="_sh",
+    ).localCheckpoint(eager=True)
+    return bands, shingles
+
+
 def minhash_lsh_pairs_incremental(
     new_docs: DataFrame,
     prior_bands: DataFrame,
@@ -960,19 +877,13 @@ def minhash_lsh_pairs_incremental(
     rows_per_band: int = 2,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
-    max_bucket_size: int | None = 500,
+    max_bucket_size: int = 500,
     max_broadcast_keys: int = 1_000_000,
-    delta_count: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Incremental near-dup detection: pairs touching the DELTA only.
 
-    `delta_count` (optional): the caller's known |new_docs|; when
-    provided, the broadcast-pricing count() job on the delta is
-    skipped (round-5 advice: hot probe paths often already know the
-    delta size).
-
     The banded signature table IS a reusable LSH index: a corpus's
-    `minhash_band_keys` output (and its distinct shingle sets) can be
+    `minhash_index` (bands and distinct shingle sets) can be
     snapshotted once and probed by every subsequent delta — the 100 TB
     prior corpus is never re-tokenized or re-hashed. Returns
     (pairs, new_bands, new_shingles):
@@ -981,8 +892,9 @@ def minhash_lsh_pairs_incremental(
       doc — delta×prior collisions AND delta×delta collisions, exact
       Jaccard verified, identical to the pairs a full re-run would
       emit that touch the delta (tests assert this equivalence).
-    - new_bands / new_shingles: the delta's index rows; append them to
-      the snapshots to fold the delta into the index for the next run.
+    - new_bands / new_shingles: the delta's `minhash_index` rows;
+      append them to the snapshots to fold the delta into the index
+      for the next run.
 
     The bucket cap applies to the COMBINED bucket (prior + delta
     members), same audit contract as the batch operator.
@@ -990,18 +902,14 @@ def minhash_lsh_pairs_incremental(
     `max_broadcast_keys` guards the delta-key broadcast: the probe's
     map-side prior-index prune broadcasts the delta's (band_id,
     band_key) set, which is only safe while that set fits the driver.
-    The upper bound |delta| x bands is checked with one delta-bounded
-    count(); past the threshold the hint is dropped and the semi-join
-    falls back to a shuffle (still delta-bounded on one side, and AQE
-    may re-broadcast from measured stats) instead of OOMing the
-    driver on an oversized delta.
+    The delta's band rows upper-bound that set and are counted on
+    their checkpoint; past the threshold the hint is dropped and the
+    semi-join falls back to a shuffle (still delta-bounded on one
+    side, and AQE may re-broadcast from measured stats) instead of
+    OOMing the driver on an oversized delta.
     """
-    new_bands = minhash_band_keys(
+    new_bands, new_shingles = minhash_index(
         new_docs, id_col, text_col, num_hashes, rows_per_band, shingle_n
-    )
-    new_shingles = new_docs.select(
-        F.col(id_col),
-        F.array_distinct(word_shingles_expr(text_col, shingle_n)).alias("_sh"),
     )
     nb = new_bands.select("band_id", "band_key", F.col(id_col).alias("_id")).withColumn(
         "_new", F.lit(True)
@@ -1009,133 +917,76 @@ def minhash_lsh_pairs_incremental(
     pb = prior_bands.select(
         "band_id", "band_key", F.col(id_col).alias("_id")
     ).withColumn("_new", F.lit(False))
-    u = nb.unionByName(pb)
-    bands = max(1, num_hashes // rows_per_band)
-    # |delta_keys| <= |delta docs| x bands exactly (each doc emits one
-    # key per band); one delta-bounded count() decides whether the
-    # broadcast hint is safe, so an oversized delta degrades to a
-    # shuffle semi-join instead of OOMing the driver.
-    if delta_count is None:
-        delta_count = new_docs.count()
-    broadcast_delta_keys = (
-        max_bucket_size is not None
-        and delta_count * bands <= max_broadcast_keys
-    )
+    broadcast_delta_keys = new_bands.count() <= max_broadcast_keys
+    # materialize the (small) candidate set once: it feeds the verify
+    # join and its candidate-id prune
     cand = _minhash_incr_candidates(
-        nb, u, max_bucket_size, broadcast_delta_keys
+        nb, nb.unionByName(pb), max_bucket_size, broadcast_delta_keys
+    ).localCheckpoint(eager=True)
+    pairs = _verify_jaccard(
+        cand, new_shingles.unionByName(prior_shingles), id_col, jaccard_threshold
     )
-    # materialize the (small) candidate set once and verify only the
-    # docs it references — same result-identical prune as the batch
-    # operator (the verify join is inner on candidate ids)
-    cand = cand.localCheckpoint(eager=True)
-    all_sh = new_shingles.unionByName(prior_shingles)
-    if cand.count() * 2 <= _MAX_VERIFY_BROADCAST_IDS:
-        ids = (
-            cand.select(F.col("id_a").alias(id_col))
-            .unionAll(cand.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        all_sh = all_sh.join(F.broadcast(ids), id_col, "leftsemi")
-    j = (
-        cand.join(
-            all_sh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa")),
-            "id_a",
-        )
-        .join(
-            all_sh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb")),
-            "id_b",
-        )
-        # |A∪B| = |A| + |B| - |A∩B| exactly (distinct arrays): the
-        # union array is never built — same integers, same double
-        .withColumn("_c", F.size(F.array_intersect("_sa", "_sb")))
-        .withColumn(
-            "jaccard",
-            F.col("_c") / (F.size("_sa") + F.size("_sb") - F.col("_c")),
-        )
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", F.col("jaccard"))
-    )
-    return j, new_bands, new_shingles
+    return pairs, new_bands, new_shingles
 
 
 def _minhash_incr_candidates(
     nb: DataFrame,
     u: DataFrame,
-    max_bucket_size: int | None,
+    max_bucket_size: int,
     broadcast_delta_keys: bool,
 ) -> DataFrame:
     """Lazy candidate pairs for the incremental probe (plan shape
-    pinned in tests); nb = delta band rows, u = delta ∪ prior."""
-    if max_bucket_size is None:
-        # Uncapped: delta × (prior ∪ delta) band join — covers
-        # delta×prior and delta×delta collisions while spreading a hot
-        # bucket's pair rows across tasks (no unbounded collect_list
-        # row; see minhash_lsh_pairs).
-        cand = (
-            nb.select("band_id", "band_key", F.col("_id").alias("_ida"))
-            .join(
-                u.select("band_id", "band_key", F.col("_id").alias("_idb")),
-                ["band_id", "band_key"],
-            )
-            .where(F.col("_ida") != F.col("_idb"))
-            .select(
-                F.least("_ida", "_idb").alias("id_a"),
-                F.greatest("_ida", "_idb").alias("id_b"),
-            )
-            .distinct()
-        )
-    else:
-        # Broadcast pruning + windowed count: only buckets a DELTA doc
-        # landed in can yield new pairs, and the delta's own band keys
-        # ARE that bucket set — ≤ |delta|·bands keys, broadcastable
-        # whenever the delta is small relative to the corpus (the
-        # operator's whole premise; for a delta comparable to the
-        # corpus use the batch operator). Broadcast-semi-joining them
-        # filters the prior index MAP-SIDE, so the one shuffle below
-        # moves delta-touched rows only, never the 100 TB prior index.
-        # The combined-bucket cap is then enforced like the batch path:
-        # a window count over the (band_id, band_key) shuffle drops
-        # over-cap / singleton buckets before any member array is
-        # built, and the collect_list groupBy reuses the window's
-        # partitioning — one scan of the prior index, one delta-bounded
-        # shuffle. (Round 3's count-then-semi-join form scanned and
-        # shuffled the full combined index twice.)
-        delta_keys = nb.select("band_id", "band_key").distinct()
-        if broadcast_delta_keys:
-            delta_keys = F.broadcast(delta_keys)
-        touched = u.join(delta_keys, ["band_id", "band_key"], "semi")
-        w = Window.partitionBy("band_id", "band_key")
-        buckets = (
-            touched.withColumn("_n", F.count(F.lit(1)).over(w))
-            .where((F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size))
-            .groupBy("band_id", "band_key")
-            .agg(F.collect_list(F.struct("_id", "_new")).alias("_members"))
-        )
-        # struct sort: by _id, then _new; bound once (see batch twin)
-        pair_arr = bind_once(
-            F.array_sort("_members"),
-            lambda members: F.flatten(
-                F.transform(
-                    members,
-                    lambda x, i: F.transform(
-                        F.slice(members, i + F.lit(2), F.size(members)),
-                        lambda y: F.struct(
-                            x.getField("_id").alias("id_a"),
-                            y.getField("_id").alias("id_b"),
-                            (x.getField("_new") | y.getField("_new")).alias("touches_new"),
-                        ),
+    pinned in tests); nb = delta band rows, u = delta ∪ prior.
+
+    Broadcast pruning + windowed count: only buckets a DELTA doc landed
+    in can yield new pairs, and the delta's own band keys ARE that
+    bucket set — ≤ |delta|·bands keys, broadcastable whenever the delta
+    is small relative to the corpus (the operator's whole premise; for
+    a delta comparable to the corpus use the batch operator).
+    Broadcast-semi-joining them filters the prior index MAP-SIDE, so
+    the one shuffle below moves delta-touched rows only, never the
+    100 TB prior index. The combined-bucket cap is then enforced like
+    the batch path: a window count over the (band_id, band_key)
+    shuffle drops over-cap / singleton buckets before any member array
+    is built, and the collect_list groupBy reuses the window's
+    partitioning — one scan of the prior index, one delta-bounded
+    shuffle. (A count-then-semi-join form scanned and shuffled the
+    full combined index twice.)"""
+    delta_keys = nb.select("band_id", "band_key").distinct()
+    if broadcast_delta_keys:
+        delta_keys = F.broadcast(delta_keys)
+    touched = u.join(delta_keys, ["band_id", "band_key"], "semi")
+    w = Window.partitionBy("band_id", "band_key")
+    buckets = (
+        touched.withColumn("_n", F.count(F.lit(1)).over(w))
+        .where((F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size))
+        .groupBy("band_id", "band_key")
+        .agg(F.collect_list(F.struct("_id", "_new")).alias("_members"))
+    )
+    # struct sort: by _id, then _new; bound once (see batch twin)
+    pair_arr = bind_once(
+        F.array_sort("_members"),
+        lambda members: F.flatten(
+            F.transform(
+                members,
+                lambda x, i: F.transform(
+                    F.slice(members, i + F.lit(2), F.size(members)),
+                    lambda y: F.struct(
+                        x.getField("_id").alias("id_a"),
+                        y.getField("_id").alias("id_b"),
+                        (x.getField("_new") | y.getField("_new")).alias("touches_new"),
                     ),
-                )
-            ),
-        )
-        cand = (
-            buckets.select(F.explode(pair_arr).alias("_p"))
-            .where(F.col("_p.touches_new"))
-            .select(F.col("_p.id_a"), F.col("_p.id_b"))
-            .where(F.col("id_a") != F.col("id_b"))
-            .distinct()
-        )
-    return cand
+                ),
+            )
+        ),
+    )
+    return (
+        buckets.select(F.explode(pair_arr).alias("_p"))
+        .where(F.col("_p.touches_new"))
+        .select(F.col("_p.id_a"), F.col("_p.id_b"))
+        .where(F.col("id_a") != F.col("id_b"))
+        .distinct()
+    )
 
 
 def duplicate_spans(
@@ -1260,7 +1111,6 @@ def duplicate_spans_incremental(
     max_gram_occurrences: int = 1000,
     min_span_tokens: int | None = None,
     max_broadcast_keys: int = 1_000_000,
-    delta_gram_count: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental span-level dedup: re-derive spans ONLY for the
     documents a delta can affect, probing the snapshotted
@@ -1307,13 +1157,9 @@ def duplicate_spans_incremental(
         new_docs, id_col, text_col, k
     ).localCheckpoint(eager=True)
     delta_keys = delta_index.select("gram_md5").distinct()
-    # delta-bounded count; occurrences upper-bound the distinct keys.
-    # The count is over the just-checkpointed delta index (cheap); a
-    # caller who already knows its gram count can pass it to skip the
-    # job entirely (round-5 advice).
-    if delta_gram_count is None:
-        delta_gram_count = delta_index.count()
-    if delta_gram_count <= max_broadcast_keys:
+    # delta-bounded count over the checkpoint (cheap); occurrences
+    # upper-bound the distinct keys
+    if delta_index.count() <= max_broadcast_keys:
         delta_keys = F.broadcast(delta_keys)
     affected = (
         prior_index.join(delta_keys, "gram_md5", "leftsemi")

@@ -7,7 +7,15 @@
 - ivf_topk: the scale path — candidates are pre-bucketed by a coarse
   deterministic quantizer (sign pattern of the leading dimensions, an
   LSH-style hyperplane code); each query probes only its own bucket.
-  Recall < 1 by design; `probe_mirror` widens probing.
+  Recall < 1 by design; `n_probes` > 1 also probes the buckets one
+  sign bit away.
+- ivf_kmeans_topk: the same probe join over trained k-means cells
+  (kmeans_centroids) instead of the static hyperplane code;
+  `n_probes` probes each query's n nearest cells.
+
+All three exclude self pairs (q_id == vec_id) and end in one shared
+tail (`_topk`): cosine scoring, a per-partition top-k pre-reduction,
+then the per-query (cos desc, id asc) window and the rank_pos <= k cut.
 
 All math is double-precision deterministic folds (functions.vectors) so
 results have exact DuckDB oracles.
@@ -57,6 +65,33 @@ def _partial_topk(scored: DataFrame, q_id: str, c_id: str, k: int) -> DataFrame:
     return scored.mapInPandas(reduce_partition, schema=schema)
 
 
+def _topk(
+    joined: DataFrame, k: int, q_id: str, q_emb: str, c_id: str, c_emb: str
+) -> DataFrame:
+    """Shared tail of the three searches: (q_id, vec_id, cos,
+    rank_pos) from the joined (query, candidate) rows, which carry the
+    hoisted norms `_qn` / `_cn`. Self pairs are dropped, each scored
+    input partition is pre-reduced to its local top-k, and the global
+    per-query window ranks by (cos desc, candidate id asc)."""
+    scored = (
+        joined.where(F.col(q_id) != F.col(c_id))
+        .withColumn(
+            "cos",
+            cosine_prenorm_expr(
+                F.col(q_emb), F.col(c_emb), F.col("_qn"), F.col("_cn")
+            ),
+        )
+        .select(q_id, c_id, "cos")
+    )
+    w = Window.partitionBy(q_id).orderBy(F.desc("cos"), F.asc(c_id))
+    return (
+        _partial_topk(scored, q_id, c_id, k)
+        .withColumn("rank_pos", F.row_number().over(w))
+        .where(F.col("rank_pos") <= k)
+        .select(q_id, c_id, F.col("cos"), "rank_pos")
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -65,16 +100,13 @@ def brute_force_topk(
     q_emb: str = "q_emb",
     c_id: str = "vec_id",
     c_emb: str = "embedding",
-    include_self: bool = False,
-    partial_reduce: bool = True,
 ) -> DataFrame:
     """(q_id, vec_id, cos, rank_pos) — exact top-k by cosine,
     deterministic tie-break on candidate id. Two-phase: scores stay
     JVM-side (codegen cosine over the broadcast queries), then each
     scan partition pre-reduces to its local top-k before the global
     per-query window — the q_id shuffle carries |Q|·k·P rows instead
-    of |Q|×|C| (set partial_reduce=False to keep the single-phase
-    plan for tiny inputs)."""
+    of |Q|×|C|."""
     # norms hoisted out of the scored-pair stage: computed once per
     # vector (query side before the broadcast, candidate side on the
     # scan), so each of the |Q|x|C| pairs evaluates one O(dim) dot
@@ -89,22 +121,7 @@ def brute_force_topk(
             )
         )
     )
-    if not include_self:
-        joined = joined.where(F.col(q_id) != F.col(c_id))
-    scored = joined.withColumn(
-        "cos",
-        cosine_prenorm_expr(
-            F.col(q_emb), F.col(c_emb), F.col("_qn"), F.col("_cn")
-        ),
-    ).select(q_id, c_id, "cos")
-    if partial_reduce:
-        scored = _partial_topk(scored, q_id, c_id, k)
-    w = Window.partitionBy(q_id).orderBy(F.desc("cos"), F.asc(c_id))
-    return (
-        scored.withColumn("rank_pos", F.row_number().over(w))
-        .where(F.col("rank_pos") <= k)
-        .select(q_id, c_id, F.col("cos"), "rank_pos")
-    )
+    return _topk(joined, k, q_id, q_emb, c_id, c_emb)
 
 
 def hyperplane_bucket_expr(emb: Column, bits: int = 3) -> Column:
@@ -130,7 +147,6 @@ def ivf_topk(
     q_emb: str = "q_emb",
     c_id: str = "vec_id",
     c_emb: str = "embedding",
-    partial_reduce: bool = True,
     n_probes: int = 1,
 ) -> DataFrame:
     """Approximate top-k: candidates bucketed by hyperplane code; each
@@ -172,21 +188,7 @@ def ivf_topk(
         qb = qs.withColumn(
             "_bkt", F.explode(F.slice(probes, 1, n_probes))
         )
-    joined = cb.join(F.broadcast(qb), "_bkt").where(F.col(q_id) != F.col(c_id))
-    scored = joined.withColumn(
-        "cos",
-        cosine_prenorm_expr(
-            F.col(q_emb), F.col(c_emb), F.col("_qn"), F.col("_cn")
-        ),
-    ).select(q_id, c_id, "cos")
-    if partial_reduce:
-        scored = _partial_topk(scored, q_id, c_id, k)
-    w = Window.partitionBy(q_id).orderBy(F.desc("cos"), F.asc(c_id))
-    return (
-        scored.withColumn("rank_pos", F.row_number().over(w))
-        .where(F.col("rank_pos") <= k)
-        .select(q_id, c_id, F.col("cos"), "rank_pos")
-    )
+    return _topk(cb.join(F.broadcast(qb), "_bkt"), k, q_id, q_emb, c_id, c_emb)
 
 
 # -- trained coarse quantizer (k-means IVF) -----------------------------------
@@ -313,7 +315,6 @@ def ivf_kmeans_topk(
     c_id: str = "vec_id",
     c_emb: str = "embedding",
     scale: int = 1_000_000,
-    partial_reduce: bool = True,
     n_probes: int = 1,
 ) -> DataFrame:
     """IVF probe with a TRAINED coarse quantizer: k-means cells learned
@@ -352,18 +353,4 @@ def ivf_kmeans_topk(
     qb = queries.select(
         F.col(q_id), F.col(q_emb), norm_expr(F.col(q_emb)).alias("_qn")
     ).join(qa, q_id)
-    joined = cb.join(F.broadcast(qb), "cid").where(F.col(q_id) != F.col(c_id))
-    scored = joined.withColumn(
-        "cos",
-        cosine_prenorm_expr(
-            F.col(q_emb), F.col(c_emb), F.col("_qn"), F.col("_cn")
-        ),
-    ).select(q_id, c_id, "cos")
-    if partial_reduce:
-        scored = _partial_topk(scored, q_id, c_id, k)
-    w = Window.partitionBy(q_id).orderBy(F.desc("cos"), F.asc(c_id))
-    return (
-        scored.withColumn("rank_pos", F.row_number().over(w))
-        .where(F.col("rank_pos") <= k)
-        .select(q_id, c_id, F.col("cos"), "rank_pos")
-    )
+    return _topk(cb.join(F.broadcast(qb), "cid"), k, q_id, q_emb, c_id, c_emb)

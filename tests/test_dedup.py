@@ -59,10 +59,10 @@ def test_ngram_jaccard_blocked(spark):
 
 
 def test_lsh_hot_bucket_cap_bounds_identical_doc_blowup(spark):
-    """1,000 identical docs share every LSH bucket: uncapped, the band
-    self-join would emit ~4x10^6 candidate rows (10^12 at 10^6 docs).
-    With the cap those buckets are dropped (exact dedup owns identical
-    docs) while normal-sized buckets keep pairing."""
+    """1,000 identical docs share every LSH bucket, which would expand
+    to ~4x10^6 candidate pairs (10^12 at 10^6 docs). The bucket cap
+    drops those buckets (exact dedup owns identical docs) while
+    normal-sized buckets keep pairing."""
     boiler = "identical boilerplate text repeated across the whole crawl corpus"
     rows = [(i, "a", boiler) for i in range(1000)]
     rows += [(2001, "a", BASE), (2002, "a", NEAR)]
@@ -85,16 +85,6 @@ def test_lsh_hot_bucket_cap_bounds_identical_doc_blowup(spark):
     hot = lsh_hot_buckets(minhash_band_keys(docs), max_bucket_size=50).collect()
     assert len(hot) == 4  # one 1000-doc bucket per band
     assert all(r.bucket_size == 1000 for r in hot)
-
-
-def test_lsh_uncapped_mode_still_available(spark):
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in dedup.minhash_lsh_pairs(
-            _docs(spark), jaccard_threshold=0.5, max_bucket_size=None
-        ).collect()
-    }
-    assert (1, 2) in pairs
 
 
 def test_ngram_jaccard_prefix_filter_exact_vs_bruteforce(spark):
@@ -207,12 +197,6 @@ def test_minhash_incremental_equals_full_run(spark):
     """Delta probed against the prior index must emit exactly the
     full-run pairs that touch the delta; folding the delta's index
     rows in and probing a second delta keeps the equivalence."""
-    from pyspark.sql import functions as F
-
-    from knowledge_graph_creation_from_text_with_llms_spark.functions.text import (
-        word_shingles_expr,
-    )
-
     def mk(rows):
         return spark.createDataFrame(rows, "doc_id long, text string")
 
@@ -227,11 +211,7 @@ def test_minhash_incremental_equals_full_run(spark):
         (11, "unrelated fresh content with novel tokens only"),
         (12, base_text + " kappa"),            # exact dup inside delta
     ])
-    prior_bands = dedup.minhash_band_keys(prior)
-    prior_sh = prior.select(
-        "doc_id",
-        F.array_distinct(word_shingles_expr("text", 3)).alias("_sh"),
-    )
+    prior_bands, prior_sh = dedup.minhash_index(prior)
     inc_pairs, d_bands, d_sh = dedup.minhash_lsh_pairs_incremental(
         delta1, prior_bands, prior_sh
     )
@@ -417,21 +397,13 @@ def test_incremental_lsh_oversized_delta_drops_broadcast_hint(spark):
     documented but not enforced)."""
     from pyspark.sql import functions as F
 
-    from knowledge_graph_creation_from_text_with_llms_spark.functions.text import (
-        word_shingles_expr,
-    )
-
     def mk(rows):
         return spark.createDataFrame(rows, "doc_id long, text string")
 
     base = "alpha beta gamma delta epsilon zeta eta theta"
     prior = mk([(1, base), (2, base + " iota")])
     delta = mk([(10, base + " kappa"), (11, "novel words only here")])
-    prior_bands = dedup.minhash_band_keys(prior)
-    prior_sh = prior.select(
-        "doc_id",
-        F.array_distinct(word_shingles_expr("text", 3)).alias("_sh"),
-    )
+    prior_bands, prior_sh = dedup.minhash_index(prior)
     hinted, _, _ = dedup.minhash_lsh_pairs_incremental(
         delta, prior_bands, prior_sh
     )
@@ -464,3 +436,79 @@ def test_incremental_lsh_oversized_delta_drops_broadcast_hint(spark):
     assert "ResolvedHint" not in _analyzed(
         dedup._minhash_incr_candidates(nb, u, 500, False)
     )
+
+
+def test_minhash_verify_equals_bruteforce_jaccard_of_candidates(spark):
+    """The shared exact verify (size-ratio prune + |A∩B| / (|A|+|B|-|A∩B|))
+    on both minhash paths: the emitted pairs are exactly the LSH
+    candidates whose plain-Python Jaccard is >= t, with bit-equal
+    values. The seeded fixture holds subset pairs whose set sizes are
+    far apart (pruned by the size ratio) and subset / one-word-swap
+    pairs with J exactly equal to t (min == t*max for the subsets: the
+    prune's borderline)."""
+    import random
+
+    rng = random.Random(13)
+    vocab = [f"w{i}" for i in range(400)]
+    rows, doc_id = [], 0
+
+    def add(words):
+        nonlocal doc_id
+        rows.append((doc_id, " ".join(words)))
+        doc_id += 1
+
+    for _ in range(40):
+        # shingle sets 2m-2 vs m-2: J = (m-2)/(2m-2) < 1/2, far apart
+        long_ = rng.sample(vocab, rng.randint(12, 30))
+        add(long_)
+        add(long_[: rng.randint(4, 8)])
+    for _ in range(40):
+        # prefix of 4 shingles inside 8: J = 4/8 = t exactly
+        long_ = rng.sample(vocab, 10)
+        add(long_)
+        add(long_[:6])
+    for _ in range(40):
+        # last word swapped: 2 shared, 4 in the union, J = 2/4 = t exactly
+        base = rng.sample(vocab, 5)
+        add(base)
+        add(base[:4] + [rng.choice(vocab)])
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def shingles(text):
+        ws = text.split()
+        return {" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)}
+
+    sets = {i: shingles(t) for i, t in rows}
+
+    def jac(a, b):
+        c = len(sets[a] & sets[b])
+        return c / (len(sets[a]) + len(sets[b]) - c)
+
+    t = 0.5
+    cand = {
+        (r.id_a, r.id_b)
+        for r in dedup._minhash_candidates(
+            dedup.minhash_band_keys(docs), "doc_id", 500
+        ).collect()
+    }
+    want = {p: jac(*p) for p in cand if jac(*p) >= t}
+    # the fixture reaches both edges of the shared verify
+    assert any(
+        min(len(sets[a]), len(sets[b])) < t * max(len(sets[a]), len(sets[b]))
+        for a, b in cand
+    )
+    assert any(j == t for j in want.values())
+
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in dedup.minhash_lsh_pairs(docs, jaccard_threshold=t).collect()
+    }
+    assert got == want
+
+    prior_bands, prior_sh = dedup.minhash_index(docs.where("doc_id % 5 != 0"))
+    inc, _, _ = dedup.minhash_lsh_pairs_incremental(
+        docs.where("doc_id % 5 = 0"), prior_bands, prior_sh, jaccard_threshold=t
+    )
+    got_inc = {(r.id_a, r.id_b): r.jaccard for r in inc.collect()}
+    want_inc = {p: j for p, j in want.items() if p[0] % 5 == 0 or p[1] % 5 == 0}
+    assert got_inc == want_inc and any(j == t for j in want_inc.values())

@@ -167,18 +167,6 @@ def test_lsh_capped_counts_before_collect(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_lsh_uncapped_is_self_join_no_collect(spark):
-    """Uncapped mode must take the band self-join path: no collect_list
-    anywhere (an uncapped collect would build one unbounded array row
-    per hot bucket)."""
-    df = dedup.minhash_lsh_pairs(
-        _docs(spark), jaccard_threshold=0.1, max_bucket_size=None
-    )
-    plan = _plan(df, execute=True)
-    assert "collect_list" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_asof_join_is_single_pass_window_not_range_join(spark):
     """The as-of join must stay a union + key-partitioned window (each
     row shuffled once) — never a range/theta join, whose cross-product
@@ -209,14 +197,7 @@ def test_incremental_dedup_paths_have_no_cartesian_product(spark):
     prior = docs.where(F.col("doc_id") % 3 != 0)
     delta = docs.where(F.col("doc_id") % 3 == 0)
 
-    prior_bands = dedup.minhash_band_keys(prior)
-    prior_sh = prior.select(
-        "doc_id",
-        F.expr(
-            "array_distinct(transform(sequence(1, greatest(size(split(text,' '))-2,0)),"
-            " i -> concat_ws(' ', slice(split(text,' '), i, 3))))"
-        ).alias("_sh"),
-    )
+    prior_bands, prior_sh = dedup.minhash_index(prior)
     mh, _, _ = dedup.minhash_lsh_pairs_incremental(delta, prior_bands, prior_sh)
     assert "CartesianProduct" not in _plan(mh, execute=True)
 

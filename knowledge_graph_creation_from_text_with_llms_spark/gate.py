@@ -728,11 +728,14 @@ FROM g LEFT JOIN (SELECT gid, max(f) AS best_f FROM scored GROUP BY gid) b
 """,
 )
 def kg_metrics_rouge1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROUGE-1 best-match per generated triple (A4), native exprs."""
+    """ROUGE-1 best-match per generated triple (A4): the one ROUGE
+    scorer (metrics.rouge_best_match) asked for ROUGE-1 only, stemmer
+    off, so it skips the bigram counts and the LCS. A generated triple
+    with no tokens scores 0.0, as in the oracle."""
     tr = _triples_raw(_docs(spark, sf_dir))
     gen = tr.where(F.col("doc_id") % 50 == 0).select("subj", "pred", "obj")
     gt = tr.where(F.col("doc_id") % 75 == 0).select("subj", "pred", "obj")
-    return metrics.rouge_n_best(gen, gt, n=1)
+    return metrics.rouge_best_match(gen, gt, use_stemmer=False, rouge_types=("rouge1",))
 
 
 @_q("kg_metrics_rougel")  # rows-only: LCS DP is not ANSI-SQL-expressible
@@ -798,7 +801,8 @@ FROM g LEFT JOIN (SELECT gid, max(f) AS best_f FROM f GROUP BY gid) bf
 def kg_metrics_rougel_nostem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROUGE-L best-match, stemmer-less (A4): the same Python scorer
     as `kg_metrics_rougel` (metrics.rouge_best_match, one UDF call per
-    distinct generated triple) with the stemmer off, so its LCS is
+    distinct generated triple) asked for ROUGE-L only (no bigram
+    counts) with the stemmer off, so its LCS is
     verified bit-exactly against a recursive-CTE DP oracle — the
     hash-verified counterpart of the rows-only check on
     `kg_metrics_rougel`. Sampling shape matches the metric's real use:
@@ -818,9 +822,7 @@ def kg_metrics_rougel_nostem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gen = flagged.where(F.col("doc_id") % 250 == 0).select("subj", "pred", "obj")
     gt = flagged.where(F.col("doc_id") % 3750 == 0).select("subj", "pred", "obj")
-    return metrics.rouge_best_match(gen, gt, use_stemmer=False).select(
-        "subj", "pred", "obj", "best_rougeL_f"
-    )
+    return metrics.rouge_best_match(gen, gt, use_stemmer=False, rouge_types=("rougeL",))
 
 
 # -- 10c. cosine property top-k (J3/W1) with native hash embeddings -------------
@@ -2628,8 +2630,10 @@ SELECT 3, 'purchase', CAST(count(*) AS BIGINT) FROM s3
 )
 def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """view → click → purchase ordered funnel (earliest-match,
-    strictly-after semantics); per stage one filtered min-aggregation
-    + user-key join — no full-table window, no per-user collection."""
+    strictly-after semantics) by events.funnel_stages' single-pass
+    fold: one event-table scan and one user-key shuffle. The oracle is
+    the staged CTE chain (one min-aggregation + user-key join per
+    stage), so the fold is hash-verified against the join form."""
     return events.funnel_stages(
         _events(spark, sf_dir), ("view", "click", "purchase")
     )
@@ -2670,15 +2674,14 @@ UNION ALL SELECT 5, 'error', CAST(count(*) AS BIGINT) FROM s5
 """,
 )
 def events_funnel_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5-stage funnel via the SINGLE-PASS form (round-4 VERDICT item):
-    one event-table scan + one user-key shuffle regardless of depth —
-    per-user sorted stage-ts arrays with the monotonic carry folded as
-    array expressions. Oracle is the staged CTE chain, so the carry
-    fold is hash-verified against the join form's semantics."""
+    """5-stage funnel by the same single-pass fold as `events_funnel`:
+    still one event-table scan + one user-key shuffle, where a staged
+    join chain would add a scan and a join per stage. Oracle is the
+    staged CTE chain, so the carry fold is hash-verified against the
+    join form's semantics."""
     return events.funnel_stages(
         _events(spark, sf_dir),
         ("signup", "view", "click", "purchase", "error"),
-        single_pass=True,
     )
 
 

@@ -115,7 +115,6 @@ def learn_bpe(
     num_merges: int = 20,
     text_col: str = "text",
     max_vocab: int | None = None,
-    learn_engine: str = "auto",
     max_driver_vocab: int = 1_000_000,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
     """Learn `num_merges` BPE merges; returns (merges, final_vocab).
@@ -125,61 +124,38 @@ def learn_bpe(
     is (w, syms, cnt) with every vocabulary word fully encoded — join
     corpus tokens against it to tokenize the training corpus itself.
 
-    learn_engine: where the merge LOOP runs — the corpus-scale work
-    is always the one distributed vocabulary aggregation either way.
-    - "distributed": each round is one aggregation over the VOCABULARY
-      plus a 1-row argmax collect — the only driver traffic is the
-      winning pair. Right when even the distinct-word table is too big
-      to collect.
-    - "driver": collect the (bounded) vocabulary ONCE and run the loop
-      in plain Python — num_merges rounds of per-job scheduling
-      overhead collapse to zero; bit-identical output (equivalence
-      pinned in tests/test_bpe.py). Refuses vocabularies above
-      max_driver_vocab rows (one count() when the size isn't already
-      bounded by max_vocab).
-    - "auto" (default): driver when the vocabulary fits
-      max_driver_vocab (counted once if max_vocab doesn't already
-      bound it), distributed fallback when it doesn't. The default is
-      the MEASURED choice (round-4 rule): same-window interleaved A/B
-      on the sf0.1 gate, both trial orders — driver 1.8-2.3 s vs
-      distributed 3.8-3.9 s at 2 cores, 1.5-1.7 s vs 4.2-4.8 s at 8
-      cores (the distributed loop DEGRADES with cores: 2x12-round job
-      scheduling over a ~27k-word table dwarfs the compute); see
-      BENCH/BASELINE.md round-5 notes.
+    Where the merge LOOP runs — the corpus-scale work is always the
+    one distributed vocabulary aggregation either way — follows from
+    the vocabulary size, read by ONE job: collect at most
+    max_driver_vocab + 1 vocabulary rows.
+    - They fit (≤ max_driver_vocab rows): the loop runs in plain
+      Python on the collected rows — num_merges rounds of per-job
+      scheduling overhead collapse to zero; bit-identical output
+      (equivalence pinned in tests/test_bpe.py). Measured in an
+      interleaved A/B on the sf0.1 gate, both trial orders: driver
+      1.8-2.3 s vs distributed 3.8-3.9 s at 2 cores, 1.5-1.7 s vs
+      4.2-4.8 s at 8 cores (the distributed loop DEGRADES with cores:
+      2x12-round job scheduling over a ~27k-word table dwarfs the
+      compute); see BENCH/BASELINE.md round-5 notes.
+    - They don't: the loop stays on the cluster — each round is one
+      aggregation over the VOCABULARY plus a 1-row argmax collect, so
+      the only driver traffic is the winning pair.
 
     `max_vocab` caps learning to the most frequent words (count desc,
     word asc — deterministic), the standard sampling lever at 100 TB
     where even the distinct-word table is large. Stops early when no
     pair occurs twice.
     """
-    engine = learn_engine
-    if engine not in ("auto", "distributed", "driver"):
-        raise ValueError(f"unknown BPE learn engine {engine!r}")
     vocab = _word_vocab(docs, text_col)
     if max_vocab is not None:
         vocab = (
             vocab.orderBy(F.desc("cnt"), F.asc("w")).limit(max_vocab)
         )
-    if engine != "distributed":
-        spark = docs.sparkSession
-        if max_vocab is None or max_vocab > max_driver_vocab:
-            n = vocab.count()
-            if n > max_driver_vocab:
-                if engine == "auto":
-                    engine = "distributed"  # too big to collect — loop stays on the cluster
-                else:
-                    raise ValueError(
-                        f"driver BPE learn: vocabulary has {n} rows > "
-                        f"max_driver_vocab={max_driver_vocab}; use "
-                        "learn_engine='distributed' or cap with max_vocab"
-                    )
-    if engine != "distributed":
-        rows = [
-            [r["w"], r["cnt"], r["syms"].split(" ")]
-            for r in vocab.collect()
-        ]
+    collected = vocab.limit(max_driver_vocab + 1).collect()
+    if len(collected) <= max_driver_vocab:
+        rows = [[r["w"], r["cnt"], r["syms"].split(" ")] for r in collected]
         merges, rows = _learn_merges_local(rows, num_merges)
-        out = spark.createDataFrame(
+        out = docs.sparkSession.createDataFrame(
             [(w, cnt, " ".join(syms)) for w, cnt, syms in rows],
             "w string, cnt long, syms string",
         )

@@ -107,115 +107,75 @@ def user_gap_stats(events: DataFrame) -> DataFrame:
 def funnel_stages(
     events: DataFrame,
     stages: tuple[str, ...] = ("view", "click", "purchase"),
-    single_pass: bool = False,
 ) -> DataFrame:
     """Ordered-funnel conversion: one row per stage with the number of
     users who completed the funnel UP TO that stage in event-time
     order — stage k counts users with some stage-k event strictly
     after their earliest qualifying stage-(k-1) event (earliest-match
-    semantics, the standard product-analytics funnel).
+    semantics, the standard product-analytics funnel). An empty or
+    repeated stage list raises ValueError.
 
-    Default plan: per stage, one filtered min-aggregation over (user,
-    stage events after the previous stage's qualifying time) — k-1
-    key-partitioned joins on user_id for a k-stage funnel, no window
-    over the full event table, no per-user event collection (a hot
-    user with 10⁸ events costs its aggregation groups, never a wide
-    row).
-
-    `single_pass=True`: ONE scan of the event table and ONE user-key
-    shuffle regardless of funnel depth — each user's funnel events are
-    collected into one ts-sorted array and the monotonic carry (t_k =
-    first stage-k ts strictly after t_{k-1}) is a linear aggregate
-    fold over it; a final 1-row aggregate counts survivors per
-    stage. The trade: per-user row
-    width is that user's funnel-event count, so prefer it for DEEP
-    funnels (k scans dominate) on event streams without pathological
-    hot users; keep the default for shallow funnels over skewed
-    traffic. Both forms are result-identical (equivalence-tested) and
-    share strictly-after tie semantics.
+    ONE scan of the event table and ONE user-key shuffle regardless of
+    funnel depth: each user's funnel events are collected into one
+    ts-sorted array and the monotonic carry (t_k = first stage-k ts
+    strictly after t_{k-1}) is a linear aggregate fold over it; a
+    final 1-row aggregate counts survivors per stage. The trade:
+    per-user row width is that user's funnel-event count, so a hot
+    user with 10⁸ funnel events is one 10⁸-element array on one task.
+    A staged form (per stage one filtered min-aggregation + user-key
+    join, k-1 joins for k stages) never builds a wide row, at k scans
+    instead of one; the gates' DuckDB oracles are that form.
     """
-    if single_pass:
-        k = len(stages)
-        mapping = F.create_map(
-            *[x for i, s in enumerate(stages) for x in (F.lit(s), F.lit(i))]
-        )
-        ev = events.where(F.col("event_type").isin(list(stages))).select(
-            "user_id", mapping[F.col("event_type")].alias("_k"), "ts"
-        )
-        # ONE sorted (ts, stage) array per user, then a LINEAR
-        # aggregate fold: acc[i] = earliest stage-i ts strictly after
-        # acc[i-1]. The sort puts equal-ts events in stage order, and
-        # the strict > keeps a tie from advancing the funnel either
-        # way. (A per-stage-array + nested-filter fold was tried
-        # first: its carry expression nests O(k²) and the codegen blew
-        # up to ~6× this form's wall time at sf0.1.)
-        per_user = ev.groupBy("user_id").agg(
-            F.array_sort(F.collect_list(F.struct("ts", "_k"))).alias("_evs")
-        )
-        ts_type = ev.schema["ts"].dataType
-        acc0 = F.array_repeat(F.lit(None).cast(ts_type), k)
-
-        def _step(acc, e):
-            return F.transform(
-                acc,
-                lambda v, i: F.coalesce(
-                    v,
-                    F.when(
-                        (i == e.getField("_k"))
-                        & (
-                            (i == 0)
-                            | (e.getField("ts") > F.get(acc, i - 1))
-                        ),
-                        e.getField("ts"),
-                    ),
-                ),
-            )
-
-        reached_ts = per_user.select(
-            F.aggregate(F.col("_evs"), acc0, _step).alias("_t")
-        )
-        agg = reached_ts.agg(
-            *[
-                F.count(F.get(F.col("_t"), i)).cast("long").alias(f"_n{i}")
-                for i in range(k)
-            ]
-        )
-        rows = F.array(
-            *[
-                F.struct(
-                    F.lit(i + 1).alias("stage_idx"),
-                    F.lit(s).alias("stage"),
-                    F.col(f"_n{i}").alias("n_users"),
-                )
-                for i, s in enumerate(stages)
-            ]
-        )
-        return agg.select(F.explode(rows).alias("_r")).select("_r.*")
-    reached = (
-        events.where(F.col("event_type") == stages[0])
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("_t"))
+    if not stages or len(set(stages)) != len(stages):
+        raise ValueError(f"funnel stages must be non-empty and distinct, got {stages!r}")
+    k = len(stages)
+    mapping = F.create_map(
+        *[x for i, s in enumerate(stages) for x in (F.lit(s), F.lit(i))]
     )
-    counts = [(stages[0], reached)]
-    for stage in stages[1:]:
-        nxt = (
-            events.where(F.col("event_type") == stage)
-            .join(reached.select("user_id", F.col("_t").alias("_prev")), "user_id")
-            .where(F.col("ts") > F.col("_prev"))
-            .groupBy("user_id")
-            .agg(F.min("ts").alias("_t"))
+    ev = events.where(F.col("event_type").isin(list(stages))).select(
+        "user_id", mapping[F.col("event_type")].alias("_k"), "ts"
+    )
+    # ONE sorted (ts, stage) array per user, then a LINEAR aggregate
+    # fold: acc[i] = earliest stage-i ts strictly after acc[i-1]. The
+    # sort puts equal-ts events in stage order, and the strict > keeps
+    # a tie from advancing the funnel either way. (A per-stage-array +
+    # nested-filter fold was tried first: its carry expression nests
+    # O(k²) and the codegen blew up to ~6× this form's wall time at
+    # sf0.1.)
+    per_user = ev.groupBy("user_id").agg(
+        F.array_sort(F.collect_list(F.struct("ts", "_k"))).alias("_evs")
+    )
+    ts_type = ev.schema["ts"].dataType
+    acc0 = F.array_repeat(F.lit(None).cast(ts_type), k)
+
+    def _step(acc, e):
+        return F.transform(
+            acc,
+            lambda v, i: F.coalesce(
+                v,
+                F.when(
+                    (i == e.getField("_k"))
+                    & ((i == 0) | (e.getField("ts") > F.get(acc, i - 1))),
+                    e.getField("ts"),
+                ),
+            ),
         )
-        counts.append((stage, nxt))
-        reached = nxt
-    out = None
-    for i, (stage, df) in enumerate(counts):
-        row = df.agg(F.count(F.lit(1)).cast("long").alias("n_users")).select(
-            F.lit(i + 1).alias("stage_idx"),
-            F.lit(stage).alias("stage"),
-            "n_users",
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
+
+    reached_ts = per_user.select(F.aggregate(F.col("_evs"), acc0, _step).alias("_t"))
+    agg = reached_ts.agg(
+        *[F.count(F.get(F.col("_t"), i)).cast("long").alias(f"_n{i}") for i in range(k)]
+    )
+    rows = F.array(
+        *[
+            F.struct(
+                F.lit(i + 1).alias("stage_idx"),
+                F.lit(s).alias("stage"),
+                F.col(f"_n{i}").alias("n_users"),
+            )
+            for i, s in enumerate(stages)
+        ]
+    )
+    return agg.select(F.explode(rows).alias("_r")).select("_r.*")
 
 
 def asof_join(

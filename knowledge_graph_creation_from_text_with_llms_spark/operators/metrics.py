@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.text import bind_once, normalize_text_expr
 
 _COLS = ("subj", "pred", "obj")
+_ROUGE_TYPES = ("rouge1", "rouge2", "rougeL")
 
 
 def _with_prf(counts: DataFrame, *keep: str) -> DataFrame:
@@ -207,94 +208,37 @@ def relaxed_metrics(generated: DataFrame, ground_truth: DataFrame) -> DataFrame:
     return _with_prf(counts)
 
 
-def rouge_n_best(
-    generated: DataFrame, ground_truth: DataFrame, n: int = 1
-) -> DataFrame:
-    """Per distinct generated triple: the best ROUGE-N f-measure over
-    all ground-truth triples (metrics_generator.py:159-183 semantics:
-    score the space-joined triple texts, keep the max; we omit the
-    Porter stemmer — documented divergence of this test-only metric).
-
-    ROUGE-N here is the standard clipped n-gram overlap:
-      p = overlap/|gen ngrams|, r = overlap/|gt ngrams|,
-      f = 2pr/(p+r); overlap = Σ_g min(count_gen(g), count_gt(g)).
-    Computed with native explode/join/groupBy — exact, no UDF.
-
-    Kept next to `rouge_best_match` (which gives the same floats with
-    use_stemmer=False) because it is the faster ROUGE-1 path:
-    routing gate `kg_metrics_rouge1` through the full scorer, which
-    also pays for ROUGE-2 and LCS, took that leaf 3.48 → 5.17 s at
-    sf0.1.
-    """
-    from ..functions.text import tokens_expr, word_shingles_expr
-
-    def grams(df: DataFrame, prefix: str) -> DataFrame:
-        text = F.concat_ws(" ", *[F.col(c) for c in _COLS])
-        arr = tokens_expr(text) if n == 1 else word_shingles_expr(text, n)
-        return df.select(
-            *[F.col(c).alias(f"{prefix}{c}") for c in _COLS],
-            arr.alias("_g"),
-        ).where(F.size("_g") > 0)
-
-    g = grams(generated.distinct(), "").withColumn(
-        "_gid", F.md5(F.concat_ws("", *_COLS))
-    )
-    t = grams(ground_truth.distinct(), "t_").withColumn(
-        "_tid", F.md5(F.concat_ws("", *[f"t_{c}" for c in _COLS]))
-    )
-    gc = g.select("_gid", F.explode("_g").alias("gram")).groupBy(
-        "_gid", "gram"
-    ).agg(F.count(F.lit(1)).alias("cg"))
-    tc = t.select("_tid", F.explode("_g").alias("gram")).groupBy(
-        "_tid", "gram"
-    ).agg(F.count(F.lit(1)).alias("ct"))
-    gsize = g.select("_gid", F.size("_g").alias("ng"))
-    tsize = t.select("_tid", F.size("_g").alias("nt"))
-    overlap = (
-        gc.join(tc, "gram")
-        .groupBy("_gid", "_tid")
-        .agg(F.sum(F.least("cg", "ct")).alias("ov"))
-    )
-    scored = (
-        overlap.join(gsize, "_gid")
-        .join(tsize, "_tid")
-        .withColumn("p", F.col("ov") / F.col("ng"))
-        .withColumn("r", F.col("ov") / F.col("nt"))
-        .withColumn("f", 2 * F.col("p") * F.col("r") / (F.col("p") + F.col("r")))
-    )
-    best = scored.groupBy("_gid").agg(F.max("f").alias("best_f"))
-    return (
-        g.select("_gid", *_COLS)
-        .join(best, "_gid", "left")
-        .select(
-            *_COLS,
-            F.coalesce("best_f", F.lit(0.0)).alias(f"best_rouge{n}_f"),
-        )
-    )
-
-
 def rouge_best_match(
     generated: DataFrame,
     ground_truth: DataFrame,
     use_stemmer: bool = True,
+    rouge_types: tuple[str, ...] = _ROUGE_TYPES,
 ) -> DataFrame:
-    """Per distinct generated triple: best ROUGE-1 / ROUGE-2 / ROUGE-L
-    f-measure over all GT triples — the full metric set of
-    metrics_generator.py:159-183 (RougeScorer(["rouge1","rouge2",
-    "rougeL"], use_stemmer=True) over " ".join(triple) texts).
+    """Per distinct generated triple: the best f-measure of each of
+    `rouge_types` over all GT triples, as `best_<type>_f` columns in
+    the requested order — the metric of metrics_generator.py:159-183
+    (RougeScorer(rouge_types, use_stemmer) over " ".join(triple)
+    texts; the reference asks for all three with the stemmer on).
+
+    `rouge_types` is a non-empty tuple of distinct names drawn from
+    ("rouge1", "rouge2", "rougeL"); anything else raises ValueError.
+    ROUGE-1 is always computed because the ROUGE-L pruning below
+    orders candidates by it; bigram counts are built only for rouge2,
+    the LCS runs only for rougeL. Every requested type gives the same
+    float whatever else is requested (tests/test_metrics.py).
 
     Tokenization mirrors rouge_score: lowercase, [a-z0-9]+ tokens,
     and with use_stemmer a Porter stem applied only to tokens longer
     than 3 chars (functions/stemmer.py — classic 1980 algorithm; the
     reference's NLTK_EXTENSIONS-mode divergences are documented
-    there).
+    there). A generated triple with no tokens is kept and scores 0.0.
 
     Structure: the GT texts are collected and deduplicated in Python
     (GT is the small evaluation set by construction; this is a
     test-only metric, same as the reference's), then shipped inside
     one plain Python UDF. Each task
     tokenizes, stems and counts them once; the UDF then scores one
-    distinct generated row against all of them and returns the three
+    distinct generated row against all of them and returns the
     maxima. No cross join, no per-pair rows, no groupBy.
 
     Parallelism: the generated side is hash-partitioned by the triple
@@ -322,6 +266,14 @@ def rouge_best_match(
     )
 
     from ..functions.stemmer import porter_stem
+
+    types = tuple(rouge_types)
+    if not types or len(set(types)) != len(types) or not set(types) <= set(_ROUGE_TYPES):
+        raise ValueError(
+            f"rouge_types: want distinct names from {_ROUGE_TYPES}, "
+            f"got {rouge_types!r}"
+        )
+    want2, want_l = "rouge2" in types, "rougeL" in types
 
     def _toks(text: str) -> list[str]:
         toks = _re.findall(r"[a-z0-9]+", (text or "").lower())
@@ -354,7 +306,7 @@ def rouge_best_match(
 
     def _prep(text: str):
         toks = _toks(text)
-        bi = list(zip(toks, toks[1:]))
+        bi = list(zip(toks, toks[1:])) if want2 else []
         return toks, _counts(toks), len(toks), _counts(bi), len(bi)
 
     def _overlap(gen: dict, gt: dict) -> int:
@@ -366,7 +318,7 @@ def rouge_best_match(
     gt_texts = sorted({r[0] for r in ground_truth.select(text_of).collect()})
     gt_prepped: list = []  # per task: the GT texts prepared once
 
-    def _best(gen_text: str) -> tuple[float, float, float]:
+    def _best(gen_text: str) -> tuple[float, ...]:
         if gt_texts and not gt_prepped:
             gt_prepped[:] = [_prep(t) for t in gt_texts]
         gen_toks, g1, n_g, g2, n_g2 = _prep(gen_text)
@@ -375,23 +327,21 @@ def rouge_best_match(
         for gt_toks, t1, n_t, t2, n_t2 in gt_prepped:
             f1 = _f(_overlap(g1, t1), n_g, n_t)
             best1 = max(best1, f1)
-            best2 = max(best2, _f(_overlap(g2, t2), n_g2, n_t2))
-            if f1 > 0.0:
+            if want2:
+                best2 = max(best2, _f(_overlap(g2, t2), n_g2, n_t2))
+            if want_l and f1 > 0.0:
                 lcs_candidates.append((f1, gt_toks, n_t))
         lcs_candidates.sort(key=lambda c: c[0], reverse=True)
         for f1, gt_toks, n_t in lcs_candidates:
             if f1 <= best_l:
                 break
             best_l = max(best_l, _f(_lcs(gen_toks, gt_toks), n_g, n_t))
-        return best1, best2, best_l
+        best = {"rouge1": best1, "rouge2": best2, "rougeL": best_l}
+        return tuple(best[t] for t in types)
 
     score = F.udf(
         _best,
-        StructType([
-            StructField("rouge1", DoubleType()),
-            StructField("rouge2", DoubleType()),
-            StructField("rougeL", DoubleType()),
-        ]),
+        StructType([StructField(t, DoubleType()) for t in types]),
         useArrow=False,
     )
     parallelism = generated.sparkSession.sparkContext.defaultParallelism
@@ -400,12 +350,7 @@ def rouge_best_match(
         .repartition(parallelism, *_COLS)
         .distinct()
         .select(*_COLS, score(text_of).alias("_s"))
-        .select(
-            *_COLS,
-            F.col("_s.rouge1").alias("best_rouge1_f"),
-            F.col("_s.rouge2").alias("best_rouge2_f"),
-            F.col("_s.rougeL").alias("best_rougeL_f"),
-        )
+        .select(*_COLS, *[F.col(f"_s.{t}").alias(f"best_{t}_f") for t in types])
     )
 
 

@@ -29,7 +29,8 @@ AUDIT = [
     ("text_quality", "scalar family: one codegen stage, no exchange"),
     ("corpus_split", "hash split: map-only, no exchange"),
     ("events_asof_join", "as-of join: union + key window (struct carry), no range join"),
-    ("events_funnel_deep", "single-pass funnel: one user-key exchange, linear aggregate fold"),
+    ("events_funnel", "single-pass funnel, 3 stages: one user-key exchange, linear aggregate fold"),
+    ("events_funnel_deep", "single-pass funnel, 5 stages: still one user-key exchange, linear aggregate fold"),
     ("kg_pagerank_dangling", "pagerank: bounded-round joins, 1-row dangling-mass broadcast"),
     ("dedup_ngram_jaccard_incremental", "incremental jaccard: prefix x posting joins, no cross product"),
     ("dedup_duplicate_spans", "span dedup: ONE gram-md5 exchange serves both window counts, doc exchange for island merge, no join"),

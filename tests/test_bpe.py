@@ -101,11 +101,13 @@ def test_merge_fold_greedy_left_to_right(spark):
     assert row.s2 == "ab ab"
 
 
-def test_driver_learn_engine_is_bit_identical(spark):
-    """learn_engine='driver' (collect the bounded vocab once, loop in
-    Python) must produce the exact merges AND final vocab of the
-    distributed loop — including tie-breaks, early stop, and the
-    boundary-safe greedy apply."""
+def test_driver_learn_engine_is_bit_identical(spark, monkeypatch):
+    """The driver loop (the vocab fits max_driver_vocab: collect it
+    once, loop in Python) must produce the exact merges AND final
+    vocab of the distributed loop (forced by max_driver_vocab=0) —
+    including tie-breaks, early stop, and the boundary-safe greedy
+    apply."""
+    loops = _count_driver_loops(monkeypatch)
     docs = spark.createDataFrame(
         [
             (1, "banana bandana ban ban banana"),
@@ -114,37 +116,42 @@ def test_driver_learn_engine_is_bit_identical(spark):
         ],
         "doc_id long, text string",
     )
-    m_dist, v_dist = bpe.learn_bpe(docs, num_merges=8,
-                                   learn_engine="distributed")
-    m_drv, v_drv = bpe.learn_bpe(docs, num_merges=8, learn_engine="driver")
+    m_dist, v_dist = bpe.learn_bpe(docs, num_merges=8, max_driver_vocab=0)
+    assert loops == []
+    m_drv, v_drv = bpe.learn_bpe(docs, num_merges=8)
+    assert loops == [1]
     assert m_drv == m_dist
     rows = lambda v: sorted((r.w, r.cnt, r.syms) for r in v.collect())
     assert rows(v_drv) == rows(v_dist)
     # early-stop parity on a pairless corpus
     single = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    assert bpe.learn_bpe(single, num_merges=4, learn_engine="driver")[0] == \
-        bpe.learn_bpe(single, num_merges=4, learn_engine="distributed")[0] == []
+    assert bpe.learn_bpe(single, num_merges=4)[0] == \
+        bpe.learn_bpe(single, num_merges=4, max_driver_vocab=0)[0] == []
+    assert loops == [1, 1]
 
 
-def test_driver_learn_engine_refuses_oversized_vocab(spark):
-    import pytest
+def _count_driver_loops(monkeypatch) -> list:
+    """Record one entry per run of the driver-side merge loop."""
+    loops = []
+    local = bpe._learn_merges_local
 
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta")], "doc_id long, text string"
-    )
-    with pytest.raises(ValueError, match="max_driver_vocab"):
-        bpe.learn_bpe(docs, num_merges=2, learn_engine="driver",
-                      max_driver_vocab=2)
+    def counted(rows, num_merges):
+        loops.append(1)
+        return local(rows, num_merges)
+
+    monkeypatch.setattr(bpe, "_learn_merges_local", counted)
+    return loops
 
 
-def test_auto_engine_falls_back_distributed_on_oversized_vocab(spark):
-    """learn_engine='auto' (the default) must degrade to the
-    distributed loop, not raise, when the vocabulary exceeds
-    max_driver_vocab — same merges either way."""
+def test_auto_engine_falls_back_distributed_on_oversized_vocab(spark, monkeypatch):
+    """A vocabulary larger than max_driver_vocab runs the distributed
+    loop, not an error — same merges as the driver loop."""
+    loops = _count_driver_loops(monkeypatch)
     docs = spark.createDataFrame(
         [(1, "banana ban bandana banana an and")], "doc_id long, text string"
     )
     m_auto, _ = bpe.learn_bpe(docs, num_merges=3, max_driver_vocab=2)
-    m_dist, _ = bpe.learn_bpe(docs, num_merges=3,
-                              learn_engine="distributed")
-    assert m_auto == m_dist and m_auto
+    assert loops == []
+    m_drv, _ = bpe.learn_bpe(docs, num_merges=3)
+    assert loops == [1]
+    assert m_auto == m_drv and m_auto

@@ -192,10 +192,29 @@ def test_asof_join_null_right_values_are_row_level(spark):
     assert {r.event_id for r in inner2.collect()} == {1, 3}
 
 
+def _python_funnel(rows, stages):
+    """Plain-Python staged funnel over (event_id, user_id, event_type,
+    ts) rows: per user, stage k's time is the earliest stage-k ts
+    strictly after stage k-1's; {(stage_idx, stage): users reaching it}."""
+    by_user = {}
+    for _eid, uid, etype, ts in rows:
+        by_user.setdefault(uid, []).append((etype, ts))
+    counts = [0] * len(stages)
+    for evs in by_user.values():
+        prev = None
+        for i, stage in enumerate(stages):
+            after = [ts for t, ts in evs if t == stage and (i == 0 or ts > prev)]
+            if not after:
+                break
+            prev = min(after)
+            counts[i] += 1
+    return {(i + 1, s): counts[i] for i, s in enumerate(stages)}
+
+
 def test_funnel_single_pass_equals_staged(spark):
     """The one-scan funnel (sorted stage arrays + monotonic carry fold)
-    must be result-identical to the k-scan join form on a messy event
-    set: interleaved stages, ties (equal ts must NOT advance), repeats,
+    must equal a plain-Python staged funnel on a messy event set:
+    interleaved stages, ties (equal ts must NOT advance), repeats,
     users breaking at every depth."""
     from knowledge_graph_creation_from_text_with_llms_spark.operators import events as ev
 
@@ -217,21 +236,17 @@ def test_funnel_single_pass_equals_staged(spark):
             eid += 1
     df = spark.createDataFrame(rows, "event_id long, user_id long, event_type string, ts long")
     stages = ("view", "click", "purchase")
-    staged = {r.stage: r.n_users for r in ev.funnel_stages(df, stages).collect()}
-    single = {
-        r.stage: r.n_users
-        for r in ev.funnel_stages(df, stages, single_pass=True).collect()
-    }
-    assert staged == single
+    got = {(r.stage_idx, r.stage): r.n_users for r in ev.funnel_stages(df, stages).collect()}
+    assert got == _python_funnel(rows, stages)
     # hand-checked: u1,u2,u3,u4 enter; u1 (20>10), u3 (8>7), u4 (2>1)
     # click; only u1 purchases (u3's purchase@6 precedes its click@8,
     # u4's purchase@2 ties its click@2 — strictly-after blocks both)
-    assert single == {"view": 4, "click": 3, "purchase": 1}
+    assert {s: n for (_, s), n in got.items()} == {"view": 4, "click": 3, "purchase": 1}
 
 
 def test_funnel_single_pass_random_equivalence(spark):
-    """Randomized cross-check of the two funnel forms (200 users,
-    seeded RNG, 5-stage funnel with heavy interleaving)."""
+    """Randomized cross-check against the plain-Python staged funnel
+    (200 users, seeded RNG, 5-stage funnel with heavy interleaving)."""
     import random
 
     from knowledge_graph_creation_from_text_with_llms_spark.operators import events as ev
@@ -245,9 +260,19 @@ def test_funnel_single_pass_random_equivalence(spark):
             rows.append((eid, uid, rng.choice(stages), rng.randint(0, 30)))
             eid += 1
     df = spark.createDataFrame(rows, "event_id long, user_id long, event_type string, ts long")
-    a = {(r.stage_idx, r.stage): r.n_users for r in ev.funnel_stages(df, stages).collect()}
-    b = {
-        (r.stage_idx, r.stage): r.n_users
-        for r in ev.funnel_stages(df, stages, single_pass=True).collect()
-    }
-    assert a == b
+    got = {(r.stage_idx, r.stage): r.n_users for r in ev.funnel_stages(df, stages).collect()}
+    want = _python_funnel(rows, stages)
+    assert got == want
+    assert 0 < want[(5, "s5")] < want[(1, "s1")]  # the fixture breaks at some depth
+
+
+def test_funnel_rejects_repeated_stage(spark):
+    import pytest
+
+    df = spark.createDataFrame(
+        [(0, 1, "view", 1)], "event_id long, user_id long, event_type string, ts long"
+    )
+    with pytest.raises(ValueError, match="distinct"):
+        events.funnel_stages(df, ("view", "click", "view"))
+    with pytest.raises(ValueError, match="distinct"):
+        events.funnel_stages(df, ())

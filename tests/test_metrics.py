@@ -66,7 +66,9 @@ def test_rouge1_best_match(spark):
     gen = _df(spark, [("the cat", "sat on", "the mat"), ("zz", "qq", "ww")])
     gt = _df(spark, [("the cat", "sat on", "a mat")])
     rows = {(r.subj, r.pred, r.obj): r.best_rouge1_f
-            for r in metrics.rouge_n_best(gen, gt, n=1).collect()}
+            for r in metrics.rouge_best_match(
+                gen, gt, use_stemmer=False, rouge_types=("rouge1",)
+            ).collect()}
     # gen1 tokens: the cat sat on the mat (6); gt: the cat sat on a mat
     # (6); clipped overlap = the,cat,sat,on,mat = 5 → p=r=5/6, f=5/6
     assert abs(rows[("the cat", "sat on", "the mat")] - 5 / 6) < 1e-12
@@ -317,31 +319,6 @@ def test_rouge_best_match_stemming_and_empty_gt(spark):
     assert len(rows) == 1 and rows[0].best_rouge1_f == 0.0
 
 
-def test_rouge_best_match_agrees_with_native_rouge1(spark):
-    gen = _df(
-        spark,
-        [("Alan Turing", "worked at", "Bletchley Park"),
-         ("Turing", "proposed", "the imitation game"),
-         ("AI", "is", "a field of computer science")],
-    )
-    gt = _df(
-        spark,
-        [("Alan Turing", "worked", "Bletchley"),
-         ("the imitation game", "proposed by", "Turing")],
-    )
-    new = {
-        tuple(r[c] for c in ("subj", "pred", "obj")): r.best_rouge1_f
-        for r in metrics.rouge_best_match(gen, gt, use_stemmer=False).collect()
-    }
-    old = {
-        tuple(r[c] for c in ("subj", "pred", "obj")): r.best_rouge1_f
-        for r in metrics.rouge_n_best(gen, gt, n=1).collect()
-    }
-    assert set(new) == set(old)
-    for k in new:
-        assert abs(new[k] - old[k]) < 1e-12, k
-
-
 def test_bertscore_pairs_semantics(spark):
     df = spark.createDataFrame(
         [
@@ -523,6 +500,38 @@ def test_rouge_best_match_equals_all_pairs_scorer_random(spark, use_stemmer):
     gen += [tuple(rng.sample(t, 3)) for t in gt[10:30]]  # reordered copies
     want = _brute_rouge(gen, gt, use_stemmer)
     assert _spark_rouge(spark, gen, gt, use_stemmer) == want
+
+
+@pytest.mark.parametrize("use_stemmer", [True, False])
+def test_rouge_types_subsets_equal_full_call(spark, use_stemmer):
+    """Each non-empty subset of rouge_types returns exactly (==) the
+    full call's floats for its types, in the requested column order."""
+    from itertools import combinations, permutations
+
+    gen, gt = _df(spark, _ROUGE_GEN), _df(spark, _ROUGE_GT)
+    full = {
+        (r.subj, r.pred, r.obj): r.asDict()
+        for r in metrics.rouge_best_match(gen, gt, use_stemmer=use_stemmer).collect()
+    }
+    names = ("rouge1", "rouge2", "rougeL")
+    subsets = [c for n in (1, 2) for c in combinations(names, n)]
+    for types in subsets + list(permutations(names)):
+        out = metrics.rouge_best_match(gen, gt, use_stemmer=use_stemmer, rouge_types=types)
+        cols = [f"best_{t}_f" for t in types]
+        assert out.columns == ["subj", "pred", "obj", *cols]
+        got = {(r.subj, r.pred, r.obj): r.asDict() for r in out.collect()}
+        assert got.keys() == full.keys()
+        for k, row in got.items():
+            assert [row[c] for c in cols] == [full[k][c] for c in cols], (types, k)
+
+
+@pytest.mark.parametrize(
+    "types", [(), ("rouge1", "rouge1"), ("rouge3",), ("rougeLsum",), "rouge1"]
+)
+def test_rouge_types_rejects_bad_types(spark, types):
+    with pytest.raises(ValueError, match="rouge_types"):
+        metrics.rouge_best_match(_df(spark, _ROUGE_GEN), _df(spark, _ROUGE_GT),
+                                 rouge_types=types)
 
 
 def test_rouge_best_match_scores_on_every_core(spark):

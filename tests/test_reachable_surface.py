@@ -7,7 +7,8 @@ gate queries, `KGPipeline`, `bench.py`, `perfbench/`, `scripts/` and
 and classes, and the methods of reached classes, that it never reaches
 to `KEEP`, each with the reason it stays. A new unreached def fails the
 test, and so does a `KEEP` entry that is reached again or no longer
-exists.
+exists. A package module that no entry point and no reached code
+imports fails too: a module of constants has no def to flag.
 
 The scan is by name, so it over-approximates: a def is reached when
 reached code mentions its name (a call, an attribute or an import).
@@ -149,12 +150,16 @@ def _without_methods(
     )
 
 
-def _root_names() -> set[str]:
+def _root_files() -> list[pathlib.Path]:
     files = [REPO / "bench.py", REPO / "__spark_entry__.py"]
     files += sorted((REPO / "perfbench").glob("*.py"))
     files += sorted((REPO / "scripts").glob("*.py"))
+    return files
+
+
+def _root_names() -> set[str]:
     names = {fn.__name__ for fn in gate.QUERIES.values()} | {"KGPipeline"}
-    for path in files:
+    for path in _root_files():
         names |= _names(ast.parse(path.read_text(encoding="utf-8")))
     return names
 
@@ -204,6 +209,93 @@ def _unreached_defs() -> set[str]:
         if key not in reached
         and not isinstance(node, (ast.Assign, ast.AnnAssign))
         and (key not in owners or owners[key] in reached)
+    }
+
+
+def _loaded(parts: list[str]) -> set[str]:
+    """Package files that importing the module at dotted `parts` (under
+    the package) loads: each existing package `__init__.py` on the way,
+    then the module itself, as paths like `operators/metrics.py`."""
+    out = {"__init__.py"}
+    for i in range(1, len(parts) + 1):
+        for rel in ("/".join(parts[:i]) + ".py", "/".join([*parts[:i], "__init__.py"])):
+            if (PKG_ROOT / rel).is_file():
+                out.add(rel)
+    return out
+
+
+def _imported_modules(node: ast.AST, module: str | None) -> set[str]:
+    """Package files the imports in `node` load; `module` is the
+    importing file's path under the package (None outside it, where
+    only absolute imports reach the package)."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Import):
+            for a in n.names:
+                head, *rest = a.name.split(".")
+                if head == PKG_ROOT.name:
+                    out |= _loaded(rest)
+        elif isinstance(n, ast.ImportFrom):
+            parts = n.module.split(".") if n.module else []
+            if n.level and module is not None:
+                base = module.split("/")[: -n.level] + parts
+            elif not n.level and parts[:1] == [PKG_ROOT.name]:
+                base = parts[1:]
+            else:
+                continue
+            out |= _loaded(base)
+            for a in n.names:  # `from pkg.sub import module`
+                out |= _loaded([*base, a.name])
+    return out
+
+
+def _unimported_modules() -> set[str]:
+    """Package files that no entry point, no reached def and no
+    top-level import of a loaded file loads. A file holding a `KEEP`
+    def is kept with it."""
+    nodes, owners, on_import = _package_nodes()
+    reached = _reach(nodes, _root_names() | on_import, owners)
+    live = {"__init__.py"}
+    for key in KEEP:
+        live |= _loaded(key.split(":")[0].removesuffix(".py").split("/"))
+    for path in _root_files():
+        live |= _imported_modules(ast.parse(path.read_text(encoding="utf-8")), None)
+    for key in reached:
+        live |= _imported_modules(nodes[key][1], key.split(":")[0])
+    files = {p.relative_to(PKG_ROOT).as_posix() for p in PKG_ROOT.rglob("*.py")}
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    top_level = {}
+    for f in files:
+        body = ast.parse((PKG_ROOT / f).read_text(encoding="utf-8")).body
+        top = ast.Module(body=[st for st in body if not isinstance(st, defs)], type_ignores=[])
+        top_level[f] = _imported_modules(top, f)
+    todo = list(live)
+    while todo:
+        new = top_level[todo.pop()] - live
+        live |= new
+        todo += new
+    return files - live
+
+
+def test_every_package_module_is_imported():
+    unimported = _unimported_modules()
+    assert not unimported, (
+        "package modules that nothing reached imports (delete them, or "
+        f"KEEP a def in them with a reason): {sorted(unimported)}"
+    )
+
+
+def test_imported_modules_resolves_relative_and_absolute_imports():
+    src = """
+from ..functions.text import tokens_expr
+from . import metrics
+import knowledge_graph_creation_from_text_with_llms_spark.sources.catalog
+from pyspark.sql import functions
+"""
+    assert _imported_modules(ast.parse(src), "operators/bpe.py") == {
+        "__init__.py", "functions/__init__.py", "functions/text.py",
+        "operators/__init__.py", "operators/metrics.py",
+        "sources/__init__.py", "sources/catalog.py",
     }
 
 

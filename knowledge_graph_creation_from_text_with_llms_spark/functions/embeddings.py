@@ -29,22 +29,22 @@ from pyspark.sql import functions as F
 
 from .text import bind_once, tokens_expr
 
-DEFAULT_DIM = 16
+DIM = 16  # components of the hash embedding
 
 
-def _byte_vector(h: Column, dim: int) -> Column:
-    """array<double> of the first `dim` components of a precomputed md5
+def _byte_vector(h: Column) -> Column:
+    """array<double> of the first DIM components of a precomputed md5
     hex digest: component d = byte d scaled to [-1, 1]. One lambda over
-    sequence(0, dim-1), whatever `dim` is."""
+    sequence(0, DIM-1)."""
     return F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
+        F.sequence(F.lit(0), F.lit(DIM - 1)),
         lambda d: F.conv(F.substring(h, d * 2 + 1, 2), 16, 10).cast("double")
         / F.lit(127.5)
         - F.lit(1.0),
     )
 
 
-def hash_embedding_expr(col: str | Column, dim: int = DEFAULT_DIM) -> Column:
+def hash_embedding_expr(col: str | Column) -> Column:
     """array<double> embedding of a text column, native expressions.
 
     component d = avg over tokens of (md5_byte_d(token) / 127.5 - 1).
@@ -56,20 +56,17 @@ def hash_embedding_expr(col: str | Column, dim: int = DEFAULT_DIM) -> Column:
     The per-token md5 digests are computed ONCE into a bound array;
     each digest becomes its byte vector in one transform, the vectors
     are summed by one aggregate whose step is zip_with(acc, x, +) from
-    array_repeat(0.0, dim), and the sums are divided by the token
-    count in one more transform. The expression holds the same handful
-    of lambdas for any `dim` (the earlier per-component form built two
-    per component, and its driver-side construction cost grew with
-    them). Each component is still 0.0 + x_1 + x_2 + ... left to
-    right, then one division — bit-identical to the per-component
-    form.
+    array_repeat(0.0, DIM), and the sums are divided by the token
+    count in one more transform. Each component is 0.0 + x_1 + x_2 +
+    ... left to right, then one division — bit-identical to a
+    per-component form.
     """
     c = F.col(col) if isinstance(col, str) else col
 
     def from_digests(hs: Column) -> Column:
         sums = F.aggregate(
-            F.transform(hs, lambda h: _byte_vector(h, dim)),
-            F.array_repeat(F.lit(0.0), dim),
+            F.transform(hs, _byte_vector),
+            F.array_repeat(F.lit(0.0), DIM),
             lambda acc, x: F.zip_with(acc, x, lambda a, b: a + b),
         )
         n = F.size(hs)
@@ -80,21 +77,20 @@ def hash_embedding_expr(col: str | Column, dim: int = DEFAULT_DIM) -> Column:
     )
 
 
-def token_embedding_expr(token: Column, dim: int = DEFAULT_DIM) -> Column:
+def token_embedding_expr(token: Column) -> Column:
     """array<double> embedding of ONE token (no averaging): component
     d = md5 byte d scaled to [-1, 1]. The per-token building block of
     hash_embedding_expr, used where token-level similarity matters
     (BERTScore greedy matching). Never the zero vector, so cosine is
     always defined. The digest is bound once, not hashed per
     component."""
-    return bind_once(F.md5(token), lambda h: _byte_vector(h, dim))
+    return bind_once(F.md5(token), _byte_vector)
 
 
-def embed_labels(
-    df: DataFrame, text_col: str, out_col: str = "embedding", dim: int = DEFAULT_DIM
-) -> DataFrame:
-    """Attach the deterministic hash embedding (native, no UDF)."""
-    return df.withColumn(out_col, hash_embedding_expr(text_col, dim))
+def embed_labels(df: DataFrame, text_col: str) -> DataFrame:
+    """Attach the deterministic hash embedding (native, no UDF) as
+    `embedding`."""
+    return df.withColumn("embedding", hash_embedding_expr(text_col))
 
 
 class SentenceEncoderBackend:  # pragma: no cover — model not bundled

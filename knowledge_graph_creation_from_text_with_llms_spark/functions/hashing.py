@@ -17,13 +17,13 @@ def _c(col: str | Column) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def md5_qid(col: str | Column, prefix: str = "Q") -> Column:
+def md5_qid(col: str | Column) -> Column:
     """Wikidata-shaped surrogate id: 'Q' + first 8 md5 hex chars.
 
     Used by synthetic dictionaries where a real Q-id is unavailable;
     deterministic so oracles can rebuild the same dictionary in SQL.
     """
-    return F.concat(F.lit(prefix), F.upper(F.substring(F.md5(_c(col)), 1, 8)))
+    return F.concat(F.lit("Q"), F.upper(F.substring(F.md5(_c(col)), 1, 8)))
 
 
 SLICES_PER_MD5 = 4  # 32 hex chars → 4 independent 8-hex (32-bit) slices

@@ -1639,7 +1639,9 @@ def _code_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     nl = F.lit("\n")
     ws = F.split(F.col("text"), " ")
     t1 = ws.getItem(0)
-    t2 = F.coalesce(ws.getItem(1), F.lit("val"))
+    # F.get is NULL past the end (getItem raises under ANSI mode), so a
+    # one-word text falls back to 'val' as the oracle's coalesce does
+    t2 = F.coalesce(F.get(ws, 1), F.lit("val"))
     cap2 = F.concat(F.upper(F.substring(t2, 1, 1)), F.substring(t2, 2, 1 << 20))
     m3 = F.col("doc_id") % 3
     lang = (

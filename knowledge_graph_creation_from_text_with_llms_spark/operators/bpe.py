@@ -61,11 +61,12 @@ def apply_merge_expr(syms: Column, a: str, b: str) -> Column:
     )
 
 
-def _word_vocab(docs: DataFrame, text_col: str) -> DataFrame:
-    """(w, syms, cnt): distinct lowercase alphanumeric words with
-    corpus frequency and the initial character-level symbol string."""
+def _word_vocab(docs: DataFrame) -> DataFrame:
+    """(w, syms, cnt): distinct lowercase alphanumeric words of `text`
+    with corpus frequency and the initial character-level symbol
+    string."""
     return (
-        docs.select(F.explode(tokens_expr(text_col)).alias("w"))
+        docs.select(F.explode(tokens_expr("text")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .withColumn("syms", F.expr(_CHARS.format(col="w")))
@@ -113,11 +114,10 @@ def _learn_merges_local(
 def learn_bpe(
     docs: DataFrame,
     num_merges: int = 20,
-    text_col: str = "text",
-    max_vocab: int | None = None,
     max_driver_vocab: int = 1_000_000,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
-    """Learn `num_merges` BPE merges; returns (merges, final_vocab).
+    """Learn `num_merges` BPE merges from the docs' `text`; returns
+    (merges, final_vocab).
 
     merges is the ordered driver-side list of (left, right) symbol
     pairs (it parameterizes `encode_expr` for unseen text); final_vocab
@@ -141,16 +141,9 @@ def learn_bpe(
       aggregation over the VOCABULARY plus a 1-row argmax collect, so
       the only driver traffic is the winning pair.
 
-    `max_vocab` caps learning to the most frequent words (count desc,
-    word asc — deterministic), the standard sampling lever at 100 TB
-    where even the distinct-word table is large. Stops early when no
-    pair occurs twice.
+    Stops early when no pair occurs twice.
     """
-    vocab = _word_vocab(docs, text_col)
-    if max_vocab is not None:
-        vocab = (
-            vocab.orderBy(F.desc("cnt"), F.asc("w")).limit(max_vocab)
-        )
+    vocab = _word_vocab(docs)
     collected = vocab.limit(max_driver_vocab + 1).collect()
     if len(collected) <= max_driver_vocab:
         rows = [[r["w"], r["cnt"], r["syms"].split(" ")] for r in collected]
@@ -206,21 +199,16 @@ def encode_expr(word: Column, merges: list[tuple[str, str]]) -> Column:
     return out
 
 
-def bpe_token_stats(
-    docs: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, n_bpe_tokens, n_words) per document under a learned vocab —
+def bpe_token_stats(docs: DataFrame, vocab: DataFrame) -> DataFrame:
+    """(doc_id, n_bpe_tokens, n_words) per document under a learned vocab —
     the BPE-accurate cost estimate next to textstats.token_counts'
     regex approximation. Vocabulary is bounded → broadcast join; the
     corpus is scanned once."""
     toks = docs.select(
-        F.col(id_col), F.explode(tokens_expr(text_col)).alias("w")
+        F.col("doc_id"), F.explode(tokens_expr("text")).alias("w")
     )
     joined = toks.join(F.broadcast(vocab.select("w", "syms")), "w")
-    return joined.groupBy(id_col).agg(
+    return joined.groupBy("doc_id").agg(
         F.sum(F.size(F.split("syms", " "))).cast("long").alias("n_bpe_tokens"),
         F.count(F.lit(1)).cast("long").alias("n_words"),
     )

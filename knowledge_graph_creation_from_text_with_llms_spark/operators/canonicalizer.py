@@ -36,10 +36,10 @@ def canonical_key_expr(col: str | Column) -> Column:
     )
 
 
-def surrogate_id_expr(key: Column, prefix: str = "E") -> Column:
-    """Stable surrogate node id from the canonical key (md5-based so it
-    is reproducible across engines and runs)."""
-    return F.concat(F.lit(prefix), F.substring(F.md5(key), 1, 16))
+def surrogate_id_expr(key: Column) -> Column:
+    """Stable surrogate node id from the canonical key: 'E' + 16 md5 hex
+    chars (md5-based so it is reproducible across engines and runs)."""
+    return F.concat(F.lit("E"), F.substring(F.md5(key), 1, 16))
 
 
 def salted_mention_counts(mentions: DataFrame) -> DataFrame:

@@ -5,7 +5,8 @@ splitting, license detection, per-file line statistics.
 
 All pure per-row column expressions — map-only plans, no shuffle, no
 UDF — so they run at scan speed over a 10^12-file corpus and every
-one has an exact DuckDB oracle in the gate.
+one has an exact DuckDB oracle in the gate. Every operator reads a
+(doc_id, lang, content) table.
 
 Comment handling is lexical, not a parser: `#`/`//`-to-EOL and
 `/* ... */` block comments are stripped by regex, so a string literal
@@ -40,12 +41,10 @@ def strip_comments_expr(content: Column, lang: Column) -> Column:
     return F.when(_is_hash_lang(lang), hash_stripped).otherwise(c_stripped)
 
 
-def strip_comments(
-    df: DataFrame, content_col: str = "content", lang_col: str = "lang"
-) -> DataFrame:
+def strip_comments(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "content_nocomments",
-        strip_comments_expr(F.col(content_col), F.col(lang_col)),
+        strip_comments_expr(F.col("content"), F.col("lang")),
     )
 
 
@@ -77,18 +76,13 @@ def split_identifier_expr(ident: Column) -> Column:
     return F.filter(F.split(F.lower(spaced), r"\s+"), lambda t: t != "")
 
 
-def extract_identifiers(
-    df: DataFrame,
-    content_col: str = "content",
-    lang_col: str = "lang",
-    id_cols: tuple[str, ...] = ("doc_id",),
-) -> DataFrame:
-    """One row per (file, identifier): the identifier and its split
+def extract_identifiers(df: DataFrame) -> DataFrame:
+    """One row per (doc_id, identifier): the identifier and its split
     sub-tokens, comments stripped first so commented-out code doesn't
     pollute the vocabulary."""
-    code = strip_comments_expr(F.col(content_col), F.col(lang_col))
+    code = strip_comments_expr(F.col("content"), F.col("lang"))
     return (
-        df.select(*id_cols, F.explode(identifiers_expr(code)).alias("ident"))
+        df.select("doc_id", F.explode(identifiers_expr(code)).alias("ident"))
         .withColumn("subtokens", split_identifier_expr(F.col("ident")))
     )
 
@@ -121,26 +115,14 @@ def license_expr(content: Column) -> Column:
     return out
 
 
-def detect_license(df: DataFrame, content_col: str = "content") -> DataFrame:
-    return df.withColumn("license", license_expr(F.col(content_col)))
+def detect_license(df: DataFrame) -> DataFrame:
+    return df.withColumn("license", license_expr(F.col("content")))
 
 
 # -- per-file line statistics ---------------------------------------------------
 
 
-def _fresh_name(base: str, taken: set[str]) -> str:
-    """`base`, with underscores appended until it is not in `taken`."""
-    while base in taken:
-        base += "_"
-    return base
-
-
-def code_line_stats(
-    df: DataFrame,
-    content_col: str = "content",
-    lang_col: str = "lang",
-    id_cols: tuple[str, ...] = ("doc_id",),
-) -> DataFrame:
+def code_line_stats(df: DataFrame) -> DataFrame:
     """Per-file line metrics for corpus filtering: line counts, blank
     and comment-line fractions, average/max line length, duplicate-
     line fraction. Map-only, no shuffle.
@@ -151,14 +133,10 @@ def code_line_stats(
     aliases survive CollapseProject) and every metric reads the
     attribute: the content is split once per row, not once per
     referencing metric."""
-    # staging names chosen to differ from every passed-through column
-    taken = {*id_cols, lang_col}
-    lines_c, trimmed_c, nonblank_c = (
-        _fresh_name(f"__cls_{n}", taken) for n in ("lines", "trimmed", "nonblank")
-    )
-    keep = [*id_cols, lang_col]
+    lines_c, trimmed_c, nonblank_c = "__cls_lines", "__cls_trimmed", "__cls_nonblank"
+    keep = ["doc_id", "lang"]
     staged = df.select(
-        *keep, F.split(F.col(content_col), r"\n").alias(lines_c)
+        *keep, F.split(F.col("content"), r"\n").alias(lines_c)
     ).select(
         *keep, lines_c, F.transform(F.col(lines_c), lambda l: F.trim(l)).alias(trimmed_c)
     ).select(
@@ -171,7 +149,7 @@ def code_line_stats(
     n_lines = F.size(lines)
     blank = F.size(F.filter(trimmed, lambda l: l == ""))
     comment_start = F.when(
-        _is_hash_lang(F.col(lang_col)), F.lit("#")
+        _is_hash_lang(F.col("lang")), F.lit("#")
     ).otherwise(F.lit("//"))
     comment = F.size(
         F.filter(trimmed, lambda l: l.startswith(comment_start) & (l != ""))
@@ -180,7 +158,7 @@ def code_line_stats(
     lens = F.transform(lines, lambda l: F.length(l))
     total_len = F.aggregate(lens, F.lit(0).cast("long"), lambda a, x: a + x)
     return staged.select(
-        *id_cols,
+        "doc_id",
         n_lines.cast("long").alias("n_lines"),
         blank.cast("long").alias("n_blank_lines"),
         comment.cast("long").alias("n_comment_lines"),

@@ -26,11 +26,9 @@ def contamination_flags(
     docs: DataFrame,
     probes: DataFrame,
     n: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    probe_text_col: str = "text",
 ) -> DataFrame:
-    """(id, n_contaminated_grams, contaminated) for every document.
+    """(doc_id, n_contaminated_grams, contaminated) for every document;
+    documents and probes both carry their text in `text`.
 
     n_contaminated_grams counts the DISTINCT document n-grams that
     appear anywhere in the probe set; contaminated = (count > 0).
@@ -38,27 +36,27 @@ def contamination_flags(
     """
     probe_grams = (
         probes.select(
-            F.explode(word_shingles_expr(probe_text_col, n)).alias("_g")
+            F.explode(word_shingles_expr("text", n)).alias("_g")
         )
         .select(F.md5("_g").alias("_gh"))
         .distinct()
     )
     doc_grams = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.array_distinct(word_shingles_expr(text_col, n))
+            F.array_distinct(word_shingles_expr("text", n))
         ).alias("_g"),
-    ).select(F.col(id_col), F.md5("_g").alias("_gh"))
+    ).select(F.col("doc_id"), F.md5("_g").alias("_gh"))
     hits = (
         doc_grams.join(F.broadcast(probe_grams), "_gh")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_contaminated_grams"))
     )
     return (
-        docs.select(id_col)
-        .join(hits, id_col, "left")
+        docs.select("doc_id")
+        .join(hits, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce("n_contaminated_grams", F.lit(0).cast("long")).alias(
                 "n_contaminated_grams"
             ),

@@ -21,9 +21,11 @@ Families, all shuffle-conscious:
   `embedding_index`, `span_gram_index`) and emits exactly the full
   run's results that touch the delta.
 
-Both Jaccard families verify candidates with the one exact
-shingle-set verify (`_verify_jaccard`). All hashing is md5-based
-(functions.hashing) so every operator has an exact DuckDB oracle.
+Every operator reads documents as (doc_id, text) and vectors as
+(vec_id, embedding). Both Jaccard families verify candidates with the
+one exact shingle-set verify (`_verify_jaccard`). All hashing is
+md5-based (functions.hashing) so every operator has an exact DuckDB
+oracle.
 """
 
 from __future__ import annotations
@@ -33,39 +35,43 @@ from pyspark.sql import functions as F
 
 from ..functions.text import bind_once, tokens_expr, word_shingles_expr
 
+# MinHash + LSH: NUM_HASHES signatures in bands of ROWS_PER_BAND, over
+# word SHINGLE_N-grams (the n-gram Jaccard family shingles the same way)
+NUM_HASHES = 8
+ROWS_PER_BAND = 2
+SHINGLE_N = 3
+# LSH buckets with more members are dropped (audit: lsh_hot_buckets)
+MAX_BUCKET_SIZE = 500
+# the incremental probes broadcast the delta's keys while the delta
+# holds at most this many (counted on its checkpoint), else shuffle
+MAX_BROADCAST_KEYS = 1_000_000
+# span dedup: a gram in more documents than this is boilerplate, not
+# span evidence
+MAX_GRAM_OCCURRENCES = 1000
 
-def exact_duplicates(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Group identical texts: (content_md5, survivor_id, dup_count).
     survivor = min id; only groups with >1 member are duplicates but
     all groups are returned (dup_count tells)."""
     return (
-        docs.select(F.md5(F.col(text_col)).alias("content_md5"), F.col(id_col))
+        docs.select(F.md5(F.col("text")).alias("content_md5"), F.col("doc_id"))
         .groupBy("content_md5")
         .agg(
-            F.min(id_col).alias("survivor_id"),
+            F.min("doc_id").alias("survivor_id"),
             F.count(F.lit(1)).alias("dup_count"),
         )
     )
 
 
-def minhash_band_keys(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    shingle_n: int = 3,
-    shingles_col: str | None = None,
-) -> DataFrame:
-    """(id, band_id, band_key) — LSH bucketing keys. band_key is the
-    concat of rows_per_band adjacent minhash signatures.
+def minhash_band_keys(docs: DataFrame, shingles_col: str | None = None) -> DataFrame:
+    """(doc_id, band_id, band_key) — LSH bucketing keys. band_key is the
+    concat of ROWS_PER_BAND adjacent minhash signatures.
 
     Signatures come 4 per md5 (functions.hashing.sliced_min_expr): each
     non-overlapping 32-bit slice of a keyed md5 is an independent
-    uniform hash, so num_hashes signatures cost ceil(num_hashes/4)
-    digests per shingle instead of num_hashes — the digest work is the
+    uniform hash, so NUM_HASHES signatures cost ceil(NUM_HASHES/4)
+    digests per shingle instead of NUM_HASHES — the digest work is the
     dominant map-side cost of this operator.
 
     `shingles_col` (optional): use an already-computed shingle-array
@@ -85,8 +91,8 @@ def minhash_band_keys(
     # digest pipeline inside the predicate — interpreted, once per row,
     # in whatever narrow parallelism the raw scan has.
     if shingles_col is None:
-        eligible = docs.where(F.size(tokens_expr(text_col)) >= shingle_n)
-        sh_expr = word_shingles_expr(text_col, shingle_n)
+        eligible = docs.where(F.size(tokens_expr("text")) >= SHINGLE_N)
+        sh_expr = word_shingles_expr("text", SHINGLE_N)
     else:
         eligible = docs.where(F.size(F.col(shingles_col)) > 0)
         sh_expr = F.col(shingles_col)
@@ -94,20 +100,20 @@ def minhash_band_keys(
     # referencing the builder expressions inside every signature would
     # re-run the tokenize/digest pipeline per signature (no CSE across
     # independent higher-order expressions; ~8x the scan cost)
-    with_sh = eligible.select(F.col(id_col), sh_expr.alias("_sh"))
-    n_groups = (num_hashes + SLICES_PER_MD5 - 1) // SLICES_PER_MD5
+    with_sh = eligible.select(F.col("doc_id"), sh_expr.alias("_sh"))
+    n_groups = (NUM_HASHES + SLICES_PER_MD5 - 1) // SLICES_PER_MD5
     with_h = with_sh.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[md5_group_expr(F.col("_sh"), g).alias(f"_h{g}") for g in range(n_groups)],
     )
     sigs = [
         sliced_min_expr(
             F.col(f"_h{i // SLICES_PER_MD5}"), i % SLICES_PER_MD5
         ).alias(f"_mh{i}")
-        for i in range(num_hashes)
+        for i in range(NUM_HASHES)
     ]
-    with_sigs = with_h.select(F.col(id_col), *sigs)
-    bands = num_hashes // rows_per_band
+    with_sigs = with_h.select(F.col("doc_id"), *sigs)
+    bands = NUM_HASHES // ROWS_PER_BAND
     # one row per (doc, band) via a single explode — a unionAll of
     # per-band selects would re-evaluate the whole tokenize→shingle→
     # digest subtree once PER BAND (union branches share no work),
@@ -119,8 +125,8 @@ def minhash_band_keys(
                 F.concat_ws(
                     "|",
                     *[
-                        F.col(f"_mh{b * rows_per_band + r}")
-                        for r in range(rows_per_band)
+                        F.col(f"_mh{b * ROWS_PER_BAND + r}")
+                        for r in range(ROWS_PER_BAND)
                     ],
                 ).alias("band_key"),
             )
@@ -128,8 +134,8 @@ def minhash_band_keys(
         ]
     )
     return with_sigs.select(
-        F.col(id_col), F.explode(band_structs).alias("_bk")
-    ).select(F.col(id_col), F.col("_bk.band_id"), F.col("_bk.band_key"))
+        F.col("doc_id"), F.explode(band_structs).alias("_bk")
+    ).select(F.col("doc_id"), F.col("_bk.band_id"), F.col("_bk.band_key"))
 
 
 def lsh_hot_buckets(
@@ -148,13 +154,8 @@ def lsh_hot_buckets(
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
-    max_bucket_size: int = 500,
+    max_bucket_size: int = MAX_BUCKET_SIZE,
 ) -> DataFrame:
     """Candidate pairs from shared LSH bands, verified with exact
     shingle-set Jaccard. Returns (id_a, id_b, jaccard), id_a < id_b.
@@ -167,33 +168,29 @@ def minhash_lsh_pairs(
     aggregation buffer and the pair expansion are bounded by
     `max_bucket_size` — one signature computation, one shuffle. Docs
     in a dropped bucket can still pair through their other
-    `num_hashes/rows_per_band` bands. Groups of >cap near-identical
+    `NUM_HASHES/ROWS_PER_BAND` bands. Groups of >cap near-identical
     docs are the exact-dedup operator's job (`exact_duplicates` first,
     then LSH on survivors); use `lsh_hot_buckets` to audit what a cap
     excluded.
     """
-    bands = minhash_band_keys(docs, id_col, text_col, num_hashes, rows_per_band, shingle_n)
+    bands = minhash_band_keys(docs)
     # materialize the (small) candidate set once: it feeds both the
     # verify join and the candidate-id prune, and without the
     # checkpoint each use would re-run the signature pipeline
-    cand = _minhash_candidates(bands, id_col, max_bucket_size).localCheckpoint(
-        eager=True
-    )
+    cand = _minhash_candidates(bands, max_bucket_size).localCheckpoint(eager=True)
     sh = docs.select(
-        F.col(id_col),
-        F.array_distinct(word_shingles_expr(text_col, shingle_n)).alias("_sh"),
+        F.col("doc_id"),
+        F.array_distinct(word_shingles_expr("text", SHINGLE_N)).alias("_sh"),
     )
-    return _verify_jaccard(cand, sh, id_col, jaccard_threshold)
+    return _verify_jaccard(cand, sh, jaccard_threshold)
 
 
 _MAX_VERIFY_BROADCAST_IDS = 4_000_000  # ids; ~32 MB of longs broadcast
 
 
-def _verify_jaccard(
-    cand: DataFrame, shingles: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
+def _verify_jaccard(cand: DataFrame, shingles: DataFrame, threshold: float) -> DataFrame:
     """Exact shingle-set Jaccard verify of checkpointed (id_a, id_b)
-    candidates against (id, _sh) distinct shingle arrays: (id_a, id_b,
+    candidates against (doc_id, _sh) distinct shingle arrays: (id_a, id_b,
     jaccard) for the pairs with jaccard >= threshold."""
     # shingle only the docs that appear in some candidate pair: the
     # verify join is inner on the candidate ids, so pre-filtering is
@@ -203,19 +200,19 @@ def _verify_jaccard(
     # extreme candidate set falls back to the full-corpus verify join.
     if cand.count() * 2 <= _MAX_VERIFY_BROADCAST_IDS:
         ids = (
-            cand.select(F.col("id_a").alias(id_col))
-            .unionAll(cand.select(F.col("id_b").alias(id_col)))
+            cand.select(F.col("id_a").alias("doc_id"))
+            .unionAll(cand.select(F.col("id_b").alias("doc_id")))
             .distinct()
         )
-        shingles = shingles.join(F.broadcast(ids), id_col, "leftsemi")
+        shingles = shingles.join(F.broadcast(ids), "doc_id", "leftsemi")
     na, nb = F.size("_sa"), F.size("_sb")
     return (
         cand.join(
-            shingles.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa")),
+            shingles.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("_sa")),
             "id_a",
         )
         .join(
-            shingles.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb")),
+            shingles.select(F.col("doc_id").alias("id_b"), F.col("_sh").alias("_sb")),
             "id_b",
         )
         # size-ratio prune before the exact verify: J(A,B) >= t implies
@@ -234,9 +231,7 @@ def _verify_jaccard(
     )
 
 
-def _minhash_candidates(
-    bands: DataFrame, id_col: str, max_bucket_size: int
-) -> DataFrame:
+def _minhash_candidates(bands: DataFrame, max_bucket_size: int) -> DataFrame:
     """(id_a, id_b) candidate pairs from shared LSH bands — the lazy
     plan `minhash_lsh_pairs` checkpoints (plan shape pinned in
     tests/test_plans.py).
@@ -261,7 +256,7 @@ def _minhash_candidates(
         bands.withColumn("_n", F.count(F.lit(1)).over(w))
         .where((F.col("_n") >= 2) & (F.col("_n") <= max_bucket_size))
         .groupBy("band_id", "band_key")
-        .agg(F.collect_list(id_col).alias("_ids"))
+        .agg(F.collect_list("doc_id").alias("_ids"))
     )
     # bind the sorted array once: captured inside the pair lambdas
     # it would re-sort the bucket per emitted pair element
@@ -284,12 +279,10 @@ def _minhash_candidates(
     )
 
 
-def simhash16(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash16(docs: DataFrame) -> DataFrame:
     """16-bit SimHash over token multiset: bit b = sign of the sum over
     tokens of ±count, where the token votes +1 on bit b iff hex digit b
-    of md5(token) >= '8'. Returns (id, simhash int)."""
+    of md5(token) >= '8'. Returns (doc_id, simhash int)."""
     # One shuffle total: each token occurrence votes ±1 on all 16 bits
     # at once via 16 conditional-sum aggregate columns over a single
     # groupBy(id) — map-side partial aggregation collapses every
@@ -299,9 +292,9 @@ def simhash16(
     # earlier form's 16-way posexplode of hex digits expanded every
     # token row 16× and paid two extra shuffles.)
     toks = docs.select(
-        F.col(id_col), F.explode(tokens_expr(text_col)).alias("tok")
+        F.col("doc_id"), F.explode(tokens_expr("text")).alias("tok")
     ).withColumn("_h", F.substring(F.md5("tok"), 1, 16))
-    sums = toks.groupBy(id_col).agg(
+    sums = toks.groupBy("doc_id").agg(
         *[
             F.sum(
                 F.when(
@@ -316,17 +309,12 @@ def simhash16(
         term = F.when(F.col(f"_s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         fingerprint = term if fingerprint is None else fingerprint + term
     return sums.select(
-        F.col(id_col), fingerprint.cast("long").alias("simhash")
+        F.col("doc_id"), fingerprint.cast("long").alias("simhash")
     )
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    block_col: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    threshold: float = 0.3,
+    docs: DataFrame, block_col: str, threshold: float = 0.3
 ) -> DataFrame:
     """Blocked pairwise n-gram Jaccard, exact: only doc pairs within
     the same block are compared (use a cheap pre-cluster — source,
@@ -337,15 +325,15 @@ def ngram_jaccard_pairs(
     # filter referencing the computed shingle column is pushed below
     # the projection and re-evaluates the whole shingle pipeline inside
     # the predicate (interpreted, and below any upstream repartition)
-    sh = docs.where(F.size(tokens_expr(text_col)) >= shingle_n).select(
+    sh = docs.where(F.size(tokens_expr("text")) >= SHINGLE_N).select(
         F.col(block_col).alias("_blk"),
-        F.col(id_col),
-        F.array_distinct(word_shingles_expr(text_col, shingle_n)).alias("_sh"),
+        F.col("doc_id"),
+        F.array_distinct(word_shingles_expr("text", SHINGLE_N)).alias("_sh"),
     )
     # per-doc shingle count is size(_sh) — carried through the explode
     # rather than recomputed with a second window over the full index
     inv = sh.select(
-        "_blk", F.col(id_col), F.size("_sh").alias("_n"),
+        "_blk", F.col("doc_id"), F.size("_sh").alias("_n"),
         F.explode("_sh").alias("_g"),
     )
     # document frequency via a window over the (block, shingle)
@@ -354,17 +342,17 @@ def ngram_jaccard_pairs(
     # tokenize→shingle→explode pipeline twice — once for the counts,
     # once for the probe side — and shuffled both)
     w_df = Window.partitionBy("_blk", "_g")
-    w_rank = Window.partitionBy("_blk", id_col).orderBy("_df", "_g")
+    w_rank = Window.partitionBy("_blk", "doc_id").orderBy("_df", "_g")
     ranked = inv.withColumn("_df", F.count(F.lit(1)).over(w_df)).withColumn(
         "_r", F.row_number().over(w_rank)
     )
-    prefix = _prefix(ranked, id_col, threshold)
-    cand = _prefix_pairs(prefix, id_col, threshold).localCheckpoint(eager=True)
-    return _verify_jaccard(cand, sh.select(F.col(id_col), "_sh"), id_col, threshold)
+    prefix = _prefix(ranked, threshold)
+    cand = _prefix_pairs(prefix, threshold).localCheckpoint(eager=True)
+    return _verify_jaccard(cand, sh.select(F.col("doc_id"), "_sh"), threshold)
 
 
-def _prefix(ranked: DataFrame, id_col: str, threshold: float) -> DataFrame:
-    """Checkpointed PPJoin prefix (_blk, id, _g, _r, _n): the first
+def _prefix(ranked: DataFrame, threshold: float) -> DataFrame:
+    """Checkpointed PPJoin prefix (_blk, doc_id, _g, _r, _n): the first
     n - ceil(t·n) + 1 shingles of each doc under its rank `_r` in the
     global (df asc, shingle asc) order; `_n` is the doc's set size. It
     feeds both sides of the candidate self-join (and the incremental
@@ -377,12 +365,12 @@ def _prefix(ranked: DataFrame, id_col: str, threshold: float) -> DataFrame:
     ) + F.lit(1)
     return (
         ranked.where(F.col("_r") <= prefix_len)
-        .select("_blk", F.col(id_col), "_g", "_r", "_n")
+        .select("_blk", F.col("doc_id"), "_g", "_r", "_n")
         .localCheckpoint(eager=True)
     )
 
 
-def _prefix_pairs(prefix: DataFrame, id_col: str, threshold: float) -> DataFrame:
+def _prefix_pairs(prefix: DataFrame, threshold: float) -> DataFrame:
     """Lazy (id_a, id_b) candidates, id_a < id_b, from the prefix
     self-join on (_blk, _g) and the PPJoin positional filter (Xiao et
     al., WWW 2008). Both steps are exact — no pair with J >= t is lost:
@@ -404,14 +392,14 @@ def _prefix_pairs(prefix: DataFrame, id_col: str, threshold: float) -> DataFrame
     """
     a = prefix.select(
         "_blk",
-        F.col(id_col).alias("id_a"),
+        F.col("doc_id").alias("id_a"),
         "_g",
         F.col("_r").alias("_ra"),
         F.col("_n").alias("_na"),
     )
     b = prefix.select(
         "_blk",
-        F.col(id_col).alias("id_b"),
+        F.col("doc_id").alias("id_b"),
         "_g",
         F.col("_r").alias("_rb"),
         F.col("_n").alias("_nb"),
@@ -442,19 +430,15 @@ def _prefix_pairs(prefix: DataFrame, id_col: str, threshold: float) -> DataFrame
 
 
 def ngram_index(
-    docs: DataFrame,
-    block_col: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
+    docs: DataFrame, block_col: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Build the reusable n-gram inverted index for a corpus — the
     snapshot `ngram_jaccard_pairs_incremental` probes so delta runs
     never re-shingle the prior corpus. Returns (posting, shingles, df):
 
-    - posting: (_blk, id, _g) one row per (doc, distinct shingle) —
+    - posting: (_blk, doc_id, _g) one row per (doc, distinct shingle) —
       the full posting lists;
-    - shingles: (id, _sh) full per-doc shingle arrays (exact-verify
+    - shingles: (doc_id, _sh) full per-doc shingle arrays (exact-verify
       side);
     - df: (_blk, _g, _df) per-block document frequencies. Appending a
       delta's df rows keeps MULTIPLE rows per key; consumers re-sum —
@@ -466,23 +450,23 @@ def ngram_index(
     separately would pay three full shingle passes.
     """
     sh = (
-        docs.where(F.size(tokens_expr(text_col)) >= shingle_n)
+        docs.where(F.size(tokens_expr("text")) >= SHINGLE_N)
         .select(
             F.col(block_col).alias("_blk"),
-            F.col(id_col),
-            F.array_distinct(word_shingles_expr(text_col, shingle_n)).alias("_sh"),
+            F.col("doc_id"),
+            F.array_distinct(word_shingles_expr("text", SHINGLE_N)).alias("_sh"),
         )
         .localCheckpoint(eager=True)
     )
     posting = sh.select(
-        "_blk", F.col(id_col), F.explode("_sh").alias("_g")
+        "_blk", F.col("doc_id"), F.explode("_sh").alias("_g")
     ).localCheckpoint(eager=True)
     dfreq = (
         posting.groupBy("_blk", "_g")
         .agg(F.count(F.lit(1)).cast("long").alias("_df"))
         .localCheckpoint(eager=True)
     )
-    return posting, sh.select(F.col(id_col), "_sh"), dfreq
+    return posting, sh.select(F.col("doc_id"), "_sh"), dfreq
 
 
 def ngram_jaccard_pairs_incremental(
@@ -491,11 +475,7 @@ def ngram_jaccard_pairs_incremental(
     prior_shingles: DataFrame,
     prior_df: DataFrame,
     block_col: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
     threshold: float = 0.3,
-    max_broadcast_keys: int = 1_000_000,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Incremental exact n-gram Jaccard: pairs touching the DELTA only,
     probed against a snapshotted inverted index — the prior corpus is
@@ -520,9 +500,7 @@ def ngram_jaccard_pairs_incremental(
     # the delta's checkpointed posting rows feed the combined document
     # frequencies, the per-doc counts, the ranked join, and the
     # broadcast-pricing count below without re-shingling the delta
-    new_posting, new_shingles, new_df = ngram_index(
-        new_docs, block_col, id_col, text_col, shingle_n
-    )
+    new_posting, new_shingles, new_df = ngram_index(new_docs, block_col)
     # the combined frequencies are only consumed through an inner join
     # with the DELTA's posting rows, so only grams the delta holds
     # matter: semi-join the prior df table down to those grams before
@@ -531,7 +509,7 @@ def ngram_jaccard_pairs_incremental(
     # delta gram set when provably small — posting rows upper-bound
     # distinct grams; counted on the checkpoint, so pricing costs no
     # recomputation.
-    delta_small = new_posting.count() <= max_broadcast_keys
+    delta_small = new_posting.count() <= MAX_BROADCAST_KEYS
     delta_grams = new_posting.select("_blk", "_g").distinct()
     if delta_small:
         delta_grams = F.broadcast(delta_grams)
@@ -541,16 +519,16 @@ def ngram_jaccard_pairs_incremental(
         .groupBy("_blk", "_g")
         .agg(F.sum("_df").alias("_df"))
     )
-    n_per_doc = new_posting.groupBy("_blk", id_col).agg(
+    n_per_doc = new_posting.groupBy("_blk", "doc_id").agg(
         F.count(F.lit(1)).alias("_n")
     )
-    w_rank = Window.partitionBy("_blk", id_col).orderBy("_df", "_g")
+    w_rank = Window.partitionBy("_blk", "doc_id").orderBy("_df", "_g")
     ranked = (
         new_posting.join(combined_df, ["_blk", "_g"])
-        .join(n_per_doc, ["_blk", id_col])
+        .join(n_per_doc, ["_blk", "doc_id"])
         .select(
             "_blk",
-            F.col(id_col),
+            F.col("doc_id"),
             "_g",
             F.row_number().over(w_rank).alias("_r"),
             "_n",
@@ -558,8 +536,8 @@ def ngram_jaccard_pairs_incremental(
     )
     # the prefix feeds both sides of the delta×delta join AND the
     # delta×prior probe (delta-bounded)
-    prefix = _prefix(ranked, id_col, threshold)
-    dd = _prefix_pairs(prefix, id_col, threshold)
+    prefix = _prefix(ranked, threshold)
+    dd = _prefix_pairs(prefix, threshold)
     # delta×prior has no prior-side ranks, so it keeps the plain pair
     # join. Prune the prior posting lists map-side to the delta-prefix
     # grams before the join shuffles them — the probe then moves
@@ -568,10 +546,10 @@ def ngram_jaccard_pairs_incremental(
     if delta_small:
         prefix_grams = F.broadcast(prefix_grams)
     dp = (
-        prefix.select("_blk", F.col(id_col).alias("id_a"), "_g")
+        prefix.select("_blk", F.col("doc_id").alias("id_a"), "_g")
         .join(
             prior_posting.join(prefix_grams, ["_blk", "_g"], "leftsemi")
-            .select("_blk", F.col(id_col).alias("id_b"), "_g"),
+            .select("_blk", F.col("doc_id").alias("id_b"), "_g"),
             ["_blk", "_g"],
         )
         .where(F.col("id_a") != F.col("id_b"))
@@ -582,15 +560,13 @@ def ngram_jaccard_pairs_incremental(
     )
     cand = dd.unionByName(dp).distinct().localCheckpoint(eager=True)
     pairs = _verify_jaccard(
-        cand, prior_shingles.unionByName(new_shingles), id_col, threshold
+        cand, prior_shingles.unionByName(new_shingles), threshold
     )
     return pairs, new_posting, new_shingles, new_df
 
 
 def embedding_neardup_pairs(
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
     block_col: str | None = None,
     threshold: float = 0.95,
     auto_block_bits: int = 8,
@@ -612,26 +588,26 @@ def embedding_neardup_pairs(
     if block_col:
         blk = F.col(block_col)
     else:
-        blk = hyperplane_bucket_expr(F.col(emb_col), bits=auto_block_bits)
+        blk = hyperplane_bucket_expr(F.col("embedding"), bits=auto_block_bits)
     # norms hoisted out of the pair stage: computed once per vector
     # here, so each of the O(block²) pairs evaluates one O(dim) dot
     # instead of three O(dim) folds (bit-identical — same op order)
     v = vectors.select(
-        F.col(id_col),
-        F.col(emb_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         blk.alias("_blk"),
-        norm_expr(F.col(emb_col)).alias("_nrm"),
+        norm_expr(F.col("embedding")).alias("_nrm"),
     )
     a = v.select(
         F.col("_blk"),
-        F.col(id_col).alias("id_a"),
-        F.col(emb_col).alias("_ea"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("_ea"),
         F.col("_nrm").alias("_na"),
     )
     b = v.select(
         F.col("_blk"),
-        F.col(id_col).alias("id_b"),
-        F.col(emb_col).alias("_eb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("_eb"),
         F.col("_nrm").alias("_nb"),
     )
     return (
@@ -651,8 +627,6 @@ def embedding_neardup_pairs(
 def embedding_neardup_pairs_incremental(
     new_vectors: DataFrame,
     prior_index: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
     threshold: float = 0.95,
     auto_block_bits: int = 8,
 ) -> tuple[DataFrame, DataFrame]:
@@ -671,19 +645,19 @@ def embedding_neardup_pairs_incremental(
     """
     from ..functions.vectors import cosine_prenorm_expr, norm_expr
 
-    new_index = embedding_index(new_vectors, id_col, emb_col, auto_block_bits)
+    new_index = embedding_index(new_vectors, auto_block_bits)
     # norms hoisted out of the pair stage (see embedding_neardup_pairs)
     d = new_index.select(
         "_blk",
-        F.col(id_col).alias("_ida"),
-        F.col(emb_col).alias("_ea"),
-        norm_expr(F.col(emb_col)).alias("_na"),
+        F.col("vec_id").alias("_ida"),
+        F.col("embedding").alias("_ea"),
+        norm_expr(F.col("embedding")).alias("_na"),
     )
     u = new_index.unionByName(prior_index).select(
         "_blk",
-        F.col(id_col).alias("_idb"),
-        F.col(emb_col).alias("_eb"),
-        norm_expr(F.col(emb_col)).alias("_nb"),
+        F.col("vec_id").alias("_idb"),
+        F.col("embedding").alias("_eb"),
+        norm_expr(F.col("embedding")).alias("_nb"),
     )
     pairs = (
         d.join(u, "_blk")
@@ -705,33 +679,23 @@ def embedding_neardup_pairs_incremental(
     return pairs, new_index
 
 
-def embedding_index(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    auto_block_bits: int = 8,
-) -> DataFrame:
+def embedding_index(vectors: DataFrame, auto_block_bits: int = 8) -> DataFrame:
     """Build the snapshot index `embedding_neardup_pairs_incremental`
-    probes: (id, embedding, _blk hyperplane code). Append deltas'
+    probes: (vec_id, embedding, _blk hyperplane code). Append deltas'
     returned index rows to fold them in."""
     from .similarity import hyperplane_bucket_expr
 
     return vectors.select(
-        F.col(id_col),
-        F.col(emb_col),
-        hyperplane_bucket_expr(F.col(emb_col), bits=auto_block_bits).alias(
+        F.col("vec_id"),
+        F.col("embedding"),
+        hyperplane_bucket_expr(F.col("embedding"), bits=auto_block_bits).alias(
             "_blk"
         ),
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Duplicate-pair graph → clusters: (id, component) where
+def connected_components(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
+    """Duplicate (id_a, id_b) pair graph → clusters: (id, component) where
     component = min id reachable through pairs. This is the step that
     turns every pairwise dedup operator's output (MinHash-LSH, n-gram
     Jaccard, embedding near-dup, ...) into actionable duplicate
@@ -756,9 +720,9 @@ def connected_components(
     never pays the extra join.
     """
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
         .distinct()
     )
@@ -838,32 +802,21 @@ def connected_components(
     )
 
 
-def minhash_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    shingle_n: int = 3,
-) -> tuple[DataFrame, DataFrame]:
+def minhash_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Build the snapshot `minhash_lsh_pairs_incremental` probes:
-    (bands, shingles) — the `minhash_band_keys` rows and the (id, _sh)
+    (bands, shingles) — the `minhash_band_keys` rows and the (doc_id, _sh)
     distinct shingle arrays. The corpus is tokenized and shingled
     exactly ONCE: the shingle table is localCheckpoint'ed and the band
     signatures derive from it (`shingles_col`; signature mins are
     identical over distinct arrays), then the bands are checkpointed
     too. Append a delta's returned rows to fold it in."""
     shingles = docs.select(
-        F.col(id_col),
-        F.array_distinct(word_shingles_expr(text_col, shingle_n)).alias("_sh"),
+        F.col("doc_id"),
+        F.array_distinct(word_shingles_expr("text", SHINGLE_N)).alias("_sh"),
     ).localCheckpoint(eager=True)
-    bands = minhash_band_keys(
-        shingles,
-        id_col,
-        num_hashes=num_hashes,
-        rows_per_band=rows_per_band,
-        shingles_col="_sh",
-    ).localCheckpoint(eager=True)
+    bands = minhash_band_keys(shingles, shingles_col="_sh").localCheckpoint(
+        eager=True
+    )
     return bands, shingles
 
 
@@ -871,14 +824,8 @@ def minhash_lsh_pairs_incremental(
     new_docs: DataFrame,
     prior_bands: DataFrame,
     prior_shingles: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
-    max_bucket_size: int = 500,
-    max_broadcast_keys: int = 1_000_000,
+    max_broadcast_keys: int = MAX_BROADCAST_KEYS,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Incremental near-dup detection: pairs touching the DELTA only.
 
@@ -896,8 +843,8 @@ def minhash_lsh_pairs_incremental(
       append them to the snapshots to fold the delta into the index
       for the next run.
 
-    The bucket cap applies to the COMBINED bucket (prior + delta
-    members), same audit contract as the batch operator.
+    The bucket cap (MAX_BUCKET_SIZE) applies to the COMBINED bucket
+    (prior + delta members), same audit contract as the batch operator.
 
     `max_broadcast_keys` guards the delta-key broadcast: the probe's
     map-side prior-index prune broadcasts the delta's (band_id,
@@ -908,23 +855,21 @@ def minhash_lsh_pairs_incremental(
     side, and AQE may re-broadcast from measured stats) instead of
     OOMing the driver on an oversized delta.
     """
-    new_bands, new_shingles = minhash_index(
-        new_docs, id_col, text_col, num_hashes, rows_per_band, shingle_n
-    )
-    nb = new_bands.select("band_id", "band_key", F.col(id_col).alias("_id")).withColumn(
+    new_bands, new_shingles = minhash_index(new_docs)
+    nb = new_bands.select("band_id", "band_key", F.col("doc_id").alias("_id")).withColumn(
         "_new", F.lit(True)
     )
     pb = prior_bands.select(
-        "band_id", "band_key", F.col(id_col).alias("_id")
+        "band_id", "band_key", F.col("doc_id").alias("_id")
     ).withColumn("_new", F.lit(False))
     broadcast_delta_keys = new_bands.count() <= max_broadcast_keys
     # materialize the (small) candidate set once: it feeds the verify
     # join and its candidate-id prune
     cand = _minhash_incr_candidates(
-        nb, nb.unionByName(pb), max_bucket_size, broadcast_delta_keys
+        nb, nb.unionByName(pb), MAX_BUCKET_SIZE, broadcast_delta_keys
     ).localCheckpoint(eager=True)
     pairs = _verify_jaccard(
-        cand, new_shingles.unionByName(prior_shingles), id_col, jaccard_threshold
+        cand, new_shingles.unionByName(prior_shingles), jaccard_threshold
     )
     return pairs, new_bands, new_shingles
 
@@ -989,14 +934,7 @@ def _minhash_incr_candidates(
     )
 
 
-def duplicate_spans(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    max_gram_occurrences: int = 1000,
-    min_span_tokens: int | None = None,
-) -> DataFrame:
+def duplicate_spans(docs: DataFrame, k: int = 8) -> DataFrame:
     """Span-level exact dedup: every maximal token span whose k-token
     grams each recur verbatim in some OTHER document — the operator
     family of Lee et al., "Deduplicating Training Data Makes Language
@@ -1018,7 +956,7 @@ def duplicate_spans(
       gram_md5 exchange, so it adds a sort, not a shuffle); the
       cross-doc test is `occ_total > occ_in_this_doc` — no
       collect_set of doc ids ever builds;
-    - boilerplate grams hotter than `max_gram_occurrences` are dropped
+    - boilerplate grams hotter than MAX_GRAM_OCCURRENCES are dropped
       by the same window count, spillably, BEFORE any per-doc work —
       the same skew bound the LSH bucket cap applies (document the cap
       when reporting: over-cap grams are not span evidence);
@@ -1026,7 +964,7 @@ def duplicate_spans(
       (doc_id, island) reuses it.
     Total: two data-scale exchanges, no join, no driver traffic.
     """
-    grams = span_gram_index(docs, id_col, text_col, k)
+    grams = span_gram_index(docs, k)
     w_gram = Window.partitionBy("gram_md5")
     w_gram_doc = Window.partitionBy("gram_md5", "doc_id")
     dup_pos = (
@@ -1034,27 +972,22 @@ def duplicate_spans(
         .withColumn("occ_doc", F.count(F.lit(1)).over(w_gram_doc))
         .where(
             (F.col("occ_total") > F.col("occ_doc"))
-            & (F.col("occ_total") <= max_gram_occurrences)
+            & (F.col("occ_total") <= MAX_GRAM_OCCURRENCES)
         )
         .select("doc_id", "pos")
     )
-    return _span_islands(dup_pos, k, min_span_tokens)
+    return _span_islands(dup_pos, k)
 
 
-def span_gram_index(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-) -> DataFrame:
+def span_gram_index(docs: DataFrame, k: int = 8) -> DataFrame:
     """(doc_id, pos, gram_md5) — one row per k-gram occurrence, the
     map-side front of `duplicate_spans` and the persistable index its
     incremental twin probes (store it partitioned/bucketed by
     gram_md5 with a doc_id-sorted secondary layout at real scale; the
     probe touches it via gram-key and doc-key semi-joins only, so both
     access paths want pushdown)."""
-    toks = tokens_expr(text_col)
-    base = docs.select(F.col(id_col).alias("doc_id"), toks.alias("w")).where(
+    toks = tokens_expr("text")
+    base = docs.select(F.col("doc_id"), toks.alias("w")).where(
         F.size("w") >= k
     )
     return base.select(
@@ -1068,13 +1001,11 @@ def span_gram_index(
     )
 
 
-def _span_islands(
-    dup_pos: DataFrame, k: int, min_span_tokens: int | None
-) -> DataFrame:
+def _span_islands(dup_pos: DataFrame, k: int) -> DataFrame:
     """(doc_id, pos) duplicated gram positions → maximal spans (gap
     tolerance k) on one doc_id exchange; the final groupBy reuses it."""
     w_doc = Window.partitionBy("doc_id").orderBy("pos")
-    spans = (
+    return (
         dup_pos.withColumn(
             "new_island",
             F.when(F.col("pos") - F.lag("pos").over(w_doc) <= k, F.lit(0))
@@ -1097,20 +1028,12 @@ def _span_islands(
         )
         .select("doc_id", "span_start", "span_end", "n_tokens", "n_grams")
     )
-    if min_span_tokens is not None:
-        spans = spans.where(F.col("n_tokens") >= min_span_tokens)
-    return spans
 
 
 def duplicate_spans_incremental(
     new_docs: DataFrame,
     prior_index: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 8,
-    max_gram_occurrences: int = 1000,
-    min_span_tokens: int | None = None,
-    max_broadcast_keys: int = 1_000_000,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental span-level dedup: re-derive spans ONLY for the
     documents a delta can affect, probing the snapshotted
@@ -1130,7 +1053,7 @@ def duplicate_spans_incremental(
     status can change — a gram absent from the delta keeps its exact
     occurrence counts, so every (gram, doc) dup test outside the
     affected set is unchanged (this includes cap flips: only grams
-    the delta pushed over `max_gram_occurrences` flip, and every doc
+    the delta pushed over MAX_GRAM_OCCURRENCES flip, and every doc
     holding such a gram shares it with the delta by definition).
     Output contract: exactly the full-run `duplicate_spans` rows for
     the affected docs (hash-verified by the gate; equality with the
@@ -1139,7 +1062,7 @@ def duplicate_spans_incremental(
     Scale shape: delta grams are map-side; the prior index is touched
     through (a) one gram-key semi-join bounded by the delta's gram
     vocabulary (broadcast when the delta is provably small —
-    `max_broadcast_keys`, counted on the DELTA, the same guard as
+    MAX_BROADCAST_KEYS, counted on the DELTA, the same guard as
     minhash_lsh_pairs_incremental — else shuffle), (b) one doc-key
     semi-join bounded by the affected docs, and (c) one occurrence
     count aggregated over the posting lists of the affected docs'
@@ -1153,13 +1076,11 @@ def duplicate_spans_incremental(
     # reused by the key probe, the affected-doc union, and all_pos —
     # and the count below then prices the broadcast decision without
     # a second tokenize+explode job
-    delta_index = span_gram_index(
-        new_docs, id_col, text_col, k
-    ).localCheckpoint(eager=True)
+    delta_index = span_gram_index(new_docs, k).localCheckpoint(eager=True)
     delta_keys = delta_index.select("gram_md5").distinct()
     # delta-bounded count over the checkpoint (cheap); occurrences
     # upper-bound the distinct keys
-    if delta_index.count() <= max_broadcast_keys:
+    if delta_index.count() <= MAX_BROADCAST_KEYS:
         delta_keys = F.broadcast(delta_keys)
     affected = (
         prior_index.join(delta_keys, "gram_md5", "leftsemi")
@@ -1186,19 +1107,14 @@ def duplicate_spans_incremental(
         .withColumn("occ_doc", F.count(F.lit(1)).over(w_gram_doc))
         .where(
             (F.col("occ_total") > F.col("occ_doc"))
-            & (F.col("occ_total") <= max_gram_occurrences)
+            & (F.col("occ_total") <= MAX_GRAM_OCCURRENCES)
         )
         .select("doc_id", "pos")
     )
-    return _span_islands(dup_pos, k, min_span_tokens), delta_index
+    return _span_islands(dup_pos, k), delta_index
 
 
-def remove_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def remove_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """Remediation half of span-level dedup: cut the spans found by
     `duplicate_spans` out of the token stream. Every duplicated span
     is removed from every document it appears in (Lee et al. cut the
@@ -1226,9 +1142,9 @@ def remove_spans(
     # a NULL-text row emits NULL sizes and diverges from the oracle's
     # 0-token accounting
     toks = F.coalesce(
-        tokens_expr(text_col), F.array().cast("array<string>")
+        tokens_expr("text"), F.array().cast("array<string>")
     )
-    joined = docs.select(F.col(id_col).alias("doc_id"), toks.alias("w")).join(
+    joined = docs.select(F.col("doc_id"), toks.alias("w")).join(
         per_doc, "doc_id", "left"
     )
     spans_arr = F.coalesce(

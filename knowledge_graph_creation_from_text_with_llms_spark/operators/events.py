@@ -32,31 +32,26 @@ def _epoch_us(ts_col: str) -> Column:
     )
 
 
-def sessionize(
-    events: DataFrame,
-    gap_us: int = SESSION_GAP_US,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessions per user: a new session starts when the time
-    since the previous event exceeds gap_us. Returns one row per
+    since the previous event exceeds SESSION_GAP_US. Returns one row per
     session: (user_id, session_idx, n_events, start_us, end_us,
     value_cents). Deterministic ordering: (ts, event_id)."""
-    us = _epoch_us(ts_col)
+    us = _epoch_us("ts")
     base = events.select(
-        F.col(user_col),
+        F.col("user_id"),
         us.alias("_us"),
         F.col("event_id"),
         _cents(F.col("value")).alias("_cents"),
     )
-    w = Window.partitionBy(user_col).orderBy("_us", "event_id")
+    w = Window.partitionBy("user_id").orderBy("_us", "event_id")
     prev = F.lag("_us").over(w)
     new_session = F.when(
-        prev.isNull() | ((F.col("_us") - prev) > gap_us), F.lit(1)
+        prev.isNull() | ((F.col("_us") - prev) > SESSION_GAP_US), F.lit(1)
     ).otherwise(F.lit(0))
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     with_sess = base.withColumn("session_idx", F.sum(new_session).over(run))
-    return with_sess.groupBy(user_col, "session_idx").agg(
+    return with_sess.groupBy("user_id", "session_idx").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("_us").alias("start_us"),
         F.max("_us").alias("end_us"),
@@ -74,11 +69,11 @@ def type_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def json_prop_stats(events: DataFrame, key: str = "k") -> DataFrame:
-    """Extract an integer property from the JSON props column and
+def json_prop_stats(events: DataFrame) -> DataFrame:
+    """Extract the integer property `k` from the JSON props column and
     aggregate by its value bucket (pushdown-friendly typed access to
     semi-structured data)."""
-    k = F.get_json_object(F.col("props"), f"$.{key}").cast("long")
+    k = F.get_json_object(F.col("props"), "$.k").cast("long")
     return (
         events.select(k.alias("k"))
         .where(F.col("k").isNotNull())
@@ -112,8 +107,10 @@ def funnel_stages(
     users who completed the funnel UP TO that stage in event-time
     order — stage k counts users with some stage-k event strictly
     after their earliest qualifying stage-(k-1) event (earliest-match
-    semantics, the standard product-analytics funnel). An empty or
-    repeated stage list raises ValueError.
+    semantics, the standard product-analytics funnel). Stage 1 counts
+    every user with a stage-1 event, also one whose stage-1 events all
+    have a NULL ts; a NULL ts never precedes a later stage. An empty
+    or repeated stage list raises ValueError.
 
     ONE scan of the event table and ONE user-key shuffle regardless of
     funnel depth: each user's funnel events are collected into one
@@ -161,9 +158,14 @@ def funnel_stages(
             ),
         )
 
-    reached_ts = per_user.select(F.aggregate(F.col("_evs"), acc0, _step).alias("_t"))
+    reached_ts = per_user.select(
+        F.aggregate(F.col("_evs"), acc0, _step).alias("_t"),
+        F.exists("_evs", lambda e: e.getField("_k") == 0).alias("_in0"),
+    )
+    # stage 1 by presence: a NULL-ts stage-1 event leaves _t[0] NULL
     agg = reached_ts.agg(
-        *[F.count(F.get(F.col("_t"), i)).cast("long").alias(f"_n{i}") for i in range(k)]
+        F.count(F.when(F.col("_in0"), F.lit(1))).cast("long").alias("_n0"),
+        *[F.count(F.get(F.col("_t"), i)).cast("long").alias(f"_n{i}") for i in range(1, k)],
     )
     rows = F.array(
         *[

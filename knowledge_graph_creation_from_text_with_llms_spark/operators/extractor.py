@@ -141,21 +141,20 @@ class HFCausalBackend(Backend):  # pragma: no cover - no GPU/weights in CI
 
 
 def extract_responses(
-    chunks: DataFrame,
-    backend_factory: Callable[[], Backend],
-    text_col: str = "text",
+    chunks: DataFrame, backend_factory: Callable[[], Backend]
 ) -> DataFrame:
-    """chunks → raw_responses. One mapInPandas stage; the backend is
-    built once per python worker and fed whole Arrow batches."""
-    out_fields = [f"{c} {t}" for c, t in chunks.dtypes if c != text_col]
+    """chunks → raw_responses: the chunk `text` is replaced by the
+    backend's `response`. One mapInPandas stage; the backend is built
+    once per python worker and fed whole Arrow batches."""
+    out_fields = [f"{c} {t}" for c, t in chunks.dtypes if c != "text"]
     schema = ", ".join(out_fields + ["response string"])
-    other_cols = [c for c in chunks.columns if c != text_col]
+    other_cols = [c for c in chunks.columns if c != "text"]
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         backend = backend_factory()  # lazy per-worker singleton
         for pdf in batches:
             out = pdf[other_cols].copy()
-            out["response"] = backend.generate(pdf[text_col])
+            out["response"] = backend.generate(pdf["text"])
             yield out
 
     return chunks.mapInPandas(_run, schema=schema)

@@ -191,20 +191,15 @@ def to_turtle_lines(edges: DataFrame) -> DataFrame:
     ).orderBy("line")
 
 
-def k_hop_neighbors(
-    edges: DataFrame,
-    seeds: DataFrame,
-    k: int,
-    seed_col: str = "node_id",
-) -> DataFrame:
-    """(node_id, hops): every node reachable from the seed set in at
-    most k directed hops, with the minimum hop count. k bounded
-    iterative frontier expansion — each round joins only the NEW
-    frontier against the edge list (visited nodes are anti-joined
-    away), so round r shuffles |frontier_r| × avg-degree rows, never
-    the whole reachable set again. The classic BFS-as-joins plan; k is
+def k_hop_neighbors(edges: DataFrame, seeds: DataFrame, k: int) -> DataFrame:
+    """(node_id, hops): every node reachable from the `node_id` seeds
+    in at most k directed (src_id → dst_id) hops, with the minimum hop
+    count. k bounded iterative frontier expansion — each round joins
+    only the NEW frontier against the edge list (visited nodes are
+    anti-joined away), so round r shuffles |frontier_r| × avg-degree
+    rows, never the whole reachable set again. The classic BFS-as-joins plan; k is
     small and fixed, so the loop unrolls into one DAG."""
-    frontier = seeds.select(F.col(seed_col).alias("node_id")).distinct()
+    frontier = seeds.select("node_id").distinct()
     visited = frontier.withColumn("hops", F.lit(0))
     for hop in range(1, k + 1):
         nxt = (
@@ -220,12 +215,11 @@ def k_hop_neighbors(
     return visited
 
 
-def triangle_counts(
-    edges: DataFrame, src_col: str = "src_id", dst_col: str = "dst_id"
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation counts over the undirected
-    simple graph of `edges` (self-loops dropped, multi-edges and
-    direction collapsed): (node_id, triangles), nodes in ≥1 triangle.
+    simple graph of the (src_id, dst_id) `edges` (self-loops dropped,
+    multi-edges and direction collapsed): (node_id, triangles), nodes
+    in ≥1 triangle.
 
     Degree-ordered orientation — each undirected edge is directed from
     its (degree, id)-smaller endpoint to the larger — so every triangle
@@ -237,10 +231,10 @@ def triangle_counts(
     wedge/close joins); no cross join anywhere.
     """
     und = (
-        edges.where(F.col(src_col) != F.col(dst_col))
+        edges.where(F.col("src_id") != F.col("dst_id"))
         .select(
-            F.least(src_col, dst_col).alias("u"),
-            F.greatest(src_col, dst_col).alias("v"),
+            F.least("src_id", "dst_id").alias("u"),
+            F.greatest("src_id", "dst_id").alias("v"),
         )
         .distinct()
         # the oriented edge list is read three times below (two wedge
@@ -279,27 +273,28 @@ def triangle_counts(
     )
 
 
+# PageRank's damping factor, in percent, and its fixed-point scale
+DAMPING_PCT = 85
+PR_SCALE = 10**12
+
+
 def pagerank(
-    edges: DataFrame,
-    iterations: int = 3,
-    src_col: str = "src_id",
-    dst_col: str = "dst_id",
-    damping_pct: int = 85,
-    scale: int | str = 10**12,
-    redistribute_dangling: bool = False,
+    edges: DataFrame, iterations: int = 3, redistribute_dangling: bool = False
 ) -> DataFrame:
-    """PageRank over the directed simple graph of `edges`, in
-    fixed-point integer arithmetic: (node_id, rank_int, rank) where
-    rank = rank_int / scale and the initial mass is `scale` per node.
+    """PageRank over the directed simple graph of the (src_id, dst_id)
+    `edges`, in fixed-point integer arithmetic: (node_id, rank_int,
+    rank) where rank = rank_int / PR_SCALE and the initial mass is
+    PR_SCALE per node.
 
     Why integers: float PageRank sums contributions in whatever order
     the engine's partial aggregation chooses — results differ at the
     ulp level between runs/engines. Here every step is int64
     (contribution = rank DIV out_degree; update =
-    (100-d)·scale + d·Σ, all DIV 100), so sums are order-independent
-    and the ranks are bit-identical anywhere — including the unrolled
-    SQL oracle (gate.kg_pagerank). Precision cost ≤ out_degree
-    round-down units of 1/scale per node per round.
+    (100-d)·PR_SCALE + d·Σ, all DIV 100, d = DAMPING_PCT), so sums
+    are order-independent and the ranks are bit-identical anywhere —
+    including the unrolled SQL oracle (gate.kg_pagerank). Precision
+    cost ≤ out_degree round-down units of 1/PR_SCALE per node per
+    round.
 
     Semantics: by default the simplified large-scale variant —
     dangling-node mass is dropped, not redistributed (totals shrink;
@@ -310,31 +305,21 @@ def pagerank(
     damping), keeping totals ~conserved and staying bit-exact. The
     per-round dangling mass is a 1-row aggregate broadcast back into
     the update (no data-scale driver traffic; only N, a scalar, is
-    collected once). Overflow bound: d·Σ ≤ 85 · N ·
-    scale must stay under 2^63 → N ≤ ~10^5 at the default scale; lower
-    `scale` for bigger graphs (10^9 supports N ≈ 10^8), or pass
-    scale="auto" to derive it from the node count: scale =
-    max(10^4, 2^62 // (100·N)) keeps 85·N·scale < 2^63 with ≥10^4
-    fixed-point precision up to N ≈ 4.6·10^14 nodes — the whole
-    10^12-file regime. Auto mode costs one count() (a scalar) and is
-    bit-reproducible for a given graph.
+    collected once).
+
+    Condition: d·Σ ≤ 85 · N · PR_SCALE must stay under 2^63, so the
+    graph must have N ≤ ~10^5 nodes; past that the int64 sums
+    overflow. A bigger graph needs a smaller PR_SCALE (10^9 supports
+    N ≈ 10^8).
 
     Each iteration is one key-partitioned join (ranks onto edge
     sources) + one aggregation (incoming sums) — the canonical
     BSP-as-DataFrame plan; no driver-side data, no floats until the
     final cosmetic division.
     """
-    if scale != "auto" and type(scale) is not int:
-        # without this, a stray string flows into (100-d)*scale as
-        # Python string repetition and dies in SQL analysis later;
-        # `type(...) is int` (not isinstance) so scale=True is rejected
-        # instead of silently running as scale=1
-        raise ValueError(
-            f"pagerank: scale must be an int or the literal 'auto', got {scale!r}"
-        )
     e = (
-        edges.where(F.col(src_col) != F.col(dst_col))
-        .select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.where(F.col("src_id") != F.col("dst_id"))
+        .select(F.col("src_id").alias("src"), F.col("dst_id").alias("dst"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -344,12 +329,9 @@ def pagerank(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if scale == "auto":
-        n_total = nodes.count()
-        scale = max(10**4, (2**62) // (100 * max(n_total, 1)))
-    base = (100 - damping_pct) * scale
+    base = (100 - DAMPING_PCT) * PR_SCALE
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
-    ranks = nodes.withColumn("rank_int", F.lit(scale).cast("long"))
+    ranks = nodes.withColumn("rank_int", F.lit(PR_SCALE).cast("long"))
     if redistribute_dangling:
         dangling = nodes.join(
             out_deg.select(F.col("src").alias("node_id")), "node_id", "left_anti"
@@ -384,7 +366,7 @@ def pagerank(
             upd.select(
                 "node_id",
                 F.expr(
-                    f"(CAST({base} AS BIGINT) + {damping_pct}"
+                    f"(CAST({base} AS BIGINT) + {DAMPING_PCT}"
                     f" * ({inc_expr})) DIV 100"
                 ).alias("rank_int"),
             )
@@ -393,5 +375,5 @@ def pagerank(
     return ranks.select(
         "node_id",
         "rank_int",
-        (F.col("rank_int") / F.lit(float(scale))).alias("rank"),
+        (F.col("rank_int") / F.lit(float(PR_SCALE))).alias("rank"),
     )

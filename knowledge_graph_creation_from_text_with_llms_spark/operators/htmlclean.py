@@ -132,11 +132,8 @@ def clean_html_udf() -> Column:
     return _udf
 
 
-def clean_documents(
-    source: DataFrame, text_col: str = "content", out_col: str | None = None
-) -> DataFrame:
-    """Replace (or add) the text column with its cleaned form. Map-only
+def clean_documents(source: DataFrame) -> DataFrame:
+    """Replace the `content` column with its cleaned form. Map-only
     stage; placed ahead of chunk_documents when the corpus is raw HTML
     (Extractor.py:120-127 order: fetch → clean → chunk)."""
-    out = out_col or text_col
-    return source.withColumn(out, clean_html_udf()(F.col(text_col)))
+    return source.withColumn("content", clean_html_udf()(F.col("content")))

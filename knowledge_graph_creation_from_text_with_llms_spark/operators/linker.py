@@ -92,13 +92,12 @@ def link_labels(
     ).drop("_k")
 
 
-def rank_topk(
-    per_prop: DataFrame, pred_col: str = "pred", k: int = 10
-) -> DataFrame:
+def rank_topk(per_prop: DataFrame, k: int = 10) -> DataFrame:
     """Deterministic ranking tail shared by topk_properties and the
     committed-matches parity tests (Matcher.py:258-285 writes ranks in
-    score order): (similarity desc, prop_id asc) window, cut at k."""
-    w = Window.partitionBy(pred_col).orderBy(
+    score order): per pred, (similarity desc, prop_id asc) window, cut
+    at k."""
+    w = Window.partitionBy("pred").orderBy(
         F.desc("similarity"), F.asc("prop_id")
     )
     return per_prop.withColumn("rank_pos", F.row_number().over(w)).where(
@@ -107,13 +106,9 @@ def rank_topk(
 
 
 def topk_properties(
-    predicates: DataFrame,
-    property_dict: DataFrame,
-    pred_col: str = "pred",
-    pred_emb_col: str = "pred_embedding",
-    k: int = 10,
+    predicates: DataFrame, property_dict: DataFrame, k: int = 10
 ) -> DataFrame:
-    """Cosine top-k properties per distinct predicate
+    """Cosine top-k properties per distinct (pred, pred_embedding) predicate
     (Matcher.py:188-256 semantics: score = max over label+alias
     embeddings per property; best_match_text = the alias that won if it
     beat the label). Returns (pred, prop_id, label, best_match_text,
@@ -139,19 +134,19 @@ def topk_properties(
         )
     )
     scored = (
-        predicates.withColumn("_qnorm", norm_expr(F.col(pred_emb_col)))
+        predicates.withColumn("_qnorm", norm_expr(F.col("pred_embedding")))
         .crossJoin(d)
         .withColumn(
             "_sim",
             cosine_prenorm_expr(
-                F.col(pred_emb_col), F.col("_pemb"), F.col("_qnorm"), F.col("_pnorm")
+                F.col("pred_embedding"), F.col("_pemb"), F.col("_qnorm"), F.col("_pnorm")
             ),
         )
     )
     # per (pred, prop): best similarity over label+aliases; alias text
     # wins only when strictly greater than the label similarity
     # (Matcher.py:228-234)
-    per_prop = scored.groupBy(pred_col, "prop_id").agg(
+    per_prop = scored.groupBy("pred", "prop_id").agg(
         F.max("_sim").alias("similarity"),
         # _plabel is constant within a prop_id group
         F.max("_plabel").alias("label"),
@@ -168,25 +163,24 @@ def topk_properties(
             ),
         ).alias("best_match_text"),
     )
-    return rank_topk(per_prop, pred_col=pred_col, k=k)
+    return rank_topk(per_prop, k=k)
 
 
 def link_predicates(
     facts: DataFrame,
     property_dict: DataFrame,
     method: str = "exact",
-    pred_col: str = "pred",
-    out_col: str = "pred_id",
     pred_embeddings: DataFrame | None = None,
 ) -> DataFrame:
-    """Predicate linking with the reference's three strategies.
+    """Predicate linking with the reference's three strategies: the
+    facts' `pred` gets its property id as `pred_id`.
 
     "exact" is link_labels against the property dictionary and keeps
-    the facts' column order, out_col last. "cos_similarity" and
+    the facts' column order, pred_id last. "cos_similarity" and
     "mixed" resolve each DISTINCT predicate once, into a small
-    (pred, out_col) table that one broadcast left join attaches to the
+    (pred, pred_id) table that one broadcast left join attaches to the
     facts on pred equality (so pred comes first, then the other facts
-    columns, then out_col; a NULL pred never links):
+    columns, then pred_id; a NULL pred never links):
 
     - the predicates are hash-partitioned into defaultParallelism
       partitions before they are deduplicated, like rouge_best_match
@@ -205,40 +199,40 @@ def link_predicates(
     Facts whose pred has no row there stay unlinked by cosine.
     """
     if method == "exact":
-        return link_labels(facts, property_dict, pred_col, out_col, id_col="prop_id")
+        return link_labels(facts, property_dict, "pred", "pred_id", id_col="prop_id")
     if method not in ("cos_similarity", "mixed"):
         raise ValueError(f"Invalid method: {method}. Use 'exact', 'cos_similarity', or 'mixed'.")
     parallelism = facts.sparkSession.sparkContext.defaultParallelism
-    preds = facts.select(pred_col).repartition(parallelism, pred_col).distinct()
+    preds = facts.select("pred").repartition(parallelism, "pred").distinct()
     if pred_embeddings is None:
         candidates = preds
     else:
-        candidates = pred_embeddings.repartition(parallelism, pred_col)
+        candidates = pred_embeddings.repartition(parallelism, "pred")
     exact = None
     if method == "mixed":
         resolved = resolve_labels(property_dict, id_col="prop_id")
 
         def with_exact(df: DataFrame) -> DataFrame:
-            return link_labels(df, property_dict, pred_col, out_col, "prop_id", resolved)
+            return link_labels(df, property_dict, "pred", "pred_id", "prop_id", resolved)
 
         # the exact id depends on the predicate alone: exactly-linked
         # predicates keep it, the rest are the only ones scored
         preds = with_exact(preds)
-        exact = preds.where(F.col(out_col).isNotNull())
+        exact = preds.where(F.col("pred_id").isNotNull())
         candidates = preds if pred_embeddings is None else with_exact(candidates)
-        candidates = candidates.where(F.col(out_col).isNull()).drop(out_col)
+        candidates = candidates.where(F.col("pred_id").isNull()).drop("pred_id")
     if pred_embeddings is None:
         from ..functions.embeddings import hash_embedding_expr
 
         candidates = candidates.withColumn(
-            "pred_embedding", hash_embedding_expr(F.col(pred_col))
+            "pred_embedding", hash_embedding_expr(F.col("pred"))
         )
-    table = topk_properties(candidates, property_dict, pred_col=pred_col, k=1).select(
-        pred_col, F.col("prop_id").alias(out_col)
+    table = topk_properties(candidates, property_dict, k=1).select(
+        "pred", F.col("prop_id").alias("pred_id")
     )
     if exact is not None:
         table = exact.unionByName(table)
-    return facts.join(F.broadcast(table), on=pred_col, how="left")
+    return facts.join(F.broadcast(table), on="pred", how="left")
 
 
 def link_triples(

@@ -358,7 +358,6 @@ def bertscore_pairs(
     pairs: DataFrame,
     cand_col: str,
     ref_col: str,
-    dim: int = 16,
     dedup_shared_refs: bool = False,
 ) -> DataFrame:
     """BERTScore-style token-level greedy matching per (candidate,
@@ -427,7 +426,7 @@ def bertscore_pairs(
     if not dedup_shared_refs:
         def embs(col: str) -> "F.Column":
             return F.transform(
-                tokens_expr(col), lambda t: token_embedding_expr(t, dim)
+                tokens_expr(col), token_embedding_expr
             )
 
         def side_score(from_embs, to_embs):
@@ -464,7 +463,7 @@ def bertscore_pairs(
         .withColumn(
             "_re",
             F.transform(
-                tokens_expr("_ref"), lambda t: token_embedding_expr(t, dim)
+                tokens_expr("_ref"), token_embedding_expr
             ),
         )
     )
@@ -478,7 +477,7 @@ def bertscore_pairs(
         "_ref",
         "_t",
         bind_once(
-            token_embedding_expr(F.col("_t"), dim),
+            token_embedding_expr(F.col("_t")),
             lambda e: F.transform(F.col("_re"), lambda o: cos(e, o)),
         ).alias("_row"),
     )

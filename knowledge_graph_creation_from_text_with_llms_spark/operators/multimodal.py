@@ -73,18 +73,16 @@ class LibraryDecoder:  # pragma: no cover
 
 
 def extract_media_features(
-    media: DataFrame,
-    decoder_factory=DeterministicFakeDecoder,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
+    media: DataFrame, decoder_factory=DeterministicFakeDecoder
 ) -> DataFrame:
-    """media → (media_id, kind, features array<float>). One
-    mapInPandas stage; the decoder is a per-worker singleton; Arrow
-    batch size bounds decode memory (binary payloads are large — keep
-    spark.sql.execution.arrow.maxRecordsPerBatch small for media)."""
+    """(media_id, kind, payload) → (media_id, kind, features
+    array<float>). One mapInPandas stage; the decoder is a per-worker
+    singleton; Arrow batch size bounds decode memory (binary payloads
+    are large — keep spark.sql.execution.arrow.maxRecordsPerBatch
+    small for media)."""
     schema = StructType(
         [
-            StructField(id_col, StringType()),
+            StructField("media_id", StringType()),
             StructField("kind", StringType()),
             StructField("features", ArrayType(FloatType())),
         ]
@@ -95,9 +93,9 @@ def extract_media_features(
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "media_id": pdf["media_id"],
                     "kind": pdf["kind"],
-                    "features": pdf[payload_col].map(decoder.features),
+                    "features": pdf["payload"].map(decoder.features),
                 }
             )
 

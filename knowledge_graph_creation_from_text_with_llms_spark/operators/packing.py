@@ -28,44 +28,42 @@ def pack_sequences(
     docs: DataFrame,
     seq_len: int = 2048,
     n_buckets: int = 32,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """(id, n_tokens, bucket, pack_id, start_in_pack): which training
+    """(doc_id, n_tokens, bucket, pack_id, start_in_pack): which training
     sequence each document's FIRST token lands in, and where.
 
-    Within a bucket, documents are concatenated in `id_col` order;
+    Within a bucket, documents are concatenated in doc_id order;
     pack_id = floor(start_offset / seq_len). A document whose tokens
     straddle a boundary spans pack_id and pack_id+1 (and more, if
     longer than seq_len) — consumers cut mid-document, the
     concat-and-chunk contract. Zero-token documents occupy no space
     but keep a deterministic position (start of their would-be slot).
     """
-    n_tok = F.size(tokens_expr(text_col)).cast("long")
-    id_type = docs.schema[id_col].dataType.simpleString()
+    n_tok = F.size(tokens_expr("text")).cast("long")
+    id_type = docs.schema["doc_id"].dataType.simpleString()
     if id_type in ("string", "varchar"):
         # non-numeric ids: deterministic md5 bucket (engine-portable —
         # same expression is ANSI/DuckDB-expressible, unlike xxhash64)
         bucket = F.pmod(
-            F.conv(F.substring(F.md5(F.col(id_col)), 1, 8), 16, 10).cast("long"),
+            F.conv(F.substring(F.md5(F.col("doc_id")), 1, 8), 16, 10).cast("long"),
             F.lit(n_buckets),
         ).cast("int")
     else:
-        bucket = F.pmod(F.col(id_col), F.lit(n_buckets)).cast("int")
+        bucket = F.pmod(F.col("doc_id"), F.lit(n_buckets)).cast("int")
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_tok.alias("n_tokens"),
         bucket.alias("bucket"),
     )
     w = (
         Window.partitionBy("bucket")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     with_cum = base.withColumn("_cum", F.sum("n_tokens").over(w))
     start = F.col("_cum") - F.col("n_tokens")
     return with_cum.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "bucket",
         F.expr(f"(_cum - n_tokens) DIV {seq_len}").alias("pack_id"),

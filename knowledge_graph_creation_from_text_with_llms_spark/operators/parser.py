@@ -35,14 +35,14 @@ def _strip_parens_ends(c: Column) -> Column:
 
 def parse_responses(
     responses: DataFrame,
-    response_col: str = "response",
     carry_cols: tuple[str, ...] = ("doc_id", "chunk_id", "content_sha256"),
 ) -> DataFrame:
-    """raw_responses → triples_raw using grammar (1). Malformed lines
-    (arity != 3) are dropped, exactly like the reference."""
+    """raw_responses → triples_raw using grammar (1) on each line of
+    `response`. Malformed lines (arity != 3) are dropped, exactly like
+    the reference."""
     keep = [c for c in carry_cols if c in responses.columns]
     lines = responses.select(
-        *keep, F.explode(F.split(F.col(response_col), "\n")).alias("line")
+        *keep, F.explode(F.split(F.col("response"), "\n")).alias("line")
     )
     # line.lstrip("0123456789. ")  →  strip leading run of that charset
     cleaned = F.regexp_replace(F.col("line"), r"^[0-9. ]+", "")

@@ -3,9 +3,9 @@
 Training-data pipelines need document→split assignment that is (a)
 stable under corpus growth (a doc never migrates between train and
 test when new data arrives), (b) reproducible across engines and
-runs, and (c) map-only at 100 TB. Both operators here key every
-decision off md5(salt | id): no RNG state, no shuffle, no driver
-participation — and an exact DuckDB oracle
+runs, and (c) map-only at 100 TB. Every operator here keys each
+decision off md5(salt | doc_id), with a fixed salt per operator: no
+RNG state, no shuffle, no driver participation — and an exact DuckDB oracle
 (CAST('0x' || substr(md5(..), 1, 8) AS BIGINT) is the SQL twin of
 Spark's conv(.., 16, 10)).
 """
@@ -27,18 +27,13 @@ def hash_bucket_expr(id_col: Column, salt: str) -> Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
 
 
-def assign_splits(
-    df: DataFrame,
-    splits: Mapping[str, float] | None = None,
-    id_col: str = "doc_id",
-    salt: str = "split",
-) -> DataFrame:
+def assign_splits(df: DataFrame, splits: Mapping[str, float] | None = None) -> DataFrame:
     """Add a `split` column assigning each row to a named fraction.
 
     `splits` maps name → weight (normalized internally); cut points are
     laid out in the given (insertion) order over the hash-bucket space,
-    so the same (salt, id) always lands in the same split — adding or
-    removing OTHER documents never moves an existing one (unlike
+    so the same doc_id (salt "split") always lands in the same split —
+    adding or removing OTHER documents never moves an existing one (unlike
     randomSplit, which reassigns on every ordering change). Map-only:
     no shuffle, no RNG, no driver state.
     """
@@ -47,7 +42,7 @@ def assign_splits(
     total = float(sum(splits.values()))
     if total <= 0:
         raise ValueError("split weights must sum to a positive value")
-    bucket = hash_bucket_expr(F.col(id_col), salt)
+    bucket = hash_bucket_expr(F.col("doc_id"), "split")
     expr: Column | None = None
     acc = 0.0
     names = list(splits)
@@ -63,28 +58,22 @@ def assign_splits(
     return df.withColumn("split", out)
 
 
-def hash_sample(
-    df: DataFrame,
-    fraction: float,
-    id_col: str = "doc_id",
-    salt: str = "sample",
-) -> DataFrame:
+def hash_sample(df: DataFrame, fraction: float) -> DataFrame:
     """Deterministic Bernoulli sample: keep rows whose hash bucket
     falls below fraction · 2^32. Same guarantees as assign_splits —
-    a row's membership depends only on (salt, id), so re-running on a
-    grown corpus keeps every previously sampled row (monotone,
+    a row's membership depends only on its doc_id (salt "sample"), so
+    re-running on a grown corpus keeps every previously sampled row (monotone,
     resumable sampling; df.sample() reshuffles membership per run).
     """
     if not 0.0 <= fraction <= 1.0:
         raise ValueError("fraction must be in [0, 1]")
     cut = int(fraction * _BUCKETS)
-    return df.where(hash_bucket_expr(F.col(id_col), salt) < F.lit(cut))
+    return df.where(hash_bucket_expr(F.col("doc_id"), "sample") < F.lit(cut))
 
 
 def weighted_hash_sample(
     df: DataFrame,
     rate_col: str | Column,
-    id_col: str = "doc_id",
     salt: str = "wsample",
 ) -> DataFrame:
     """Deterministic Bernoulli sample with a PER-ROW keep probability
@@ -92,22 +81,16 @@ def weighted_hash_sample(
     The quality-proportional downsampling step of data-curation
     pipelines (CCNet-style quality buckets), with the same
     growth-stable membership guarantee as `hash_sample` — a row's fate
-    depends only on (salt, id, its own rate), never on other rows.
+    depends only on (salt, doc_id, its own rate), never on other rows.
     Rates are clamped to [0, 1]; map-only."""
     rate = F.col(rate_col) if isinstance(rate_col, str) else rate_col
     clamped = F.least(F.greatest(rate, F.lit(0.0)), F.lit(1.0))
     cut = (clamped * F.lit(float(_BUCKETS))).cast("long")
-    return df.where(hash_bucket_expr(F.col(id_col), salt) < cut)
+    return df.where(hash_bucket_expr(F.col("doc_id"), salt) < cut)
 
 
-def mix_corpus(
-    docs: DataFrame,
-    weights: Mapping[str, float],
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "mix",
-) -> DataFrame:
-    """Domain mixing: downsample groups so the output composition
+def mix_corpus(docs: DataFrame, weights: Mapping[str, float]) -> DataFrame:
+    """Domain mixing: downsample `source` groups so the output composition
     approaches the target `weights`, keeping every row of the most
     under-represented (binding) group and none from groups absent in
     `weights`.
@@ -125,8 +108,8 @@ def mix_corpus(
     if total <= 0:
         raise ValueError("mix weights must sum to a positive value")
     counts = {
-        r[group_col]: r["n"]
-        for r in docs.groupBy(group_col).agg(F.count(F.lit(1)).alias("n")).collect()
+        r["source"]: r["n"]
+        for r in docs.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     ratios = {
         g: (weights[g] / total) / counts[g]
@@ -140,23 +123,21 @@ def mix_corpus(
     for g, r in ratios.items():
         branch = F.lit(r / binding)
         rate = (
-            F.when(F.col(group_col) == g, branch)
+            F.when(F.col("source") == g, branch)
             if rate is None
-            else rate.when(F.col(group_col) == g, branch)
+            else rate.when(F.col("source") == g, branch)
         )
     rate = rate.otherwise(F.lit(0.0))
-    return weighted_hash_sample(docs, rate, id_col, salt)
+    return weighted_hash_sample(docs, rate, salt="mix")
 
 
 def stratified_split(
     docs: DataFrame,
     strata_col: str,
     fractions: Mapping[str, float],
-    id_col: str = "doc_id",
-    salt: str = "strat",
 ) -> DataFrame:
     """EXACT-proportion train/val/test split per stratum: within each
-    stratum, rows are ordered by a salted md5 of the id (deterministic,
+    stratum, rows are ordered by a salted md5 of the doc_id (deterministic,
     uncorrelated with content) and cut at floor(n·f) boundaries —
     every stratum lands within 1 row of its target fraction, unlike
     the Bernoulli `assign_splits` whose per-stratum counts fluctuate
@@ -165,7 +146,7 @@ def stratified_split(
 
     `fractions` maps split name → fraction, summing to <= 1; the
     remainder goes to the LAST listed split. Deterministic: same
-    (salt, ids) → same assignment, regardless of row order.
+    ids → same assignment (salt "strat"), regardless of row order.
     """
     from pyspark.sql import Window
 
@@ -174,12 +155,12 @@ def stratified_split(
     if not names or sum(fracs) > 1.0 + 1e-9:
         raise ValueError("fractions must be non-empty and sum to <= 1")
     h = F.md5(
-        F.concat(F.lit(salt), F.lit("|"), F.col(id_col).cast("string"))
+        F.concat(F.lit("strat"), F.lit("|"), F.col("doc_id").cast("string"))
     )
-    w = Window.partitionBy(strata_col).orderBy(h, F.col(id_col))
+    w = Window.partitionBy(strata_col).orderBy(h, F.col("doc_id"))
     wn = Window.partitionBy(strata_col)
     ranked = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col(strata_col),
         F.row_number().over(w).alias("_rn"),
         F.count(F.lit(1)).over(wn).alias("_n"),
@@ -196,4 +177,4 @@ def stratified_split(
         expr = F.when(
             F.col("_rn") <= F.floor(F.lit(cumf) * F.col("_n")), F.lit(name)
         ).otherwise(expr)
-    return ranked.select(id_col, strata_col, expr.alias("split"))
+    return ranked.select("doc_id", strata_col, expr.alias("split"))

@@ -7,12 +7,12 @@
 - ivf_topk: the scale path — candidates are pre-bucketed by a coarse
   deterministic quantizer (sign pattern of the leading dimensions, an
   LSH-style hyperplane code); each query probes only its own bucket.
-  Recall < 1 by design; `n_probes` > 1 also probes the buckets one
-  sign bit away.
+  Recall < 1 by design.
 - ivf_kmeans_topk: the same probe join over trained k-means cells
-  (kmeans_centroids) instead of the static hyperplane code;
-  `n_probes` probes each query's n nearest cells.
+  (kmeans_centroids) instead of the static hyperplane code; each
+  query probes its nearest cell.
 
+Queries are (q_id, q_emb) rows and candidates (vec_id, embedding) rows.
 All three exclude self pairs (q_id == vec_id) and end in one shared
 tail (`_topk`): cosine scoring, a per-partition top-k pre-reduction,
 then the per-query (cos desc, id asc) window and the rank_pos <= k cut.
@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..functions.vectors import cosine_expr, cosine_prenorm_expr, norm_expr  # noqa: F401 (cosine_expr re-exported for callers)
 
 
-def _partial_topk(scored: DataFrame, q_id: str, c_id: str, k: int) -> DataFrame:
+def _partial_topk(scored: DataFrame, k: int) -> DataFrame:
     """Per-input-partition top-k pre-reduction (exact).
 
     The global per-query window must shuffle every scored row on q_id —
@@ -53,54 +53,44 @@ def _partial_topk(scored: DataFrame, q_id: str, c_id: str, k: int) -> DataFrame:
         for pdf in batches:
             cur = pdf if best is None else pd.concat((best, pdf), ignore_index=True)
             cur = cur.sort_values(
-                [q_id, "cos", c_id],
+                ["q_id", "cos", "vec_id"],
                 ascending=[True, False, True],
                 na_position="first",
                 ignore_index=True,
             )
-            best = cur.groupby(q_id, sort=False).head(k)
+            best = cur.groupby("q_id", sort=False).head(k)
         if best is not None:
             yield best
 
     return scored.mapInPandas(reduce_partition, schema=schema)
 
 
-def _topk(
-    joined: DataFrame, k: int, q_id: str, q_emb: str, c_id: str, c_emb: str
-) -> DataFrame:
+def _topk(joined: DataFrame, k: int) -> DataFrame:
     """Shared tail of the three searches: (q_id, vec_id, cos,
     rank_pos) from the joined (query, candidate) rows, which carry the
     hoisted norms `_qn` / `_cn`. Self pairs are dropped, each scored
     input partition is pre-reduced to its local top-k, and the global
     per-query window ranks by (cos desc, candidate id asc)."""
     scored = (
-        joined.where(F.col(q_id) != F.col(c_id))
+        joined.where(F.col("q_id") != F.col("vec_id"))
         .withColumn(
             "cos",
             cosine_prenorm_expr(
-                F.col(q_emb), F.col(c_emb), F.col("_qn"), F.col("_cn")
+                F.col("q_emb"), F.col("embedding"), F.col("_qn"), F.col("_cn")
             ),
         )
-        .select(q_id, c_id, "cos")
+        .select("q_id", "vec_id", "cos")
     )
-    w = Window.partitionBy(q_id).orderBy(F.desc("cos"), F.asc(c_id))
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     return (
-        _partial_topk(scored, q_id, c_id, k)
+        _partial_topk(scored, k)
         .withColumn("rank_pos", F.row_number().over(w))
         .where(F.col("rank_pos") <= k)
-        .select(q_id, c_id, F.col("cos"), "rank_pos")
+        .select("q_id", "vec_id", F.col("cos"), "rank_pos")
     )
 
 
-def brute_force_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 10,
-    q_id: str = "q_id",
-    q_emb: str = "q_emb",
-    c_id: str = "vec_id",
-    c_emb: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(queries: DataFrame, candidates: DataFrame, k: int = 10) -> DataFrame:
     """(q_id, vec_id, cos, rank_pos) — exact top-k by cosine,
     deterministic tie-break on candidate id. Two-phase: scores stay
     JVM-side (codegen cosine over the broadcast queries), then each
@@ -111,17 +101,18 @@ def brute_force_topk(
     # vector (query side before the broadcast, candidate side on the
     # scan), so each of the |Q|x|C| pairs evaluates one O(dim) dot
     # instead of three O(dim) folds — bit-identical (same op order)
-    cands = candidates.select(
-        F.col(c_id), F.col(c_emb), norm_expr(F.col(c_emb)).alias("_cn")
+    joined = _with_norm(candidates, "vec_id", "embedding", "_cn").crossJoin(
+        F.broadcast(_with_norm(queries, "q_id", "q_emb", "_qn"))
     )
-    joined = cands.crossJoin(
-        F.broadcast(
-            queries.select(
-                F.col(q_id), F.col(q_emb), norm_expr(F.col(q_emb)).alias("_qn")
-            )
-        )
+    return _topk(joined, k)
+
+
+def _with_norm(df: DataFrame, id_col: str, emb_col: str, norm_col: str) -> DataFrame:
+    """(id, embedding, norm): the norm hoisted out of the scored-pair
+    stage, computed once per vector."""
+    return df.select(
+        F.col(id_col), F.col(emb_col), norm_expr(F.col(emb_col)).alias(norm_col)
     )
-    return _topk(joined, k, q_id, q_emb, c_id, c_emb)
 
 
 def hyperplane_bucket_expr(emb: Column, bits: int = 3) -> Column:
@@ -139,62 +130,38 @@ def hyperplane_bucket_expr(emb: Column, bits: int = 3) -> Column:
 
 
 def ivf_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 10,
-    bits: int = 3,
-    q_id: str = "q_id",
-    q_emb: str = "q_emb",
-    c_id: str = "vec_id",
-    c_emb: str = "embedding",
-    n_probes: int = 1,
+    queries: DataFrame, candidates: DataFrame, k: int = 10, bits: int = 3
 ) -> DataFrame:
     """Approximate top-k: candidates bucketed by hyperplane code; each
-    query scores only its probed bucket(s). The bucket join replaces
-    the cross join — the candidate scan partitions by bucket and each
-    query touches ~n_probes/2^bits of the corpus. The same
-    per-partition top-k pre-reduction as brute_force_topk shrinks the
-    window shuffle.
-
-    `n_probes` > 1 is standard multi-probe LSH: the query additionally
-    probes the buckets at Hamming distance 1 from its own code (one
-    sign bit flipped — exactly the near-boundary cells that cause the
-    single-probe recall loss), up to bits+1 buckets total. Candidate
-    cost scales linearly with n_probes; measured on the sf0.001
-    embeddings, recall@10 goes 0.12 (n_probes=1) → 0.64 (n_probes=4)
-    at bits=3 (tests/test_similarity.py pins a 0.6 floor) — sign codes
-    over the first 3 dims are a coarse geometry; the trained k-means
-    variant is the higher-recall path at equal probe cost. Each
-    candidate lives in exactly one bucket and probe codes are
-    distinct, so no pair is scored twice — no dedup stage needed."""
-    n_probes = max(1, min(n_probes, bits + 1))
+    query scores only its own bucket. The bucket join replaces the
+    cross join — the candidate scan partitions by bucket and each
+    query touches ~1/2^bits of the corpus. The same per-partition
+    top-k pre-reduction as brute_force_topk shrinks the window
+    shuffle. Sign codes over the first `bits` dims are a coarse
+    geometry: measured recall@10 on the sf0.001 embeddings is 0.12 at
+    bits=3 (tests/test_similarity.py pins it); the trained k-means
+    variant is the higher-recall path at equal probe cost."""
     # norms hoisted out of the scored-pair stage (see brute_force_topk)
     cb = candidates.select(
-        hyperplane_bucket_expr(F.col(c_emb), bits).alias("_bkt"),
-        F.col(c_id),
-        F.col(c_emb),
-        norm_expr(F.col(c_emb)).alias("_cn"),
+        hyperplane_bucket_expr(F.col("embedding"), bits).alias("_bkt"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        norm_expr(F.col("embedding")).alias("_cn"),
     )
-    code = hyperplane_bucket_expr(F.col(q_emb), bits)
-    qs = queries.select(
-        F.col(q_id), F.col(q_emb), norm_expr(F.col(q_emb)).alias("_qn")
+    qb = _with_norm(queries, "q_id", "q_emb", "_qn").withColumn(
+        "_bkt", hyperplane_bucket_expr(F.col("q_emb"), bits)
     )
-    if n_probes == 1:
-        qb = qs.withColumn("_bkt", code)
-    else:
-        probes = F.array(
-            code, *[code.bitwiseXOR(F.lit(2 ** b)) for b in range(bits)]
-        )
-        qb = qs.withColumn(
-            "_bkt", F.explode(F.slice(probes, 1, n_probes))
-        )
-    return _topk(cb.join(F.broadcast(qb), "_bkt"), k, q_id, q_emb, c_id, c_emb)
+    return _topk(cb.join(F.broadcast(qb), "_bkt"), k)
 
 
 # -- trained coarse quantizer (k-means IVF) -----------------------------------
 
-def quantize_expr(emb: Column, scale: int = 1_000_000) -> Column:
-    """Fixed-point copy of an embedding: floor(x · scale) as long.
+# fixed-point scale of the k-means arithmetic (1e-6 per coordinate)
+QUANT_SCALE = 1_000_000
+
+
+def quantize_expr(emb: Column) -> Column:
+    """Fixed-point copy of an embedding: floor(x · QUANT_SCALE) as long.
 
     All k-means arithmetic below runs on these integers so the trained
     centroids are bit-identical across engines: integer sums are
@@ -204,7 +171,7 @@ def quantize_expr(emb: Column, scale: int = 1_000_000) -> Column:
     identical inputs. Precision loss vs true k-means is 1e-6 per
     coordinate, irrelevant for a coarse 4..65536-cell quantizer."""
     return F.transform(
-        emb, lambda x: F.floor(x.cast("double") * F.lit(float(scale))).cast("long")
+        emb, lambda x: F.floor(x.cast("double") * F.lit(float(QUANT_SCALE))).cast("long")
     )
 
 
@@ -217,44 +184,21 @@ def _sqdist_expr(a: Column, b: Column) -> Column:
     )
 
 
-def _assign_expr(q: DataFrame, centroids: DataFrame, vid: str = "_vid") -> DataFrame:
-    """(vid, cid): each quantized vector to its nearest centroid
+def _assign_expr(q: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(_vid, cid): each quantized vector to its nearest centroid
     (integer sqdist, tie-break on cid). Centroids are tiny → broadcast;
     min_by aggregates with map-side partials, so the only shuffle
     carries one row per vector."""
     scored = q.crossJoin(F.broadcast(centroids)).withColumn(
         "_d", _sqdist_expr(F.col("_qe"), F.col("cvec"))
     )
-    return scored.groupBy(vid).agg(
+    return scored.groupBy("_vid").agg(
         F.min_by("cid", F.struct("_d", "cid")).alias("cid")
     )
 
 
-def _assign_topn_expr(
-    q: DataFrame, centroids: DataFrame, n: int, vid: str = "_vid"
-) -> DataFrame:
-    """(vid, cid) for each vector's n NEAREST centroids (integer
-    sqdist, tie-break on cid) — the nprobe>1 query-side assignment.
-    The window runs over #vectors × n_clusters scored rows, ranked per
-    vector; centroids broadcast."""
-    scored = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "_d", _sqdist_expr(F.col("_qe"), F.col("cvec"))
-    )
-    w = Window.partitionBy(vid).orderBy("_d", "cid")
-    return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") <= n)
-        .select(vid, "cid")
-    )
-
-
 def kmeans_centroids(
-    vectors: DataFrame,
-    n_clusters: int = 4,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    scale: int = 1_000_000,
+    vectors: DataFrame, n_clusters: int = 4, iterations: int = 2
 ) -> DataFrame:
     """Lloyd's k-means over fixed-point embeddings: (cid, cvec) with
     cvec array<long>. Deterministic end to end — init = the n_clusters
@@ -269,7 +213,7 @@ def kmeans_centroids(
     # re-quantizes the corpus per reference — exponential plan growth
     # for a 4-row centroid table
     q = vectors.select(
-        F.col(id_col).alias("_vid"), quantize_expr(F.col(emb_col), scale).alias("_qe")
+        F.col("vec_id").alias("_vid"), quantize_expr(F.col("embedding")).alias("_qe")
     ).localCheckpoint(eager=True)
     w = Window.orderBy("_vid")
     centroids = (
@@ -310,12 +254,6 @@ def ivf_kmeans_topk(
     k: int = 10,
     n_clusters: int = 4,
     iterations: int = 2,
-    q_id: str = "q_id",
-    q_emb: str = "q_emb",
-    c_id: str = "vec_id",
-    c_emb: str = "embedding",
-    scale: int = 1_000_000,
-    n_probes: int = 1,
 ) -> DataFrame:
     """IVF probe with a TRAINED coarse quantizer: k-means cells learned
     from the candidate corpus (kmeans_centroids) instead of the static
@@ -323,34 +261,21 @@ def ivf_kmeans_topk(
     track the data distribution, so recall at equal cell count is
     higher on clustered corpora. Scoring (cosine on the original
     double embeddings), per-partition top-k pre-reduction, and the
-    final per-query window are identical to ivf_topk.
-
-    `n_probes` is FAISS-style nprobe: each query probes its n_probes
-    nearest cells (candidates stay assigned to exactly one cell, so no
-    pair is scored twice). Probe cost scales linearly; measured
-    recall@10 on the sf0.001 embeddings: 0.50 (nprobe=1) → 0.64 (2) →
-    0.78 (3) at 4 cells (tests pin a 0.7 floor at nprobe=3)."""
+    final per-query window are identical to ivf_topk. Each query
+    probes its nearest cell: measured recall@10 on the sf0.001
+    embeddings is 0.50 at 4 cells (tests/test_similarity.py pins it)."""
     cents = kmeans_centroids(
-        candidates, n_clusters, iterations, c_id, c_emb, scale
+        candidates, n_clusters, iterations
     ).localCheckpoint(eager=True)  # train once; the plan below probes it twice
     cq = candidates.select(
-        F.col(c_id).alias("_vid"), quantize_expr(F.col(c_emb), scale).alias("_qe")
+        F.col("vec_id").alias("_vid"), quantize_expr(F.col("embedding")).alias("_qe")
     )
     qq = queries.select(
-        F.col(q_id).alias("_vid"), quantize_expr(F.col(q_emb), scale).alias("_qe")
+        F.col("q_id").alias("_vid"), quantize_expr(F.col("q_emb")).alias("_qe")
     )
-    ca = _assign_expr(cq, cents).withColumnRenamed("_vid", c_id)
-    if n_probes <= 1:
-        qa = _assign_expr(qq, cents).withColumnRenamed("_vid", q_id)
-    else:
-        qa = _assign_topn_expr(
-            qq, cents, min(n_probes, n_clusters)
-        ).withColumnRenamed("_vid", q_id)
+    ca = _assign_expr(cq, cents).withColumnRenamed("_vid", "vec_id")
+    qa = _assign_expr(qq, cents).withColumnRenamed("_vid", "q_id")
     # norms hoisted out of the scored-pair stage (see brute_force_topk)
-    cb = candidates.select(
-        F.col(c_id), F.col(c_emb), norm_expr(F.col(c_emb)).alias("_cn")
-    ).join(ca, c_id)
-    qb = queries.select(
-        F.col(q_id), F.col(q_emb), norm_expr(F.col(q_emb)).alias("_qn")
-    ).join(qa, q_id)
-    return _topk(cb.join(F.broadcast(qb), "cid"), k, q_id, q_emb, c_id, c_emb)
+    cb = _with_norm(candidates, "vec_id", "embedding", "_cn").join(ca, "vec_id")
+    qb = _with_norm(queries, "q_id", "q_emb", "_qn").join(qa, "q_id")
+    return _topk(cb.join(F.broadcast(qb), "cid"), k)

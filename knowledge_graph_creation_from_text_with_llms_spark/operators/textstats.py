@@ -63,14 +63,12 @@ def predicted_lang_expr(text_col: str, toks: Column | None = None) -> Column:
     return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
-def language_id(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, predicted_lang, score): argmax of per-language marker
+def language_id(docs: DataFrame) -> DataFrame:
+    """(doc_id, predicted_lang, score): argmax of per-language marker
     counts; 'und' when no marker hits."""
-    best = language_best_expr(text_col)
+    best = language_best_expr("text")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und")).alias(
             "predicted_lang"
         ),
@@ -111,14 +109,12 @@ def quality_exprs(text_col: str, toks: Column | None = None) -> dict[str, Column
     }
 
 
-def quality_scores(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality features plus a
     composite score in [0,1]."""
-    q = quality_exprs(text_col)
+    q = quality_exprs("text")
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         q["n_chars"].cast("long").alias("n_chars"),
         q["n_tokens"].cast("long").alias("n_tokens"),
         q["n_punct"].cast("long").alias("n_punct"),
@@ -128,34 +124,31 @@ def quality_scores(
     )
 
 
-def token_counts(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace token count + BPE-ish subword count (letter runs,
     digit runs, and single non-alnum glyphs each count as a token —
     the standard pre-tokenizer upper bound)."""
-    t = F.col(text_col)
+    t = F.col("text")
     ws = F.size(F.filter(F.split(F.trim(t), r"\s+"), lambda x: x != ""))
     bpe = F.size(
         F.regexp_extract_all(F.lower(t), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), 0)
     )
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         ws.cast("long").alias("ws_tokens"),
         bpe.cast("long").alias("bpe_tokens"),
     )
 
 
-def fingerprints(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    window: int = 8,
-) -> DataFrame:
-    """Winnowing-style rolling-hash fingerprints: md5 of char k-grams,
-    minimum per window of `window` consecutive positions; the distinct
-    minima are the document's fingerprint set. Returns (id,
+# winnowing: char k-gram length and window width of `fingerprints`
+FP_K = 8
+FP_WINDOW = 8
+
+
+def fingerprints(docs: DataFrame) -> DataFrame:
+    """Winnowing-style rolling-hash fingerprints: md5 of char k-grams
+    (k = FP_K), minimum per window of FP_WINDOW consecutive positions;
+    the distinct minima are the document's fingerprint set. Returns (doc_id,
     n_fingerprints, min_fingerprint) — a compact, joinable sketch.
 
     Entirely map-side: a document's windows never leave its row, so
@@ -165,18 +158,18 @@ def fingerprints(
     ~|text| rows per doc twice to compute a per-doc scalar pair).
     array_min / array_distinct use the same binary string ordering and
     equality as the min/count-distinct aggregates — values identical.
-    Docs with no grams (length < k, incl. NULL text) are absent from
+    Docs with no grams (length < FP_K, incl. NULL text) are absent from
     the output, exactly as the inner grouping dropped them; the
-    eligibility predicate length(lower(text)) >= k is the cheap exact
+    eligibility predicate length(lower(text)) >= FP_K is the cheap exact
     equivalent (lowercasing can change character counts for some
     Unicode, so it tests the lowered length the shingler uses)."""
-    eligible = docs.where(F.length(F.lower(F.col(text_col))) >= k)
+    eligible = docs.where(F.length(F.lower(F.col("text"))) >= FP_K)
 
     def _of(hs: Column) -> Column:
-        n_win = F.floor((F.size(hs) - 1) / window).cast("int")
+        n_win = F.floor((F.size(hs) - 1) / FP_WINDOW).cast("int")
         fps = F.transform(
             F.sequence(F.lit(0), n_win),
-            lambda w: F.array_min(F.slice(hs, w * window + 1, window)),
+            lambda w: F.array_min(F.slice(hs, w * FP_WINDOW + 1, FP_WINDOW)),
         )
         return F.struct(
             F.size(F.array_distinct(fps)).cast("long").alias("n"),
@@ -184,17 +177,17 @@ def fingerprints(
         )
 
     out = eligible.select(
-        F.col(id_col),
+        F.col("doc_id"),
         bind_once(
             bind_once(
-                char_shingles_expr(text_col, k),
+                char_shingles_expr("text", FP_K),
                 lambda gs: F.transform(gs, lambda g: F.md5(g)),
             ),
             _of,
         ).alias("_fp"),
     )
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("_fp").getField("n").alias("n_fingerprints"),
         F.col("_fp").getField("m").alias("min_fingerprint"),
     )
@@ -247,9 +240,7 @@ def top_ngram_fraction_expr(
     return _frac(toks)
 
 
-def repetition_stats(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document: the fraction of
     all word bigrams / trigrams taken by the single most frequent one
     (boilerplate and degenerate generations score high)."""
@@ -257,27 +248,27 @@ def repetition_stats(
     # same column instead of re-running the regex tokenization (and the
     # array stays in one task-local projection — no shuffle appears)
     return docs.select(
-        F.col(id_col), tokens_expr(text_col).alias("_toks")
+        F.col("doc_id"), tokens_expr("text").alias("_toks")
     ).select(
-        F.col(id_col),
-        top_ngram_fraction_expr(text_col, 2, F.col("_toks")).alias(
+        F.col("doc_id"),
+        top_ngram_fraction_expr("text", 2, F.col("_toks")).alias(
             "top_bigram_fraction"
         ),
-        top_ngram_fraction_expr(text_col, 3, F.col("_toks")).alias(
+        top_ngram_fraction_expr("text", 3, F.col("_toks")).alias(
             "top_trigram_fraction"
         ),
     )
 
 
-def corpus_filter(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    allowed_langs: tuple[str, ...] = ("en",),
-    min_tokens: int = 5,
-    min_quality: float = 0.5,
-    max_top_bigram: float = 0.5,
-) -> DataFrame:
+# corpus_filter's rules: keep English docs of >= 5 tokens, quality
+# >= 0.5 and top-bigram fraction <= 0.5
+ALLOWED_LANGS = ("en",)
+MIN_TOKENS = 5
+MIN_QUALITY = 0.5
+MAX_TOP_BIGRAM = 0.5
+
+
+def corpus_filter(docs: DataFrame) -> DataFrame:
     """The composed training-corpus quality gate: language-ID +
     quality score + repetition signal evaluated in ONE projection
     (language/quality/repetition are all per-row expressions, so
@@ -285,21 +276,21 @@ def corpus_filter(
     a map over the scan, and `keep` pushes down like any computed
     column). Emits the decision plus the ordered reasons so dropped
     volumes are auditable per rule, never silent."""
-    staged = docs.select("*", tokens_expr(text_col).alias("_toks"))
+    staged = docs.select("*", tokens_expr("text").alias("_toks"))
     toks = F.col("_toks")
-    q = quality_exprs(text_col, toks)
-    lang = predicted_lang_expr(text_col, toks)
-    top2 = top_ngram_fraction_expr(text_col, 2, toks)
+    q = quality_exprs("text", toks)
+    lang = predicted_lang_expr("text", toks)
+    top2 = top_ngram_fraction_expr("text", 2, toks)
     reasons = F.array_compact(
         F.array(
-            F.when(~lang.isin(*allowed_langs), F.lit("lang")),
-            F.when(q["n_tokens"] < min_tokens, F.lit("too_short")),
-            F.when(q["quality_score"] < min_quality, F.lit("low_quality")),
-            F.when(top2 > max_top_bigram, F.lit("repetitive")),
+            F.when(~lang.isin(*ALLOWED_LANGS), F.lit("lang")),
+            F.when(q["n_tokens"] < MIN_TOKENS, F.lit("too_short")),
+            F.when(q["quality_score"] < MIN_QUALITY, F.lit("low_quality")),
+            F.when(top2 > MAX_TOP_BIGRAM, F.lit("repetitive")),
         )
     )
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         lang.alias("predicted_lang"),
         q["n_tokens"].cast("long").alias("n_tokens"),
         q["quality_score"].alias("quality_score"),
@@ -320,14 +311,12 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def scrub_pii(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, text_scrubbed, n_email, n_ip, n_phone): PII spans replaced
+def scrub_pii(docs: DataFrame) -> DataFrame:
+    """(doc_id, text_scrubbed, n_email, n_ip, n_phone): PII spans replaced
     by typed placeholder tokens, with per-kind counts for audit. Pure
     regexp projection; patterns applied in declaration order (emails
     first so their digits can't look like phone numbers)."""
-    scrubbed = F.col(text_col)
+    scrubbed = F.col("text")
     counts = []
     for kind, pat, token in PII_PATTERNS:
         counts.append(
@@ -337,17 +326,17 @@ def scrub_pii(
         )
         scrubbed = F.regexp_replace(scrubbed, pat, token)
     return docs.select(
-        F.col(id_col), scrubbed.alias("text_scrubbed"), *counts
+        F.col("doc_id"), scrubbed.alias("text_scrubbed"), *counts
     )
 
 
-def group_percentiles(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    ps: tuple[float, ...] = (0.5, 0.9, 0.99),
-) -> DataFrame:
-    """Exact discrete percentiles of `value_col` per group: for each p,
+# the percentiles `group_percentiles` reports, as columns p50, p90, p99
+PERCENTILES = (0.5, 0.9, 0.99)
+
+
+def group_percentiles(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
+    """Exact discrete percentiles of `value_col` per group: for each p
+    in PERCENTILES,
     the smallest value whose rank reaches ceil(p·n) (percentile_disc
     semantics, made explicit so every engine computes the identical
     value — built-in quantile functions disagree on interpolation and
@@ -375,7 +364,7 @@ def group_percentiles(
                 F.col("_rn") >= F.ceil(F.lit(p) * F.col("_n")), F.col("_v")
             )
         ).alias(f"p{str(p).replace('0.', '').ljust(2, '0')}")
-        for p in ps
+        for p in PERCENTILES
     ]
     return ranked.groupBy(group_col).agg(
         *aggs, F.max("_n").cast("long").alias("n_rows")
@@ -383,15 +372,12 @@ def group_percentiles(
 
 
 def strip_frequent_lines(
-    docs: DataFrame,
-    min_df: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, min_df: int = 5, text_col: str = "text"
 ) -> DataFrame:
     """Boilerplate line removal (the CommonCrawl/CCNet trick): delete
     every line that occurs in >= min_df DISTINCT documents — nav bars,
     cookie banners, license headers — keeping order and all other
-    lines. Returns (id, text_clean, n_lines, n_lines_removed).
+    lines. Returns (doc_id, text_clean, n_lines, n_lines_removed).
 
     Plan: explode lines once, count df per md5(line) (lines join on
     their 32-hex digest, not the raw string), anti-join the frequent
@@ -401,17 +387,17 @@ def strip_frequent_lines(
     distinct boilerplate lines still works.
     """
     lines = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
     ).withColumn("_lh", F.md5("line"))
     freq = (
         lines.groupBy("_lh")
-        .agg(F.count_distinct(id_col).alias("_df"))
+        .agg(F.count_distinct("doc_id").alias("_df"))
         .where(F.col("_df") >= min_df)
         .select("_lh")
     )
     kept = lines.join(freq, "_lh", "left_anti")
-    reassembled = kept.groupBy(id_col).agg(
+    reassembled = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "line"))),
@@ -422,13 +408,13 @@ def strip_frequent_lines(
         F.count(F.lit(1)).cast("long").alias("_n_kept"),
     )
     totals = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(F.split(F.col(text_col), "\n")).cast("long").alias("n_lines"),
     )
     return (
-        totals.join(reassembled, id_col, "left")
+        totals.join(reassembled, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("text_clean", F.lit("")).alias("text_clean"),
             "n_lines",
             (F.col("n_lines") - F.coalesce("_n_kept", F.lit(0))).alias(
@@ -439,11 +425,7 @@ def strip_frequent_lines(
 
 
 def top_ngrams_per_group(
-    docs: DataFrame,
-    group_col: str,
-    n: int = 2,
-    k: int = 10,
-    text_col: str = "text",
+    docs: DataFrame, group_col: str, n: int = 2, k: int = 10
 ) -> DataFrame:
     """Top-k most frequent word n-grams per group (source/domain/lang)
     — the standard corpus-inspection report for spotting boilerplate,
@@ -459,9 +441,9 @@ def top_ngrams_per_group(
     grams = docs.select(
         F.col(group_col),
         F.explode(
-            word_shingles_expr(text_col, n)
+            word_shingles_expr("text", n)
             if n > 1
-            else tokens_expr(text_col)
+            else tokens_expr("text")
         ).alias("gram"),
     )
     counts = grams.groupBy(group_col, "gram").agg(
@@ -482,27 +464,26 @@ def top_ngrams_per_group(
     )
 
 
-def gopher_rules(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-) -> DataFrame:
+# Gopher's word-count bounds
+MIN_WORDS = 50
+MAX_WORDS = 100_000
+
+
+def gopher_rules(docs: DataFrame) -> DataFrame:
     """The published Gopher quality heuristics (Rae et al. 2021, §A1.1)
     as one shuffle-free projection: per-document rule metrics, a flag
     per rule, and the composed keep decision — auditable like
     corpus_filter (a row explains WHY it was dropped). All native
     expressions; thresholds are the paper's.
 
-    Rules: word count in [min_words, max_words]; mean word length in
+    Rules: word count in [MIN_WORDS, MAX_WORDS]; mean word length in
     [3, 10]; symbol-to-word ratio (# and ellipsis) <= 0.1; <= 90% of
     lines starting with a bullet; <= 30% ending with an ellipsis;
     >= 80% of words containing an alphabetic character; >= 2 distinct
     everyday stopwords present.
     """
-    t = F.col(text_col)
-    toks = tokens_expr(text_col)
+    t = F.col("text")
+    toks = tokens_expr("text")
     n_words = F.size(toks)
     mean_word_len = F.when(
         n_words > 0,
@@ -549,7 +530,7 @@ def gopher_rules(
         F.array_intersect(F.array_distinct(toks), gopher_stops)
     )
     rules = {
-        "pass_word_count": (n_words >= min_words) & (n_words <= max_words),
+        "pass_word_count": (n_words >= MIN_WORDS) & (n_words <= MAX_WORDS),
         "pass_mean_word_len": (mean_word_len >= 3) & (mean_word_len <= 10),
         "pass_symbol_ratio": symbol_ratio <= 0.1,
         "pass_bullet_lines": bullet_frac <= 0.9,
@@ -561,7 +542,7 @@ def gopher_rules(
     for c in rules.values():
         keep = c if keep is None else (keep & c)
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_words.cast("long").alias("n_words"),
         mean_word_len.cast("double").alias("mean_word_len"),
         symbol_ratio.cast("double").alias("symbol_ratio"),

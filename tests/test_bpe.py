@@ -67,17 +67,6 @@ def test_bpe_token_stats_counts(spark):
     assert stats[2] == (1, 1)
 
 
-def test_max_vocab_cap_is_deterministic(spark):
-    docs = spark.createDataFrame(
-        [(1, "xx xx xx yy yy zz")], "doc_id long, text string"
-    )
-    m1, _ = bpe.learn_bpe(docs, num_merges=2, max_vocab=2)
-    m2, _ = bpe.learn_bpe(docs, num_merges=2, max_vocab=2)
-    assert m1 == m2
-    # zz (count 1) excluded from the capped vocab: (z,z) never merged
-    assert ("z", "z") not in m1
-
-
 def test_merge_never_crosses_token_boundaries(spark):
     """After merging (x,a), the word 'xab' is tokens [xa, b]; a later
     (a,b) merge must NOT fire — 'xa b' contains the SUBSTRING 'a b'

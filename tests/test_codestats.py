@@ -1,8 +1,6 @@
 """Code-aware operators: comment stripping, identifier splitting,
 license detection, line stats (operators/codestats.py)."""
 
-from pyspark.sql import functions as F
-
 from knowledge_graph_creation_from_text_with_llms_spark.operators import codestats
 
 
@@ -65,23 +63,6 @@ def test_code_line_stats(spark):
     assert r.n_lines == 6 and r.n_blank_lines == 2 and r.n_comment_lines == 1
     assert abs(r.dup_line_fraction - 1 / 4) < 1e-12  # one dup among 4 nonblank
     assert r.max_line_len == len("longer line here")
-
-
-def test_code_line_stats_id_cols_may_use_staging_names(spark):
-    """id columns named like code_line_stats' staging columns pass
-    through unchanged and leave the metrics as they are."""
-    content = "# c1\n\nx = 1\nx = 1\nlonger line here\n"
-    base = _code(spark, [(1, "python", content)])
-    ids = ("doc_id", "_lines", "__cls_lines", "__cls_trimmed")
-    df = base.select(
-        "*",
-        F.lit("a").alias("_lines"),
-        F.lit("b").alias("__cls_lines"),
-        F.lit("c").alias("__cls_trimmed"),
-    )
-    got = codestats.code_line_stats(df, id_cols=ids).collect()[0]
-    want = codestats.code_line_stats(base).collect()[0]
-    assert got.asDict() == {**want.asDict(), "_lines": "a", "__cls_lines": "b", "__cls_trimmed": "c"}
 
 
 def test_line_stats_empty_content(spark):

@@ -488,7 +488,7 @@ def test_minhash_verify_equals_bruteforce_jaccard_of_candidates(spark):
     cand = {
         (r.id_a, r.id_b)
         for r in dedup._minhash_candidates(
-            dedup.minhash_band_keys(docs), "doc_id", 500
+            dedup.minhash_band_keys(docs), 500
         ).collect()
     }
     want = {p: jac(*p) for p in cand if jac(*p) >= t}

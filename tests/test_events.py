@@ -276,3 +276,34 @@ def test_funnel_rejects_repeated_stage(spark):
         events.funnel_stages(df, ("view", "click", "view"))
     with pytest.raises(ValueError, match="distinct"):
         events.funnel_stages(df, ())
+
+
+def test_funnel_null_ts_stage1_matches_oracle(spark):
+    """A user whose stage-1 events all have a NULL ts still enters the
+    funnel, as the `events_funnel` oracle's staged CTEs count it
+    (min(ts) is NULL but the group exists); a NULL ts never precedes a
+    later stage. Fold and oracle run on the same 4 rows."""
+    import duckdb
+    import pandas as pd
+
+    from knowledge_graph_creation_from_text_with_llms_spark import gate
+
+    rows = [
+        (1, 1, "view", None),
+        (2, 1, "click", None),
+        (3, 2, "view", 5),
+        (4, 2, "click", 6),
+    ]
+    df = spark.createDataFrame(rows, "event_id long, user_id long, event_type string, ts long")
+    got = {(r.stage_idx, r.stage): r.n_users for r in events.funnel_stages(df).collect()}
+    con = duckdb.connect()
+    con.register(
+        "events",
+        pd.DataFrame(rows, columns=["event_id", "user_id", "event_type", "ts"]).astype(
+            {"ts": "Int64"}
+        ),
+    )
+    want = {
+        (r[0], r[1]): r[2] for r in con.execute(gate.ORACLES["events_funnel"]).fetchall()
+    }
+    assert got == want == {(1, "view"): 2, (2, "click"): 1, (3, "purchase"): 0}

@@ -175,47 +175,6 @@ def test_pagerank_redistribute_dangling_hand_graph(spark):
     assert abs(sum(r.values()) - 2 * S) < 200
 
 
-def test_pagerank_auto_scale_matches_explicit(spark):
-    """scale='auto' derives the fixed-point scale from the node count
-    (overflow-safe at any graph size) and must equal an explicit run
-    at the derived value."""
-    from knowledge_graph_creation_from_text_with_llms_spark.operators import graph
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "c"), ("d", "e"), ("e", "d")],
-        "src_id string, dst_id string",
-    )
-    n = 5
-    derived = max(10**4, (2**62) // (100 * n))
-    auto = {
-        r.node_id: r.rank_int
-        for r in graph.pagerank(edges, iterations=2, scale="auto").collect()
-    }
-    explicit = {
-        r.node_id: r.rank_int
-        for r in graph.pagerank(edges, iterations=2, scale=derived).collect()
-    }
-    assert auto == explicit
-    # 85 * N * scale stays under 2^63 by construction
-    assert 85 * n * derived < 2**63
-
-
-def test_pagerank_rejects_bool_and_bad_scale(spark):
-    """scale=True is a bool, not an int — it must be rejected like any
-    other bad input instead of silently running as scale=1 (round-4
-    ADVICE: isinstance(True, int) is True)."""
-    import pytest
-
-    from knowledge_graph_creation_from_text_with_llms_spark.operators import graph
-
-    edges = spark.createDataFrame(
-        [("a", "b")], "src_id string, dst_id string"
-    )
-    for bad in (True, False, "big", 1.5, None):
-        with pytest.raises(ValueError, match="scale must be"):
-            graph.pagerank(edges, iterations=1, scale=bad)
-
-
 def _random_labels(n=300, seed=7):
     """Seeded labels over an alphabet that exercises every branch of
     percent_quote_expr: quote's safe set (`_.-~/`), '*' and '+' (which

@@ -110,12 +110,3 @@ def test_clean_documents_operator(spark):
         for r in clean_documents(df).orderBy("doc_id").collect()
     }
     assert out == {1: "a b", 2: "c"}
-
-
-def test_clean_documents_separate_out_col(spark):
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1], "content": ["<p>kept</p>"]})
-    )
-    row = clean_documents(df, out_col="clean_text").collect()[0]
-    assert row["content"] == "<p>kept</p>"
-    assert row["clean_text"] == "kept"

@@ -148,7 +148,7 @@ def test_lsh_capped_counts_before_collect(spark):
     # feeds both the verify join and the candidate-id prune), so pin
     # its shape on the lazy candidate plan the operator materializes
     bands = dedup.minhash_band_keys(docs)
-    df = dedup._minhash_candidates(bands, "doc_id", 50)
+    df = dedup._minhash_candidates(bands, 50)
     plan = _plan(df, execute=True)
     lines = plan.splitlines()
     collect_at = next(

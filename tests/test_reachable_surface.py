@@ -10,6 +10,15 @@ test, and so does a `KEEP` entry that is reached again or no longer
 exists. A package module that no entry point and no reached code
 imports fails too: a module of constants has no def to flag.
 
+A parameter no caller sets is not an option either: a defaulted
+parameter of a package def fails the test when no call in reached
+package code or in the root files sets it (calls in `tests/` do not
+count), unless its def is in `KEEP` or the parameter is pinned to
+`KEEP_PARAMS` with a reason. Calls match by callee name, as `_reach`
+does; a class call is a call to its `__init__`; positional arguments
+set parameters by position after `self`; a call with `*args` or
+`**kwargs` sets every parameter of the def.
+
 The scan is by name, so it over-approximates: a def is reached when
 reached code mentions its name (a call, an attribute or an import).
 Module-level assignments are nodes too, reached only when named, so a
@@ -83,6 +92,26 @@ KEEP = {
         "helper of the `html.parser.HTMLParser` callbacks",
     "operators/htmlclean.py:_CleanExtractor._suppressed":
         "helper of the `html.parser.HTMLParser` callbacks",
+}
+
+
+# "<module path>:<def>(<parameter>)" -> why a defaulted parameter that
+# no reached call sets stays: a test seam into a path that production
+# selects from the input size, or the hook where an import-gated real
+# backend enters
+KEEP_PARAMS = {
+    "operators/bpe.py:learn_bpe(max_driver_vocab)":
+        "test seam: the distributed merge loop, selected for a vocabulary above 10^6 words",
+    "operators/dedup.py:minhash_lsh_pairs(max_bucket_size)":
+        "test seam: the over-cap bucket drop, selected for a band key in more than 500 docs",
+    "operators/dedup.py:minhash_lsh_pairs_incremental(max_broadcast_keys)":
+        "test seam: the shuffled probe, selected for a delta above 10^6 band rows",
+    "operators/dedup.py:connected_components(max_iterations)":
+        "test seam: the pointer-doubling fallback, selected for a chain longer than 20 rounds",
+    "operators/linker.py:link_triples(pred_embeddings)":
+        "J3: where a real encoder's predicate vectors enter",
+    "operators/multimodal.py:extract_media_features(decoder_factory)":
+        "Multimodal columns: where LibraryDecoder, the real decoder, enters",
 }
 
 
@@ -275,6 +304,131 @@ def _unimported_modules() -> set[str]:
         live |= new
         todo += new
     return files - live
+
+
+def _calls(node: ast.AST) -> list[tuple[str, int, set[str], bool]]:
+    """(callee name, positional argument count, keyword names, whether
+    it passes *args or **kwargs) of every call in `node`."""
+    out = []
+    for n in ast.walk(node):
+        if not isinstance(n, ast.Call):
+            continue
+        if isinstance(n.func, ast.Name):
+            name = n.func.id
+        elif isinstance(n.func, ast.Attribute):
+            name = n.func.attr
+        else:
+            continue
+        star = any(isinstance(a, ast.Starred) for a in n.args) or any(
+            k.arg is None for k in n.keywords
+        )
+        out.append((name, len(n.args), {k.arg for k in n.keywords if k.arg}, star))
+    return out
+
+
+def _defaulted(fn: ast.FunctionDef, method: bool) -> list[tuple[str, int | None]]:
+    """(name, position) of each defaulted parameter of `fn`: the
+    position among its positional parameters after `self`/`cls`, None
+    for a keyword-only one."""
+    pos = fn.args.posonlyargs + fn.args.args
+    if method and pos and pos[0].arg in ("self", "cls"):
+        pos = pos[1:]
+    first = len(pos) - len(fn.args.defaults)
+    out = [(p.arg, i) for i, p in enumerate(pos) if i >= first]
+    out += [
+        (p.arg, None)
+        for p, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def _unset_params_of(
+    nodes: dict[str, tuple[str, ast.AST]],
+    owners: dict[str, str],
+    calls: list[tuple[str, int, set[str], bool]],
+    exempt: set[str] = frozenset(),
+) -> set[str]:
+    """"<key>(<param>)" for each defaulted parameter of a def in
+    `nodes` that none of `calls` sets; defs keyed in `exempt`, and
+    methods of classes keyed there, are skipped."""
+    by_callee: dict[str, list[tuple[int, set[str], bool]]] = {}
+    for name, n_pos, kws, star in calls:
+        by_callee.setdefault(name, []).append((n_pos, kws, star))
+    out = set()
+    for key, (name, node) in nodes.items():
+        owner = owners.get(key)
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        if key in exempt or owner in exempt:
+            continue
+        callee = nodes[owner][0] if owner and name == "__init__" else name
+        for param, i in _defaulted(node, owner is not None):
+            if not any(
+                star or param in kws or (i is not None and n_pos > i)
+                for n_pos, kws, star in by_callee.get(callee, [])
+            ):
+                out.add(f"{key}({param})")
+    return out
+
+
+def _unset_params() -> set[str]:
+    """Defaulted parameters of package defs outside `KEEP` that no
+    call in reached package code or in the root files sets."""
+    nodes, owners, on_import = _package_nodes()
+    reached = _reach(nodes, _root_names() | on_import, owners)
+    calls = [c for key in reached for c in _calls(nodes[key][1])]
+    for path in _root_files():
+        calls += _calls(ast.parse(path.read_text(encoding="utf-8")))
+    return _unset_params_of(nodes, owners, calls, set(KEEP))
+
+
+def test_every_defaulted_parameter_is_set_or_kept():
+    unset = _unset_params()
+    assert not unset - KEEP_PARAMS.keys(), (
+        "defaulted parameters that no reached call sets (make each a "
+        "constant or the fixed name its callers use, or add it to "
+        f"KEEP_PARAMS with a reason): {sorted(unset - KEEP_PARAMS.keys())}"
+    )
+    assert not KEEP_PARAMS.keys() - unset, (
+        "stale KEEP_PARAMS entries (set by a reached call again, or gone): "
+        f"{sorted(KEEP_PARAMS.keys() - unset)}"
+    )
+
+
+def test_param_scan_counts_keyword_positional_method_and_star_calls():
+    src = """
+def f(a, b=1, c=2, *, d=3):
+    pass
+
+def g(a, b=1):
+    pass
+
+class K:
+    def __init__(self, x=1, y=2):
+        pass
+
+    def m(self, p=1, q=2):
+        pass
+
+def caller(obj, kw):
+    f(0, 5)
+    f(0, d=4)
+    K(y=3)
+    obj.m(7)
+    g(0, **kw)
+"""
+    nodes, owners = {}, {}
+    for st in ast.parse(src).body:
+        if isinstance(st, ast.ClassDef):
+            nodes[st.name] = (st.name, _without_methods(st, nodes, owners, st.name))
+        else:
+            nodes[st.name] = (st.name, st)
+    calls = _calls(nodes["caller"][1])
+    assert _unset_params_of(nodes, owners, calls) == {
+        "f(c)", "K.__init__(x)", "K.m(q)",
+    }
+    assert _unset_params_of(nodes, owners, calls, {"f", "K"}) == set()
 
 
 def test_every_package_module_is_imported():

@@ -69,9 +69,7 @@ def test_contamination_flags(spark):
     )
     flags = {
         r.doc_id: (r.n_contaminated_grams, r.contaminated)
-        for r in contamination.contamination_flags(
-            docs, probes, n=3, probe_text_col="text"
-        ).collect()
+        for r in contamination.contamination_flags(docs, probes, n=3).collect()
     }
     # doc 1 shares "the quick brown" and "quick brown fox"
     assert flags[1] == (2, True)

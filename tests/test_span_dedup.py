@@ -64,18 +64,10 @@ def test_far_apart_duplicates_make_two_spans_close_ones_fuse(spark):
 
 
 def test_hot_gram_cap_drops_boilerplate(spark):
-    rows = [(i, f"intro {i} {SHARED10} outro {i}") for i in range(12)]
-    assert _spans(spark, rows, k=8, max_gram_occurrences=10) == set()
-    assert len(_spans(spark, rows, k=8, max_gram_occurrences=12)) == 12
-
-
-def test_min_span_tokens_filters_short_spans(spark):
-    rows = [
-        (1, f"one two {SHARED10} three four"),
-        (2, f"five six {SHARED10} seven eight"),
-    ]
-    assert len(_spans(spark, rows, k=8, min_span_tokens=11)) == 0
-    assert len(_spans(spark, rows, k=8, min_span_tokens=10)) == 2
+    cap = dedup.MAX_GRAM_OCCURRENCES
+    rows = [(i, f"intro {i} {SHARED10} outro {i}") for i in range(cap + 1)]
+    assert _spans(spark, rows, k=8) == set()
+    assert len(_spans(spark, rows[:cap], k=8)) == cap
 
 
 def test_plan_two_exchanges_no_join(spark):

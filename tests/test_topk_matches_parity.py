@@ -70,7 +70,7 @@ def test_rank_topk_reproduces_committed_matches(spark):
         "pred string, committed_rank int, prop_id string, "
         "label string, similarity double",
     )
-    ranked = rank_topk(df, pred_col="pred", k=10).collect()
+    ranked = rank_topk(df, k=10).collect()
 
     by_pred: dict[str, list] = {}
     for r in ranked:
@@ -103,7 +103,7 @@ def test_rank_order_exact_where_scores_unique(spark):
         "pred string, committed_rank int, prop_id string, "
         "label string, similarity double",
     )
-    ranked = rank_topk(df, pred_col="pred", k=10).collect()
+    ranked = rank_topk(df, k=10).collect()
     by_pred: dict[str, list] = {}
     for r in ranked:
         by_pred.setdefault(r.pred, []).append(r)
